@@ -43,7 +43,7 @@ from .hashing import (
     word_hash,
     word_hash48,
 )
-from .text import shingles_col, tokens_col
+from .text import tokens_col
 
 # Packed doc-stats layout for the ngram/containment candidate path:
 # pk = nsh * 2^_PK_BITS + cc, one long carried per posting row.
@@ -69,10 +69,6 @@ def exact_dupes(docs: DataFrame) -> DataFrame:
         F.min("doc_id").alias("canonical_doc_id"),
         F.count("*").alias("n_copies"),
     )
-
-
-def _shingle_sets(docs: DataFrame, n: int = 3) -> DataFrame:
-    return docs.select("doc_id", shingles_col(n=n).alias("sh"))
 
 
 def _capped_pair_counts(
@@ -444,20 +440,6 @@ def duplicated_spans(docs: DataFrame, n: int = 8) -> DataFrame:
             F.count("*").alias("n_dup_shingles"),
         )
         .select("doc_id", "span_start", "span_end", "n_dup_shingles")
-    )
-
-
-def _shingle_hash_sets(docs: DataFrame, n: int = 3) -> DataFrame:
-    """(doc_id, shh: array<long>) — distinct hashed shingles per doc.
-
-    Jaccard over hashed shingles equals string Jaccard up to ~2^-61
-    collision odds — and the oracle hashes identically, so results are
-    exactly comparable.
-    """
-    return (
-        _shingle_hash_rows(docs, n, distinct=False)
-        .groupBy("doc_id")
-        .agg(F.collect_set("shash").alias("shh"))
     )
 
 

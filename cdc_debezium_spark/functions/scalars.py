@@ -10,7 +10,6 @@ from __future__ import annotations
 
 import pyspark.sql.functions as F
 from pyspark.sql import Column
-from pyspark.sql.types import DecimalType
 
 
 def micros_to_ts(col: Column | str) -> Column:
@@ -23,13 +22,6 @@ def micros_to_ts(col: Column | str) -> Column:
 def ts_to_micros(col: Column | str) -> Column:
     col = F.col(col) if isinstance(col, str) else col
     return F.unix_micros(col.cast("timestamp"))
-
-
-def decimal_from_wire(col: Column | str, precision: int = 38, scale: int = 18) -> Column:
-    """decimal.handling.mode=string: the wire carries decimals as
-    strings; the engine casts at the boundary, never via float."""
-    col = F.col(col) if isinstance(col, str) else col
-    return col.cast(DecimalType(precision, scale))
 
 
 def ns_to_us(col_name: str) -> Column:

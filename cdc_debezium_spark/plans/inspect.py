@@ -15,10 +15,6 @@ def physical_plan(df: DataFrame) -> str:
     return df._jdf.queryExecution().executedPlan().toString()
 
 
-def optimized_plan(df: DataFrame) -> str:
-    return df._jdf.queryExecution().optimizedPlan().toString()
-
-
 def count_shuffles(df: DataFrame) -> int:
     """Hash-partitioning exchanges in the plan (each is a full shuffle
     of its input at scale)."""
@@ -44,15 +40,3 @@ def read_schema(df: DataFrame) -> str:
     if "ReadSchema" not in plan:
         return ""
     return plan.split("ReadSchema:")[1].splitlines()[0].strip()
-
-
-def codegen_stages(df: DataFrame) -> int:
-    """Number of whole-stage-codegen spans (wider is better — each span
-    is one fused JVM loop)."""
-    plan = physical_plan(df)
-    ids = set()
-    for part in plan.split("*(")[1:]:
-        stage = part.split(")")[0]
-        if stage.isdigit():
-            ids.add(int(stage))
-    return len(ids)

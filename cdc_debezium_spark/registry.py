@@ -10,7 +10,11 @@ compare sorts columns by name then value-hashes.
 
 from __future__ import annotations
 
-from collections.abc import Callable
+import glob
+import json
+import os
+import re
+from collections.abc import Callable, Iterable
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -18,194 +22,60 @@ QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
 ORACLES: dict[str, str] = {}
 
 
-def query(key: str, oracle: str | None = None):
-    """Register a driver-visible query (and its DuckDB oracle)."""
+def query(key: str, oracle: str):
+    """Register a driver-visible query and its DuckDB oracle."""
 
     def deco(fn):
         QUERIES[key] = fn
-        if oracle is not None:
-            ORACLES[key] = oracle
+        ORACLES[key] = oracle
         return fn
 
     return deco
 
 
-# Round whose committed CORRECTNESS files informed the current
-# _PRIORITY layout. tests/test_registry_staleness.py recomputes the
-# staleness cohorts from CORRECTNESS_r01.._PRIORITY_BUILT_FROM and
-# fails if the layout stops leading with the oldest debt, or if this
-# marker falls >1 round behind the newest committed file (the rebuild
-# ratchet).
-_PRIORITY_BUILT_FROM = 15
-
-# Keys whose registered implementation changed materially AFTER their
-# last driver sample — the prior CORRECTNESS rows attest retired code,
-# so the rotation (and the staleness guard) treats them as
-# never-sampled until the driver re-checks them. The eight r15-forced
-# keys all came back green in CORRECTNESS_r15. This set now carries
-# (a) the r15 reshapes the r15 rotation MISSED (r15 ADVICE medium:
-# knn_hubness moved to the broadcast Arrow kernel, the stateful stream
-# lanes run under scaled_state_partitions, the stream-dedup roundtrips
-# got OS-copied redelivery + pinned index read schemas — none were in
-# the r15 driver sample), and (b) the r16 optimization reshapes
-# (skew-safe count tables in dsir/chunk_dedup, null-guarded bm25
-# corpus stats; oracle-identical at sf0.01+sf0.001, OPTIMIZATION_r16.md):
+# Keys whose implementation changed after their last driver sample:
+# their committed CORRECTNESS rows attest retired code, so they lead
+# the sample order until the driver checks them again. A key that is
+# not registered in this environment is ignored.
 _RESAMPLE_FORCED: set[str] = {
-    # (a) r15 reshapes without an r15 driver row
-    "ext_similarity_knn_hubness",
-    "agg_tumbling_window_stream_roundtrip",
-    "agg_session_window_stream_roundtrip",
-    "agg_sliding_window_stream_roundtrip",
-    "join_stream_stream_roundtrip",
-    "events_late_data_drop_roundtrip",
-    "udf_stateful_processor_roundtrip",
-    "udf_stateful_tws_roundtrip",  # env-gated; no-op where unregistered
-    "udf_session_timeout_roundtrip",
-    "ext_stream_dedup_minhash_roundtrip",
-    "ext_stream_dedup_embedding_roundtrip",
-    # (b) r16 optimization-round reshapes
-    "ext_sample_dsir",
-    "ext_text_chunk_dedup",
-    "ext_retrieval_bm25",
-    "ext_retrieval_fusion",
-    "ext_dedup_minhash_recall",
-    # gram construction rewritten (per-char zip_with -> one codegen
-    # regexp_extract_all)
-    "ext_text_charngrams",
-    # per-mime cumsum -> two-level distributed prefix sum
-    "ext_multimodal_shards",
-    # every _capped_pair_counts consumer: the verify legs' broadcast
-    # pins are size-aware now and the survivor frame gains an eager
-    # count — same values, new physical execution, so the whole pair
-    # family re-enters the driver sample (r15 ADVICE-medium policy:
-    # a materially changed implementation is never left to rotation
-    # coincidence)
-    "ext_dedup_ngram",
-    "ext_dedup_containment",
-    "ext_dedup_clusters",
-    "ext_dedup_canonical",
-    "ext_dedup_cluster_sizes",
-    "ext_dedup_graph_degree",
-    "ext_graph_triangles",
-    "ext_graph_label_propagation",
+    "udf_stateful_tws_roundtrip",  # registers only where TWS is available
 }
 
-# Key-tiering policy (staleness is a policy, not an accident):
-#   hot  — CDC spine, streaming-runtime roundtrips, executed sink
-#          protocols: must have a driver row every 1-2 rounds; when not
-#          leading _PRIORITY they still enter via the non-ext tail.
-#   warm — operator families (relational/scalar/events/ext dedup+sim):
-#          rotate so no key exceeds ~3 rounds without a driver row.
-#   cold — mature diagnostics/recall reports: allow up to 5 rounds,
-#          backed each round by the committed full-registry sf0.01
-#          mirror (SURVEY §7.7g).
-# tests/test_registry_staleness.py recomputes staleness from the
-# committed CORRECTNESS_r0*.json files and enforces the rotation:
-# _PRIORITY must lead with every never-sampled key, then the stalest
-# cohort, so any count-budgeted driver prefix retires the oldest debt.
-#
-# Round-16 layout (from CORRECTNESS_r01..r15): the forced block above
-# leads (25 registered keys incl. the whole reshaped pair family),
-# then the r8 leftover cohort the 50-key r15 budget could not retire
-# (7 keys, 8 rounds stale), then the r9 cohort (42 keys, hot-tier
-# CDC/wire/avro first, flagship TPC-H next, so a 50-key budget cut
-# falls on the warm tail).
-_PRIORITY = [
-    # --- treated as never-sampled: _RESAMPLE_FORCED (r15 reshapes the
-    #     r15 sample missed + r16 optimization reshapes) ---
-    "ext_similarity_knn_hubness",
-    "agg_tumbling_window_stream_roundtrip",
-    "agg_session_window_stream_roundtrip",
-    "agg_sliding_window_stream_roundtrip",
-    "join_stream_stream_roundtrip",
-    "events_late_data_drop_roundtrip",
-    "udf_stateful_processor_roundtrip",
-    # (udf_stateful_tws_roundtrip is in _RESAMPLE_FORCED but NOT here:
-    #  it registers only where _tws_available(), so a driver env
-    #  without it must not find unregistered names in _PRIORITY)
-    "udf_session_timeout_roundtrip",
-    "ext_stream_dedup_minhash_roundtrip",
-    "ext_stream_dedup_embedding_roundtrip",
-    "ext_sample_dsir",
-    "ext_text_chunk_dedup",
-    "ext_retrieval_bm25",
-    "ext_retrieval_fusion",
-    "ext_dedup_minhash_recall",
-    "ext_text_charngrams",
-    "ext_multimodal_shards",
-    "ext_dedup_ngram",
-    "ext_dedup_containment",
-    "ext_dedup_clusters",
-    "ext_dedup_canonical",
-    "ext_dedup_cluster_sizes",
-    "ext_dedup_graph_degree",
-    "ext_graph_triangles",
-    "ext_graph_label_propagation",
-    # --- r8 leftover cohort: last driver row in CORRECTNESS_r08
-    #     (knn_hubness, LPA and triangles moved to the forced block
-    #     above) ---
-    "ext_privacy_k_anon",
-    "ext_quality_nb_classifier",
-    "ext_text_lexical_richness",
-    "ext_text_zipf_fit",
-    "scan_csv_roundtrip",
-    "scan_jsonl_roundtrip",
-    "scan_orc_roundtrip",
-    # --- r9 cohort (45): hot-tier wire/CDC keys first ---
-    "avro_roundtrip",
-    "avro_schema_evolution_roundtrip",
-    "cdc_compaction_stats",
-    "cdc_dlq_split",
-    "cdc_incremental_snapshot",
-    "cdc_mask_columns",
-    "cdc_order_audit",
-    "cdc_outbox_router",
-    # (the r9 sample's cdc_*_delta_roundtrip names were renamed when
-    #  delta became the lanes' default mode; their successors
-    #  cdc_scd2_stream_roundtrip / cdc_stream_latest_state_roundtrip
-    #  have r12/r14 driver rows, so they are not in this cohort)
-    "cdc_schema_drift_stats",
-    "cdc_snapshot_diff",
-    "cdc_transaction_metadata",
-    # bench-flagship TPC-H shapes next, then the warm remainder
-    "tpch_q1",
-    "tpch_q4",
-    "tpch_q7",
-    "tpch_q8",
-    "tpch_q9",
-    "tpch_q22",
-    "agg_approx_quantile",
-    "agg_approx_topk",
-    "agg_argminmax",
-    "agg_histogram",
-    "agg_percentiles_exact",
-    "agg_theta_sketch_distinct",
-    "agg_weighted",
-    "events_active_sessions_sweep",
-    "events_cohort_retention",
-    "events_funnel",
-    "events_gapfill_locf",
-    "events_ohlc_downsample",
-    "events_rate_anomaly",
-    "events_rolling_active_users",
-    "ext_corpus_pipeline",
-    "ext_dedup_exact_normalized",
-    "ext_embedding_pq",
-    "ext_sample_importance",
-    "ext_text_bpe_pairs",
-    "ext_text_dedup_report",
-    "join_shuffle_hash",
-    "join_skew_salted",
-    "layout_zorder",
-    "scalar_bitwise",
-    "window_ntile",
-]
+_REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+
+def sampled_rounds(repo: str = _REPO) -> dict[int, set[str]]:
+    """Round number -> keys the driver checked, from the committed
+    CORRECTNESS_r<N>.json files in `repo` (unreadable files skipped)."""
+    rounds: dict[int, set[str]] = {}
+    for path in glob.glob(os.path.join(repo, "CORRECTNESS_r*.json")):
+        m = re.search(r"_r(\d+)\.json$", path)
+        try:
+            with open(path) as f:
+                data = json.load(f)
+        except (OSError, ValueError):
+            continue
+        if m and isinstance(data, dict):
+            rounds[int(m.group(1))] = set(data)
+    return rounds
+
+
+def sample_order(
+    keys: Iterable[str], rounds: dict[int, set[str]], forced: set[str]
+) -> list[str]:
+    """Order `keys` so any prefix the driver samples retires the oldest
+    correctness debt: `forced` keys first, then keys in no round, then
+    the rest by the round they were last sampled, oldest first. Ties
+    break by key name."""
+    last = {k: r for r in sorted(rounds) for k in rounds[r]}
+    return sorted(
+        keys, key=lambda k: (k not in forced, k in last, last.get(k, 0), k)
+    )
 
 
 def load_all() -> None:
-    """Import every query module, then order the registry so any
-    count- or time-budgeted prefix the driver checks covers the keys
-    that most need an external signal this round (see _PRIORITY)."""
+    """Import every query module, then put the registry in sample order
+    over the committed CORRECTNESS files."""
     from . import queries_ext  # noqa: F401
     from . import queries_cdc  # noqa: F401
     from . import queries_events  # noqa: F401
@@ -214,23 +84,8 @@ def load_all() -> None:
     from . import queries_streaming  # noqa: F401
     from . import queries_tpch  # noqa: F401
 
-    # bench-flagship TPC-H shapes first within the block, so any
-    # count-budgeted cut falls on the least load-bearing keys
-    tpch_pref = ["tpch_q3", "tpch_q5", "tpch_q10", "tpch_q18", "tpch_q6"]
-    tpch = [k for k in tpch_pref if k in QUERIES] + sorted(
-        k for k in QUERIES if k.startswith("tpch_") and k not in tpch_pref
-    )
-    order = (
-        [k for k in _PRIORITY if k in QUERIES]
-        + [k for k in tpch if k not in _PRIORITY]
-        + [k for k in QUERIES if k.startswith("ext_") and k not in _PRIORITY]
-        + [
-            k
-            for k in QUERIES
-            if not k.startswith(("ext_", "tpch_")) and k not in _PRIORITY
-        ]
-    )
+    order = sample_order(QUERIES, sampled_rounds(), _RESAMPLE_FORCED)
     for d in (QUERIES, ORACLES):
-        ordered = {k: d[k] for k in order if k in d}
+        ordered = {k: d[k] for k in order}
         d.clear()
         d.update(ordered)

@@ -1,17 +1,18 @@
 """Local differential-testing harness mirroring the driver's oracle gate.
 
 Runs a registered Spark query and its DuckDB oracle on the same parquet
-fixtures and compares row count, column-name set, and order-insensitive
-values (floats with tolerance, everything else exactly).
+fixtures, once each, and compares the two pandas frames: column-name
+set, driver-hashable dtypes, row count, and order-insensitive values
+(floats with tolerance, everything else exactly).
 """
 
 from __future__ import annotations
 
-import decimal
 import math
 from datetime import date, datetime
 
 import duckdb
+import pandas as pd
 
 from .sources.catalog import TABLES
 
@@ -26,35 +27,27 @@ def duck_connection(sf_dir: str) -> duckdb.DuckDBPyConnection:
     return con
 
 
-def _norm(v):
-    if v is None:
-        return None
-    if isinstance(v, bool):
-        return v
-    if isinstance(v, decimal.Decimal):
-        return ("dec", str(v))
-    if isinstance(v, float):
-        return ("f", v)
-    if isinstance(v, datetime):
-        return ("ts", v.replace(tzinfo=None).isoformat())
-    if isinstance(v, date):
-        return ("d", v.isoformat())
-    if isinstance(v, (list, tuple)):
-        return tuple(_norm(x) for x in v)
-    return v
-
-
 def _values_equal(a, b) -> bool:
-    if type(a) is tuple and type(b) is tuple and a and b and a[0] == "f" == b[0]:
-        x, y = a[1], b[1]
-        if math.isnan(x) and math.isnan(y):
-            return True
-        return math.isclose(x, y, rel_tol=FLOAT_RTOL, abs_tol=FLOAT_ATOL)
-    if type(a) is tuple and type(b) is tuple and len(a) == len(b):
-        if a and b and isinstance(a[0], str) and a[0] in ("dec", "ts", "d"):
-            return a == b
-        return all(_values_equal(x, y) for x, y in zip(a, b))
+    """One cell pair: missing equals missing, floats within tolerance,
+    everything else exactly."""
+    if a is None or b is None:
+        return a is b
+    if isinstance(a, float) and isinstance(b, float):
+        return math.isclose(a, b, rel_tol=FLOAT_RTOL, abs_tol=FLOAT_ATOL)
     return a == b
+
+
+def _cells(s: pd.Series, as_date: bool) -> list:
+    """A pandas column as plain Python values; NaN, NaT and None all
+    become None, as pandas treats them all as missing."""
+    if s.dtype.kind == "M":
+        s = s.dt.date if as_date else s.dt.tz_localize(None)
+    return s.astype(object).where(s.notna(), None).tolist()
+
+
+def _sorted_rows(pdf: pd.DataFrame, date_cols: set[str]) -> list[tuple]:
+    cols = [_cells(pdf[c], c in date_cols) for c in pdf.columns]
+    return sorted(zip(*cols), key=repr)
 
 
 def assert_driver_hashable(key, spark_pdf, duck_pdf) -> None:
@@ -101,36 +94,41 @@ def assert_driver_hashable(key, spark_pdf, duck_pdf) -> None:
 
 
 def compare_query(spark, key: str, sf_dir: str) -> None:
-    """Assert a registered query hash-matches its oracle. Raises AssertionError."""
+    """Assert a registered query matches its oracle. Raises AssertionError.
+
+    Each side runs once, into the pandas frame the driver hashes; the
+    rows compared are built from those two frames.
+    """
     from .registry import ORACLES, QUERIES
 
-    sdf = QUERIES[key](spark, sf_dir)
-    spark_cols = sorted(sdf.columns)
-    spark_rows = [tuple(_norm(r[c]) for c in spark_cols) for r in sdf.collect()]
-
+    spark_pdf = QUERIES[key](spark, sf_dir).toPandas()
     con = duck_connection(sf_dir)
-    rel = con.sql(ORACLES[key])
-    duck_cols_raw = list(rel.columns)
-    assert sorted(duck_cols_raw) == spark_cols, (
-        f"{key}: column mismatch spark={spark_cols} duck={sorted(duck_cols_raw)}"
+    try:
+        duck_pdf = con.sql(ORACLES[key]).df()
+    finally:
+        con.close()
+    cols = sorted(spark_pdf.columns)
+    assert sorted(duck_pdf.columns) == cols, (
+        f"{key}: column mismatch spark={cols} duck={sorted(duck_pdf.columns)}"
     )
-    duck_pdf = rel.df()
-    spark_pdf = sdf.toPandas()
-    assert_driver_hashable(key, spark_pdf, duck_pdf[list(spark_pdf.columns)])
-    idx = [duck_cols_raw.index(c) for c in spark_cols]
-    duck_rows = [tuple(_norm(row[i]) for i in idx) for row in rel.fetchall()]
-    con.close()
-
-    assert len(spark_rows) == len(duck_rows), (
-        f"{key}: row count spark={len(spark_rows)} duck={len(duck_rows)}"
+    spark_pdf, duck_pdf = spark_pdf[cols], duck_pdf[cols]
+    assert_driver_hashable(key, spark_pdf, duck_pdf)
+    assert len(spark_pdf) == len(duck_pdf), (
+        f"{key}: row count spark={len(spark_pdf)} duck={len(duck_pdf)}"
     )
-    spark_rows.sort(key=repr)
-    duck_rows.sort(key=repr)
-    bad = 0
-    first = None
-    for s, d in zip(spark_rows, duck_rows):
-        if not _values_equal(s, d):
-            bad += 1
-            if first is None:
-                first = (s, d)
-    assert bad == 0, f"{key}: {bad}/{len(spark_rows)} rows differ; first: {first}"
+    # The object/datetime64 pair assert_driver_hashable accepts is
+    # Spark DateType against DuckDB DATE: compare it as dates.
+    dates = {
+        c for c in cols
+        if {spark_pdf[c].dtype.kind, duck_pdf[c].dtype.kind} == {"O", "M"}
+    }
+    spark_rows = _sorted_rows(spark_pdf, dates)
+    duck_rows = _sorted_rows(duck_pdf, dates)
+    bad = [
+        (s, d)
+        for s, d in zip(spark_rows, duck_rows)
+        if not all(map(_values_equal, s, d))
+    ]
+    assert not bad, (
+        f"{key}: {len(bad)}/{len(spark_rows)} rows differ; first: {bad[0]}"
+    )

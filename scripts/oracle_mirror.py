@@ -2,16 +2,10 @@
 """Full-registry oracle mirror: run EVERY registered key's Spark query
 AND its DuckDB oracle side-by-side at a fixture dir (default sf0.01 —
 the driver's own correctness scale) via testing.compare_query, the
-SAME normalization/compare discipline the pytest gate and the driver
-use (hand-rolled str() compares false-alarm on datetime/decimal
-dtypes; been there).
+comparator the pytest gate uses.
 
 Output: one JSON line {"sf_dir", "passed": N, "failed": {key: why},
-"rows_only_executed": [key...]} plus a FAIL line per failure on stderr.
-Keys without a registered oracle are EXECUTE-ONLY smoke checks (the
-query ran and produced a frame) — they are NOT correctness-verified
-here and are reported under a separate field so the grouping can't be
-read as oracle-green.
+"secs": {key: wall}} plus a FAIL line per failure on stderr.
 
 Usage: python scripts/oracle_mirror.py [sf_dir] [key_prefix]
 """
@@ -56,18 +50,12 @@ def main() -> None:
 
     import time as _time
 
-    passed, failed, rows_only, secs = 0, {}, [], {}
+    passed, failed, secs = 0, {}, {}
     for key in sorted(registry.QUERIES):
         if not key.startswith(prefix):
             continue
         t0 = _time.perf_counter()
         try:
-            if key not in registry.ORACLES:
-                # execute-only: proves the plan runs end-to-end, NOT
-                # that the values are right (no oracle to compare to)
-                registry.QUERIES[key](spark, sf_dir).count()
-                rows_only.append(key)
-                continue
             compare_query(spark, key, sf_dir)
             passed += 1
         except Exception as ex:  # noqa: BLE001
@@ -84,7 +72,6 @@ def main() -> None:
                 "sf_dir": sf_dir,
                 "passed": passed,
                 "failed": failed,
-                "rows_only_executed": rows_only,
                 "secs": secs,
             }
         )

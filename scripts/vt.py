@@ -1,12 +1,12 @@
 #!/usr/bin/env python
-"""verify+time one or more registry keys (r15 optimization loop).
+"""Verify and time one or more registry keys.
 
 Usage: python scripts/vt.py key [key ...]
   env VT_SF=0.01,0.001  oracle-check scale factors (default 0.01,0.001)
   env VT_TIME=1         also time at sf0.1 (cold + 5 passes, noop sink)
 
-Oracle comparison mirrors the driver: sort columns by name, sort rows,
-compare stringified cells (floats to 12 sig digits).
+Each key is checked against its DuckDB oracle with
+testing.compare_query, the comparator the tests and the benchmark use.
 """
 
 from __future__ import annotations
@@ -20,48 +20,7 @@ sys.path.insert(0, _REPO)
 
 from cdc_debezium_spark import registry  # noqa: E402
 from cdc_debezium_spark.session import get_spark  # noqa: E402
-from cdc_debezium_spark.sources.catalog import TABLES  # noqa: E402
-
-
-def _norm(v):
-    if isinstance(v, float):
-        return f"{v:.12g}"
-    if isinstance(v, bool):
-        return str(v).lower()
-    if isinstance(v, (list, tuple)):
-        return "[" + ",".join(_norm(x) for x in v) + "]"
-    if isinstance(v, dict):
-        return "{" + ",".join(f"{k}:{_norm(v[k])}" for k in sorted(v)) + "}"
-    return str(v)
-
-
-def check(spark, con, key, sf_dir) -> str:
-    import datetime
-
-    fn = registry.QUERIES[key]
-    osql = registry.ORACLES.get(key)
-    if osql is None:
-        return "no-oracle"
-    sdf = fn(spark, sf_dir)
-    scols = sorted(sdf.columns)
-    srows = sorted(
-        tuple(_norm(r[c]) for c in scols) for r in sdf.collect()
-    )
-    ores = con.sql(osql)
-    ocols = sorted(ores.columns)
-    oidx = [ores.columns.index(c) for c in ocols]
-    orows = sorted(
-        tuple(_norm(r[i]) for i in oidx) for r in ores.fetchall()
-    )
-    if scols != ocols:
-        return f"SCHEMA MISMATCH spark={scols} oracle={ocols}"
-    if len(srows) != len(orows):
-        return f"ROWS {len(srows)} vs {len(orows)}"
-    if srows != orows:
-        for a, b in zip(srows, orows):
-            if a != b:
-                return f"VALUE {a} vs {b}"
-    return "ok"
+from cdc_debezium_spark.testing import compare_query  # noqa: E402
 
 
 def main() -> None:
@@ -69,27 +28,20 @@ def main() -> None:
     sfs = os.environ.get("VT_SF", "0.01,0.001").split(",")
     spark = get_spark(app_name="vt")
     registry.load_all()
-    import duckdb
 
     rc = 0
     for sf in sfs:
         sf_dir = f"/root/testdata/sf{sf}"
-        con = duckdb.connect()
-        for t in TABLES:
-            con.sql(
-                f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'"
-            )
-        con.sql("SET threads TO 8")
         for key in keys:
             try:
-                res = check(spark, con, key, sf_dir)
+                compare_query(spark, key, sf_dir)
+                res = "ok"
             except Exception as exc:  # noqa: BLE001
-                res = f"ERR {type(exc).__name__}: {exc}"
+                res = f"{type(exc).__name__}: {exc}"
             tag = "PASS" if res == "ok" else "FAIL"
             if res != "ok":
                 rc = 1
             print(f"[{tag}] sf{sf} {key}: {res}", flush=True)
-        con.close()
     if os.environ.get("VT_TIME", "0") != "0":
         sf_dir = os.environ.get("VT_TIME_SF_DIR", "/root/testdata/sf0.1")
         for key in keys:
