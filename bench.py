@@ -6,7 +6,10 @@ Runs the headline queries at ``$SPARK_GRAFT_SF_DIR`` (default
 JSON line::
 
     {"metric": "headline_suite_wall", "value": N, "unit": "sec",
-     "queries": {"q": sec, ...}, "sf": 0.1}
+     "queries_n": 32, "detail": "bench_detail.json", "sf": 0.1}
+
+The per-query medians go to an earlier stdout line and to the
+detail file.
 
 Each query is materialized with the noop sink (full execution on
 executors, zero driver collect) so the timing measures the Spark plan,
@@ -97,23 +100,10 @@ def _materialize(df) -> None:
 def _run_suite(spark, sf_dir: str, keys: list[str], tag: str):
     """cold pass + median-of-3 steady passes per key.
 
-    Returns (timings, cold, spread, paid_pair_cache, paid_chunk_fixture).
-    A key is marked in paid_pair_cache when one of its passes
-    materialized the shared survivor-pair cache
-    (queries_ext.PAIR_CACHE_EVENTS grew), and in paid_chunk_fixture
-    when it materialized the shared streaming chunk fixture
-    (replay.CHUNK_CACHE_EVENTS grew) — those medians include the
-    shared cost and are not comparable with runs where another lane
-    already paid it (r8 ADVICE; r9 ADVICE extended to both caches,
-    matching sweep_scale.py)."""
-    from cdc_debezium_spark import queries_ext
-    from cdc_debezium_spark.streaming import replay
-
+    Returns (timings, cold, spread)."""
     timings: dict[str, float] = {}
     cold: dict[str, float] = {}
     spread: dict[str, float] = {}
-    paid: list[str] = []
-    paid_chunk: list[str] = []
     for key in keys:
         fn = registry.QUERIES.get(key)
         if fn is None:
@@ -122,8 +112,6 @@ def _run_suite(spark, sf_dir: str, keys: list[str], tag: str):
         # timed steady-state runs with caches cleared between; the
         # recorded number is the median, so one co-scheduled burst of
         # machine load can't fabricate a per-query regression.
-        events_before = len(queries_ext.PAIR_CACHE_EVENTS)
-        chunks_before = len(replay.CHUNK_CACHE_EVENTS)
         t0 = time.perf_counter()
         _materialize(fn(spark, sf_dir))
         cold[key] = round(time.perf_counter() - t0, 3)
@@ -134,10 +122,6 @@ def _run_suite(spark, sf_dir: str, keys: list[str], tag: str):
             _materialize(fn(spark, sf_dir))
             passes.append(time.perf_counter() - t0)
             spark.catalog.clearCache()
-        if len(queries_ext.PAIR_CACHE_EVENTS) > events_before:
-            paid.append(key)
-        if len(replay.CHUNK_CACHE_EVENTS) > chunks_before:
-            paid_chunk.append(key)
         passes.sort()
         dt = round(passes[1], 3)
         timings[key] = dt
@@ -147,7 +131,7 @@ def _run_suite(spark, sf_dir: str, keys: list[str], tag: str):
             f"max {passes[2]:.3f} cold {cold[key]:.3f})",
             file=sys.stderr,
         )
-    return timings, cold, spread, paid, paid_chunk
+    return timings, cold, spread
 
 
 def main() -> None:
@@ -160,20 +144,16 @@ def main() -> None:
     spark.range(1_000_000).selectExpr("sum(id)").collect()
 
     load_start = round(os.getloadavg()[0], 2)
-    timings, cold, spread, paid, paid_chunk = _run_suite(
-        spark, sf_dir, HEADLINE, "headline"
-    )
+    timings, cold, spread = _run_suite(spark, sf_dir, HEADLINE, "headline")
     total = round(sum(timings.values()), 3)
 
     diag: dict[str, dict] = {}
     if os.environ.get("SPARK_GRAFT_DIAGNOSTICS", "1") != "0":
-        d_t, d_c, d_s, d_p, d_pc = _run_suite(spark, sf_dir, DIAGNOSTICS, "diag")
+        d_t, d_c, d_s = _run_suite(spark, sf_dir, DIAGNOSTICS, "diag")
         diag = {
             "queries": d_t,
             "queries_cold": d_c,
             "queries_spread": d_s,
-            "paid_pair_cache": d_p,
-            "paid_chunk_fixture": d_pc,
             "wall": round(sum(d_t.values()), 3),
         }
 
@@ -189,8 +169,6 @@ def main() -> None:
         "queries": timings,
         "queries_cold": cold,
         "queries_spread": spread,
-        "paid_pair_cache": paid,
-        "paid_chunk_fixture": paid_chunk,
         "diagnostics": diag,
         "loadavg_1m": {
             "start": load_start,

@@ -2174,14 +2174,15 @@ def cdc_stream_latest_state_roundtrip(spark, sf_dir):
     import shutil
     import tempfile
 
-    from .streaming.replay import event_chunks_cached, read_event_stream
+    from .streaming.replay import read_event_stream, write_event_chunks
     from .streaming.state import DeltaUpsertSink, run_upsert_stream
 
     state = _format_lane_dir("latest_state_stream", sf_dir)
     shutil.rmtree(state, ignore_errors=True)
     base = tempfile.mkdtemp(prefix="cdc_stream_gate_")
     try:
-        chunks = event_chunks_cached(spark, sf_dir, n_chunks=4, repeat=2)
+        chunks = f"{base}/chunks"
+        write_event_chunks(spark, sf_dir, chunks, n_chunks=4, repeat=2)
         stream = cdc.to_cdc(read_event_stream(spark, chunks))
         # fixed-cadence compaction: this sink's base is KEY-BOUNDED
         # (#keys rows), so ratio-only size-threshold degenerates to
@@ -2441,7 +2442,7 @@ def cdc_checkpoint_resume_roundtrip(spark, sf_dir):
     import tempfile
     import time
 
-    from .streaming.replay import event_chunks_cached, read_event_stream
+    from .streaming.replay import read_event_stream, write_event_chunks
     from .streaming.state import ParquetUpsertSink, run_upsert_stream
 
     state = _format_lane_dir("resume_stream", sf_dir)
@@ -2449,7 +2450,8 @@ def cdc_checkpoint_resume_roundtrip(spark, sf_dir):
     base = tempfile.mkdtemp(prefix="cdc_resume_gate_")
     cp = f"{base}/cp"
     try:
-        chunks = event_chunks_cached(spark, sf_dir, n_chunks=4)
+        chunks = f"{base}/chunks"
+        write_event_chunks(spark, sf_dir, chunks, n_chunks=4)
         sink = ParquetUpsertSink(state, keys=["pk"], order=["ts_us", "ord2"])
 
         # incarnation 1: process at least one micro-batch, then "crash"
@@ -2518,7 +2520,7 @@ def cdc_scd2_stream_roundtrip(spark, sf_dir):
     import shutil
     import tempfile
 
-    from .streaming.replay import event_chunks_cached, read_event_stream
+    from .streaming.replay import read_event_stream, write_event_chunks
     from .streaming.state import Scd2DeltaHistorySink, run_upsert_stream
 
     # history is LOG-sized (every event keeps a row) — never collect
@@ -2528,7 +2530,8 @@ def cdc_scd2_stream_roundtrip(spark, sf_dir):
     shutil.rmtree(state, ignore_errors=True)
     base = tempfile.mkdtemp(prefix="cdc_scd2_gate_")
     try:
-        chunks = event_chunks_cached(spark, sf_dir, n_chunks=4, repeat=2)
+        chunks = f"{base}/chunks"
+        write_event_chunks(spark, sf_dir, chunks, n_chunks=4, repeat=2)
         stream = cdc.to_cdc(read_event_stream(spark, chunks))
         # ratio-only size-threshold compaction: history is LOG-sized,
         # the base grows with ingested volume, so the geometric
@@ -2575,14 +2578,15 @@ def cdc_stream_latest_state_cow_roundtrip(spark, sf_dir):
     import shutil
     import tempfile
 
-    from .streaming.replay import event_chunks_cached, read_event_stream
+    from .streaming.replay import read_event_stream, write_event_chunks
     from .streaming.state import ParquetUpsertSink, run_upsert_stream
 
     state = _format_lane_dir("latest_cow_stream", sf_dir)
     shutil.rmtree(state, ignore_errors=True)
     base = tempfile.mkdtemp(prefix="cdc_latest_cow_gate_")
     try:
-        chunks = event_chunks_cached(spark, sf_dir, n_chunks=4, repeat=2)
+        chunks = f"{base}/chunks"
+        write_event_chunks(spark, sf_dir, chunks, n_chunks=4, repeat=2)
         stream = cdc.to_cdc(read_event_stream(spark, chunks))
         sink = ParquetUpsertSink(state, keys=["pk"], order=["ts_us", "ord2"])
         q = run_upsert_stream(stream, sink, f"{base}/cp")
@@ -2622,14 +2626,15 @@ def cdc_scd2_stream_cow_roundtrip(spark, sf_dir):
     import shutil
     import tempfile
 
-    from .streaming.replay import event_chunks_cached, read_event_stream
+    from .streaming.replay import read_event_stream, write_event_chunks
     from .streaming.state import Scd2HistorySink, run_upsert_stream
 
     state = _format_lane_dir("scd2_stream_cow", sf_dir)
     shutil.rmtree(state, ignore_errors=True)
     base = tempfile.mkdtemp(prefix="cdc_scd2_cow_gate_")
     try:
-        chunks = event_chunks_cached(spark, sf_dir, n_chunks=4, repeat=2)
+        chunks = f"{base}/chunks"
+        write_event_chunks(spark, sf_dir, chunks, n_chunks=4, repeat=2)
         stream = cdc.to_cdc(read_event_stream(spark, chunks))
         sink = Scd2HistorySink(state, keys=["pk"])
         q = run_upsert_stream(stream, sink, f"{base}/cp")

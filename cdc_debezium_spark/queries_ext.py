@@ -62,65 +62,20 @@ sh AS (
 
 NGRAM_MAX_DF = 1000  # mirror of dedup.ngram_jaccard_pairs(max_df=...)
 
-# Shared survivor edge list for the graph family (r7 verdict item 4):
-# six lanes (clusters, canonical, cluster_sizes, graph_degree,
-# triangles, label_propagation) consume the SAME (fixture, threshold)
-# near-dup pair graph, but each used to re-pay the full candidate
-# pipeline — at sf1 ~13 s of every graph lane's cost was the shared
-# pipeline and ~1-10 s the lane's own algebra. The first consumer in a
-# process materializes the survivor pairs once (persist + eager
-# count(), lineage retained — see _survivor_pairs for why NOT
-# localCheckpoint); the rest read the materialized frame. The detector lane
-# ext_dedup_ngram does NOT use the cache: its benched subject IS the
-# pipeline, and the recall report keeps its own fresh truth leg by the
-# same honesty rule. Keyed by applicationId so a restarted session
-# never serves another session's checkpoint blocks.
-_PAIR_CACHE: dict = {}
-
-# Bench honesty (r8 ADVICE): sharing the pair pipeline makes per-key
-# timings order-dependent — whichever graph lane runs first in a
-# session absorbs the ~13 s candidate-pipeline cost. Every
-# materialization appends its cache key here so a bench/sweep can
-# diff the length around a timed region and mark which lane paid
-# (bench_detail "paid_pair_cache"), keeping per-key numbers
-# comparable across runs.
-PAIR_CACHE_EVENTS: list = []
-
 
 def _survivor_pairs(spark, sf_dir: str, threshold: float = 0.5):
-    """(doc_a, doc_b, jaccard) survivor near-dup pairs, materialized
-    once per (session, fixture, threshold) and shared.
+    """(doc_a, doc_b, jaccard) survivor near-dup pairs, persisted lazily.
 
-    persist + eager count, NOT localCheckpoint: persist keeps the
-    lineage, so on a real cluster a lost executor's blocks recompute
-    transparently — a localCheckpoint here would truncate lineage and
-    turn one executor loss into 'checkpoint block not found' for every
-    later graph lane in the session. Entries keyed by dead
-    applicationIds are evicted so a long-lived multi-session process
-    doesn't accumulate unreachable frames."""
-    from pyspark import StorageLevel
+    Six graph lanes (clusters, canonical, cluster_sizes, graph_degree,
+    triangles, label_propagation) consume this same pair graph. Spark's
+    CacheManager matches cached data by plan, so every later consumer in
+    the session reads the blocks the first action materialized; after a
+    ``spark.catalog.clearCache()`` the next lane simply persists again.
+    persist, not localCheckpoint: the lineage is kept, so a lost
+    executor's blocks recompute instead of failing every later lane."""
+    docs = load_table(spark, sf_dir, "documents")
+    return dedup.ngram_jaccard_pairs(docs, threshold).persist()
 
-    app_id = spark.sparkContext.applicationId
-    for k in [k for k in _PAIR_CACHE if k[0] != app_id]:
-        del _PAIR_CACHE[k]
-    key = (app_id, sf_dir, threshold)
-    df = _PAIR_CACHE.get(key)
-    if df is not None and df.storageLevel == StorageLevel.NONE:
-        # self-heal after an external spark.catalog.clearCache(): the
-        # clear UNPERSISTS the shared frame, and without re-pinning it
-        # every downstream edge reference would silently replay the
-        # full candidate pipeline from lineage — measured in the r9
-        # sf1 sweep as label-propagation 1.5 s -> 72 s (each of its
-        # per-round references re-ran the pipeline). Re-persist and pay
-        # ONE rebuild; the event ledger marks the payer.
-        df = None
-    if df is None:
-        docs = load_table(spark, sf_dir, "documents")
-        df = dedup.ngram_jaccard_pairs(docs, threshold).persist()
-        df.count()  # materialize once, before fan-out to six lanes
-        _PAIR_CACHE[key] = df
-        PAIR_CACHE_EVENTS.append(key)
-    return df
 
 # Capped two-phase pair pipeline (mirrors dedup.ngram_jaccard_pairs):
 # shingles above the doc-frequency cap are excluded from candidate
@@ -419,7 +374,8 @@ def ext_dedup_minhash_incremental(spark, sf_dir):
         chunk = docs.where(F.col("doc_id") % 3 == i)
         index, pairs = dedup.incremental_minhash_candidates(index, chunk)
         # localCheckpoint is CORRECT here (contrast _survivor_pairs,
-        # which must keep lineage for a shared long-lived cache):
+        # whose persisted pairs keep lineage because later lanes in the
+        # session read them):
         # iterative per-batch state would otherwise accumulate one
         # union per ingest batch into an unbounded plan, and the
         # truncated state is consumed within this single lane — an
@@ -1658,8 +1614,8 @@ def ext_dedup_clusters(spark, sf_dir):
     """Near-dup clusters: connected components over the exact-Jaccard
     pair graph; each member maps to its cluster's canonical (min) id —
     the keep-one-per-cluster step of corpus dedup. Oracle: recursive
-    transitive closure in DuckDB. Edges come from the shared
-    materialized survivor list (_survivor_pairs)."""
+    transitive closure in DuckDB. Edges come from the persisted
+    survivor pairs (_survivor_pairs)."""
     return dedup.near_dup_clusters(_survivor_pairs(spark, sf_dir, 0.5))
 
 
@@ -2097,8 +2053,8 @@ def ext_text_tfidf(spark, sf_dir):
 def ext_dedup_canonical(spark, sf_dir):
     """Survivor selection over near-dup clusters: keep the longest
     document per cluster (ties to lowest id) — the manifest that turns
-    the pair graph into keep/drop decisions. Edges from the shared
-    materialized survivor list (_survivor_pairs)."""
+    the pair graph into keep/drop decisions. Edges from the persisted
+    survivor pairs (_survivor_pairs)."""
     docs = load_table(spark, sf_dir, "documents")
     return dedup.select_canonical(docs, _survivor_pairs(spark, sf_dir, 0.5))
 
@@ -3871,8 +3827,8 @@ def ext_dedup_graph_degree(spark, sf_dir):
     treats high-degree nodes differently from pairwise dups). Shape:
     the pair lanes' output rolled up twice — all cost is candidate
     generation, shared with the other ngram lanes; the histogram adds
-    two tiny keyed aggregates (read from the shared materialized
-    survivor list)."""
+    two tiny keyed aggregates (read from the persisted survivor pairs,
+    _survivor_pairs)."""
     pairs = _survivor_pairs(spark, sf_dir, 0.5)
     deg = (
         pairs.select(F.col("doc_a").alias("doc_id"))
@@ -4533,10 +4489,9 @@ def ext_graph_triangles(spark, sf_dir):
     pair pipeline's internal persists make the three edge references
     one computation); the triangle join runs on the survivor-sized
     edge list, never the corpus."""
-    # the shared materialized survivor list already holds the edges
-    # (persist + eager count, lineage retained), so the five plan legs
-    # (degree union x2, three triangle-join legs) read cached blocks —
-    # no per-lane persist, no re-run of the candidate pipeline
+    # the survivor pairs are persisted, so the five plan legs (degree
+    # union x2, three triangle-join legs) read one set of cached blocks
+    # — no per-lane persist, no re-run of the candidate pipeline
     pairs = _survivor_pairs(spark, sf_dir, 0.5).select(
         F.col("doc_a").alias("a"), F.col("doc_b").alias("b")
     )
@@ -4854,10 +4809,9 @@ def ext_graph_label_propagation(spark, sf_dir):
     """
     from pyspark.sql import Window
 
-    # edges read from the shared materialized survivor list — the
-    # rounds re-reference them many times, but the frame is already
-    # persisted (eager count, lineage retained) so no per-lane persist
-    # is needed
+    # edges read from the persisted survivor pairs — the rounds
+    # re-reference them many times, and the lineage cut below
+    # materializes them once
     pairs = _survivor_pairs(spark, sf_dir, 0.5).select(
         F.col("doc_a").alias("a"), F.col("doc_b").alias("b")
     )

@@ -178,14 +178,15 @@ def agg_tumbling_window_stream_roundtrip(spark, sf_dir):
 
     from .queries_cdc import _format_lane_dir
     from .streaming.replay import (
-        event_chunks_cached,
         read_event_stream,
         scaled_state_partitions,
+        write_event_chunks,
     )
 
     base = tempfile.mkdtemp(prefix="stream_wagg_gate_")
     try:
-        chunks = event_chunks_cached(spark, sf_dir, n_chunks=4, repeat=2)
+        chunks = f"{base}/chunks"
+        write_event_chunks(spark, sf_dir, chunks, n_chunks=4, repeat=2)
         stream = read_event_stream(spark, chunks)
         agg = (
             stream.dropDuplicates(["event_id"])
@@ -279,11 +280,12 @@ def join_stream_static_enrich_roundtrip(spark, sf_dir):
     from pyspark.sql import Window
 
     from .queries_cdc import _format_lane_dir
-    from .streaming.replay import event_chunks_cached, read_event_stream
+    from .streaming.replay import read_event_stream, write_event_chunks
 
     base = tempfile.mkdtemp(prefix="stream_enrich_gate_")
     try:
-        chunks = event_chunks_cached(spark, sf_dir, n_chunks=4)
+        chunks = f"{base}/chunks"
+        write_event_chunks(spark, sf_dir, chunks, n_chunks=4)
         ev = load_table(spark, sf_dir, "events")
         w = Window.partitionBy("user_id").orderBy(
             F.desc("ts_us"), F.desc("event_id")
@@ -371,14 +373,15 @@ def join_stream_stream_roundtrip(spark, sf_dir):
 
     from .queries_cdc import _format_lane_dir
     from .streaming.replay import (
-        event_chunks_cached,
         read_event_stream,
         scaled_state_partitions,
+        write_event_chunks,
     )
 
     base = tempfile.mkdtemp(prefix="stream_ssjoin_gate_")
     try:
-        chunks = event_chunks_cached(spark, sf_dir, n_chunks=4)
+        chunks = f"{base}/chunks"
+        write_event_chunks(spark, sf_dir, chunks, n_chunks=4)
         clicks = (
             read_event_stream(spark, chunks)
             .where(F.col("event_type") == "click")
@@ -466,14 +469,15 @@ def agg_session_window_stream_roundtrip(spark, sf_dir):
     import uuid
 
     from .streaming.replay import (
-        event_chunks_cached,
         read_event_stream,
         scaled_state_partitions,
+        write_event_chunks,
     )
 
     base = tempfile.mkdtemp(prefix="stream_sess_gate_")
     try:
-        chunks = event_chunks_cached(spark, sf_dir, n_chunks=4)
+        chunks = f"{base}/chunks"
+        write_event_chunks(spark, sf_dir, chunks, n_chunks=4)
         stream = read_event_stream(spark, chunks).withColumn(
             "ts", F.timestamp_micros("ts_us")
         )
@@ -713,14 +717,15 @@ def agg_sliding_window_stream_roundtrip(spark, sf_dir):
 
     from .queries_cdc import _format_lane_dir
     from .streaming.replay import (
-        event_chunks_cached,
         read_event_stream,
         scaled_state_partitions,
+        write_event_chunks,
     )
 
     base = tempfile.mkdtemp(prefix="stream_slide_gate_")
     try:
-        chunks = event_chunks_cached(spark, sf_dir, n_chunks=4)
+        chunks = f"{base}/chunks"
+        write_event_chunks(spark, sf_dir, chunks, n_chunks=4)
         stream = read_event_stream(spark, chunks).withColumn(
             "ts", F.timestamp_micros("ts_us")
         )
@@ -804,14 +809,15 @@ def events_stream_progress_audit(spark, sf_dir):
     import uuid
 
     from .streaming.metrics import MetricsEndpoint, ProgressCapture
-    from .streaming.replay import event_chunks_cached, read_event_stream
+    from .streaming.replay import read_event_stream, write_event_chunks
 
     base = tempfile.mkdtemp(prefix="stream_prog_gate_")
     cap = ProgressCapture()
     spark.streams.addListener(cap)
     try:
         with MetricsEndpoint(cap) as ep:
-            chunks = event_chunks_cached(spark, sf_dir, n_chunks=4)
+            chunks = f"{base}/chunks"
+            write_event_chunks(spark, sf_dir, chunks, n_chunks=4)
             stream = read_event_stream(spark, chunks)
             name = f"prog_{uuid.uuid4().hex[:12]}"
             q = (
@@ -929,9 +935,9 @@ def udf_stateful_processor_roundtrip(spark, sf_dir):
 
     from .queries_cdc import _format_lane_dir
     from .streaming.replay import (
-        event_chunks_cached,
         read_event_stream,
         scaled_state_partitions,
+        write_event_chunks,
     )
 
     def track(key, pdfs, state: GroupState):
@@ -968,7 +974,8 @@ def udf_stateful_processor_roundtrip(spark, sf_dir):
 
     base = tempfile.mkdtemp(prefix="stream_state_udf_gate_")
     try:
-        chunks = event_chunks_cached(spark, sf_dir, n_chunks=4)
+        chunks = f"{base}/chunks"
+        write_event_chunks(spark, sf_dir, chunks, n_chunks=4)
         stream = read_event_stream(spark, chunks)
         emitted = stream.groupBy("user_id").applyInPandasWithState(
             track,
@@ -1089,7 +1096,7 @@ def udf_stateful_tws_roundtrip(spark, sf_dir):
     )
 
     from .queries_cdc import _format_lane_dir
-    from .streaming.replay import event_chunks_cached, read_event_stream
+    from .streaming.replay import read_event_stream, write_event_chunks
 
     class Track(StatefulProcessor):
         def init(self, handle: StatefulProcessorHandle) -> None:
@@ -1132,7 +1139,8 @@ def udf_stateful_tws_roundtrip(spark, sf_dir):
     )
     old_provider = spark.conf.get(provider_key, None)
     try:
-        chunks = event_chunks_cached(spark, sf_dir, n_chunks=4)
+        chunks = f"{base}/chunks"
+        write_event_chunks(spark, sf_dir, chunks, n_chunks=4)
         stream = read_event_stream(spark, chunks)
         spark.conf.set(provider_key, rocks)
         emitted = stream.groupBy("user_id").transformWithStateInPandas(
@@ -1274,7 +1282,7 @@ def udf_session_timeout_roundtrip(spark, sf_dir):
     from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
     from .queries_cdc import _format_lane_dir
-    from .streaming.replay import event_chunks_cached, read_event_stream
+    from .streaming.replay import read_event_stream, write_event_chunks
 
     gap_us = GAP_US
     delay = "1 minute"
@@ -1319,7 +1327,8 @@ def udf_session_timeout_roundtrip(spark, sf_dir):
 
     base = tempfile.mkdtemp(prefix="stream_session_timeout_gate_")
     try:
-        chunks = event_chunks_cached(spark, sf_dir, n_chunks=4)
+        chunks = f"{base}/chunks"
+        write_event_chunks(spark, sf_dir, chunks, n_chunks=4)
         stream = (
             read_event_stream(spark, chunks)
             .withColumn("ts", F.timestamp_micros("ts_us"))

@@ -36,19 +36,6 @@ EVENT_STREAM_SCHEMA = StructType(
 )
 
 
-# Shared chunk fixture (r8 verdict #7's measured decomposition: of a
-# ~38 s sf1 stream roundtrip, ~8 s is write_event_chunks — a
-# DETERMINISTIC function of (sf_dir, n_chunks, repeat) re-paid by all
-# eleven roundtrip lanes). The first lane in a process materializes
-# the chunk dir once; the rest stream the same files. Keyed by
-# applicationId (the _PAIR_CACHE pattern) so a restarted session never
-# reuses another session's dirs and code-version staleness is
-# impossible. Entries record to CHUNK_CACHE_EVENTS so benches can mark
-# which lane paid materialization (per-key timing honesty, r8 ADVICE).
-_CHUNK_CACHE: dict = {}
-CHUNK_CACHE_EVENTS: list = []
-
-
 @_contextmanager
 def scaled_state_partitions(
     spark: SparkSession, src_dir: str, mb_per_partition: float = 32
@@ -117,30 +104,6 @@ def scaled_state_partitions(
         yield
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", str(default))
-
-
-def event_chunks_cached(
-    spark: SparkSession, sf_dir: str, n_chunks: int = 5, repeat: int = 1
-) -> str:
-    """Process-shared, read-only chunk fixture dir for (sf_dir,
-    n_chunks, repeat). Lanes MUST NOT write into or delete the
-    returned dir — per-lane state/checkpoint dirs stay lane-owned."""
-    import atexit
-    import shutil
-    import tempfile
-
-    app_id = spark.sparkContext.applicationId
-    for k in [k for k in _CHUNK_CACHE if k[0] != app_id]:
-        shutil.rmtree(_CHUNK_CACHE.pop(k), ignore_errors=True)
-    key = (app_id, sf_dir, n_chunks, repeat)
-    path = _CHUNK_CACHE.get(key)
-    if path is None:
-        path = tempfile.mkdtemp(prefix="event_chunks_shared_")
-        write_event_chunks(spark, sf_dir, path, n_chunks, repeat)
-        _CHUNK_CACHE[key] = path
-        CHUNK_CACHE_EVENTS.append(key)
-        atexit.register(shutil.rmtree, path, ignore_errors=True)
-    return path
 
 
 def write_event_chunks(

@@ -5,11 +5,10 @@ with a per-key wall cap enforced via Spark job-group cancellation.
 Catches lanes that blow up at scale OUTSIDE the bench headline.
 
 Output: one JSON line {"sf_dir", "timings": {key: sec}, "errors":
-{key: msg}, "timeouts": [key...], "paid_materialization": {key:
-[cache...]}} — the last field marks lanes whose timing includes a
-shared-cache materialization (survivor-pair edge list, chunk fixture):
-those per-key numbers are order-dependent and not comparable with runs
-where another lane paid first (r8 ADVICE).
+{key: msg}, "timeouts": [key...]}. The cache is cleared after every
+key, so each graph lane's timing includes its own survivor-pair
+pipeline: these numbers are not comparable with the marginal
+(warm-cache) graph timings in SCALE_SF1_r15.json.
 """
 
 from __future__ import annotations
@@ -38,20 +37,10 @@ def main() -> None:
 
     spark.range(1_000_000).selectExpr("sum(id)").collect()  # warmup
 
-    from cdc_debezium_spark import queries_ext
-    from cdc_debezium_spark.streaming import replay
-
     timings: dict[str, float] = {}
     errors: dict[str, str] = {}
     timeouts: list[str] = []
-    paid: dict[str, list] = {}
-    marks_tainted_after: list[str] = []
     sc = spark.sparkContext
-
-    def cache_marks():
-        return len(queries_ext.PAIR_CACHE_EVENTS), len(replay.CHUNK_CACHE_EVENTS)
-
-    paid_secs: dict[str, float] = {}
 
     for key in sorted(registry.QUERIES)[lo:hi]:
         fn = registry.QUERIES[key]
@@ -75,56 +64,18 @@ def main() -> None:
             th.join(cap)
             return done, th, round(time.perf_counter() - t0, 3)
 
-        p0, c0 = cache_marks()
         done, th, dt = attempt()
-        p1, c1 = cache_marks()
-        marks = (["pair_cache"] if p1 > p0 else []) + (
-            ["chunk_fixture"] if c1 > c0 else []
-        )
-        if marks:
-            paid[key] = marks
         if th.is_alive():
             sc.cancelJobGroup(key)
             th.join(30)
             timeouts.append(key)
-            if th.is_alive():
-                # zombie lane thread may still materialize a shared
-                # cache DURING a later key's window, misattributing the
-                # before/after mark diff (r9 review) — flag every
-                # subsequent mark as suspect
-                marks_tainted_after.append(key)
             print(f"# {key}: TIMEOUT >{cap}s", file=sys.stderr)
         elif done["err"]:
             errors[key] = done["err"]
             print(f"# {key}: ERROR {done['err']}", file=sys.stderr)
         else:
-            if marks:
-                # r15 verdict item 6: a lane whose timed pass
-                # materialized a shared cache (survivor-pair edge list
-                # / chunk fixture) is re-timed immediately with that
-                # cache WARM — the recorded timing is the lane's
-                # MARGINAL cost over the session-shared pipeline (the
-                # production posture), while the cold pay is kept in
-                # paid_secs under the same key. Detection is dynamic
-                # (the mark diff), so new cache consumers need no
-                # hardcoded list. Per-key isolation is unchanged: the
-                # blanket clearCache below still runs between keys.
-                paid_secs[key] = dt
-                done, th, dt = attempt()
-                if th.is_alive():
-                    sc.cancelJobGroup(key)
-                    th.join(30)
-                    if th.is_alive():
-                        marks_tainted_after.append(key)
-                if th.is_alive() or done["err"]:
-                    # warm re-run failed: fall back to the cold number
-                    dt = paid_secs[key]
             timings[key] = dt
-            print(
-                f"# {key}: {dt:.3f}s"
-                + (f" (cold pay {paid_secs[key]:.3f}s)" if key in paid_secs else ""),
-                file=sys.stderr,
-            )
+            print(f"# {key}: {dt:.3f}s", file=sys.stderr)
         spark.catalog.clearCache()
 
     print(
@@ -134,9 +85,6 @@ def main() -> None:
                 "timings": timings,
                 "errors": errors,
                 "timeouts": timeouts,
-                "paid_materialization": paid,
-                "paid_secs": paid_secs,
-                "marks_tainted_after": marks_tainted_after,
             }
         )
     )

@@ -1793,3 +1793,26 @@ def test_capped_pair_counts_unpinned_path_matches_broadcast_path(
         tuple(r) for r in dd.ngram_jaccard_pairs(docs, 0.5).collect()
     }
     assert pinned == unpinned and len(pinned) > 0
+
+
+def test_graph_lanes_share_pairs_through_spark_cache(spark, sf_dir):
+    """The graph lanes share one near-dup pair graph only through
+    Spark's CacheManager: a later lane's plan reads the pairs an
+    earlier lane persisted, and after a clearCache the next lane
+    persists them again and still matches its oracle."""
+    import re
+
+    from cdc_debezium_spark import registry
+    from cdc_debezium_spark.testing import compare_query
+
+    spark.catalog.clearCache()
+    registry.QUERIES["ext_graph_triangles"](spark, sf_dir).write.format(
+        "noop"
+    ).mode("overwrite").save()
+    degree = registry.QUERIES["ext_dedup_graph_degree"](spark, sf_dir)
+    plan = degree._jdf.queryExecution().withCachedData().toString()
+    assert re.search(
+        r"InMemoryRelation \[doc_a#\d+L?, doc_b#\d+L?, jaccard#\d+\]", plan
+    ), plan
+    spark.catalog.clearCache()
+    compare_query(spark, "ext_graph_label_propagation", sf_dir)

@@ -2159,3 +2159,15 @@ def test_scaled_state_partitions_never_raises_above_default(spark, tmp_path):
         assert spark.conf.get(key) == "2"
     finally:
         spark.conf.set(key, default)
+
+
+def test_roundtrip_lane_leaves_no_temp_dir(spark, sf_dir, tmp_path, monkeypatch):
+    """A roundtrip lane stages its chunk files under its own temp dir
+    and removes that dir when it returns: nothing outlives the query."""
+    import tempfile
+
+    from cdc_debezium_spark.testing import compare_query
+
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    compare_query(spark, "agg_tumbling_window_stream_roundtrip", sf_dir)
+    assert list(tmp_path.iterdir()) == []
