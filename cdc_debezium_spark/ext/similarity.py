@@ -536,8 +536,9 @@ def train_ivf_index(
 
 
 def load_ivf_index(spark, path: str) -> DataFrame:
-    """Load persisted IVF centroids (k rows — broadcasts everywhere)."""
-    return spark.read.parquet(path)
+    """Load persisted IVF centroids (k rows — broadcasts everywhere),
+    read with the schema train_ivf_index writes."""
+    return spark.read.schema(CENT_SCHEMA).parquet(path)
 
 
 def assign_cells(

@@ -231,7 +231,7 @@ def agg_tumbling_window_stream_roundtrip(spark, sf_dir):
                     "agg_tumbling_window_stream_roundtrip: stream did not "
                     "drain in 300s"
                 )
-        return spark.read.parquet(out_dir)
+        return spark.read.schema(agg.schema).parquet(out_dir)
     finally:
         shutil.rmtree(base, ignore_errors=True)
 
@@ -522,7 +522,7 @@ def agg_session_window_stream_roundtrip(spark, sf_dir):
                     "agg_session_window_stream_roundtrip: stream did not "
                     "drain in 300s"
                 )
-        return spark.read.parquet(out_dir)
+        return spark.read.schema(agg.schema).parquet(out_dir)
     finally:
         shutil.rmtree(base, ignore_errors=True)
 
@@ -762,7 +762,7 @@ def agg_sliding_window_stream_roundtrip(spark, sf_dir):
                     "agg_sliding_window_stream_roundtrip: stream did not "
                     "drain in 300s"
                 )
-        return spark.read.parquet(out_dir)
+        return spark.read.schema(agg.schema).parquet(out_dir)
     finally:
         shutil.rmtree(base, ignore_errors=True)
 

@@ -24,6 +24,7 @@ from collections.abc import Sequence
 
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 from ..operators.cdc import latest_state
 
@@ -962,6 +963,18 @@ def _state_parts(path: str) -> list[str]:
     return parts + _delta_dirs(path)
 
 
+def _read_parts(
+    spark: SparkSession, parts: list[str], schema: StructType | None
+) -> tuple[DataFrame, StructType]:
+    """Read state components with the schema the sink already knows.
+    Only a sink opened over existing state (a restart) has none yet;
+    it infers once through Spark and keeps the result."""
+    if schema is None:
+        df = spark.read.parquet(*parts)
+        return df, df.schema
+    return spark.read.schema(schema).parquet(*parts), schema
+
+
 def _swap_base(path: str, merged: DataFrame) -> dict:
     """Crash-safe compaction commit (r9 review finding: an rmtree of
     the old base BEFORE the rename left a window where the only copy
@@ -1064,6 +1077,8 @@ class DeltaUpsertSink:
         self.compact_ratio = compact_ratio
         self.compact_min_bytes = compact_min_bytes
         self._batches_seen = 0
+        # schema of every file this sink writes: the first batch's
+        self._schema: StructType | None = None
 
     def _delta_glob(self) -> list[str]:
         return _delta_dirs(self.path)
@@ -1072,9 +1087,12 @@ class DeltaUpsertSink:
         parts = _state_parts(self.path)
         if not parts:
             return None
-        return spark.read.parquet(*parts)
+        rows, self._schema = _read_parts(spark, parts, self._schema)
+        return rows
 
     def __call__(self, batch: DataFrame, batch_id: int) -> None:
+        if self._schema is None:
+            self._schema = batch.schema
         (
             batch.write.mode("overwrite")
             .parquet(os.path.join(self.path, f"delta_{batch_id:012d}"))
@@ -1174,6 +1192,8 @@ class Scd2DeltaHistorySink:
         self.compact_ratio = compact_ratio
         self.compact_min_bytes = compact_min_bytes
         self._batches_seen = 0
+        # schema of every file this sink writes: the first batch's
+        self._schema: StructType | None = None
 
     def _delta_glob(self) -> list[str]:
         return _delta_dirs(self.path)
@@ -1182,21 +1202,22 @@ class Scd2DeltaHistorySink:
         parts = _state_parts(self.path)
         if not parts:
             return None
+        rows, self._schema = _read_parts(spark, parts, self._schema)
         # ONE exchange for the whole read path (r10 plan audit): a
         # hash(keys) repartition satisfies the clustered-distribution
         # requirement of BOTH the (keys, ord) dedup (subset rule) and
         # the interval window (partitionBy keys) — letting the dedup
         # pick its own exchange keyed (keys, ord) forces a second
         # corpus shuffle before the window.
-        return (
-            spark.read.parquet(*parts)
-            .repartition(*self.keys)
-            .dropDuplicates([*self.keys, self.ord_col])
+        return rows.repartition(*self.keys).dropDuplicates(
+            [*self.keys, self.ord_col]
         )
 
     def __call__(self, batch: DataFrame, batch_id: int) -> None:
         # O(batch): in-batch dedupe + append. Prior state is never read
         # on the hot path.
+        if self._schema is None:
+            self._schema = batch.schema
         (
             batch.dropDuplicates([*self.keys, self.ord_col])
             .write.mode("overwrite")
