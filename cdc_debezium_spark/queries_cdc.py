@@ -331,10 +331,7 @@ def cdc_agg_view(spark, sf_dir):
     """Aggregated view over latest-state: per-bucket live-key count,
     exact-decimal value sum, and freshness watermark — the DW
     "aggregated data" contract (README.md:78-80) as a queryable batch
-    surface. The streaming twin is IncrementalAggViewSink, which
-    maintains THIS aggregate incrementally (delta-scoped bucket
-    recompute); test_incremental_agg_view_parity pins streamed ≡
-    batch. Buckets are pk % 16 (engine-exact integers)."""
+    surface. Buckets are pk % 16 (engine-exact integers)."""
     ce = cdc.cdc_events(spark, sf_dir)
     live = cdc.latest_state(ce)
     return live.groupBy((F.col("pk") % 16).alias("bucket_id")).agg(
@@ -2156,10 +2153,8 @@ def cdc_stream_latest_state_roundtrip(spark, sf_dir):
     one row per key (true log compaction: state size is #keys, not
     log size), firing mid-stream so the final read crosses a
     compacted base AND live deltas. STREAM_PROFILE_r09.json showed
-    the copy-on-write sink's per-batch addBatch grows with
-    accumulated state (O(total²/batch) over a drain) — the family's
-    100 TB scale-killer; that sink now lives in the
-    cdc_stream_latest_state_cow_roundtrip diagnostic.
+    that a copy-on-write sink's per-batch addBatch grows with
+    accumulated state (O(total²/batch) over a drain).
 
     Determinism: chunk files carry strictly increasing mtimes
     (write_event_chunks), so "one chunk per micro-batch, in log
@@ -2443,7 +2438,7 @@ def cdc_checkpoint_resume_roundtrip(spark, sf_dir):
     import time
 
     from .streaming.replay import read_event_stream, write_event_chunks
-    from .streaming.state import ParquetUpsertSink, run_upsert_stream
+    from .streaming.state import DeltaUpsertSink, run_upsert_stream
 
     state = _format_lane_dir("resume_stream", sf_dir)
     shutil.rmtree(state, ignore_errors=True)
@@ -2452,7 +2447,7 @@ def cdc_checkpoint_resume_roundtrip(spark, sf_dir):
     try:
         chunks = f"{base}/chunks"
         write_event_chunks(spark, sf_dir, chunks, n_chunks=4)
-        sink = ParquetUpsertSink(state, keys=["pk"], order=["ts_us", "ord2"])
+        sink = DeltaUpsertSink(state, keys=["pk"], order=["ts_us", "ord2"])
 
         # incarnation 1: process at least one micro-batch, then "crash"
         q1 = run_upsert_stream(cdc.to_cdc(read_event_stream(spark, chunks)), sink, cp)
@@ -2464,10 +2459,10 @@ def cdc_checkpoint_resume_roundtrip(spark, sf_dir):
         q1.stop()
         q1.awaitTermination(60)
 
-        # incarnation 2: fresh reader + fresh sink object, SAME
-        # checkpoint — resumes from the committed offset
-        sink2 = ParquetUpsertSink(state, keys=["pk"], order=["ts_us", "ord2"])
-        sink2._initialized = True  # state dir already exists from run 1
+        # incarnation 2: fresh reader + fresh sink object over the
+        # same state dir, SAME checkpoint — resumes from the committed
+        # offset
+        sink2 = DeltaUpsertSink(state, keys=["pk"], order=["ts_us", "ord2"])
         q2 = run_upsert_stream(
             cdc.to_cdc(read_event_stream(spark, chunks)), sink2, cp
         )
@@ -2514,8 +2509,7 @@ def cdc_scd2_stream_roundtrip(spark, sf_dir):
     deltas. Measured at sf1 (STREAM_PROFILE_r09.json): copy-on-write
     drain 29.7 s with per-batch cost growing in accumulated state
     (O(total²/batch)); merge-on-read 13.0 s, flat per-batch — the
-    property that survives 100 TB. The copy-on-write sink now lives
-    in the cdc_scd2_stream_cow_roundtrip diagnostic.
+    property that survives 100 TB.
     """
     import shutil
     import tempfile
@@ -2544,104 +2538,6 @@ def cdc_scd2_stream_roundtrip(spark, sf_dir):
             q.stop()
             raise TimeoutError(
                 "cdc_scd2_stream_roundtrip: stream did not drain in 300s"
-            )
-        return sink.read_history(spark).select(
-            "pk", "ord2", "op", "val", "valid_from_us", "valid_to_us"
-        )
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
-
-
-@query(
-    "cdc_stream_latest_state_cow_roundtrip",
-    oracle=CDC_CTE
-    + """
-    SELECT pk, ts_us, val
-    FROM (
-      SELECT * FROM cdc_events
-      QUALIFY row_number() OVER (PARTITION BY pk ORDER BY ts_us DESC, ord2 DESC) = 1
-    )
-    WHERE op <> 'd'
-    """,
-)
-def cdc_stream_latest_state_cow_roundtrip(spark, sf_dir):
-    """DIAGNOSTIC (r10): the copy-on-write ParquetUpsertSink on the
-    same chunked at-least-once replay and the SAME oracle as the
-    canonical cdc_stream_latest_state_roundtrip. The sink rewrites
-    touched buckets per micro-batch (broadcast semi-join partition
-    pruning) — write-time merge with zero read-time work, correct and
-    useful at modest state, but per-batch cost grows with accumulated
-    state (STREAM_PROFILE_r09.json: O(total²/batch) over a drain), so
-    it was demoted from the production key when the merge-on-read
-    DeltaUpsertSink took it over. Kept oracled as the differential
-    twin: both sinks must land the identical latest-state table."""
-    import shutil
-    import tempfile
-
-    from .streaming.replay import read_event_stream, write_event_chunks
-    from .streaming.state import ParquetUpsertSink, run_upsert_stream
-
-    state = _format_lane_dir("latest_cow_stream", sf_dir)
-    shutil.rmtree(state, ignore_errors=True)
-    base = tempfile.mkdtemp(prefix="cdc_latest_cow_gate_")
-    try:
-        chunks = f"{base}/chunks"
-        write_event_chunks(spark, sf_dir, chunks, n_chunks=4, repeat=2)
-        stream = cdc.to_cdc(read_event_stream(spark, chunks))
-        sink = ParquetUpsertSink(state, keys=["pk"], order=["ts_us", "ord2"])
-        q = run_upsert_stream(stream, sink, f"{base}/cp")
-        if not q.awaitTermination(300):
-            q.stop()
-            raise TimeoutError(
-                "cdc_stream_latest_state_cow_roundtrip: stream did not "
-                "drain in 300s"
-            )
-        return sink.read_live(spark).select("pk", "ts_us", "val")
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
-
-
-@query(
-    "cdc_scd2_stream_cow_roundtrip",
-    oracle=CDC_CTE
-    + """
-    SELECT pk, ord2, op, val,
-           ts_us AS valid_from_us,
-           lead(ts_us) OVER (PARTITION BY pk ORDER BY ts_us, ord2) AS valid_to_us
-    FROM cdc_events
-    """,
-)
-def cdc_scd2_stream_cow_roundtrip(spark, sf_dir):
-    """DIAGNOSTIC (r10): the copy-on-write Scd2HistorySink on the same
-    chunked at-least-once replay and the SAME oracle as the canonical
-    cdc_scd2_stream_roundtrip. The sink rewrites only touched buckets
-    per micro-batch and re-derives each key's [valid_from, valid_to)
-    intervals from its deduped event set — write-time merge, zero
-    read-time work, but per-batch addBatch cost grows with
-    accumulated history (STREAM_PROFILE_r09.json measured 93% of a
-    29.7 s sf1 drain in state-sized addBatch work), so the
-    merge-on-read Scd2DeltaHistorySink took over the production key.
-    Kept oracled as the differential twin: both sinks must land the
-    identical interval table."""
-    import shutil
-    import tempfile
-
-    from .streaming.replay import read_event_stream, write_event_chunks
-    from .streaming.state import Scd2HistorySink, run_upsert_stream
-
-    state = _format_lane_dir("scd2_stream_cow", sf_dir)
-    shutil.rmtree(state, ignore_errors=True)
-    base = tempfile.mkdtemp(prefix="cdc_scd2_cow_gate_")
-    try:
-        chunks = f"{base}/chunks"
-        write_event_chunks(spark, sf_dir, chunks, n_chunks=4, repeat=2)
-        stream = cdc.to_cdc(read_event_stream(spark, chunks))
-        sink = Scd2HistorySink(state, keys=["pk"])
-        q = run_upsert_stream(stream, sink, f"{base}/cp")
-        if not q.awaitTermination(300):
-            q.stop()
-            raise TimeoutError(
-                "cdc_scd2_stream_cow_roundtrip: stream did not drain in 300s"
             )
         return sink.read_history(spark).select(
             "pk", "ord2", "op", "val", "valid_from_us", "valid_to_us"

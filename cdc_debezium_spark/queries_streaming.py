@@ -798,8 +798,8 @@ def events_stream_progress_audit(spark, sf_dir):
     is about to return — a broken exposition (bad escaping, wrong
     aggregation, dead server) fails the gate, not just a unit test.
     If progress accounting double-counts (e.g. a foreachBatch re-read
-    — the bug class the r6 persist fix in ParquetUpsertSink
-    addressed), under-reports, or mis-orders batches, the hash breaks.
+    — the bug class a persist of the batch in a multi-branch sink
+    prevents), under-reports, or mis-orders batches, the hash breaks.
     """
     import re
     import shutil

@@ -12,6 +12,10 @@ import os
 
 from pyspark.sql import SparkSession
 
+_PACKAGE_PARENT = os.path.dirname(
+    os.path.dirname(os.path.abspath(__file__))
+)
+
 # Confs that are safe to set on a live session and that the engine
 # depends on. Keep this list minimal and documented.
 RUNTIME_CONFS: dict[str, str] = {
@@ -51,9 +55,11 @@ def _extra_confs() -> dict[str, str]:
     spark.cleaner.periodicGC.interval=1min (a long multi-job lineage
     keeps every dereferenced shuffle on disk for up to the default
     30min GC period — the probe's accumulated ~38 GB of exchanges
-    exhausted a 79 GB scratch disk with the defaults). No env var ->
-    empty dict -> the builder is byte-identical; bench and tests never
-    set it."""
+    exhausted a 79 GB scratch disk with the defaults). Applied after
+    the builder's own confs, so it overrides them, e.g.
+    SPARK_GRAFT_CONFS="spark.ui.enabled=true;spark.driver.memory=24g;spark.sql.shuffle.partitions=64;spark.driver.extraJavaOptions=-Xss64m".
+    No env var -> empty dict -> the builder is unchanged; perfbench
+    sets it to keep a run's files under its work dir."""
     extra = os.environ.get("SPARK_GRAFT_CONFS", "")
     out: dict[str, str] = {}
     for kv in filter(None, (p.strip() for p in extra.split(";"))):
@@ -77,27 +83,19 @@ def get_spark(
     """
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     master = master or f"local[{cpus}]"
-    shuffle = shuffle_partitions or int(os.environ.get("SPARK_SHUFFLE_PARTITIONS", cpus))
+    shuffle = shuffle_partitions or int(cpus)
     builder = (
         SparkSession.builder.appName(app_name)
         .master(master)
         .config("spark.sql.shuffle.partitions", str(shuffle))
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "8g"))
-        # UI off for test/bench noise; scale-probe scripts flip it on
-        # (SPARK_GRAFT_UI=true) for REST per-stage shuffle attribution
-        .config("spark.ui.enabled", os.environ.get("SPARK_GRAFT_UI", "false"))
+        .config("spark.driver.memory", "8g")
+        .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
+        # Python workers unpickle UDFs that reference this package;
+        # PySpark copies spark.executorEnv.* into the worker env, so
+        # they import it from here whatever the driver's cwd.
+        .config("spark.executorEnv.PYTHONPATH", _PACKAGE_PARENT)
     )
-    # Optional driver JVM thread-stack override (SPARK_GRAFT_XSS=64m):
-    # the d=768 decade probe hit a java.util.regex StackOverflowError
-    # on the stream execution thread (regex recursion depth grows with
-    # input length; the default ~1 MB stack caps it). Only applied
-    # when explicitly requested — scale scripts set it, tests don't.
-    xss = os.environ.get("SPARK_GRAFT_XSS")
-    if xss:
-        builder = builder.config(
-            "spark.driver.extraJavaOptions", f"-Xss{xss}"
-        )
     for k, v in _extra_confs().items():
         builder = builder.config(k, v)
     for k, v in RUNTIME_CONFS.items():

@@ -1,20 +1,29 @@
-"""Stateful streaming: incremental latest-state (E7) with idempotent
-commits (E10) and streaming dedup (E6).
+"""Stateful streaming: incremental latest-state (E7) and SCD2 history
+with idempotent commits (E10), plus streaming dedup (E6).
 
 The reference's consumers keep a current-state view per table (Redis
 latest-value cache, ES index — README.md:48-51) fed by an at-least-once
-log. OSS parquet has no MERGE, so the upsert sink maintains state as a
-hash-bucketed parquet table and rewrites ONLY the buckets touched by a
-micro-batch via dynamic partition overwrite:
+log. OSS parquet has no MERGE, so the upsert sinks here are
+merge-on-read: each micro-batch is APPENDED as its own delta dir, and
+the merge runs at read or compaction time.
 
-- scale: a batch touching k keys rewrites ≤ min(k, n_buckets) buckets,
-  not the whole table — at 100 TB state with 4096 buckets a typical
-  micro-batch rewrites a small fraction of state; with Delta/Iceberg
-  available the same class swaps to a real MERGE with no API change.
-- idempotence (E10): replaying a batch recomputes the same buckets from
-  (previous-state ∪ batch) with per-key ordering, landing byte-identical
-  results — the effectively-once contract the reference gets from
-  offset commits + keyed topics (prod-resources.yaml:14-20, 84-95).
+Layout under a sink's <path>/:
+
+- ``delta_<batchid>``: one dir per micro-batch, written with overwrite,
+  so a re-run of the same batch id replaces its own delta;
+- ``base``: the compacted fold of every earlier delta;
+- ``_base_next`` / ``_base_retired``: compaction scratch, present
+  while a fold commits or after a crash cut one short (see
+  ``_swap_base``).
+
+Readers union every component that exists. Both sinks derive their
+answer from the row SET with duplicate absorption (latest-per-key max
+for ``DeltaUpsertSink``, (keys, ord) dedup for ``Scd2DeltaHistorySink``),
+so redelivery, a crashed batch re-run, or a compaction cut short all
+land the same state — the effectively-once contract the reference gets
+from offset commits + keyed topics (prod-resources.yaml:14-20, 84-95).
+``streaming.txlog.TxTable`` is the log-backed alternative with
+snapshot-isolated readers.
 """
 
 from __future__ import annotations
@@ -28,590 +37,10 @@ from pyspark.sql.types import StructType
 
 from ..operators.cdc import latest_state
 
-BUCKET_COL = "_bucket"
-
-# ---------------------------------------------------------------------------
-# Crash-consistent bucket swap (judge r4 item 5). The stage-and-swap
-# rewrite merge_into/compact_log use could previously die between
-# removing a live bucket dir and moving its staged replacement in,
-# leaving a hole. Protocol now:
-#
-#   1. stage the FULL rewrite to a sibling temp dir (crash here: the
-#      live table is untouched; the orphan temp dir is overwritten by
-#      the next run)
-#   2. write a journal file (atomic rename + fsync) into the table dir
-#      listing the staged temp dir and the bucket entries to swap —
-#      the journal is only ever written AFTER staging completed, so
-#      its presence always means "roll FORWARD"
-#   3. swap each bucket via renames only: live -> .old.<entry>,
-#      staged -> live, then drop .old.<entry>. Every step is
-#      idempotent under replay, so a crash at ANY point recovers by
-#      re-running the journal
-#   4. drop the temp dir, then the journal
-#
-# recover_swap(path) replays step 3-4 from the journal; merge_into and
-# compact_log call it first, so an interrupted run is healed before
-# the next one reads state. Spark ignores the underscore journal file
-# and the dot-prefixed .old dirs during partition discovery, so a
-# crashed state stays readable as either old or new — never a hole.
-# Single-writer discipline (one maintainer per state dir) is assumed,
-# as everywhere in this module.
-
-_SWAP_JOURNAL = "_swap_journal.json"
-
-
-def _fsync_dir(path: str) -> None:
-    import os
-
-    fd = os.open(path, os.O_RDONLY)
-    try:
-        os.fsync(fd)
-    finally:
-        os.close(fd)
-
-
-def _write_swap_journal(
-    path: str, tmp: str, staged: Sequence[str], removed: Sequence[str]
-) -> None:
-    """Durably record the swap intent (staging must already be
-    complete — the journal IS the commit point). `staged` entries
-    have a replacement dir in tmp; `removed` entries emptied (every
-    row deleted/compacted away) and their live dir is retired. The
-    two lists are recorded separately because replay cannot infer the
-    difference: after a completed staged swap the tmp entry is gone,
-    which looks exactly like an emptied bucket."""
-    import json
-    import os
-
-    j = os.path.join(path, _SWAP_JOURNAL)
-    with open(j + ".tmp", "w") as f:
-        json.dump(
-            {
-                "tmp": os.path.abspath(tmp),
-                "staged": list(staged),
-                "removed": list(removed),
-            },
-            f,
-        )
-        f.flush()
-        os.fsync(f.fileno())
-    os.rename(j + ".tmp", j)
-    _fsync_dir(path)
-
-
-def _swap_entry(path: str, tmp: str, entry: str, staged: bool) -> None:
-    """Swap (or retire) one bucket dir via renames; idempotent under
-    replay from any crash point:
-
-    - staged, untouched:   dst=old data, stg present  → full swap
-    - staged, mid-crash:   old present, stg present   → land stg, drop old
-    - staged, landed:      stg gone (dst = new data)  → drop old if any
-    - removed, untouched:  dst present                → retire + drop
-    - removed, mid/done:   dst gone                   → drop old if any
-    """
-    import os
-    import shutil
-
-    dst = os.path.join(path, entry)
-    stg = os.path.join(tmp, entry)
-    old = os.path.join(path, ".old." + entry)
-    if staged:
-        if os.path.exists(stg):
-            if not os.path.exists(old) and os.path.exists(dst):
-                os.rename(dst, old)
-            os.rename(stg, dst)
-        # stg absent ⇒ the staged dir already landed in dst: keep it
-    else:
-        if os.path.exists(dst):
-            if os.path.exists(old):  # crashed between rename and rmtree
-                shutil.rmtree(old)
-            os.rename(dst, old)
-    if os.path.exists(old):
-        shutil.rmtree(old)
-
-
-def _finish_swap(
-    path: str, tmp: str, staged: Sequence[str], removed: Sequence[str]
-) -> None:
-    import os
-    import shutil
-
-    for e in staged:
-        _swap_entry(path, tmp, e, staged=True)
-    for e in removed:
-        _swap_entry(path, tmp, e, staged=False)
-    shutil.rmtree(tmp, ignore_errors=True)
-    j = os.path.join(path, _SWAP_JOURNAL)
-    if os.path.exists(j):
-        os.remove(j)
-    _fsync_dir(path)
-
-
-def recover_swap(path: str) -> bool:
-    """Heal an interrupted stage-and-swap: if a journal exists, the
-    staged data was complete, so replay the swap forward. Returns
-    True when a journal was found and replayed. Safe to call any
-    time (the DR-drill entry point; merge_into/compact_log call it
-    on entry)."""
-    import json
-    import os
-
-    j = os.path.join(path, _SWAP_JOURNAL)
-    if not os.path.isfile(j):
-        return False
-    with open(j) as f:
-        meta = json.load(f)
-    _finish_swap(path, meta["tmp"], meta["staged"], meta["removed"])
-    return True
-
-
-class ParquetUpsertSink:
-    """`foreachBatch` target maintaining a latest-state parquet table."""
-
-    def __init__(
-        self,
-        path: str,
-        keys: Sequence[str] = ("pk",),
-        order: Sequence[str] = ("ts_us", "ord2"),
-        op_col: str = "op",
-        drop_deleted: bool = True,
-        n_buckets: int = 16,
-        bucket_expr=None,
-    ) -> None:
-        self.path = path
-        self.keys = list(keys)
-        self.order = list(order)
-        self.op_col = op_col
-        self.drop_deleted = drop_deleted
-        self.n_buckets = n_buckets
-        # bucket_expr: optional Column overriding the xxhash layout
-        # (e.g. a plain key mod, when a derived view must share the
-        # state's bucketing so its recompute partition-prunes)
-        self.bucket_expr = bucket_expr
-        self._initialized = False
-
-    def _bucketed(self, df: DataFrame) -> DataFrame:
-        expr = (
-            self.bucket_expr
-            if self.bucket_expr is not None
-            else F.pmod(F.xxhash64(*self.keys), F.lit(self.n_buckets))
-        )
-        return df.withColumn(BUCKET_COL, expr)
-
-    def current_state(self, spark: SparkSession) -> DataFrame | None:
-        try:
-            return spark.read.parquet(self.path).drop(BUCKET_COL)
-        except Exception:
-            return None
-
-    def __call__(self, batch: DataFrame, batch_id: int) -> None:
-        spark = batch.sparkSession
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-        # The batch feeds two branches of the write job (the
-        # touched-bucket semi-join side and the union side); without
-        # persist, foreachBatch re-reads the source per branch
-        # (doubling input I/O and the numInputRows metric).
-        b = self._bucketed(batch).persist()
-        try:
-            prev = None
-            if self._initialized:
-                try:
-                    prev = spark.read.parquet(self.path)
-                except Exception:
-                    prev = None
-            if prev is not None:
-                # Broadcast semi-join, NOT collect()+isin: the touched
-                # set stays executor-side, so no data-dependent driver
-                # materialization even at high bucket cardinality
-                # (judge r3 item 3). Partition pruning moves from
-                # planning time to the join, but the broadcast side is
-                # ≤ n_buckets rows — a hash probe per state row.
-                touched = b.select(BUCKET_COL).distinct()
-                prev_touched = prev.join(
-                    F.broadcast(touched), BUCKET_COL, "left_semi"
-                )
-                merged_in = prev_touched.unionByName(b, allowMissingColumns=True)
-            else:
-                merged_in = b
-            # Keep deleted keys as tombstones inside state so late
-            # replays can't resurrect them; readers filter on the flag.
-            merged = latest_state(
-                merged_in,
-                keys=self.keys,
-                order=self.order,
-                op_col=self.op_col,
-                drop_deleted=False,
-            )
-            (
-                merged.write.mode("overwrite")
-                .partitionBy(BUCKET_COL)
-                .parquet(self.path)
-            )
-            self._initialized = True
-        finally:
-            b.unpersist()
-
-    def compact(self, spark: SparkSession) -> None:
-        """Rewrite state as one file per bucket (small-file compaction).
-
-        Each micro-batch write can leave shuffle-partition-many part
-        files inside a bucket directory; scan cost at 100 TB follows
-        file count as much as byte count. Compaction repartitions to
-        exactly the bucket layout, writes to a temp location, then
-        swaps — never reading and overwriting the same files in one
-        job (self-overwrite corrupts: the scan is lazy).
-        """
-        import shutil
-
-        df = spark.read.parquet(self.path)
-        tmp = self.path + ".compact"
-        (
-            df.repartition(self.n_buckets, F.col(BUCKET_COL))
-            .sortWithinPartitions(*self.keys)
-            .write.mode("overwrite")
-            .partitionBy(BUCKET_COL)
-            .parquet(tmp)
-        )
-        shutil.rmtree(self.path)
-        shutil.move(tmp, self.path)
-
-    def read_live(self, spark: SparkSession) -> DataFrame:
-        """Current state without tombstoned (deleted) keys."""
-        df = self.current_state(spark)
-        if df is None:
-            raise FileNotFoundError(self.path)
-        if self.drop_deleted:
-            df = df.filter(F.col(self.op_col) != "d")
-        return df
-
-
-class IncrementalAggViewSink:
-    """`foreachBatch` target maintaining a latest-state table AND a
-    derived per-bucket aggregate view, incrementally.
-
-    The incremental materialized-view pattern for aggregates over CDC
-    state: deltas can't be blindly added (an update REPLACES a key's
-    contribution), so each micro-batch (1) upserts latest-state, then
-    (2) re-aggregates ONLY the state buckets the batch touched and
-    dynamically overwrites those aggregate partitions. Work per batch
-    is O(touched buckets), not O(state): at 100 TB with 4096 buckets a
-    typical batch refreshes a small fraction of the view — the
-    delta-scoped recompute every DW "aggregated data" sink
-    (reference README.md:78-80) needs to stay fresh without full
-    rebuilds. A bucket whose last live key is deleted is rewritten
-    with an n_keys=0 row (never left stale); readers filter it.
-
-    `agg_fn` maps the live state of the touched buckets (grouped by
-    BUCKET_COL) to one row per bucket; the default mirrors the
-    `cdc_agg_view` driver key.
-    """
-
-    def __init__(
-        self,
-        state_path: str,
-        agg_path: str,
-        keys: Sequence[str] = ("pk",),
-        order: Sequence[str] = ("ts_us", "ord2"),
-        op_col: str = "op",
-        n_buckets: int = 16,
-        bucket_expr=None,
-        agg_fn=None,
-    ) -> None:
-        self.upsert = ParquetUpsertSink(
-            state_path,
-            keys=keys,
-            order=order,
-            op_col=op_col,
-            drop_deleted=True,
-            n_buckets=n_buckets,
-            bucket_expr=bucket_expr,
-        )
-        self.agg_path = agg_path
-        self.agg_fn = agg_fn or self._default_agg
-
-    @staticmethod
-    def _default_agg(live: DataFrame) -> DataFrame:
-        return live.groupBy(BUCKET_COL).agg(
-            F.count("*").alias("n_keys"),
-            F.sum(F.col("val").cast("decimal(18,6)"))
-            .cast("double")
-            .alias("sum_last_val"),
-            F.max("ts_us").alias("max_ts_us"),
-        )
-
-    def __call__(self, batch: DataFrame, batch_id: int) -> None:
-        spark = batch.sparkSession
-        if batch.isEmpty():  # bounded 1-row probe, not a data collect
-            return
-        self.upsert(batch, batch_id)
-        # Touched buckets as a DataFrame end-to-end — broadcast
-        # semi/anti joins instead of collect()+isin, so the sink has
-        # no data-dependent driver materialization (judge r3 item 3).
-        touched = (
-            self.upsert._bucketed(batch).select(BUCKET_COL).distinct()
-        )
-        state = spark.read.parquet(self.upsert.path)
-        live = state.filter(F.col(self.upsert.op_col) != "d").join(
-            F.broadcast(touched), BUCKET_COL, "left_semi"
-        )
-        agg = self.agg_fn(live)
-        # union in zero rows for touched buckets that lost their last
-        # live key, so their old aggregate partition is overwritten
-        zero_cols = [
-            F.lit(0).cast(f.dataType).alias(f.name)
-            for f in agg.schema.fields
-            if f.name != BUCKET_COL
-        ]
-        zeros = touched.select(BUCKET_COL, *zero_cols).join(
-            agg.select(BUCKET_COL), BUCKET_COL, "left_anti"
-        )
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-        (
-            agg.unionByName(zeros)
-            .write.mode("overwrite")
-            .partitionBy(BUCKET_COL)
-            .parquet(self.agg_path)
-        )
-
-    def read(self, spark: SparkSession, live_only: bool = True) -> DataFrame:
-        df = spark.read.parquet(self.agg_path)
-        return df.filter(F.col("n_keys") > 0) if live_only else df
-
-
-def merge_into(
-    spark: SparkSession,
-    path: str,
-    source: DataFrame,
-    keys: Sequence[str] = ("pk",),
-    update: bool = True,
-    insert: bool = True,
-    delete_expr=None,
-    insert_expr=None,
-    n_buckets: int = 16,
-    bucket_expr=None,
-) -> None:
-    """SQL-MERGE semantics on the bucketed parquet state layout (the
-    r3 verdict's top missing item: the reference's DW/ClickHouse sinks
-    want a transactional MERGE; OSS parquet has none, so this provides
-    the MERGE API shape — matched-update / matched-delete /
-    not-matched-insert — on the key-bucketed layout, and swaps
-    one-for-one to Delta/Iceberg ``MERGE INTO`` when a table format is
-    available).
-
-    - ``update``: matched keys take the source row.
-    - ``delete_expr``: Column over SOURCE columns; matched keys where
-      it holds are deleted (evaluated before update).
-    - ``insert``: source keys absent from the target are inserted.
-    - ``insert_expr``: Column over SOURCE columns gating the insert
-      (SQL's ``WHEN NOT MATCHED AND cond THEN INSERT``) — e.g. a CDC
-      apply inserts only non-delete rows: ``F.col("s.op") != "d"``.
-
-    Cost model is the upsert sink's: only buckets containing source
-    keys are read and rewritten — a k-key merge rewrites
-    ≤ min(k, n_buckets) buckets regardless of state size, the touched
-    set rides a broadcast semi-join, and the per-bucket full-outer
-    join co-partitions on the same key hash the layout bucketed by.
-    Source must have one row per key (the MERGE precondition; real
-    MERGE raises on duplicate matches too).
-
-    The rewrite stages to a sibling temp dir, then swaps exactly the
-    touched bucket dirs. Dynamic partition overwrite cannot express
-    MERGE's deletes: a bucket whose rows ALL vanish is absent from the
-    output and its stale dir would survive — the swap removes it. The
-    swap loop's bucket list is ≤ n_buckets values (layout-bounded, not
-    data-bounded — the same class as compact_log's partition listing).
-    The swap is journaled and rename-only (crash at any step recovers
-    to either the old or the new state — see recover_swap above); an
-    interrupted predecessor is healed on entry.
-    """
-    import os
-
-    if os.path.isdir(path):
-        recover_swap(path)
-    expr = (
-        bucket_expr
-        if bucket_expr is not None
-        else F.pmod(F.xxhash64(*keys), F.lit(n_buckets))
-    )
-    src = source.withColumn(BUCKET_COL, expr)
-    keys = list(keys)
-    try:
-        tgt = spark.read.parquet(path)
-    except Exception:
-        tgt = None
-
-    if tgt is None:
-        gate = (
-            F.lit(insert)
-            if insert_expr is None
-            else F.coalesce(insert_expr, F.lit(False))
-        )
-        merged = src.alias("s").where(gate)
-    else:
-        touched = src.select(BUCKET_COL).distinct()
-        tgt_touched = tgt.join(F.broadcast(touched), BUCKET_COL, "left_semi")
-        cols = [c for c in tgt.columns if c != BUCKET_COL]
-        t = tgt_touched.alias("t")
-        s = src.alias("s")
-        cond = F.lit(True)
-        for k in keys:
-            cond = cond & F.col(f"t.{k}").eqNullSafe(F.col(f"s.{k}"))
-        # the join key embeds the bucket, so the full-outer
-        # co-partitions exactly on the layout's hash
-        j = t.join(s, cond, "full_outer")
-        s_present = F.col(f"s.{keys[0]}").isNotNull()
-        t_present = F.col(f"t.{keys[0]}").isNotNull()
-        is_delete = (
-            s_present
-            & t_present
-            & (
-                F.lit(False)
-                if delete_expr is None
-                else F.coalesce(delete_expr, F.lit(False))
-            )
-        )
-        out_cols = [
-            F.when(
-                s_present & (F.lit(update) | ~t_present),
-                F.col(f"s.{c}"),
-            )
-            .otherwise(F.col(f"t.{c}"))
-            .alias(c)
-            for c in cols
-        ]
-        bucket_out = F.coalesce(
-            F.col(f"s.{BUCKET_COL}"), F.col(f"t.{BUCKET_COL}")
-        ).alias(BUCKET_COL)
-        insert_gate = (
-            F.lit(insert)
-            if insert_expr is None
-            else F.coalesce(insert_expr, F.lit(False))
-        )
-        merged = (
-            j.where(~is_delete)  # matched deletes drop here
-            .where(t_present | insert_gate)  # not-matched-insert gate
-            .select(*out_cols, bucket_out)
-        )
-
-    if tgt is None:
-        merged.write.mode("overwrite").partitionBy(BUCKET_COL).parquet(path)
-        return
-
-    tmp = path + ".merge"
-    merged.write.mode("overwrite").partitionBy(BUCKET_COL).parquet(tmp)
-    touched_vals = [r[0] for r in touched.collect()]  # ≤ n_buckets
-    entries = [f"{BUCKET_COL}={v}" for v in touched_vals]
-    staged = [e for e in entries if os.path.exists(os.path.join(tmp, e))]
-    removed = [e for e in entries if e not in staged]  # buckets emptied
-    _write_swap_journal(path, tmp, staged, removed)  # commit point
-    _finish_swap(path, tmp, staged, removed)
-
-
-def compaction_plan(
-    log: DataFrame,
-    keys: Sequence[str] = ("pk",),
-    bucket_col: str = BUCKET_COL,
-    min_events_per_key: float = 2.0,
-) -> DataFrame:
-    """Per-bucket compaction plan over a retained bucketed CDC log:
-    one row per bucket whose events-per-key density meets the
-    threshold (same density `cdc_compaction_stats` reports, computed
-    here per physical bucket). Two hash aggregates, no window."""
-    per_key = log.groupBy(bucket_col, *keys).agg(
-        F.count("*").alias("n_events")
-    )
-    stats = per_key.groupBy(bucket_col).agg(
-        F.sum("n_events").alias("n_events"),
-        F.count("*").alias("n_keys"),
-        (F.sum("n_events") / F.count("*")).alias("events_per_key"),
-    )
-    return stats.where(F.col("events_per_key") >= min_events_per_key)
-
-
-def compact_log(
-    spark: SparkSession,
-    path: str,
-    keys: Sequence[str] = ("pk",),
-    order: Sequence[str] = ("ts_us", "ord2"),
-    op_col: str = "op",
-    bucket_col: str = BUCKET_COL,
-    min_events_per_key: float = 2.0,
-) -> dict:
-    """Kafka-style log compaction for a retained bucketed CDC log
-    (judge r3 item 4 — the action `cdc_compaction_stats` plans for).
-
-    Buckets whose events-per-key density meets `min_events_per_key`
-    are rewritten keeping only the newest event per key — tombstones
-    INCLUDED, exactly the compacted-topic contract (`cleanup.policy=
-    compact` keeps the delete marker; readers materializing state see
-    no difference, replayers lose only superseded intermediates).
-    Sparse buckets are left byte-identical, so compaction cost tracks
-    the dense tail, not table size — at 100 TB the typical run
-    rewrites the few hot buckets the density scan surfaces.
-
-    The rewrite lands in a sibling temp dir first and bucket dirs are
-    swapped after the job: the scan is lazy, so dynamically
-    overwriting partitions of the same files being read would corrupt
-    (same discipline as ParquetUpsertSink.compact). One file per
-    bucket via repartition on the bucket column. The swap loop walks
-    the temp dir's partition listing — bounded by bucket cardinality,
-    never by data.
-
-    Returns {"buckets_compacted", "rows_before", "rows_after"} (the
-    bucket count from a filesystem listing, row counts from two k-row
-    aggregates — no data-sized driver materialization).
-    """
-    import os
-
-    recover_swap(path)
-    log = spark.read.parquet(path)
-    plan = compaction_plan(
-        log, keys=keys, bucket_col=bucket_col,
-        min_events_per_key=min_events_per_key,
-    )
-    # 1-row aggregate; also pins the plan BEFORE the rewrite — the
-    # plan frame is lazy and would re-derive (empty) densities if
-    # first evaluated against the compacted files.
-    totals = plan.agg(
-        F.sum("n_events").alias("ne"), F.count("*").alias("nb")
-    ).first()
-    rows_before = int(totals["ne"] or 0)
-    if not totals["nb"]:
-        return {"buckets_compacted": 0, "rows_before": 0, "rows_after": 0}
-    dense = plan.select(bucket_col)
-    to_rewrite = log.join(F.broadcast(dense), bucket_col, "left_semi")
-    compacted = latest_state(
-        to_rewrite, keys=keys, order=order, op_col=op_col,
-        drop_deleted=False,  # tombstones survive compaction
-    )
-    tmp = path + ".compact"
-    (
-        compacted.repartition(F.col(bucket_col))
-        .write.mode("overwrite")
-        .partitionBy(bucket_col)
-        .parquet(tmp)
-    )
-    # compaction keeps >=1 row per key (tombstones included), so every
-    # rewritten bucket has a staged replacement — nothing empties
-    entries = sorted(
-        e for e in os.listdir(tmp) if e.startswith(f"{bucket_col}=")
-    )
-    _write_swap_journal(path, tmp, entries, [])  # commit point
-    _finish_swap(path, tmp, entries, [])
-    swapped = [os.path.join(path, e) for e in entries]
-    rows_after = (
-        spark.read.parquet(*swapped).count() if swapped else 0
-    )
-    return {
-        "buckets_compacted": len(swapped),
-        "rows_before": rows_before,
-        "rows_after": rows_after,
-    }
-
 
 def run_upsert_stream(
     stream_df: DataFrame,
-    sink: ParquetUpsertSink,
+    sink: DeltaUpsertSink | Scd2DeltaHistorySink,
     checkpoint_dir: str,
 ):
     """Start an availableNow upsert stream; caller awaits termination.
@@ -677,227 +106,7 @@ def stateful_running_totals(stream: DataFrame) -> DataFrame:
     )
 
 
-def stateful_latest_value(stream: DataFrame) -> DataFrame:
-    """Per-key latest value via `transformWithStateInPandas` (the
-    Spark 4 stateful-processor API; applyInPandasWithState's successor).
-
-    Maintains one ValueState per key holding (ord, val) of the newest
-    event seen, across micro-batches — the streaming B6 kernel as an
-    explicit state machine. Emits the updated latest row per key per
-    trigger (the Redis-analog changelog).
-
-    Requires the RocksDB state store (set here at runtime): the HDFS
-    provider does not support the transformWithState operator family.
-    Also requires `protobuf` (the state-server wire format) — absent
-    from this environment, so the parity test import-skips; the
-    dependency-free stateful path is `stateful_running_totals`.
-    """
-    spark = stream.sparkSession
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-    )
-    import pandas as pd
-    from pyspark.sql.streaming import StatefulProcessor, StatefulProcessorHandle
-    from pyspark.sql.types import (
-        DoubleType,
-        LongType,
-        StructField,
-        StructType,
-    )
-
-    out_schema = StructType(
-        [
-            StructField("user_id", LongType()),
-            StructField("last_ord", LongType()),
-            StructField("last_val", DoubleType()),
-        ]
-    )
-    state_schema = StructType(
-        [StructField("ord", LongType()), StructField("val", DoubleType())]
-    )
-
-    class LatestValue(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._state = handle.getValueState("latest", state_schema)
-
-        def handleInputRows(self, key, rows, timerValues):
-            best_ord, best_val = (
-                self._state.get() if self._state.exists() else (-1, None)
-            )
-            for pdf in rows:
-                idx = pdf["event_id"].idxmax()
-                o = int(pdf["event_id"].loc[idx])
-                if o > best_ord:
-                    best_ord = o
-                    best_val = float(pdf["value"].loc[idx])
-            self._state.update((best_ord, best_val))
-            import pandas as pd
-
-            yield pd.DataFrame(
-                {"user_id": [key[0]], "last_ord": [best_ord], "last_val": [best_val]}
-            )
-
-        def close(self) -> None:
-            pass
-
-    return stream.groupBy("user_id").transformWithStateInPandas(
-        statefulProcessor=LatestValue(),
-        outputStructType=out_schema,
-        outputMode="Update",
-        timeMode="None",
-    )
-
-
-def backup_state(paths: Sequence[str], backup_dir: str) -> None:
-    """DR backup analog of the reference's backup.sh (appendix at
-    setup-infrastructure.sh:386-441, which archives connector configs,
-    topic lists and k8s resources): snapshot the state dir(s) AND the
-    streaming checkpoint together, because restore-time consistency
-    needs the pair — state restored without its checkpoint would
-    double-apply the tail, a checkpoint without its state would skip
-    it. Heals any in-flight bucket swap first so the backup never
-    captures a mid-swap state."""
-    import os
-    import shutil
-
-    os.makedirs(backup_dir, exist_ok=True)
-    for p in paths:
-        if os.path.isdir(p):
-            recover_swap(p)
-        # Re-backup into the same dir must not die mid-loop on an
-        # existing target (that would leave a partial {state,
-        # checkpoint} pair — the inconsistency the pair-snapshot
-        # exists to prevent): stage the copy beside the target, move
-        # the old entry ASIDE (not away) before renaming the new one
-        # in, and only then delete it. The destructive rmtree happens
-        # strictly after the replacement exists, so at every point at
-        # least one COMPLETE copy survives on disk: worst case (crash
-        # between the two renames) the entry sits as dst.old + dst.tmp
-        # instead of dst — recoverable, unlike the r6-advice hazard
-        # where rmtree-then-rename destroyed the old backup before the
-        # new one landed and a crash left the entry absent entirely.
-        dst = os.path.join(backup_dir, os.path.basename(p))
-        tmp = dst + ".tmp"
-        old = dst + ".old"
-        for stale in (tmp, old):
-            if os.path.exists(stale):
-                shutil.rmtree(stale)
-        shutil.copytree(p, tmp)
-        if os.path.exists(dst):
-            os.rename(dst, old)
-        os.rename(tmp, dst)
-        if os.path.exists(old):
-            shutil.rmtree(old)
-
-
-def restore_state(paths: Sequence[str], backup_dir: str) -> None:
-    """DR restore analog of the reference's scripts/rollback.sh: drop
-    whatever is left of the live dirs (corrupt or partial) and bring
-    back the backed-up pair. After restore, restarting the stream on
-    the restored checkpoint replays exactly the log tail the backup
-    had not yet seen — the sink's idempotence absorbs any overlap."""
-    import os
-    import shutil
-
-    for p in paths:
-        if os.path.exists(p):
-            shutil.rmtree(p)
-        src = os.path.join(backup_dir, os.path.basename(p))
-        if os.path.isdir(src):
-            shutil.copytree(src, p)
-
-
-class Scd2HistorySink:
-    """`foreachBatch` target maintaining an SCD2 interval-history table
-    incrementally — the streaming form of operators.cdc.scd2 (B7) and
-    the DW sink's audit contract (reference README.md:49; retained-log
-    history, prod-resources.yaml:126-134).
-
-    Design for order-robustness: the stored rows ARE the per-key raw
-    events (deduped on (key, ord) — redelivery-idempotent), carrying
-    their derived [valid_from, valid_to) interval columns. Each batch
-    rewrites only the TOUCHED buckets: union incoming events with the
-    bucket's existing rows, drop redelivered duplicates, re-derive
-    intervals per key with one lead() window. Because the derivation
-    is a pure function of the key's event SET, any batch arrival
-    order (mtime ties, interleaved partitions, replays) lands the
-    identical history — the same commutativity argument as
-    TxUpsertSink's tombstone retention, lifted from latest-state to
-    full history. A key's rows co-live in one bucket, so the interval
-    window never crosses bucket files and each rewrite shuffles only
-    touched-bucket data.
-    """
-
-    def __init__(
-        self,
-        path: str,
-        keys: Sequence[str] = ("pk",),
-        ts_col: str = "ts_us",
-        ord_col: str = "ord2",
-        n_buckets: int = 16,
-    ) -> None:
-        self.path = path
-        self.keys = list(keys)
-        self.ts_col = ts_col
-        self.ord_col = ord_col
-        self.n_buckets = n_buckets
-        self._initialized = False
-
-    def _bucketed(self, df: DataFrame) -> DataFrame:
-        return df.withColumn(
-            BUCKET_COL, F.pmod(F.xxhash64(*self.keys), F.lit(self.n_buckets))
-        )
-
-    def __call__(self, batch: DataFrame, batch_id: int) -> None:
-        from pyspark.sql import Window
-
-        spark = batch.sparkSession
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-        event_cols = [c for c in batch.columns]
-        b = self._bucketed(batch).persist()
-        try:
-            merged_in = b
-            if self._initialized:
-                try:
-                    prev = spark.read.parquet(self.path)
-                except Exception:
-                    prev = None
-                if prev is not None:
-                    touched = b.select(BUCKET_COL).distinct()
-                    prev_touched = prev.join(
-                        F.broadcast(touched), BUCKET_COL, "left_semi"
-                    ).select(*event_cols, BUCKET_COL)
-                    merged_in = prev_touched.unionByName(b)
-            deduped = merged_in.dropDuplicates([*self.keys, self.ord_col])
-            w = Window.partitionBy(*self.keys).orderBy(
-                F.asc(self.ts_col), F.asc(self.ord_col)
-            )
-            hist = deduped.withColumn(
-                "valid_from_us", F.col(self.ts_col)
-            ).withColumn("valid_to_us", F.lead(self.ts_col).over(w))
-            (
-                hist.write.mode("overwrite")
-                .partitionBy(BUCKET_COL)
-                .parquet(self.path)
-            )
-            self._initialized = True
-        finally:
-            b.unpersist()
-
-    def read_history(self, spark: SparkSession) -> DataFrame:
-        return spark.read.parquet(self.path).drop(BUCKET_COL)
-
-
-# --- shared delta/base state layout for the merge-on-read sinks ----------
-#
-# Layout under <path>/: `base` (compacted), `delta_<batchid>` dirs
-# (per-batch appends), `_base_next` (compaction scratch), `_base_retired`
-# (previous base, kept until the swap completes). Readers union every
-# component that exists; both sinks derive their answer from the row
-# SET with duplicate absorption (dedup on (keys, ord) / latest-per-key
-# max), so reading base + retired + deltas after ANY crash point is
-# correct — at worst duplicated rows, never missing ones.
+# --- merge-on-read state layout (see the module docstring) ---------------
 
 
 def _delta_dirs(path: str) -> list[str]:
@@ -1024,18 +233,14 @@ def _swap_base(path: str, merged: DataFrame) -> dict:
 
 
 class DeltaUpsertSink:
-    """Merge-on-read latest-state sink — the compacted-topic analog of
-    ParquetUpsertSink, built on the same delta/base layout as
-    Scd2DeltaHistorySink (r9: the copy-on-write upsert path re-reads
-    and rewrites touched buckets per batch; with uniform keys that is
-    state-sized work per batch, the shape the scd2 profiling showed
-    dominates the streaming family's cost).
+    """Merge-on-read latest-state sink — the compacted-topic analog,
+    built on the same delta/base layout as Scd2DeltaHistorySink.
 
       * per batch: APPEND the batch — O(batch), no read of prior
         state, no window on the hot path;
       * at read: ONE latest-per-key window over base + deltas
-        (tombstones retained in state, filtered by read_live — the
-        same retention contract as ParquetUpsertSink);
+        (tombstones retained in state, filtered by read_live, so a
+        late replay of an older event cannot resurrect a deleted key);
       * compaction: fold base + deltas down to one row per key (true
         Kafka-log-compaction semantics: state size becomes #keys, not
         log size) and drop the deltas.
@@ -1043,9 +248,7 @@ class DeltaUpsertSink:
     Idempotence is order-theoretic: latest-per-key is a max over
     (order) per key, so duplicate rows (redelivery, crash re-runs,
     deltas surviving a compaction crash window) never change the max,
-    and a late row older than a compacted winner loses the window —
-    the same commutativity argument as the copy-on-write sink, with
-    the merge moved from write time to read/compaction time."""
+    and a late row older than a compacted winner loses the window."""
 
     def __init__(
         self,
@@ -1134,17 +337,11 @@ class DeltaUpsertSink:
 
 
 class Scd2DeltaHistorySink:
-    """Merge-on-read SCD2 history sink — the scale-shaped twin of
-    Scd2HistorySink (r8 verdict #7's measurement drove this: profiling
-    cdc_scd2_stream_roundtrip at sf1 showed 93% of the 29.7 s drain is
-    addBatch WORK, not trigger/commit overhead — walCommit+commitOffsets
-    totalled 0.87 s across 8 batches. The copy-on-write sink re-reads
-    and rewrites every touched bucket per batch, and with uniform keys
-    every batch touches ALL buckets, so per-batch cost grows with
-    accumulated state: O(total²/batch) work overall. At 100 TB that is
-    the scale-killer, not the checkpoint machinery).
+    """Merge-on-read SCD2 history sink — the streaming form of
+    operators.cdc.scd2 (B7) and the DW sink's audit contract (reference
+    README.md:49; retained-log history, prod-resources.yaml:126-134).
 
-    This sink is the public Hudi/Delta merge-on-read recipe instead:
+    It follows the public Hudi/Delta merge-on-read recipe:
 
       * per batch: dedupe WITHIN the batch and APPEND it as a delta —
         O(batch) work, no read of prior state, no window;
@@ -1159,8 +356,9 @@ class Scd2DeltaHistorySink:
     (key, ord) rows, and the read/compaction-side dropDuplicates
     absorbs them — so a crash between base-rewrite and delta-removal
     leaves duplicates that the next read deduplicates, never wrong
-    history. The derived table is a pure function of the row SET,
-    identical to Scd2HistorySink's output by construction.
+    history. The derived table is a pure function of the row SET, so
+    any batch arrival order (mtime ties, interleaved partitions,
+    replays) lands the identical history.
 
     Local-FS file ops (shutil) stand in for the FileSystem API a
     cluster deployment would use; the state layout (base/ + delta

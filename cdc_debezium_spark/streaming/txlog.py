@@ -2,9 +2,9 @@
 
 The reference's sinks assume a transactional upsert store
 (README.md:48-51 — Redis/ES/DW); OSS parquet directories give none of
-that, and the bucketed swap in state.py (crash-consistent since r5)
-still exposes readers to in-place bucket replacement. This module is
-the missing piece realized natively — the core idea of the public
+that, and the merge-on-read sinks in state.py still expose readers to
+compaction deleting the files they scan. This module is the missing
+piece realized natively — the core idea of the public
 Delta/Iceberg designs (an append-only transaction log of immutable
 data files) in a dependency-free form:
 
@@ -14,8 +14,7 @@ data files) in a dependency-free form:
   files added and removed; the entry is created ATOMICALLY
   (tmp + fsync + hard-link-free rename with O_EXCL semantics via
   ``os.link``), so readers see either version N or N+1, never a
-  partial state — the swap problem disappears instead of being
-  journaled around
+  partial state — no directory is ever swapped under a reader
 - reads resolve a SNAPSHOT: replay the log to the requested (or
   latest) version, hand Spark the immutable file list. A concurrent
   commit cannot disturb an in-flight read; old versions remain
@@ -287,14 +286,14 @@ class TxTable:
 
 class TxUpsertSink:
     """foreachBatch target maintaining latest-state in a TxTable —
-    the E7 stateful-upsert contract (ParquetUpsertSink) with an ACID
-    backend: each micro-batch is ONE atomic commit, concurrent readers
+    the E7 stateful-upsert contract (as state.DeltaUpsertSink) with an
+    ACID backend: each micro-batch is ONE atomic commit, concurrent readers
     see a consistent version, and redelivered batches are absorbed
     because the latest-state fold is idempotent (E10). The streaming
     analog of a Delta `foreachBatch MERGE` sink, with no dependency.
 
     The fold RETAINS tombstones in committed state (compacted-topic
-    contract, same as ParquetUpsertSink): a delete stays a row that
+    contract, same as DeltaUpsertSink): a delete stays a row that
     wins the per-key ordering, and ``read_live`` filters it. This is
     what makes the sink robust to batch-level reordering — Spark's
     file streaming source orders files by modification time with ties

@@ -119,66 +119,6 @@ def test_p4_as_of_equals_truncated_latest(spark, rows, cut):
     assert via_op == via_trunc
 
 
-@given(
-    rows=EVENT_LOGS,
-    boundaries=st.lists(st.integers(1, 24), max_size=3),
-)
-@settings(
-    max_examples=6,
-    deadline=None,
-    suppress_health_check=[HealthCheck.function_scoped_fixture],
-)
-def test_p5_incremental_agg_view_chunk_invariant(
-    spark, tmp_path_factory, rows, boundaries
-):
-    """P5: maintaining the aggregate view incrementally over ANY
-    chunking of the log yields exactly the batch aggregate over
-    latest-state — the delta-scoped recompute can never depend on
-    where micro-batch boundaries fall."""
-    from cdc_debezium_spark.streaming.state import (
-        BUCKET_COL,
-        IncrementalAggViewSink,
-    )
-
-    out, df = _mk(spark, rows)
-    base = tmp_path_factory.mktemp("p5")
-    sink = IncrementalAggViewSink(
-        str(base / "state"),
-        str(base / "view"),
-        bucket_expr=F.pmod(F.col("pk"), F.lit(4)),
-        n_buckets=4,
-    )
-    cuts = sorted({min(b, len(out)) for b in boundaries})
-    chunks, prev = [], 0
-    for c in cuts + [len(out)]:
-        if c > prev:
-            chunks.append(out[prev:c])
-            prev = c
-    for i, ch in enumerate(chunks):
-        sink(spark.createDataFrame(ch, SCHEMA), i)
-
-    got = sorted(
-        tuple(r) for r in sink.read(spark)
-        .select(
-            F.col(BUCKET_COL).alias("b"), "n_keys", "sum_last_val", "max_ts_us"
-        )
-        .collect()
-    )
-    live = cdc.latest_state(df)
-    want = sorted(
-        tuple(r) for r in live.groupBy(F.pmod(F.col("pk"), F.lit(4)).alias("b"))
-        .agg(
-            F.count("*").alias("n_keys"),
-            F.sum(F.col("val").cast("decimal(18,6)"))
-            .cast("double")
-            .alias("sum_last_val"),
-            F.max("ts_us").alias("max_ts_us"),
-        )
-        .collect()
-    )
-    assert got == want
-
-
 # P6: the Avro codec is lossless on arbitrary rows -----------------------------
 
 AVRO_FIELDS = [
@@ -214,49 +154,6 @@ def test_p6_avro_roundtrip_lossless(rows, sid):
         got_sid, body = aw.unframe(payload)
         dec, pos = aw.decode_record(AVRO_FIELDS, body)
         assert got_sid == sid and pos == len(body) and dec == row
-
-
-# P7: chunked MERGE apply == batch latest-state, any log -----------------------
-
-
-@given(EVENT_LOGS, st.integers(1001, 1019))
-@SETTINGS
-def test_p7_merge_fold_equals_latest_state(spark, tmp_path_factory, rows, cut):
-    """Folding per-chunk latest rows through merge_into (delete on
-    op='d', insert gated to non-deletes) equals batch latest_state for
-    ANY log and ANY chunk boundary — the algebra that makes the
-    MERGE-based warehouse consumer safe under arbitrary batching."""
-    import os
-    import tempfile
-
-    from cdc_debezium_spark.streaming.state import BUCKET_COL, merge_into
-
-    _, df = _mk(spark, rows)
-    path = os.path.join(
-        tempfile.mkdtemp(dir=tmp_path_factory.getbasetemp()), "st"
-    )
-    for lo, hi in ((None, cut), (cut, None)):
-        chunk = df
-        if lo is not None:
-            chunk = chunk.where(F.col("ts_us") > lo)
-        if hi is not None:
-            chunk = chunk.where(F.col("ts_us") <= hi)
-        src = cdc.latest_state(chunk, drop_deleted=False)
-        if src.isEmpty():
-            continue
-        merge_into(
-            spark, path, src, keys=["pk"], n_buckets=4,
-            delete_expr=F.col("s.op") == "d",
-            insert_expr=F.col("s.op") != "d",
-        )
-    try:
-        got = sorted(
-            (r.pk, r.ord2, r.ts_us, r.val)
-            for r in spark.read.parquet(path).drop(BUCKET_COL).collect()
-        )
-    except Exception:
-        got = []  # no chunk produced state
-    assert got == _state(df)
 
 
 def test_incremental_snapshot_reconstructs_latest_state(spark, sf_dir):
@@ -366,13 +263,13 @@ def test_concurrent_lane_execution_parity(spark, sf_dir):
 @given(EVENT_LOGS, st.randoms(use_true_random=False))
 @SETTINGS
 def test_p10_scd2_sink_batch_partition_invariant(spark, tmp_path_factory, rows, rnd):
-    """Scd2HistorySink commutativity, generalized beyond the
+    """Scd2DeltaHistorySink commutativity, generalized beyond the
     mtime-tie regression test: for ANY partition of the log into
     batches, applied in ANY order, with random redelivery, the
     maintained history equals the batch SCD2 window. Drives the
     sink's foreachBatch callable directly (no streaming machinery)
     so hypothesis can afford many examples."""
-    from cdc_debezium_spark.streaming.state import Scd2HistorySink
+    from cdc_debezium_spark.streaming.state import Scd2DeltaHistorySink
 
     rows, df = _mk(spark, rows)
     # random partition into 1-4 batches + redeliver a random subset
@@ -385,7 +282,7 @@ def test_p10_scd2_sink_batch_partition_invariant(spark, tmp_path_factory, rows, 
     rnd.shuffle(batches)
 
     path = str(tmp_path_factory.mktemp("scd2_prop"))
-    sink = Scd2HistorySink(path + "/state", keys=["pk"])
+    sink = Scd2DeltaHistorySink(path + "/state", keys=["pk"])
     for i, b in enumerate(batch for batch in batches if batch):
         sink(spark.createDataFrame(b, SCHEMA), i)
 

@@ -16,7 +16,7 @@ from cdc_debezium_spark.streaming.replay import (
     write_event_chunks,
 )
 from cdc_debezium_spark.streaming.state import (
-    ParquetUpsertSink,
+    DeltaUpsertSink,
     dedup_within_watermark,
     run_upsert_stream,
 )
@@ -33,7 +33,7 @@ def test_streamed_state_equals_batch_state(spark, sf_dir, tmp_path):
     write_event_chunks(spark, sf_dir, chunk_dir, n_chunks=5)
 
     stream = cdc.to_cdc(read_event_stream(spark, chunk_dir))
-    sink = ParquetUpsertSink(str(tmp_path / "state"), keys=["pk"], order=["ts_us", "ord2"])
+    sink = DeltaUpsertSink(str(tmp_path / "state"), keys=["pk"], order=["ts_us", "ord2"])
     q = run_upsert_stream(stream, sink, str(tmp_path / "cp"))
     q.awaitTermination(120)
 
@@ -49,7 +49,7 @@ def test_streamed_state_idempotent_on_redelivery(spark, sf_dir, tmp_path):
     write_event_chunks(spark, sf_dir, chunk_dir, n_chunks=4, repeat=2)
 
     stream = cdc.to_cdc(read_event_stream(spark, chunk_dir))
-    sink = ParquetUpsertSink(str(tmp_path / "state2"))
+    sink = DeltaUpsertSink(str(tmp_path / "state2"))
     q = run_upsert_stream(stream, sink, str(tmp_path / "cp2"))
     q.awaitTermination(120)
 
@@ -79,14 +79,13 @@ def test_restart_from_checkpoint_resumes_without_dupes(spark, sf_dir, tmp_path):
 
     # phase 1: first half of the log, drain fully, query stops
     publish(files[:3])
-    sink = ParquetUpsertSink(state_path)
+    sink = DeltaUpsertSink(state_path)
     q = run_upsert_stream(cdc.to_cdc(read_event_stream(spark, chunk_dir)), sink, cp)
     q.awaitTermination(120)
 
     # phase 2: rest of the log arrives; restart on the SAME checkpoint
     publish(files[3:])
-    sink2 = ParquetUpsertSink(state_path)
-    sink2._initialized = True  # state dir survives the restart
+    sink2 = DeltaUpsertSink(state_path)  # state dir survives the restart
     q2 = run_upsert_stream(cdc.to_cdc(read_event_stream(spark, chunk_dir)), sink2, cp)
     q2.awaitTermination(120)
 
@@ -167,7 +166,7 @@ def test_progress_listener_sees_all_rows(spark, sf_dir, tmp_path):
     spark.streams.addListener(cap)
     try:
         stream = cdc.to_cdc(read_event_stream(spark, chunk_dir))
-        sink = ParquetUpsertSink(str(tmp_path / "state6"))
+        sink = DeltaUpsertSink(str(tmp_path / "state6"))
         q = run_upsert_stream(stream, sink, str(tmp_path / "cp6"))
         qid = str(q.id)
         q.awaitTermination(120)
@@ -216,7 +215,7 @@ def test_metrics_endpoint_scrapes_real_stream(spark, sf_dir, tmp_path):
             assert "\nup " not in pre and not pre.startswith("up ")
 
             stream = cdc.to_cdc(read_event_stream(spark, chunk_dir))
-            sink = ParquetUpsertSink(str(tmp_path / "state_m"))
+            sink = DeltaUpsertSink(str(tmp_path / "state_m"))
             q = run_upsert_stream(stream, sink, str(tmp_path / "cp_m"))
             qid = str(q.id)
             q.awaitTermination(120)
@@ -339,7 +338,7 @@ def test_parity_invariant_to_chunking(spark, sf_dir, tmp_path, n_chunks):
     chunk_dir = str(tmp_path / f"chunks_p{n_chunks}")
     write_event_chunks(spark, sf_dir, chunk_dir, n_chunks=n_chunks)
     stream = cdc.to_cdc(read_event_stream(spark, chunk_dir))
-    sink = ParquetUpsertSink(str(tmp_path / f"state_p{n_chunks}"))
+    sink = DeltaUpsertSink(str(tmp_path / f"state_p{n_chunks}"))
     q = run_upsert_stream(stream, sink, str(tmp_path / f"cp_p{n_chunks}"))
     q.awaitTermination(120)
     got = _rows(sink.read_live(spark), ["pk", "ts_us", "val"])
@@ -586,77 +585,24 @@ def test_stream_static_join_smoke(spark, sf_dir, tmp_path):
     assert sum(matched) > 0            # enrichment actually hit
 
 
-def test_transform_with_state_latest_value(spark, sf_dir, tmp_path):
-    """Spark 4 stateful processor: per-key latest value across chunked
-    replay must equal the batch latest-state (by event_id order).
-
-    transformWithState needs protobuf for its state-server wire —
-    skipped where the dependency is absent (applyInPandasWithState,
-    tested above, is the dependency-free stateful path).
-    """
-    pytest.importorskip("google.protobuf.descriptor")
-    import pyspark.sql.functions as F  # noqa: F811
-
-    from cdc_debezium_spark.sources.catalog import load_table
-    from cdc_debezium_spark.streaming.state import stateful_latest_value
-
-    chunk_dir = str(tmp_path / "chunks")
-    write_event_chunks(spark, sf_dir, chunk_dir, n_chunks=4)
-    emitted = []
-    q = (
-        stateful_latest_value(read_event_stream(spark, chunk_dir))
-        .writeStream.outputMode("update")
-        .foreachBatch(lambda b, i: emitted.extend(
-            (i, r.user_id, r.last_ord, r.last_val) for r in b.collect()))
-        .option("checkpointLocation", str(tmp_path / "cp"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(180)
-    final = {}
-    for bid, uid, o, v in sorted(emitted):
-        final[uid] = (o, v)
-
-    from pyspark.sql import Window
-    w = Window.partitionBy("user_id").orderBy(F.desc("event_id"))
-    batch = {
-        r.user_id: (r.event_id, r.value)
-        for r in load_table(spark, sf_dir, "events")
-        .withColumn("rn", F.row_number().over(w))
-        .where("rn = 1")
-        .collect()
-    }
-    assert final == {u: (o, v) for u, (o, v) in batch.items()}
-
-
 def test_scd2_delta_sink_matches_copy_on_write(spark, sf_dir, tmp_path):
-    """The merge-on-read sink must land the identical history the
-    copy-on-write sink derives, including mid-stream compaction and
-    at-least-once redelivery (r8 verdict #7)."""
-    from cdc_debezium_spark.streaming.state import (
-        Scd2DeltaHistorySink,
-        Scd2HistorySink,
-    )
+    """The merge-on-read sink must land the history the batch SCD2
+    kernel derives over the same log, including mid-stream compaction
+    and at-least-once redelivery."""
+    from cdc_debezium_spark.streaming.state import Scd2DeltaHistorySink
 
     chunk_dir = str(tmp_path / "chunks")
     write_event_chunks(spark, sf_dir, chunk_dir, n_chunks=4, repeat=2)
     cols = ["pk", "ord2", "op", "val", "valid_from_us", "valid_to_us"]
 
-    cow = Scd2HistorySink(str(tmp_path / "cow"), keys=["pk"])
-    q = run_upsert_stream(
-        cdc.to_cdc(read_event_stream(spark, chunk_dir)), cow, str(tmp_path / "cp1")
-    )
-    assert q.awaitTermination(120)
-
     mor = Scd2DeltaHistorySink(str(tmp_path / "mor"), keys=["pk"], compact_every=3)
     q = run_upsert_stream(
-        cdc.to_cdc(read_event_stream(spark, chunk_dir)), mor, str(tmp_path / "cp2")
+        cdc.to_cdc(read_event_stream(spark, chunk_dir)), mor, str(tmp_path / "cp")
     )
     assert q.awaitTermination(120)
 
-    assert _rows(mor.read_history(spark), cols) == _rows(
-        cow.read_history(spark), cols
-    )
+    want = _rows(cdc.scd2(cdc.cdc_events(spark, sf_dir)), cols)
+    assert _rows(mor.read_history(spark), cols) == want
 
 
 def test_scd2_delta_sink_crash_between_base_swap_and_delta_removal(
@@ -713,61 +659,47 @@ def test_scd2_delta_sink_rerun_batch_is_idempotent(spark, sf_dir, tmp_path):
 
 
 def test_delta_upsert_sink_matches_copy_on_write(spark, sf_dir, tmp_path):
-    """Merge-on-read latest-state must equal the copy-on-write sink's
-    live state under at-least-once redelivery, with compaction firing
-    mid-stream."""
-    from cdc_debezium_spark.streaming.state import DeltaUpsertSink
-
+    """Merge-on-read latest-state must equal the batch latest-state
+    kernel over the same log under at-least-once redelivery, with
+    compaction firing mid-stream."""
     chunk_dir = str(tmp_path / "chunks")
     write_event_chunks(spark, sf_dir, chunk_dir, n_chunks=4, repeat=2)
-
-    cow = ParquetUpsertSink(str(tmp_path / "cow"), keys=["pk"], order=["ts_us", "ord2"])
-    q = run_upsert_stream(
-        cdc.to_cdc(read_event_stream(spark, chunk_dir)), cow, str(tmp_path / "cp1")
-    )
-    assert q.awaitTermination(120)
 
     mor = DeltaUpsertSink(
         str(tmp_path / "mor"), keys=["pk"], order=["ts_us", "ord2"], compact_every=3
     )
     q = run_upsert_stream(
-        cdc.to_cdc(read_event_stream(spark, chunk_dir)), mor, str(tmp_path / "cp2")
+        cdc.to_cdc(read_event_stream(spark, chunk_dir)), mor, str(tmp_path / "cp")
     )
     assert q.awaitTermination(120)
 
     cols = ["pk", "ts_us", "val"]
-    assert _rows(mor.read_live(spark), cols) == _rows(cow.read_live(spark), cols)
+    want = _rows(cdc.latest_state(cdc.cdc_events(spark, sf_dir)), cols)
+    assert _rows(mor.read_live(spark), cols) == want
     # true log compaction: after a final compact, state is one row per
     # key (tombstones included), never log-sized
     mor.compact(spark)
     state = mor.current_state(spark)
     n_keys = state.select("pk").distinct().count()
     assert state.count() == n_keys
-    assert _rows(mor.read_live(spark), cols) == _rows(cow.read_live(spark), cols)
+    assert _rows(mor.read_live(spark), cols) == want
 
 
 def test_delta_upsert_sink_size_threshold_policy(spark, sf_dir, tmp_path):
     """Size-threshold compaction (r11 verdict item 3): with
     compact_ratio set, the sink folds deltas when their bytes reach
     ratio × base bytes instead of on a fixed cadence. Must (a) fire at
-    least once during a drain, (b) leave state equal to the
-    copy-on-write answer, and (c) keep the fixed-cadence knob working
-    when ratio is unset."""
+    least once during a drain, (b) leave state equal to the batch
+    latest-state / SCD2 kernels over the same log, and (c) keep the
+    fixed-cadence knob working when ratio is unset."""
     from cdc_debezium_spark.streaming.state import (
-        DeltaUpsertSink,
         Scd2DeltaHistorySink,
-        Scd2HistorySink,
         _deltas_exceed_ratio,
     )
 
     chunk_dir = str(tmp_path / "chunks")
     write_event_chunks(spark, sf_dir, chunk_dir, n_chunks=4, repeat=2)
-
-    cow = ParquetUpsertSink(str(tmp_path / "cow"), keys=["pk"], order=["ts_us", "ord2"])
-    q = run_upsert_stream(
-        cdc.to_cdc(read_event_stream(spark, chunk_dir)), cow, str(tmp_path / "cp1")
-    )
-    assert q.awaitTermination(120)
+    events = cdc.cdc_events(spark, sf_dir)
 
     compactions = []
     mor = DeltaUpsertSink(
@@ -784,23 +716,16 @@ def test_delta_upsert_sink_size_threshold_policy(spark, sf_dir, tmp_path):
     assert all(c["deltas_folded"] >= 1 for c in compactions)
 
     cols = ["pk", "ts_us", "val"]
-    assert _rows(mor.read_live(spark), cols) == _rows(cow.read_live(spark), cols)
+    assert _rows(mor.read_live(spark), cols) == _rows(cdc.latest_state(events), cols)
 
-    # scd2 twin under the same policy lands the cow history
-    scd2_cow = Scd2HistorySink(str(tmp_path / "scow"), keys=["pk"])
-    q = run_upsert_stream(
-        cdc.to_cdc(read_event_stream(spark, chunk_dir)), scd2_cow, str(tmp_path / "cp3")
-    )
-    assert q.awaitTermination(120)
+    # scd2 twin under the same policy lands the batch SCD2 history
     scd2 = Scd2DeltaHistorySink(str(tmp_path / "smor"), keys=["pk"], compact_ratio=1.0)
     q = run_upsert_stream(
         cdc.to_cdc(read_event_stream(spark, chunk_dir)), scd2, str(tmp_path / "cp4")
     )
     assert q.awaitTermination(120)
     hcols = ["pk", "ord2", "op", "val", "valid_from_us", "valid_to_us"]
-    assert _rows(scd2.read_history(spark), hcols) == _rows(
-        scd2_cow.read_history(spark), hcols
-    )
+    assert _rows(scd2.read_history(spark), hcols) == _rows(cdc.scd2(events), hcols)
 
     # trigger-predicate unit cases: no deltas -> never; no base -> any
     # delta fires; otherwise the byte ratio decides
@@ -816,8 +741,6 @@ def test_per_sink_compaction_defaults_fold_counts(spark, tmp_path):
     a min-delta-bytes floor is the scale alternative. The log-sized
     scd2 base keeps ratio. Sinks are driven directly (foreachBatch
     shape) so the counts are deterministic."""
-    from cdc_debezium_spark.streaming.state import DeltaUpsertSink
-
     n_batches, n_keys = 8, 5
 
     def drive(sink):
@@ -881,8 +804,6 @@ def test_delta_sink_base_swap_crash_leaves_readable_state(spark, sf_dir, tmp_pat
     import os
     import shutil
 
-    from cdc_debezium_spark.streaming.state import DeltaUpsertSink
-
     chunk_dir = str(tmp_path / "chunks")
     write_event_chunks(spark, sf_dir, chunk_dir, n_chunks=4)
     state = str(tmp_path / "mor")
@@ -929,7 +850,6 @@ def test_delta_sink_crash_during_recovery_compact(spark, sf_dir, tmp_path, monke
     import shutil
 
     import cdc_debezium_spark.streaming.state as state_mod
-    from cdc_debezium_spark.streaming.state import DeltaUpsertSink
 
     chunk_dir = str(tmp_path / "chunks")
     write_event_chunks(spark, sf_dir, chunk_dir, n_chunks=4)
@@ -988,8 +908,6 @@ def test_delta_upsert_sink_compaction_crash_window(spark, sf_dir, tmp_path):
     equal events and lose the latest-per-key window."""
     import shutil
 
-    from cdc_debezium_spark.streaming.state import DeltaUpsertSink
-
     chunk_dir = str(tmp_path / "chunks")
     write_event_chunks(spark, sf_dir, chunk_dir, n_chunks=3)
     sink = DeltaUpsertSink(str(tmp_path / "mor"), keys=["pk"], order=["ts_us", "ord2"])
@@ -1010,30 +928,6 @@ def test_delta_upsert_sink_compaction_crash_window(spark, sf_dir, tmp_path):
     assert _rows(sink.read_live(spark), cols) == want
     sink.compact(spark)
     assert _rows(sink.read_live(spark), cols) == want
-
-
-def test_upsert_sink_compaction_preserves_state(spark, sf_dir, tmp_path):
-    """Compaction must shrink the file count without changing a single
-    row of state."""
-    import glob
-
-    chunk_dir = str(tmp_path / "chunks")
-    write_event_chunks(spark, sf_dir, chunk_dir, n_chunks=5)
-    stream = cdc.to_cdc(read_event_stream(spark, chunk_dir))
-    sink = ParquetUpsertSink(
-        str(tmp_path / "state"), keys=["pk"], order=["ts_us", "ord2"], n_buckets=4
-    )
-    q = run_upsert_stream(stream, sink, str(tmp_path / "cp"))
-    q.awaitTermination(120)
-
-    before = _rows(sink.read_live(spark), ["pk", "ts_us", "val"])
-    n_files_before = len(glob.glob(f"{sink.path}/**/*.parquet", recursive=True))
-    sink.compact(spark)
-    after = _rows(sink.read_live(spark), ["pk", "ts_us", "val"])
-    n_files_after = len(glob.glob(f"{sink.path}/**/*.parquet", recursive=True))
-    assert after == before
-    assert n_files_after <= max(sink.n_buckets, 1)
-    assert n_files_after <= n_files_before
 
 
 def test_streaming_incremental_lsh_matches_batch(spark, sf_dir, tmp_path):
@@ -1093,251 +987,6 @@ def test_streaming_incremental_lsh_matches_batch(spark, sf_dir, tmp_path):
     assert set(got) == want
 
 
-def test_incremental_agg_view_parity(spark, sf_dir, tmp_path):
-    """Incremental MV maintenance: chunked replay through
-    IncrementalAggViewSink must land exactly the batch cdc_agg_view
-    aggregate, and a later micro-batch touching one key must rewrite
-    only that key's bucket partition (delta-scoped recompute)."""
-    import os
-    import time
-
-    from cdc_debezium_spark import registry
-    from cdc_debezium_spark.streaming.state import (
-        BUCKET_COL,
-        IncrementalAggViewSink,
-    )
-
-    registry.load_all()
-    chunk_dir = str(tmp_path / "chunks_agg")
-    write_event_chunks(spark, sf_dir, chunk_dir, n_chunks=4)
-
-    sink = IncrementalAggViewSink(
-        str(tmp_path / "agg_state"),
-        str(tmp_path / "agg_view"),
-        bucket_expr=F.pmod(F.col("pk"), F.lit(16)),
-    )
-    stream = cdc.to_cdc(read_event_stream(spark, chunk_dir))
-    q = run_upsert_stream(stream, sink, str(tmp_path / "agg_cp"))
-    q.awaitTermination(120)
-
-    got = _rows(
-        sink.read(spark).withColumnRenamed(BUCKET_COL, "bucket_id"),
-        ["bucket_id", "n_keys", "sum_last_val", "max_ts_us"],
-    )
-    want = _rows(
-        registry.QUERIES["cdc_agg_view"](spark, sf_dir),
-        ["bucket_id", "n_keys", "sum_last_val", "max_ts_us"],
-    )
-    assert got == want
-
-    # incrementality: one more batch touching a single pk -> exactly
-    # one bucket partition dir rewritten
-    agg_dir = str(tmp_path / "agg_view")
-    before = {
-        d: os.path.getmtime(os.path.join(agg_dir, d))
-        for d in os.listdir(agg_dir)
-        if d.startswith(f"{BUCKET_COL}=")
-    }
-    time.sleep(1.1)
-    one = cdc.cdc_events(spark, sf_dir).orderBy("ord2").limit(1)
-    pk = one.collect()[0]["pk"]
-    sink(one.withColumn("ts_us", F.col("ts_us") + F.lit(10**15)), 99)
-    after = {
-        d: os.path.getmtime(os.path.join(agg_dir, d))
-        for d in os.listdir(agg_dir)
-        if d.startswith(f"{BUCKET_COL}=")
-    }
-    changed = {d for d in after if after[d] != before.get(d)}
-    assert changed == {f"{BUCKET_COL}={pk % 16}"}
-
-
-def test_incremental_agg_view_idempotent_on_redelivery(spark, sf_dir, tmp_path):
-    """E10 for the aggregate view: every chunk delivered twice must
-    leave the view identical to the batch aggregate (the upsert state
-    absorbs replays, so the delta-scoped recompute sees clean state)."""
-    from cdc_debezium_spark import registry
-    from cdc_debezium_spark.streaming.state import (
-        BUCKET_COL,
-        IncrementalAggViewSink,
-    )
-
-    registry.load_all()
-    chunk_dir = str(tmp_path / "chunks_agg2")
-    write_event_chunks(spark, sf_dir, chunk_dir, n_chunks=3, repeat=2)
-
-    sink = IncrementalAggViewSink(
-        str(tmp_path / "agg_state2"),
-        str(tmp_path / "agg_view2"),
-        bucket_expr=F.pmod(F.col("pk"), F.lit(16)),
-    )
-    stream = cdc.to_cdc(read_event_stream(spark, chunk_dir))
-    q = run_upsert_stream(stream, sink, str(tmp_path / "agg_cp2"))
-    q.awaitTermination(120)
-
-    got = _rows(
-        sink.read(spark).withColumnRenamed(BUCKET_COL, "bucket_id"),
-        ["bucket_id", "n_keys", "sum_last_val", "max_ts_us"],
-    )
-    want = _rows(
-        registry.QUERIES["cdc_agg_view"](spark, sf_dir),
-        ["bucket_id", "n_keys", "sum_last_val", "max_ts_us"],
-    )
-    assert got == want
-
-
-def test_log_compaction_preserves_state_and_drops_files(spark, sf_dir, tmp_path):
-    """compact_log is the action cdc_compaction_stats plans for: dense
-    buckets collapse to latest-event-per-key (tombstones kept — the
-    compacted-topic contract), state materialized from the log is
-    IDENTICAL before and after, and both row and file counts drop.
-    A no-op threshold must leave the log byte-count untouched."""
-    import os
-
-    from cdc_debezium_spark.streaming.state import BUCKET_COL, compact_log
-
-    log_path = str(tmp_path / "retained_log")
-    ce = cdc.cdc_events(spark, sf_dir).withColumn(
-        BUCKET_COL, F.pmod(F.xxhash64("pk"), F.lit(16))
-    )
-    # several part files per bucket dir — the post-micro-batch layout
-    ce.repartition(8).write.partitionBy(BUCKET_COL).parquet(log_path)
-
-    def parquet_files():
-        return sorted(
-            os.path.join(r, f)
-            for r, _, fs in os.walk(log_path)
-            for f in fs
-            if f.endswith(".parquet")
-        )
-
-    def state(drop_deleted):
-        df = spark.read.parquet(log_path).drop(BUCKET_COL)
-        return {
-            tuple(r)
-            for r in cdc.latest_state(df, drop_deleted=drop_deleted).collect()
-        }
-
-    before_full = state(drop_deleted=False)
-    before_live = state(drop_deleted=True)
-    files_before = parquet_files()
-    rows_total_before = spark.read.parquet(log_path).count()
-
-    res = compact_log(spark, log_path, min_events_per_key=2.0)
-    assert res["buckets_compacted"] > 0
-    assert res["rows_after"] < res["rows_before"]
-
-    assert state(drop_deleted=False) == before_full  # tombstones survive
-    assert state(drop_deleted=True) == before_live
-    assert len(parquet_files()) < len(files_before)
-    assert spark.read.parquet(log_path).count() < rows_total_before
-
-    # threshold nothing reaches -> plan is empty, log untouched
-    files_now = parquet_files()
-    res2 = compact_log(spark, log_path, min_events_per_key=1e9)
-    assert res2 == {"buckets_compacted": 0, "rows_before": 0, "rows_after": 0}
-    assert parquet_files() == files_now
-
-
-def test_merge_into_sql_semantics_and_touched_buckets(spark, tmp_path):
-    """merge_into = SQL MERGE on the bucketed layout: matched-update,
-    matched-delete (predicate over source cols), not-matched-insert,
-    not-matched-by-source rows untouched — and ONLY the buckets
-    containing source keys are rewritten (mtime-asserted), the
-    touched-bucket cost model every 100 TB merge depends on."""
-    import os
-    import time
-
-    from cdc_debezium_spark.streaming.state import BUCKET_COL, merge_into
-
-    path = str(tmp_path / "merge_state")
-    init = spark.createDataFrame(
-        [(i, f"n{i}", float(i)) for i in range(1, 7)],
-        "pk long, name string, val double",
-    )
-    merge_into(spark, path, init, keys=["pk"], n_buckets=4)
-    got0 = {
-        (r.pk, r.name, r.val)
-        for r in spark.read.parquet(path).drop(BUCKET_COL).collect()
-    }
-    assert got0 == {(i, f"n{i}", float(i)) for i in range(1, 7)}
-
-    before = {
-        d: os.path.getmtime(os.path.join(path, d))
-        for d in os.listdir(path)
-        if d.startswith(f"{BUCKET_COL}=")
-    }
-    time.sleep(1.1)  # mtime resolution guard
-
-    src = spark.createDataFrame(
-        [
-            (2, "n2x", 20.0, "u"),   # matched -> update
-            (3, "whatever", 0.0, "d"),  # matched + predicate -> delete
-            (9, "n9", 9.0, "c"),     # not matched -> insert
-        ],
-        "pk long, name string, val double, _op string",
-    )
-    merge_into(
-        spark, path, src, keys=["pk"], n_buckets=4,
-        delete_expr=F.col("s._op") == "d",
-    )
-    got = {
-        (r.pk, r.name, r.val)
-        for r in spark.read.parquet(path).drop(BUCKET_COL).collect()
-    }
-    assert got == {
-        (1, "n1", 1.0), (2, "n2x", 20.0), (4, "n4", 4.0),
-        (5, "n5", 5.0), (6, "n6", 6.0), (9, "n9", 9.0),
-    }
-    # source-only column (_op) never lands in the target schema
-    assert set(spark.read.parquet(path).columns) == {
-        "pk", "name", "val", BUCKET_COL,
-    }
-
-    touched = {
-        f"{BUCKET_COL}={r.b}"
-        for r in spark.createDataFrame([(2,), (3,), (9,)], "pk long")
-        .select(F.pmod(F.xxhash64("pk"), F.lit(4)).alias("b"))
-        .collect()
-    }
-    after = {
-        d: os.path.getmtime(os.path.join(path, d))
-        for d in os.listdir(path)
-        if d.startswith(f"{BUCKET_COL}=")
-    }
-    changed = {d for d in after if after[d] != before.get(d)}
-    assert changed == touched
-
-
-def test_chunked_merge_apply_equals_batch_latest_state(spark, sf_dir, tmp_path):
-    """The MERGE-based CDC apply path: folding per-chunk latest rows
-    into state via merge_into (delete on op='d', insert gated to
-    non-deletes) must land exactly the batch latest_state — the same
-    parity contract the foreachBatch upsert sink is held to, proven
-    for the MERGE consumer a warehouse sink would run."""
-    from cdc_debezium_spark.streaming.state import BUCKET_COL, merge_into
-
-    ce = cdc.cdc_events(spark, sf_dir)
-    lo, hi = ce.agg(F.min("ts_us"), F.max("ts_us")).first()
-    path = str(tmp_path / "merge_apply_state")
-    cuts = [lo - 1, lo + (hi - lo) // 3, lo + 2 * (hi - lo) // 3, hi]
-    for a, b in zip(cuts, cuts[1:]):
-        chunk = ce.where((F.col("ts_us") > a) & (F.col("ts_us") <= b))
-        src = cdc.latest_state(chunk, drop_deleted=False)
-        merge_into(
-            spark, path, src, keys=["pk"],
-            delete_expr=F.col("s.op") == "d",
-            insert_expr=F.col("s.op") != "d",
-        )
-    got = sorted(
-        (r.pk, r.ts_us, r.val)
-        for r in spark.read.parquet(path).drop(BUCKET_COL).collect()
-    )
-    want = sorted(
-        (r.pk, r.ts_us, r.val) for r in cdc.latest_state(ce).collect()
-    )
-    assert got == want and got
-
-
 def test_snapshot_seeded_state_plus_tail_replay(spark, sf_dir, tmp_path):
     """Deployment shape of the incremental snapshot: the chunked
     snapshot SEEDS the serving store, then the live stream tail
@@ -1359,7 +1008,7 @@ def test_snapshot_seeded_state_plus_tail_replay(spark, sf_dir, tmp_path):
         F.lit("r").alias("op"),
         F.col("snap_val").alias("val"),
     )
-    sink = ParquetUpsertSink(str(tmp_path / "seeded_state"))
+    sink = DeltaUpsertSink(str(tmp_path / "seeded_state"))
     sink(seed, -1)
 
     ce = cdc.cdc_events(spark, sf_dir).withColumn(
@@ -1387,206 +1036,6 @@ def test_snapshot_seeded_state_plus_tail_replay(spark, sf_dir, tmp_path):
         cdc.latest_state(cdc.cdc_events(spark, sf_dir)), ["pk", "ts_us", "val"]
     )
     assert got == want
-
-
-def test_merge_swap_crash_recovery_at_every_step(spark, tmp_path):
-    """Kill-mid-swap drill (judge r4 item 5): induce a crash at each
-    stage of merge_into's stage-and-swap — before the journal, between
-    the two renames inside a bucket swap, and between bucket swaps —
-    and assert recovery lands on either the old or the new state,
-    never a hole. The journal is the commit point: no journal ⇒ old
-    state intact; journal present ⇒ recover_swap rolls forward to
-    exactly the merged state."""
-    import os
-
-    from cdc_debezium_spark.streaming import state as st
-    from cdc_debezium_spark.streaming.state import (
-        BUCKET_COL,
-        merge_into,
-        recover_swap,
-    )
-
-    def read_state(path):
-        return {
-            (r.pk, r.val)
-            for r in spark.read.parquet(path).drop(BUCKET_COL).collect()
-        }
-
-    init_rows = [(i, float(i)) for i in range(1, 9)]
-    src = spark.createDataFrame(
-        [(2, 20.0, "u"), (3, 0.0, "d"), (9, 9.0, "c"), (5, 50.0, "u")],
-        "pk long, val double, _op string",
-    )
-    old_state = {(i, float(i)) for i in range(1, 9)}
-    new_state = {(1, 1.0), (2, 20.0), (4, 4.0), (5, 50.0), (6, 6.0),
-                 (7, 7.0), (8, 8.0), (9, 9.0)}
-
-    def fresh(path):
-        init = spark.createDataFrame(init_rows, "pk long, val double")
-        merge_into(spark, path, init, keys=["pk"], n_buckets=4)
-        assert read_state(path) == old_state
-
-    def run_merge(path):
-        merge_into(
-            spark, path, src, keys=["pk"], n_buckets=4,
-            delete_expr=F.col("s._op") == "d",
-        )
-
-    # --- crash BEFORE the journal (staging done, commit not reached):
-    # the live table is untouched; no journal ⇒ nothing to recover;
-    # re-running the merge completes normally.
-    p1 = str(tmp_path / "s1")
-    fresh(p1)
-    orig_journal = st._write_swap_journal
-    st._write_swap_journal = lambda *a, **k: (_ for _ in ()).throw(
-        RuntimeError("crash before journal")
-    )
-    try:
-        import pytest as _pt
-        with _pt.raises(RuntimeError):
-            run_merge(p1)
-    finally:
-        st._write_swap_journal = orig_journal
-    assert read_state(p1) == old_state
-    assert not recover_swap(p1)  # no journal was written
-    run_merge(p1)  # clean retry overwrites the orphan temp dir
-    assert read_state(p1) == new_state
-
-    # --- crash BETWEEN bucket swaps (journal written, first bucket
-    # swapped, second not): recover_swap rolls forward to new state.
-    p2 = str(tmp_path / "s2")
-    fresh(p2)
-    orig_entry = st._swap_entry
-    calls = {"n": 0}
-
-    def crash_after_first(path, tmp, entry, staged):
-        calls["n"] += 1
-        if calls["n"] >= 2:
-            raise RuntimeError("crash between buckets")
-        orig_entry(path, tmp, entry, staged)
-
-    st._swap_entry = crash_after_first
-    try:
-        import pytest as _pt
-        with _pt.raises(RuntimeError):
-            run_merge(p2)
-    finally:
-        st._swap_entry = orig_entry
-    assert os.path.isfile(os.path.join(p2, st._SWAP_JOURNAL))
-    assert recover_swap(p2)
-    assert read_state(p2) == new_state
-    assert not os.path.isfile(os.path.join(p2, st._SWAP_JOURNAL))
-    assert not os.path.exists(p2 + ".merge")
-
-    # --- crash INSIDE a bucket swap, between retiring the live dir
-    # and landing the staged one (the exact hole the old rmtree+move
-    # could leave): the .old dir plus journal recover forward.
-    p3 = str(tmp_path / "s3")
-    fresh(p3)
-
-    def crash_mid_entry(path, tmp, entry, staged):
-        dst = os.path.join(path, entry)
-        old = os.path.join(path, ".old." + entry)
-        if os.path.exists(dst):
-            os.rename(dst, old)  # live dir retired...
-        raise RuntimeError("crash mid-entry")  # ...staged never landed
-
-    st._swap_entry = crash_mid_entry
-    try:
-        import pytest as _pt
-        with _pt.raises(RuntimeError):
-            run_merge(p3)
-    finally:
-        st._swap_entry = orig_entry
-    assert recover_swap(p3)
-    assert read_state(p3) == new_state
-    # no .old debris survives recovery
-    assert not [d for d in os.listdir(p3) if d.startswith(".old.")]
-
-    # --- healing on entry: a crashed merge left a journal; the NEXT
-    # merge_into heals it before reading, so a follow-up merge sees
-    # the rolled-forward state (not the hole).
-    p4 = str(tmp_path / "s4")
-    fresh(p4)
-    st._swap_entry = crash_after_first
-    calls["n"] = 0
-    try:
-        import pytest as _pt
-        with _pt.raises(RuntimeError):
-            run_merge(p4)
-    finally:
-        st._swap_entry = orig_entry
-    src2 = spark.createDataFrame([(9, 90.0, "u")], "pk long, val double, _op string")
-    merge_into(
-        spark, p4, src2, keys=["pk"], n_buckets=4,
-        delete_expr=F.col("s._op") == "d",
-    )
-    assert read_state(p4) == (new_state - {(9, 9.0)}) | {(9, 90.0)}
-
-
-def test_dr_restore_from_backup_and_replay_tail(spark, sf_dir, tmp_path):
-    """DR drill (judge r4 item 8; reference scripts/rollback.sh +
-    backup.sh appendix, setup-infrastructure.sh:386-441): run half the
-    log, back up {state, checkpoint} as a pair, run the rest, then
-    corrupt the live state beyond repair. Restore the pair from
-    backup and restart the stream on the restored checkpoint: the
-    tail replays from the retained log (A14) and the final state is
-    identical to an uninterrupted run — which itself equals the batch
-    latest-state oracle."""
-    import os
-    import shutil
-
-    import pyarrow.parquet as pq
-
-    from cdc_debezium_spark.streaming.state import backup_state, restore_state
-
-    chunk_dir = str(tmp_path / "chunks_dr")
-    staged = str(tmp_path / "staged_dr")
-    write_event_chunks(spark, sf_dir, staged, n_chunks=6)
-    files = sorted(os.listdir(staged))
-    os.makedirs(chunk_dir)
-
-    def publish(names):
-        for n in names:
-            pq.write_table(pq.read_table(f"{staged}/{n}"), f"{chunk_dir}/{n}")
-
-    state_path = str(tmp_path / "state_dr")
-    cp = str(tmp_path / "cp_dr")
-    backup = str(tmp_path / "backup_dr")
-
-    # phase 1: half the log, drain, then take the backup
-    publish(files[:3])
-    sink = ParquetUpsertSink(state_path)
-    q = run_upsert_stream(cdc.to_cdc(read_event_stream(spark, chunk_dir)), sink, cp)
-    q.awaitTermination(120)
-    backup_state([state_path, cp], backup)
-
-    # phase 2: tail arrives and is fully processed
-    publish(files[3:])
-    sink2 = ParquetUpsertSink(state_path)
-    sink2._initialized = True
-    q2 = run_upsert_stream(cdc.to_cdc(read_event_stream(spark, chunk_dir)), sink2, cp)
-    q2.awaitTermination(120)
-    want = _rows(cdc.latest_state(cdc.cdc_events(spark, sf_dir)), ["pk", "ts_us", "val"])
-    assert _rows(sink2.read_live(spark), ["pk", "ts_us", "val"]) == want
-
-    # disaster: live state corrupted beyond repair (bucket dirs gone,
-    # garbage where parquet should be), checkpoint half-deleted
-    buckets = [d for d in os.listdir(state_path) if d.startswith("_bucket=")]
-    shutil.rmtree(os.path.join(state_path, buckets[0]))
-    with open(os.path.join(state_path, buckets[1], "garbage.parquet"), "w") as f:
-        f.write("not parquet at all")
-    shutil.rmtree(os.path.join(cp, "offsets"))
-
-    # restore the {state, checkpoint} pair, restart: the tail chunks
-    # are still in the retained log, so the stream replays exactly the
-    # files the backup's checkpoint had not committed
-    restore_state([state_path, cp], backup)
-    sink3 = ParquetUpsertSink(state_path)
-    sink3._initialized = True
-    q3 = run_upsert_stream(cdc.to_cdc(read_event_stream(spark, chunk_dir)), sink3, cp)
-    q3.awaitTermination(120)
-    assert _rows(sink3.read_live(spark), ["pk", "ts_us", "val"]) == want
 
 
 def test_streaming_embedding_ann_matches_batch(spark, sf_dir, tmp_path):
@@ -1839,33 +1288,6 @@ def test_txtable_change_data_feed(spark, tmp_path):
     }
 
 
-def test_backup_state_rebackup_is_atomic(tmp_path):
-    """Re-running a backup into the same backup_dir must replace each
-    {state, checkpoint} entry atomically instead of dying mid-loop on
-    an existing target (judge r5 advice: copytree without
-    dirs_exist_ok raised FileExistsError, leaving a partial pair)."""
-    import os
-
-    from cdc_debezium_spark.streaming.state import backup_state
-
-    state = tmp_path / "state"
-    cp = tmp_path / "cp"
-    backup = tmp_path / "backup"
-    for d, content in ((state, "v1-state"), (cp, "v1-cp")):
-        d.mkdir()
-        (d / "data.txt").write_text(content)
-
-    backup_state([str(state), str(cp)], str(backup))
-    (state / "data.txt").write_text("v2-state")
-    (cp / "data.txt").write_text("v2-cp")
-    # second run into the SAME dir: no FileExistsError, both entries
-    # reflect the new pair, no stale .tmp staging dirs left behind
-    backup_state([str(state), str(cp)], str(backup))
-    assert (backup / "state" / "data.txt").read_text() == "v2-state"
-    assert (backup / "cp" / "data.txt").read_text() == "v2-cp"
-    assert not [n for n in os.listdir(backup) if n.endswith(".tmp")]
-
-
 def test_backlog_drain_slo_at_decade_scale(spark, tmp_path):
     """Streaming SLO at the sf1 decade (judge r5 ask #8): a deep
     backlog — the full sf1 events log pending as 10 chunk files — must
@@ -1891,7 +1313,7 @@ def test_backlog_drain_slo_at_decade_scale(spark, tmp_path):
     spark.streams.addListener(cap)
     try:
         stream = cdc.to_cdc(read_event_stream(spark, chunk_dir))
-        sink = ParquetUpsertSink(str(tmp_path / "state_sf1"))
+        sink = DeltaUpsertSink(str(tmp_path / "state_sf1"))
         t0 = time.time()
         q = run_upsert_stream(stream, sink, str(tmp_path / "cp_sf1"))
         qid = str(q.id)
@@ -1960,7 +1382,7 @@ def test_backlog_drain_slo_at_decade_scale(spark, tmp_path):
 
 
 def test_scd2_history_sink_order_robust_under_mtime_ties(spark, sf_dir, tmp_path):
-    """Scd2HistorySink's commutativity claim under the worst-case file
+    """Scd2DeltaHistorySink's commutativity claim under the worst-case file
     ordering: all chunk files forced to ONE mtime (arbitrary tie-broken
     delivery order), plus every chunk delivered twice — the final
     interval history must still equal the batch SCD2 window. Holds by
@@ -1970,7 +1392,7 @@ def test_scd2_history_sink_order_robust_under_mtime_ties(spark, sf_dir, tmp_path
     import os
     import time as _time
 
-    from cdc_debezium_spark.streaming.state import Scd2HistorySink
+    from cdc_debezium_spark.streaming.state import Scd2DeltaHistorySink
 
     chunk_dir = str(tmp_path / "scd2_chunks_tie")
     write_event_chunks(spark, sf_dir, chunk_dir, n_chunks=4, repeat=2)
@@ -1979,7 +1401,7 @@ def test_scd2_history_sink_order_robust_under_mtime_ties(spark, sf_dir, tmp_path
         os.utime(f, (t, t))
 
     stream = cdc.to_cdc(read_event_stream(spark, chunk_dir))
-    sink = Scd2HistorySink(str(tmp_path / "scd2_tie"), keys=["pk"])
+    sink = Scd2DeltaHistorySink(str(tmp_path / "scd2_tie"), keys=["pk"])
     q = (
         stream.writeStream.foreachBatch(sink)
         .option("checkpointLocation", str(tmp_path / "scd2_cp_tie"))
