@@ -2146,14 +2146,13 @@ def cdc_stream_latest_state_roundtrip(spark, sf_dir):
     and the landed state must hash-equal the batch latest-state
     oracle.
 
-    PRODUCTION SINK (r10, per the r9 profiling verdict): the
-    merge-on-read DeltaUpsertSink — each micro-batch only APPENDS
-    (O(batch), no read of prior state); the latest-per-key window
-    runs once at read, and compaction every 3 batches folds state to
-    one row per key (true log compaction: state size is #keys, not
-    log size), firing mid-stream so the final read crosses a
-    compacted base AND live deltas. STREAM_PROFILE_r09.json showed
-    that a copy-on-write sink's per-batch addBatch grows with
+    SINK: the merge-on-read DeltaUpsertSink over its TxTable log —
+    each micro-batch is one append commit (O(batch), no read of prior
+    state); the latest-per-key window runs once at read, and a
+    compaction commit every 3 batches folds state to one row per key
+    (true log compaction: state size is #keys, not log size), firing
+    mid-stream so the final read crosses a compacted base AND later
+    appends. A copy-on-write sink's per-batch cost grows with
     accumulated state (O(total²/batch) over a drain).
 
     Determinism: chunk files carry strictly increasing mtimes
@@ -2162,9 +2161,8 @@ def cdc_stream_latest_state_roundtrip(spark, sf_dir):
     (ts_us, ord2) max makes the fold robust to any residual batch
     interleaving. The landed state lives in a per-(lane, fixture)
     scratch dir (recreated each run) and is returned as a LAZY reader
-    — never collected to the driver (r10 review: at a 100 TB key
-    space a state-sized collect is a driver OOM; the scd2 twin's
-    _format_lane_dir pattern, converged here).
+    — never collected to the driver: at a 100 TB key space a
+    state-sized collect is a driver OOM.
     """
     import shutil
     import tempfile
@@ -2180,11 +2178,8 @@ def cdc_stream_latest_state_roundtrip(spark, sf_dir):
         write_event_chunks(spark, sf_dir, chunks, n_chunks=4, repeat=2)
         stream = cdc.to_cdc(read_event_stream(spark, chunks))
         # fixed-cadence compaction: this sink's base is KEY-BOUNDED
-        # (#keys rows), so ratio-only size-threshold degenerates to
-        # fold-every-batch (measured at sf10 as a 1.4x drain,
-        # STREAM_PROFILE_r12) — cadence (or ratio + a min-delta-bytes
-        # floor) is the per-sink default; the log-sized scd2 twin
-        # keeps ratio.
+        # (#keys rows), so a size ratio would fold every batch; the
+        # log-sized scd2 twin compacts on a ratio.
         sink = DeltaUpsertSink(
             state, keys=["pk"], order=["ts_us", "ord2"], compact_every=3
         )
@@ -2499,17 +2494,17 @@ def cdc_scd2_stream_roundtrip(spark, sf_dir):
     the set-derivation handles by construction rather than by
     patching.
 
-    PRODUCTION SINK (r10, per the r9 profiling verdict): the
-    merge-on-read Scd2DeltaHistorySink — per micro-batch the sink
-    only APPENDS the deduped batch (O(batch), no read of prior
-    state); redelivered rows are absorbed by the read-side (pk, ord2)
-    dedup and intervals derive with ONE lead() window at read.
-    Compaction every 3 batches exercises the delta->base fold
-    mid-stream, so the final read crosses a compacted base AND live
-    deltas. Measured at sf1 (STREAM_PROFILE_r09.json): copy-on-write
-    drain 29.7 s with per-batch cost growing in accumulated state
-    (O(total²/batch)); merge-on-read 13.0 s, flat per-batch — the
-    property that survives 100 TB.
+    SINK: the merge-on-read Scd2DeltaHistorySink over its TxTable
+    log — per micro-batch the sink appends the deduped batch as one
+    commit (O(batch), no read of prior state); redelivered rows are
+    absorbed by the read-side (pk, ord2) dedup and intervals derive
+    with ONE lead() window at read. Compaction fires once the bytes
+    appended since the last fold reach the base's size, so it runs
+    mid-stream and the final read crosses a compacted base AND later
+    appends. Measured at sf1: copy-on-write drain 29.7 s with
+    per-batch cost growing in accumulated state (O(total²/batch));
+    merge-on-read 13.0 s, flat per-batch — the property that survives
+    100 TB.
     """
     import shutil
     import tempfile
@@ -2527,11 +2522,9 @@ def cdc_scd2_stream_roundtrip(spark, sf_dir):
         chunks = f"{base}/chunks"
         write_event_chunks(spark, sf_dir, chunks, n_chunks=4, repeat=2)
         stream = cdc.to_cdc(read_event_stream(spark, chunks))
-        # ratio-only size-threshold compaction: history is LOG-sized,
-        # the base grows with ingested volume, so the geometric
-        # amortization holds (STREAM_PROFILE_r12: flat per-batch cost)
-        # — the per-sink default, unlike the key-bounded latest-state
-        # twin which uses cadence.
+        # size-ratio compaction: history is LOG-sized, the base grows
+        # with ingested volume, so the geometric amortization holds —
+        # unlike the key-bounded latest-state twin, which uses cadence.
         sink = Scd2DeltaHistorySink(state, keys=["pk"], compact_ratio=1.0)
         q = run_upsert_stream(stream, sink, f"{base}/cp")
         if not q.awaitTermination(300):

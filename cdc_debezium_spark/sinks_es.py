@@ -216,7 +216,7 @@ class EsBulkSink:
     column under ``external_gte``. Because ordering rides IN the
     operations, the landed state equals batch latest-state no matter
     how rows are partitioned, batched, reordered, or redelivered —
-    the same guarantee TxUpsertSink gets from retained tombstones,
+    the same guarantee DeltaUpsertSink gets from retained tombstones,
     here enforced by the store's own concurrency control.
 
     The POST happens per partition ON THE EXECUTORS (mapInPandas over

@@ -28,9 +28,11 @@ Streaming (`txtable` via readStream):
   so commit size is bounded by executor memory, not driver memory)
 - valid for append-only tables (TxTable.append): every commit's delta
   is exactly its added files, the same contract Delta's streaming
-  source enforces ("ignoreChanges" errors otherwise). Overwrite /
-  upsert commits REMOVE files; the reader raises rather than silently
-  replaying rewritten state — use table_changes for CDF semantics.
+  source enforces ("ignoreChanges" errors otherwise). Overwrite and
+  compaction commits REMOVE files; the reader raises rather than
+  silently replaying rewritten state — use table_changes for CDF
+  semantics. The upsert sinks' tables (streaming.state) carry
+  compaction commits, so this stream reader rejects them.
 """
 
 from __future__ import annotations
@@ -120,7 +122,7 @@ class _TxTableStreamReader(DataSourceStreamReader):
             if e.get("remove"):
                 raise ValueError(
                     "txtable streaming requires an append-only table: "
-                    f"version {v} removes files (overwrite/upsert). "
+                    f"version {v} removes files (overwrite/compaction). "
                     "Use TxTable.table_changes for CDF semantics."
                 )
             files.extend(e.get("add", []))

@@ -4,38 +4,35 @@ with idempotent commits (E10), plus streaming dedup (E6).
 The reference's consumers keep a current-state view per table (Redis
 latest-value cache, ES index — README.md:48-51) fed by an at-least-once
 log. OSS parquet has no MERGE, so the upsert sinks here are
-merge-on-read: each micro-batch is APPENDED as its own delta dir, and
-the merge runs at read or compaction time.
+merge-on-read, and a ``streaming.txlog.TxTable`` at the sink's path is
+their only storage:
 
-Layout under a sink's <path>/:
+- each micro-batch is one blind ``append`` commit, which never reads
+  prior state and never conflicts;
+- compaction is one commit that adds the folded files and removes
+  exactly the files it read; the files it removes stay on disk until
+  the next compaction, so a read loses no file unless two compactions
+  commit while it runs;
+- readers fold a snapshot: latest-per-key for ``DeltaUpsertSink``,
+  (keys, ord) dedup plus one ``lead()`` window for
+  ``Scd2DeltaHistorySink``.
 
-- ``delta_<batchid>``: one dir per micro-batch, written with overwrite,
-  so a re-run of the same batch id replaces its own delta;
-- ``base``: the compacted fold of every earlier delta;
-- ``_base_next`` / ``_base_retired``: compaction scratch, present
-  while a fold commits or after a crash cut one short (see
-  ``_swap_base``).
-
-Readers union every component that exists. Both sinks derive their
-answer from the row SET with duplicate absorption (latest-per-key max
-for ``DeltaUpsertSink``, (keys, ord) dedup for ``Scd2DeltaHistorySink``),
-so redelivery, a crashed batch re-run, or a compaction cut short all
-land the same state — the effectively-once contract the reference gets
-from offset commits + keyed topics (prod-resources.yaml:14-20, 84-95).
-``streaming.txlog.TxTable`` is the log-backed alternative with
-snapshot-isolated readers.
+Both folds are functions of the row SET with duplicate absorption, so
+redelivery, a crashed batch re-run, or a compaction cut short all land
+the same state — the effectively-once contract the reference gets from
+offset commits + keyed topics (prod-resources.yaml:14-20, 84-95).
 """
 
 from __future__ import annotations
 
 import os
-from collections.abc import Sequence
+from collections.abc import Callable, Sequence
 
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql.types import StructType
 
 from ..operators.cdc import latest_state
+from .txlog import TxTable
 
 
 def run_upsert_stream(
@@ -106,149 +103,86 @@ def stateful_running_totals(stream: DataFrame) -> DataFrame:
     )
 
 
-# --- merge-on-read state layout (see the module docstring) ---------------
+# --- merge-on-read state on a TxTable (see the module docstring) --------
 
 
-def _delta_dirs(path: str) -> list[str]:
-    import glob as _glob
-
-    return sorted(_glob.glob(os.path.join(path, "delta_*")))
-
-
-def _dir_bytes(path: str) -> int:
-    total = 0
-    for root, _dirs, files in os.walk(path):
-        for f in files:
-            try:
-                total += os.path.getsize(os.path.join(root, f))
-            except OSError:
-                pass
-    return total
+def _snapshot(spark: SparkSession, path: str) -> DataFrame | None:
+    t = TxTable(spark, path)
+    return t.snapshot() if t.latest_version() >= 0 else None
 
 
-def _deltas_exceed_ratio(path: str, ratio: float, min_bytes: int = 0) -> bool:
-    """Size-threshold compaction trigger (r11 verdict item 3): compact
-    when accumulated delta bytes exceed `ratio` × base bytes AND the
-    `min_bytes` floor. With no base yet, any delta over the floor
-    triggers (the first fold establishes the base cheaply).
-    Amortization: each fold costs O(base + deltas) and is only fired
-    once deltas ≥ ratio×base, so base grows geometrically and total
-    compaction work over a drain is O(total × (1+ratio)/ratio) —
-    linear in ingested bytes with a knob, unlike a fixed cadence
-    whose per-fold cost grows with the accumulated base while the
-    folded delta volume stays flat (the sf10 profile's 4.2→5.7 s
-    monotone compaction folds under modulo-3).
+def _compact(
+    spark: SparkSession, path: str, fold: Callable[[DataFrame], DataFrame]
+) -> int | None:
+    """Commit ``fold(snapshot)`` in place of the files it read, then
+    delete every file no version since the previous compaction can
+    reach: the files that compaction removed, and crash orphans."""
+    t = TxTable(spark, path)
+    v = t.compact(fold)
+    if v is not None:
+        prev = max(
+            (e["version"] for e in t.history()[:v] if e["remove"]), default=0
+        )
+        t.vacuum(retain_versions=v - prev + 1)
+    return v
 
-    The `min_bytes` floor exists because the amortization argument
-    assumes the base grows with the log. For a KEY-BOUNDED base
-    (latest-state: #keys rows, however much is ingested) every
-    batch-sized delta exceeds ratio×base, so ratio-only degenerates to
-    fold-every-batch — measured at sf10 as a 1.4× drain for 3.6×
-    faster reads (STREAM_PROFILE_r12). The floor restores batching:
-    fold only once at least `min_bytes` of deltas accumulated.
 
-    Local-FS stat walk stands in for the FileSystem listing a cluster
-    deployment would use; the decision needs only directory sizes,
-    never data."""
-    deltas = _delta_dirs(path)
+def _deltas_exceed_ratio(table: TxTable, ratio: float) -> bool:
+    """Size-threshold compaction trigger: compact when the bytes
+    appended since the last compaction reach `ratio` × the bytes of
+    the base it left; with no base yet, any delta triggers.
+
+    Amortization: each fold costs O(base + deltas) and fires only once
+    deltas ≥ ratio×base, so a LOG-sized base (SCD2 history) grows
+    geometrically and total compaction work over a drain is
+    O(total × (1+ratio)/ratio) — linear in ingested bytes. A
+    KEY-BOUNDED base (latest-state: #keys rows however much is
+    ingested) does not grow, so every batch reaches the ratio and the
+    rule degenerates to fold-every-batch; ``DeltaUpsertSink`` uses a
+    fixed cadence for that reason.
+
+    The sizes are one stat per file the log names; no data is read."""
+    base: list[str] = []
+    deltas: list[str] = []
+    for e in table.history():
+        if e["remove"]:
+            removed = set(e["remove"])
+            base = [n for n in base + deltas if n not in removed] + e["add"]
+            deltas = []
+        else:
+            deltas += e["add"]
     if not deltas:
         return False
-    base = os.path.join(path, "base")
-    base_b = _dir_bytes(base) if os.path.isdir(base) else 0
-    delta_b = sum(_dir_bytes(d) for d in deltas)
-    if delta_b < min_bytes:
-        return False
+
+    def size(names: list[str]) -> int:
+        return sum(os.path.getsize(os.path.join(table.file_dir, n)) for n in names)
+
+    base_b, delta_b = size(base), size(deltas)
     if base_b == 0:
         return delta_b > 0
     return delta_b >= ratio * base_b
 
 
-def _state_parts(path: str) -> list[str]:
-    parts = []
-    for name in ("base", "_base_retired"):
-        p = os.path.join(path, name)
-        if os.path.isdir(p):
-            parts.append(p)
-    return parts + _delta_dirs(path)
-
-
-def _read_parts(
-    spark: SparkSession, parts: list[str], schema: StructType | None
-) -> tuple[DataFrame, StructType]:
-    """Read state components with the schema the sink already knows.
-    Only a sink opened over existing state (a restart) has none yet;
-    it infers once through Spark and keeps the result."""
-    if schema is None:
-        df = spark.read.parquet(*parts)
-        return df, df.schema
-    return spark.read.schema(schema).parquet(*parts), schema
-
-
-def _swap_base(path: str, merged: DataFrame) -> dict:
-    """Crash-safe compaction commit (r9 review finding: an rmtree of
-    the old base BEFORE the rename left a window where the only copy
-    of previously-compacted rows was gone). Sequence — every prefix of
-    which leaves a complete, readable state:
-
-      1. write merged -> _base_next      (base/retired/deltas intact)
-      2. rename base -> _base_retired    (readers use retired + deltas)
-      3. rename _base_next -> base       (readers may see base+retired:
-                                          duplicates, absorbed)
-      4. rmtree _base_retired
-      5. rmtree each delta               (partial removal: duplicates,
-                                          absorbed)
-
-    Post-crash entry (r10 review finding): if a prior crash landed
-    between steps 2 and 3, this function is re-entered with base
-    absent and _base_retired holding the ONLY compacted copy. Retired
-    must then outlive the publish of the new base — deleting it first
-    (as the r9 code did) reopened the exact window the sequence
-    exists to close. Rule: _base_retired is removed only once a
-    directory that supersedes it (`base`) is in place.
-    """
-    import shutil
-
-    deltas = _delta_dirs(path)
-    tmp = os.path.join(path, "_base_next")
-    merged.write.mode("overwrite").parquet(tmp)
-    base = os.path.join(path, "base")
-    retired = os.path.join(path, "_base_retired")
-    if os.path.isdir(base):
-        # base supersedes any leftover retired copy; safe to clear it
-        # to make room for the rename.
-        if os.path.isdir(retired):
-            shutil.rmtree(retired)
-        os.rename(base, retired)
-        os.rename(tmp, base)
-        shutil.rmtree(retired, ignore_errors=True)
-    else:
-        # recovery compact: retired (+deltas) is the only readable
-        # copy — publish the new base FIRST, retire second.
-        os.rename(tmp, base)
-        if os.path.isdir(retired):
-            shutil.rmtree(retired, ignore_errors=True)
-    for d in deltas:
-        shutil.rmtree(d, ignore_errors=True)
-    return {"deltas_folded": len(deltas)}
-
-
 class DeltaUpsertSink:
-    """Merge-on-read latest-state sink — the compacted-topic analog,
-    built on the same delta/base layout as Scd2DeltaHistorySink.
+    """Merge-on-read latest-state sink — the compacted-topic analog.
 
-      * per batch: APPEND the batch — O(batch), no read of prior
-        state, no window on the hot path;
-      * at read: ONE latest-per-key window over base + deltas
-        (tombstones retained in state, filtered by read_live, so a
-        late replay of an older event cannot resurrect a deleted key);
-      * compaction: fold base + deltas down to one row per key (true
-        Kafka-log-compaction semantics: state size becomes #keys, not
-        log size) and drop the deltas.
+      * per batch: APPEND the batch as one commit — O(batch), no read
+        of prior state, no window on the hot path;
+      * at read: ONE latest-per-key window over a snapshot (tombstones
+        retained in state, filtered by read_live, so a late replay of
+        an older event cannot resurrect a deleted key);
+      * every `compact_every` batches: fold the snapshot down to one
+        row per key (true Kafka-log-compaction semantics: state size
+        becomes #keys, not log size) in one commit.
+
+    The state is key-bounded, so compaction runs on a fixed cadence
+    rather than a size ratio (see _deltas_exceed_ratio).
 
     Idempotence is order-theoretic: latest-per-key is a max over
-    (order) per key, so duplicate rows (redelivery, crash re-runs,
-    deltas surviving a compaction crash window) never change the max,
-    and a late row older than a compacted winner loses the window."""
+    (order) per key, so duplicate rows (redelivery, crash re-runs, a
+    batch re-appended after the compaction that folded it) never
+    change the max, and a late row older than a compacted winner loses
+    the window."""
 
     def __init__(
         self,
@@ -258,65 +192,31 @@ class DeltaUpsertSink:
         op_col: str = "op",
         drop_deleted: bool = True,
         compact_every: int = 0,
-        compact_ratio: float = 0.0,
-        compact_min_bytes: int = 0,
     ) -> None:
         self.path = path
         self.keys = list(keys)
         self.order = list(order)
         self.op_col = op_col
         self.drop_deleted = drop_deleted
-        # compact_ratio > 0 enables SIZE-THRESHOLD compaction (fold
-        # when delta bytes ≥ ratio × base bytes — see
-        # _deltas_exceed_ratio for the amortization argument) and
-        # takes precedence over the fixed compact_every cadence.
-        # POLICY DEFAULT (measured, STREAM_PROFILE_r12): this sink's
-        # base is KEY-BOUNDED (#keys rows regardless of log volume),
-        # so ratio-only degenerates to fold-every-batch — pair
-        # compact_ratio with a compact_min_bytes floor, or use the
-        # fixed compact_every cadence. Ratio-only is the right default
-        # for the LOG-sized Scd2DeltaHistorySink, not here.
         self.compact_every = compact_every
-        self.compact_ratio = compact_ratio
-        self.compact_min_bytes = compact_min_bytes
         self._batches_seen = 0
-        # schema of every file this sink writes: the first batch's
-        self._schema: StructType | None = None
 
-    def _delta_glob(self) -> list[str]:
-        return _delta_dirs(self.path)
-
-    def _all_rows(self, spark: SparkSession) -> DataFrame | None:
-        parts = _state_parts(self.path)
-        if not parts:
-            return None
-        rows, self._schema = _read_parts(spark, parts, self._schema)
-        return rows
-
-    def __call__(self, batch: DataFrame, batch_id: int) -> None:
-        if self._schema is None:
-            self._schema = batch.schema
-        (
-            batch.write.mode("overwrite")
-            .parquet(os.path.join(self.path, f"delta_{batch_id:012d}"))
-        )
-        self._batches_seen += 1
-        if self.compact_ratio > 0:
-            if _deltas_exceed_ratio(
-                self.path, self.compact_ratio, self.compact_min_bytes
-            ):
-                self.compact(batch.sparkSession)
-        elif self.compact_every and self._batches_seen % self.compact_every == 0:
-            self.compact(batch.sparkSession)
-
-    def current_state(self, spark: SparkSession) -> DataFrame | None:
-        rows = self._all_rows(spark)
-        if rows is None:
-            return None
+    def _fold(self, rows: DataFrame) -> DataFrame:
         return latest_state(
             rows, keys=self.keys, order=self.order,
             op_col=self.op_col, drop_deleted=False,
         )
+
+    def __call__(self, batch: DataFrame, batch_id: int) -> None:
+        spark = batch.sparkSession
+        TxTable(spark, self.path).append(batch)
+        self._batches_seen += 1
+        if self.compact_every and self._batches_seen % self.compact_every == 0:
+            self.compact(spark)  # by attribute: a metering wrapper may replace it
+
+    def current_state(self, spark: SparkSession) -> DataFrame | None:
+        rows = _snapshot(spark, self.path)
+        return None if rows is None else self._fold(rows)
 
     def read_live(self, spark: SparkSession) -> DataFrame:
         df = self.current_state(spark)
@@ -326,14 +226,10 @@ class DeltaUpsertSink:
             df = df.filter(F.col(self.op_col) != "d")
         return df
 
-    def compact(self, spark: SparkSession) -> dict:
-        """base + deltas -> one row per key (tombstones kept), deltas
-        removed via the crash-safe _swap_base sequence; orphan
-        retired/delta rows are re-absorbed by the read-side window."""
-        merged = self.current_state(spark)
-        if merged is None:
-            return {"deltas_folded": 0}
-        return _swap_base(self.path, merged)
+    def compact(self, spark: SparkSession) -> int | None:
+        """Snapshot -> one row per key (tombstones kept), committed in
+        place of the files it read; returns the commit version."""
+        return _compact(spark, self.path, self._fold)
 
 
 class Scd2DeltaHistorySink:
@@ -343,26 +239,23 @@ class Scd2DeltaHistorySink:
 
     It follows the public Hudi/Delta merge-on-read recipe:
 
-      * per batch: dedupe WITHIN the batch and APPEND it as a delta —
-        O(batch) work, no read of prior state, no window;
-      * at read (or compaction): union base + deltas, drop redelivered
-        duplicates on (keys, ord), derive each key's
+      * per batch: dedupe WITHIN the batch and APPEND it as one commit
+        — O(batch) work, no read of prior state, no window;
+      * at read (or compaction): drop redelivered duplicates on
+        (keys, ord) over a snapshot, derive each key's
         [valid_from, valid_to) intervals with ONE lead() window;
-      * every `compact_every` batches: fold deltas into the base and
-        remove them, bounding read amplification.
+      * once the bytes appended since the last compaction reach
+        `compact_ratio` × the base: fold them into the base (dedup
+        only — intervals stay derive-on-read), bounding read
+        amplification. History is log-sized, so the base grows with
+        ingested volume and the ratio rule amortizes.
 
     Idempotence is row-level: at-least-once redelivery (including a
     foreachBatch re-run after a crash) just appends duplicate
     (key, ord) rows, and the read/compaction-side dropDuplicates
-    absorbs them — so a crash between base-rewrite and delta-removal
-    leaves duplicates that the next read deduplicates, never wrong
-    history. The derived table is a pure function of the row SET, so
-    any batch arrival order (mtime ties, interleaved partitions,
+    absorbs them. The derived table is a pure function of the row SET,
+    so any batch arrival order (mtime ties, interleaved partitions,
     replays) lands the identical history.
-
-    Local-FS file ops (shutil) stand in for the FileSystem API a
-    cluster deployment would use; the state layout (base/ + delta
-    dirs) is the same either way.
     """
 
     def __init__(
@@ -371,83 +264,45 @@ class Scd2DeltaHistorySink:
         keys: Sequence[str] = ("pk",),
         ts_col: str = "ts_us",
         ord_col: str = "ord2",
-        compact_every: int = 0,
         compact_ratio: float = 0.0,
-        compact_min_bytes: int = 0,
     ) -> None:
         self.path = path
         self.keys = list(keys)
         self.ts_col = ts_col
         self.ord_col = ord_col
-        # same policy pair as DeltaUpsertSink: compact_ratio (size
-        # threshold) vs compact_every (fixed cadence). Ratio-only IS
-        # the right default HERE: history is log-sized, the base grows
-        # with ingested volume, and the geometric-growth amortization
-        # holds (STREAM_PROFILE_r12 measured flat per-batch cost). The
-        # compact_min_bytes floor is available for symmetry but not
-        # needed for a log-sized base.
-        self.compact_every = compact_every
         self.compact_ratio = compact_ratio
-        self.compact_min_bytes = compact_min_bytes
-        self._batches_seen = 0
-        # schema of every file this sink writes: the first batch's
-        self._schema: StructType | None = None
 
-    def _delta_glob(self) -> list[str]:
-        return _delta_dirs(self.path)
-
-    def _event_set(self, spark: SparkSession) -> DataFrame | None:
-        parts = _state_parts(self.path)
-        if not parts:
-            return None
-        rows, self._schema = _read_parts(spark, parts, self._schema)
-        # ONE exchange for the whole read path (r10 plan audit): a
-        # hash(keys) repartition satisfies the clustered-distribution
-        # requirement of BOTH the (keys, ord) dedup (subset rule) and
-        # the interval window (partitionBy keys) — letting the dedup
-        # pick its own exchange keyed (keys, ord) forces a second
-        # corpus shuffle before the window.
+    def _fold(self, rows: DataFrame) -> DataFrame:
+        # ONE exchange for the whole read path: a hash(keys)
+        # repartition satisfies the clustered-distribution requirement
+        # of BOTH the (keys, ord) dedup (subset rule) and the interval
+        # window (partitionBy keys); a dedup that picks its own
+        # (keys, ord) exchange forces a second shuffle before the window.
         return rows.repartition(*self.keys).dropDuplicates(
             [*self.keys, self.ord_col]
         )
 
     def __call__(self, batch: DataFrame, batch_id: int) -> None:
-        # O(batch): in-batch dedupe + append. Prior state is never read
-        # on the hot path.
-        if self._schema is None:
-            self._schema = batch.schema
-        (
-            batch.dropDuplicates([*self.keys, self.ord_col])
-            .write.mode("overwrite")
-            .parquet(os.path.join(self.path, f"delta_{batch_id:012d}"))
-        )
-        self._batches_seen += 1
-        if self.compact_ratio > 0:
-            if _deltas_exceed_ratio(
-                self.path, self.compact_ratio, self.compact_min_bytes
-            ):
-                self.compact(batch.sparkSession)
-        elif self.compact_every and self._batches_seen % self.compact_every == 0:
-            self.compact(batch.sparkSession)
+        spark = batch.sparkSession
+        t = TxTable(spark, self.path)
+        t.append(batch.dropDuplicates([*self.keys, self.ord_col]))
+        if self.compact_ratio > 0 and _deltas_exceed_ratio(t, self.compact_ratio):
+            self.compact(spark)
 
-    def compact(self, spark: SparkSession) -> dict:
-        """Fold all deltas into the base (dedup only — intervals stay
-        derive-on-read so compaction cost is a scan+shuffle, not a
-        window), committed via the crash-safe _swap_base sequence."""
-        merged = self._event_set(spark)
-        if merged is None:
-            return {"deltas_folded": 0}
-        return _swap_base(self.path, merged)
+    def compact(self, spark: SparkSession) -> int | None:
+        """Fold the snapshot to its deduped event set, committed in
+        place of the files it read; returns the commit version."""
+        return _compact(spark, self.path, self._fold)
 
     def read_history(self, spark: SparkSession) -> DataFrame:
         from pyspark.sql import Window
 
-        events = self._event_set(spark)
-        if events is None:
+        rows = _snapshot(spark, self.path)
+        if rows is None:
             raise FileNotFoundError(f"no state under {self.path}")
         w = Window.partitionBy(*self.keys).orderBy(
             F.asc(self.ts_col), F.asc(self.ord_col)
         )
-        return events.withColumn(
+        return self._fold(rows).withColumn(
             "valid_from_us", F.col(self.ts_col)
         ).withColumn("valid_to_us", F.lead(self.ts_col).over(w))

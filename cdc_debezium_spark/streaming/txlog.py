@@ -2,29 +2,31 @@
 
 The reference's sinks assume a transactional upsert store
 (README.md:48-51 — Redis/ES/DW); OSS parquet directories give none of
-that, and the merge-on-read sinks in state.py still expose readers to
-compaction deleting the files they scan. This module is the missing
-piece realized natively — the core idea of the public
-Delta/Iceberg designs (an append-only transaction log of immutable
-data files) in a dependency-free form:
+that. This module is the core idea of the public Delta/Iceberg designs
+(an append-only transaction log of immutable data files) in a
+dependency-free form, and it is the only storage layout under the
+upsert sinks in ``streaming.state``:
 
 - data files are IMMUTABLE parquet files under ``files/``, named by
   commit uuid; they are never modified or moved after creation
 - a table version is a JSON entry ``_txlog/<version>.json`` listing
   files added and removed; the entry is created ATOMICALLY
-  (tmp + fsync + hard-link-free rename with O_EXCL semantics via
-  ``os.link``), so readers see either version N or N+1, never a
-  partial state — no directory is ever swapped under a reader
+  (tmp + fsync + ``os.link``, which fails if the version exists), so
+  readers see either version N or N+1, never a partial state
+- version 0 records the table schema, as Delta's metaData action does,
+  and an overwrite records the schema it writes; snapshots read with
+  it, so no read infers a schema through a Spark job
 - reads resolve a SNAPSHOT: replay the log to the requested (or
   latest) version, hand Spark the immutable file list. A concurrent
   commit cannot disturb an in-flight read; old versions remain
   readable (time travel) until vacuumed
 - writers use OPTIMISTIC concurrency: stage files, then try to claim
-  the next version. ``append`` rebases automatically on collision
-  (blind adds never conflict); ``overwrite``/``upsert`` raise
-  CommitConflict if the table advanced past the snapshot they read,
-  exactly Delta's WriteSerializable behavior for conflicting
-  transactions
+  the next version. ``append`` rebases on collision (blind adds never
+  conflict). ``compact`` rebases over every commit that left the files
+  it folded live, and raises CommitConflict if another rewrite removed
+  one of them first. ``overwrite`` raises CommitConflict if the table
+  advanced past the snapshot it read — Delta's WriteSerializable
+  behavior for conflicting transactions
 - a crash between staging and commit leaves orphan data files that no
   log entry references; ``vacuum`` removes them plus files only
   referenced by dropped versions
@@ -40,12 +42,11 @@ from __future__ import annotations
 import json
 import os
 import uuid
-from collections.abc import Sequence
+from collections.abc import Callable, Sequence
 
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
-
-from ..operators.cdc import latest_state
+from pyspark.sql.types import StructType
 
 
 class CommitConflict(Exception):
@@ -110,6 +111,10 @@ class TxTable:
     def _entry_path(self, version: int) -> str:
         return os.path.join(self.log_dir, f"{version:010d}.json")
 
+    def _entry(self, version: int) -> dict:
+        with open(self._entry_path(version)) as f:
+            return json.load(f)
+
     def latest_version(self) -> int:
         """Highest committed version, -1 for an empty table."""
         vs = [
@@ -119,15 +124,25 @@ class TxTable:
         ]
         return max(vs) if vs else -1
 
-    def _files_at(self, version: int) -> list[str]:
+    def _versions(self, version: int):
+        """Yield each entry up to `version` with the files live after it."""
         live: list[str] = []
         for v in range(version + 1):
-            with open(self._entry_path(v)) as f:
-                e = json.load(f)
-            removed = set(e.get("remove", []))
-            live = [p for p in live if p not in removed]
-            live.extend(e.get("add", []))
-        return live
+            e = self._entry(v)
+            removed = set(e["remove"])
+            live = [p for p in live if p not in removed] + e["add"]
+            yield e, live
+
+    def _replay(self, version: int) -> tuple[list[str], StructType]:
+        """The live file names and the table schema at `version`."""
+        live: list[str] = []
+        schema = None
+        for e, live in self._versions(version):
+            schema = e.get("schema", schema)
+        return live, StructType.fromJson(schema)
+
+    def _files_at(self, version: int) -> list[str]:
+        return self._replay(version)[0]
 
     def _stage(self, df: DataFrame) -> list[str]:
         """Write df as immutable parquet files; return their names."""
@@ -145,9 +160,13 @@ class TxTable:
         shutil.rmtree(tmp, ignore_errors=True)
         return names
 
-    def _try_commit(self, version: int, add, remove) -> bool:
+    def _try_commit(
+        self, version: int, add, remove, schema: StructType | None = None
+    ) -> bool:
         """Atomically claim `version`. False if another writer won."""
         entry = {"version": version, "add": list(add), "remove": list(remove)}
+        if schema is not None:
+            entry["schema"] = schema.jsonValue()
         tmp = self._entry_path(version) + f".{uuid.uuid4().hex}.tmp"
         with open(tmp, "w") as f:
             json.dump(entry, f)
@@ -163,6 +182,10 @@ class TxTable:
 
     # -- reads --------------------------------------------------------------
 
+    def _read(self, files: list[str], schema: StructType) -> DataFrame:
+        paths = [os.path.join(self.file_dir, n) for n in files]
+        return self.spark.read.schema(schema).parquet(*paths)
+
     def snapshot(self, version: int | None = None) -> DataFrame:
         """The table at `version` (default: latest). The returned
         DataFrame reads an immutable file list — concurrent commits
@@ -170,11 +193,7 @@ class TxTable:
         v = self.latest_version() if version is None else version
         if v < 0:
             raise ValueError("empty table has no snapshot")
-        files = [os.path.join(self.file_dir, n) for n in self._files_at(v)]
-        if not files:
-            first = [os.path.join(self.file_dir, n) for n in self._files_at(0)]
-            return self.spark.read.parquet(*first).limit(0)
-        return self.spark.read.parquet(*files)
+        return self._read(*self._replay(v))
 
     # -- writes -------------------------------------------------------------
 
@@ -184,7 +203,7 @@ class TxTable:
         add = self._stage(df)
         while True:
             v = self.latest_version() + 1
-            if self._try_commit(v, add, []):
+            if self._try_commit(v, add, [], df.schema if v == 0 else None):
                 return v
 
     def overwrite(self, df: DataFrame, read_version: int | None = None) -> int:
@@ -199,50 +218,36 @@ class TxTable:
             )
         add = self._stage(df)
         remove = self._files_at(base) if base >= 0 else []
-        if not self._try_commit(base + 1, add, remove):
+        if not self._try_commit(base + 1, add, remove, df.schema):
             raise CommitConflict(f"version {base + 1} was claimed concurrently")
         return base + 1
 
-    def upsert(
-        self,
-        source: DataFrame,
-        keys: Sequence[str] = ("pk",),
-        order: Sequence[str] = ("ts_us", "ord2"),
-        op_col: str = "op",
-        drop_deleted: bool = True,
-    ) -> int:
-        """Transactional CDC apply: newest event per key wins, deletes
-        vanish — the latest-state contract as one ACID commit. Reads
-        the current snapshot, folds the source in with the standard
-        kernel, commits the new state; conflicts surface as
-        CommitConflict (retry = recompute against the new snapshot,
-        the optimistic loop every Delta MERGE user writes).
+    def compact(self, fold: Callable[[DataFrame], DataFrame]) -> int | None:
+        """Rewrite the table as ``fold(snapshot)`` in one commit that
+        adds the folded files and removes exactly the files it read.
+        Returns the committed version, or None for an empty table.
 
-        Apply batches in log order (the per-key ordering a keyed topic
-        guarantees): with ``drop_deleted=True`` the fold discards
-        tombstones at each commit, so an out-of-order older event in a
-        later batch would resurrect a deleted key. For unordered
-        ingestion keep ``drop_deleted=False`` (tombstones stay rows
-        that win the per-key ordering) and filter deletes at read —
-        the compacted-topic contract."""
-        base = self.latest_version()
-        if base < 0:
-            merged = latest_state(
-                source, keys=keys, order=order, op_col=op_col,
-                drop_deleted=drop_deleted,
-            )
-        else:
-            cur = self.snapshot(base)
-            merged = latest_state(
-                cur.unionByName(source, allowMissingColumns=True),
-                keys=keys, order=order, op_col=op_col,
-                drop_deleted=drop_deleted,
-            )
-        add = self._stage(merged)
-        remove = self._files_at(base) if base >= 0 else []
-        if not self._try_commit(base + 1, add, remove):
-            raise CommitConflict(f"version {base + 1} was claimed concurrently")
-        return base + 1
+        `fold` must keep the table's columns, and a reader must get the
+        same answer from ``fold(S) + A`` as from ``S + A``: on a version
+        collision the commit rebases over every interleaved commit A
+        that left the files it read live (appends never remove any). If
+        one removed a file it read, another rewrite got there first and
+        CommitConflict is raised."""
+        v = self.latest_version()
+        if v < 0:
+            return None
+        read, schema = self._replay(v)
+        add = self._stage(fold(self._read(read, schema)))
+        folded = set(read)
+        while not self._try_commit(v + 1, add, read):
+            latest = self.latest_version()
+            for w in range(v + 1, latest + 1):
+                if folded.intersection(self._entry(w)["remove"]):
+                    raise CommitConflict(
+                        f"version {w} rewrote files this compaction read"
+                    )
+            v = latest
+        return v + 1
 
     # -- maintenance --------------------------------------------------------
 
@@ -251,11 +256,17 @@ class TxTable:
         `retain_versions` versions: crash orphans (staged but never
         committed) and files only referenced by older, dropped
         versions. Returns the deleted names. Time travel keeps working
-        for retained versions only — the Delta VACUUM contract."""
+        for retained versions only — the Delta VACUUM contract.
+
+        Files a concurrent writer has staged but not yet committed are
+        orphans too, so vacuum belongs to the table's single writer
+        (as a sink's compaction is)."""
         latest = self.latest_version()
+        first = max(0, latest - retain_versions + 1)
         keep: set[str] = set()
-        for v in range(max(0, latest - retain_versions + 1), latest + 1):
-            keep.update(self._files_at(v))
+        for e, live in self._versions(latest):
+            if e["version"] >= first:
+                keep.update(live)
         deleted = []
         for n in sorted(os.listdir(self.file_dir)):
             if n not in keep:
@@ -277,63 +288,4 @@ class TxTable:
 
     def history(self) -> list[dict]:
         """The commit log (the DESCRIBE HISTORY analog)."""
-        out = []
-        for v in range(self.latest_version() + 1):
-            with open(self._entry_path(v)) as f:
-                out.append(json.load(f))
-        return out
-
-
-class TxUpsertSink:
-    """foreachBatch target maintaining latest-state in a TxTable —
-    the E7 stateful-upsert contract (as state.DeltaUpsertSink) with an
-    ACID backend: each micro-batch is ONE atomic commit, concurrent readers
-    see a consistent version, and redelivered batches are absorbed
-    because the latest-state fold is idempotent (E10). The streaming
-    analog of a Delta `foreachBatch MERGE` sink, with no dependency.
-
-    The fold RETAINS tombstones in committed state (compacted-topic
-    contract, same as DeltaUpsertSink): a delete stays a row that
-    wins the per-key ordering, and ``read_live`` filters it. This is
-    what makes the sink robust to batch-level reordering — Spark's
-    file streaming source orders files by modification time with ties
-    broken arbitrarily, so under load several pending files can land
-    in one mtime tick and arrive out of log order. With tombstones
-    dropped at commit time (the pre-r7 behavior), a reordered older
-    event in a later batch resurrected the deleted key; with them
-    retained, the event's own order columns decide every fold, and
-    the result is independent of batch arrival order.
-    """
-
-    def __init__(
-        self,
-        path: str,
-        keys: Sequence[str] = ("pk",),
-        order: Sequence[str] = ("ts_us", "ord2"),
-        op_col: str = "op",
-        drop_deleted: bool = True,
-    ) -> None:
-        self.path = path
-        self.keys = list(keys)
-        self.order = list(order)
-        self.op_col = op_col
-        # read-side filter only; commits always keep tombstones so the
-        # fold commutes across batch reordering/redelivery
-        self.drop_deleted = drop_deleted
-
-    def __call__(self, batch: DataFrame, batch_id: int) -> None:
-        if not batch.head(1):
-            return
-        TxTable(batch.sparkSession, self.path).upsert(
-            batch,
-            keys=self.keys,
-            order=self.order,
-            op_col=self.op_col,
-            drop_deleted=False,
-        )
-
-    def read_live(self, spark: SparkSession) -> DataFrame:
-        df = TxTable(spark, self.path).snapshot()
-        if self.drop_deleted:
-            df = df.filter(F.col(self.op_col) != "d")
-        return df
+        return [self._entry(v) for v in range(self.latest_version() + 1)]

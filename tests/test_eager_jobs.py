@@ -21,6 +21,7 @@ from cdc_debezium_spark.streaming.state import (
     DeltaUpsertSink,
     Scd2DeltaHistorySink,
 )
+from cdc_debezium_spark.streaming.txlog import TxTable
 
 _GROUPS = itertools.count()
 
@@ -77,24 +78,27 @@ def test_rewritten_fixture_is_inferred_again(spark, tmp_path):
 
 
 def test_merge_on_read_sinks_read_with_pinned_schema(spark, sf_dir, tmp_path):
-    """After the first batch both sinks build their reads without a
-    job; a fresh sink over the same path (a restart) infers once and
-    reads the same rows."""
+    """Both sinks build their reads without a job: the schema comes
+    from the table's log, so a fresh sink over the same path (a
+    restart) needs no inference either, and reads the same rows."""
     ev = cdc.cdc_events(spark, sf_dir).limit(600).cache()
     live_path, hist_path = str(tmp_path / "live"), str(tmp_path / "hist")
     live = DeltaUpsertSink(live_path, keys=["pk"], compact_every=2)
-    hist = Scd2DeltaHistorySink(hist_path, keys=["pk"], compact_every=2)
+    hist = Scd2DeltaHistorySink(hist_path, keys=["pk"], compact_ratio=1.0)
     for i, part in enumerate((ev.limit(300), ev, ev.limit(100))):
-        live(part, i)  # the second batch compacts: base + one delta
+        live(part, i)
         hist(part, i)
+    for path in (live_path, hist_path):  # a compaction, then one append
+        log = TxTable(spark, path).history()
+        assert [bool(e["remove"]) for e in log[-2:]] == [True, False]
 
     with jobs_launched(spark) as jobs:
         live_df = live.read_live(spark)
         hist_df = hist.read_history(spark)
+        fresh_live = DeltaUpsertSink(live_path, keys=["pk"]).read_live(spark)
+        fresh_hist = Scd2DeltaHistorySink(hist_path, keys=["pk"]).read_history(spark)
     assert jobs == []
 
-    fresh_live = DeltaUpsertSink(live_path, keys=["pk"]).read_live(spark)
-    fresh_hist = Scd2DeltaHistorySink(hist_path, keys=["pk"]).read_history(spark)
     assert fresh_live.schema == live_df.schema
     assert fresh_hist.schema == hist_df.schema
     assert _sorted_rows(fresh_live) == _sorted_rows(live_df)

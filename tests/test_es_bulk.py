@@ -90,7 +90,7 @@ def test_bulk_redelivery_is_idempotent():
 def test_es_sink_stream_parity_any_order(spark, sf_dir, tmp_path):
     """foreachBatch through EsBulkSink over a chunked stream with
     FORCED mtime ties (worst-case batch reordering) must land exactly
-    the batch latest-state — the external_gte twin of the TxUpsertSink
+    the batch latest-state — the external_gte twin of the DeltaUpsertSink
     order-robustness pin, with the guarantee enforced by the store's
     concurrency control instead of retained tombstones."""
     import glob

@@ -68,13 +68,12 @@ def test_txtable_cdf_replay_reconstructs_state(spark, sf_dir, tmp_path):
     hi = ce.agg(F.max("ord2")).first()[0] + 1
     cuts = [0, hi // 3, 2 * hi // 3, hi]
     for i in range(3):
-        t.upsert(
-            ce.where(
-                (F.col("ord2") >= cuts[i]) & (F.col("ord2") < cuts[i + 1])
-            ),
-            keys=["pk"],
-            order=["ts_us", "ord2"],
+        chunk = ce.where(
+            (F.col("ord2") >= cuts[i]) & (F.col("ord2") < cuts[i + 1])
         )
+        v = t.latest_version()
+        src = chunk if v < 0 else t.snapshot(v).unionByName(chunk)
+        t.overwrite(cdc.latest_state(src), read_version=v)
 
     state = {r["pk"]: (r["ts_us"], r["val"]) for r in t.snapshot(0).collect()}
     for v in range(1, t.latest_version() + 1):

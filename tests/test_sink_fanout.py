@@ -6,9 +6,10 @@ runs that topology end-to-end over the real wire protocols: a single
 chunked CDC stream whose every micro-batch feeds, in one foreachBatch,
 the ES bulk sink (external_gte versions), the ClickHouse JSONEachRow
 sink (ReplacingMergeTree + FINAL), the Redis latest-KV sink (per-batch
-reduction + pipelined RESP), and the TxTable ACID store (tombstone
-retention) — and at the end all four materializations plus the DW
-parquet analog must agree with batch latest-state and with each other.
+reduction + pipelined RESP), and the merge-on-read DeltaUpsertSink
+over its TxTable log (tombstone retention) — and at the end all four
+materializations plus the DW parquet analog must agree with batch
+latest-state and with each other.
 """
 
 from __future__ import annotations
@@ -31,7 +32,7 @@ from cdc_debezium_spark.sinks_redis import (
     RespClient,
 )
 from cdc_debezium_spark.streaming.replay import read_event_stream, write_event_chunks
-from cdc_debezium_spark.streaming.txlog import TxUpsertSink
+from cdc_debezium_spark.streaming.state import DeltaUpsertSink
 
 
 def test_one_stream_feeds_all_four_sinks(spark, sf_dir, tmp_path):
@@ -49,7 +50,7 @@ def test_one_stream_feeds_all_four_sinks(spark, sf_dir, tmp_path):
         es_sink = EsBulkSink(es.url, "cdc_state", key_col="pk", version_col="ver")
         ch_sink = ClickHouseInsertSink(ch.url, "cdc_state", version_col="ver")
         rd_sink = RedisLatestKvSink(rd.host, rd.port)
-        tx_sink = TxUpsertSink(str(tmp_path / "txstate"))
+        tx_sink = DeltaUpsertSink(str(tmp_path / "txstate"))
         dw_dir = str(tmp_path / "dw")
 
         def fanout(batch, batch_id):

@@ -590,62 +590,71 @@ def test_scd2_delta_sink_matches_copy_on_write(spark, sf_dir, tmp_path):
     kernel derives over the same log, including mid-stream compaction
     and at-least-once redelivery."""
     from cdc_debezium_spark.streaming.state import Scd2DeltaHistorySink
+    from cdc_debezium_spark.streaming.txlog import TxTable
 
     chunk_dir = str(tmp_path / "chunks")
     write_event_chunks(spark, sf_dir, chunk_dir, n_chunks=4, repeat=2)
     cols = ["pk", "ord2", "op", "val", "valid_from_us", "valid_to_us"]
 
-    mor = Scd2DeltaHistorySink(str(tmp_path / "mor"), keys=["pk"], compact_every=3)
+    mor = Scd2DeltaHistorySink(str(tmp_path / "mor"), keys=["pk"], compact_ratio=1.0)
     q = run_upsert_stream(
         cdc.to_cdc(read_event_stream(spark, chunk_dir)), mor, str(tmp_path / "cp")
     )
     assert q.awaitTermination(120)
+    log = TxTable(spark, mor.path).history()
+    assert any(e["remove"] for e in log), "no compaction during the drain"
 
     want = _rows(cdc.scd2(cdc.cdc_events(spark, sf_dir)), cols)
     assert _rows(mor.read_history(spark), cols) == want
 
 
 def test_scd2_delta_sink_crash_between_base_swap_and_delta_removal(
-    spark, sf_dir, tmp_path
+    spark, sf_dir, tmp_path, monkeypatch
 ):
-    """Compaction crash-safety: duplicates left by a crash between the
-    base swap and delta removal (simulated by re-adding a folded delta
-    after compact) must be absorbed by the read-side (pk, ord2) dedup —
-    same history, no double rows."""
-    import shutil
+    """A compaction commits its folded files in place of the delta
+    files it read, then vacuums those. A crash between the two leaves
+    the folded deltas on disk but off the log: the history must read
+    unchanged, also when the stream then re-runs a batch the
+    compaction already folded. The next compaction absorbs the
+    duplicate rows and its vacuum reclaims the leftover files."""
+    import os
 
     from cdc_debezium_spark.streaming.state import Scd2DeltaHistorySink
+    from cdc_debezium_spark.streaming.txlog import TxTable
 
-    chunk_dir = str(tmp_path / "chunks")
-    write_event_chunks(spark, sf_dir, chunk_dir, n_chunks=3)
+    ev = cdc.cdc_events(spark, sf_dir).limit(500).cache()
     sink = Scd2DeltaHistorySink(str(tmp_path / "mor"), keys=["pk"])
-    q = run_upsert_stream(
-        cdc.to_cdc(read_event_stream(spark, chunk_dir)), sink, str(tmp_path / "cp")
-    )
-    assert q.awaitTermination(120)
+    sink(ev, 0)
+    sink(ev.limit(100), 1)
     cols = ["pk", "ord2", "op", "val", "valid_from_us", "valid_to_us"]
     want = _rows(sink.read_history(spark), cols)
+    t = TxTable(spark, sink.path)
 
-    # stash one delta, compact, then restore it — the crash window
-    deltas = sink._delta_glob()
-    assert deltas, "stream should have left live deltas"
-    stash = str(tmp_path / "stash")
-    shutil.copytree(deltas[0], stash)
-    sink.compact(spark)
-    assert not sink._delta_glob()
-    shutil.copytree(stash, deltas[0])
+    def crash(*_a, **_kw):
+        raise RuntimeError("simulated crash before the vacuum")
 
+    monkeypatch.setattr(TxTable, "vacuum", crash)
+    with pytest.raises(RuntimeError):
+        sink.compact(spark)
+    monkeypatch.undo()
+    v = t.latest_version()
+    left = set(t.history()[v]["remove"])
+    assert left, "the compaction folded no delta"
+    assert left <= set(os.listdir(t.file_dir))  # never deleted
+    assert not left & set(t._files_at(v))
     assert _rows(sink.read_history(spark), cols) == want
-    # a second compaction folds the orphan delta away for good
-    sink.compact(spark)
-    assert not sink._delta_glob()
+
+    sink(ev, 0)  # re-run of a batch the compaction already folded
     assert _rows(sink.read_history(spark), cols) == want
+    assert sink.compact(spark) == v + 2
+    assert _rows(sink.read_history(spark), cols) == want
+    assert not left & set(os.listdir(t.file_dir))
+    ev.unpersist()
 
 
 def test_scd2_delta_sink_rerun_batch_is_idempotent(spark, sf_dir, tmp_path):
     """foreachBatch re-run after a crash re-appends the same batch id;
-    the overwrite of the per-batch delta dir plus read-side dedup keep
-    the history unchanged."""
+    the read-side (pk, ord2) dedup keeps the history unchanged."""
     from cdc_debezium_spark.streaming.state import Scd2DeltaHistorySink
 
     ev = cdc.cdc_events(spark, sf_dir).limit(500).cache()
@@ -685,62 +694,54 @@ def test_delta_upsert_sink_matches_copy_on_write(spark, sf_dir, tmp_path):
     assert _rows(mor.read_live(spark), cols) == want
 
 
-def test_delta_upsert_sink_size_threshold_policy(spark, sf_dir, tmp_path):
-    """Size-threshold compaction (r11 verdict item 3): with
-    compact_ratio set, the sink folds deltas when their bytes reach
-    ratio × base bytes instead of on a fixed cadence. Must (a) fire at
-    least once during a drain, (b) leave state equal to the batch
-    latest-state / SCD2 kernels over the same log, and (c) keep the
-    fixed-cadence knob working when ratio is unset."""
+def test_scd2_sink_size_threshold_policy(spark, sf_dir, tmp_path):
+    """Size-threshold compaction: with compact_ratio set, the history
+    sink folds once the bytes appended since the last compaction reach
+    ratio × base bytes. It must fire during a drain and leave the
+    batch SCD2 history; the trigger reads only the log's file sizes."""
     from cdc_debezium_spark.streaming.state import (
         Scd2DeltaHistorySink,
         _deltas_exceed_ratio,
     )
+    from cdc_debezium_spark.streaming.txlog import TxTable
 
     chunk_dir = str(tmp_path / "chunks")
     write_event_chunks(spark, sf_dir, chunk_dir, n_chunks=4, repeat=2)
     events = cdc.cdc_events(spark, sf_dir)
 
     compactions = []
-    mor = DeltaUpsertSink(
-        str(tmp_path / "mor"), keys=["pk"], order=["ts_us", "ord2"], compact_ratio=1.0
-    )
-    orig_compact = mor.compact
-    mor.compact = lambda sp: compactions.append(orig_compact(sp))
-    q = run_upsert_stream(
-        cdc.to_cdc(read_event_stream(spark, chunk_dir)), mor, str(tmp_path / "cp2")
-    )
-    assert q.awaitTermination(120)
-    assert compactions, "ratio policy never fired during the drain"
-    # every fold folded >=1 delta (the trigger requires deltas present)
-    assert all(c["deltas_folded"] >= 1 for c in compactions)
-
-    cols = ["pk", "ts_us", "val"]
-    assert _rows(mor.read_live(spark), cols) == _rows(cdc.latest_state(events), cols)
-
-    # scd2 twin under the same policy lands the batch SCD2 history
     scd2 = Scd2DeltaHistorySink(str(tmp_path / "smor"), keys=["pk"], compact_ratio=1.0)
+    orig_compact = scd2.compact
+    scd2.compact = lambda sp: compactions.append(orig_compact(sp))
     q = run_upsert_stream(
         cdc.to_cdc(read_event_stream(spark, chunk_dir)), scd2, str(tmp_path / "cp4")
     )
     assert q.awaitTermination(120)
+    assert compactions, "ratio policy never fired during the drain"
+    assert all(v is not None for v in compactions)
     hcols = ["pk", "ord2", "op", "val", "valid_from_us", "valid_to_us"]
     assert _rows(scd2.read_history(spark), hcols) == _rows(cdc.scd2(events), hcols)
 
     # trigger-predicate unit cases: no deltas -> never; no base -> any
     # delta fires; otherwise the byte ratio decides
-    assert not _deltas_exceed_ratio(str(tmp_path / "nowhere"), 1.0)
+    t = TxTable(spark, str(tmp_path / "unit"))
+    assert not _deltas_exceed_ratio(t, 1.0)
+    big = events.limit(400).coalesce(1)
+    t.append(big)
+    assert _deltas_exceed_ratio(t, 1.0)
+    t.compact(lambda df: df)
+    assert not _deltas_exceed_ratio(t, 1.0)
+    t.append(events.limit(5).coalesce(1))
+    assert not _deltas_exceed_ratio(t, 1.0)
+    assert _deltas_exceed_ratio(t, 0.001)
 
 
 def test_per_sink_compaction_defaults_fold_counts(spark, tmp_path):
-    """Per-sink compaction defaults (r12 verdict item 6), pinned by
-    fold COUNTS at the sf0.01-gate drain shape (8 batches): the
-    latest-state sink's base is key-bounded, so ratio-only measured
-    degenerate (fold-every-batch, 1.4x drain at sf10 —
-    STREAM_PROFILE_r12) and the gate lane now uses cadence; ratio +
-    a min-delta-bytes floor is the scale alternative. The log-sized
-    scd2 base keeps ratio. Sinks are driven directly (foreachBatch
-    shape) so the counts are deterministic."""
+    """The latest-state sink compacts on a fixed cadence (its base is
+    key-bounded, so a size ratio would fold every batch), pinned by
+    fold COUNTS at the sf0.01-gate drain shape (8 batches). The sink
+    is driven directly (foreachBatch shape) so the count is
+    deterministic."""
     n_batches, n_keys = 8, 5
 
     def drive(sink):
@@ -761,48 +762,25 @@ def test_per_sink_compaction_defaults_fold_counts(spark, tmp_path):
     )
     assert len(cad) == n_batches // 3 == 2
 
-    # ratio-only on a key-bounded base: every batch-sized delta
-    # reaches ratio x base, so it folds EVERY batch — the documented
-    # degenerate shape this test exists to keep visible
-    deg = drive(
-        DeltaUpsertSink(str(tmp_path / "deg"), keys=["pk"], compact_ratio=1.0)
-    )
-    assert len(deg) == n_batches
-
-    # ratio + min-bytes floor: no fold until the floor is reached
-    floored = drive(
-        DeltaUpsertSink(
-            str(tmp_path / "flr"),
-            keys=["pk"],
-            compact_ratio=1.0,
-            compact_min_bytes=1 << 40,
-        )
-    )
-    assert len(floored) == 0
-
-    # all three policies read back the identical latest state
     cols = ["pk", "ts_us", "val"]
-    want = _rows(
+    got = _rows(
         DeltaUpsertSink(str(tmp_path / "cad"), keys=["pk"]).read_live(spark), cols
     )
-    assert len(want) == n_keys
-    for p in ("deg", "flr"):
-        got = _rows(
-            DeltaUpsertSink(str(tmp_path / p), keys=["pk"]).read_live(spark), cols
-        )
-        assert got == want
+    assert got == [(k, 70 + k, "v7") for k in range(n_keys)]
 
 
-def test_delta_sink_base_swap_crash_leaves_readable_state(spark, sf_dir, tmp_path):
-    """The r9 review found the original compaction rmtree'd the old
-    base BEFORE renaming the new one in — a crash in that window lost
-    every previously-compacted row. The _swap_base sequence must leave
-    a complete readable state at EVERY prefix: here we simulate the
-    worst point (old base retired, new base not yet renamed in) and
-    the reader must still produce the full answer from
-    _base_retired + deltas; the next compact must recover."""
+def test_delta_sink_base_swap_crash_leaves_readable_state(
+    spark, sf_dir, tmp_path, monkeypatch
+):
+    """A compaction commits its folded files in place of the files it
+    read, then vacuums the replaced ones. A crash between the two
+    leaves the replaced files on disk but off the log: the reader must
+    get the full answer from the committed version alone, the commit
+    must already hold one row per key, and the next compaction must
+    converge and reclaim the leftover files."""
     import os
-    import shutil
+
+    from cdc_debezium_spark.streaming.txlog import TxTable
 
     chunk_dir = str(tmp_path / "chunks")
     write_event_chunks(spark, sf_dir, chunk_dir, n_chunks=4)
@@ -813,43 +791,42 @@ def test_delta_sink_base_swap_crash_leaves_readable_state(spark, sf_dir, tmp_pat
     )
     assert q.awaitTermination(120)
     cols = ["pk", "ts_us", "val"]
-    want = _rows(sink.read_live(spark), cols)
-
-    # compact once so base/ holds rows whose deltas are gone — the
-    # rows the old sequence could lose
+    # compact once so the crash below also replaces compacted rows
     sink.compact(spark)
-    assert os.path.isdir(os.path.join(state, "base"))
-    # more deltas arrive after the compaction
     sink(cdc.cdc_events(spark, sf_dir).limit(100), 99)
+    want = _rows(sink.read_live(spark), cols)
+    t = TxTable(spark, state)
+    version = t.latest_version()
 
-    # simulate a crash mid-swap: new base written, old base retired,
-    # rename of the new one never happened
-    merged = sink.current_state(spark)
-    merged.write.mode("overwrite").parquet(os.path.join(state, "_base_next"))
-    os.rename(os.path.join(state, "base"), os.path.join(state, "_base_retired"))
+    def crash(*_a, **_kw):
+        raise RuntimeError("simulated crash before the vacuum")
 
-    # reader recovers from retired + deltas alone
+    monkeypatch.setattr(TxTable, "vacuum", crash)
+    with pytest.raises(RuntimeError):
+        sink.compact(spark)
+    monkeypatch.undo()
+    assert t.latest_version() == version + 1
+    left = set(t.history()[version + 1]["remove"])
+    assert left and left <= set(os.listdir(t.file_dir))
+
     assert _rows(sink.read_live(spark), cols) == want
-    # and the next compaction commits cleanly from that state
+    rows = t.snapshot()
+    assert rows.count() == rows.select("pk").distinct().count()
+
     sink.compact(spark)
     assert _rows(sink.read_live(spark), cols) == want
-    assert not os.path.isdir(os.path.join(state, "_base_retired"))
-    assert not sink._delta_glob()
-    shutil.rmtree(state, ignore_errors=True)
+    assert not left & set(os.listdir(t.file_dir))
 
 
 def test_delta_sink_crash_during_recovery_compact(spark, sf_dir, tmp_path, monkeypatch):
-    """r10 review finding: when _swap_base is re-entered post-crash
-    (base absent, _base_retired holding the only compacted copy), the
-    r9 code rmtree'd retired BEFORE publishing the new base — a second
-    crash in that window left readers with deltas only. The fixed
-    sequence publishes base first, so a crash at the FIRST destructive
-    op of the recovery compact must still leave the full answer
-    readable."""
+    """A compaction that crashes after staging its folded files and
+    before claiming its version leaves the state readable and
+    unchanged, and so does a second crash in the compaction that
+    retries it. The next clean compaction lands the same state, and
+    its vacuum reclaims the orphaned files."""
     import os
-    import shutil
 
-    import cdc_debezium_spark.streaming.state as state_mod
+    from cdc_debezium_spark.streaming.txlog import TxTable
 
     chunk_dir = str(tmp_path / "chunks")
     write_event_chunks(spark, sf_dir, chunk_dir, n_chunks=4)
@@ -863,68 +840,49 @@ def test_delta_sink_crash_during_recovery_compact(spark, sf_dir, tmp_path, monke
     sink.compact(spark)
     sink(cdc.cdc_events(spark, sf_dir).limit(100), 99)
     want = _rows(sink.read_live(spark), cols)
+    t = TxTable(spark, state)
+    version = t.latest_version()
+    on_disk = set(os.listdir(t.file_dir))
 
-    # first crash: between retire (step 2) and publish (step 3)
-    merged = sink.current_state(spark)
-    merged.write.mode("overwrite").parquet(os.path.join(state, "_base_next"))
-    os.rename(os.path.join(state, "base"), os.path.join(state, "_base_retired"))
+    def crash(*_a, **_kw):
+        raise RuntimeError("simulated crash before the commit")
 
-    # second crash: immediately AFTER the first rmtree the RECOVERY
-    # compact completes (the destructive op lands, then we die —
-    # the r9 ordering deleted retired here with base unpublished)
-    real_rmtree = shutil.rmtree
-    calls = {"n": 0}
+    monkeypatch.setattr(TxTable, "_try_commit", crash)
+    for _ in range(2):  # the crash, then a crash in its recovery
+        with pytest.raises(RuntimeError):
+            sink.compact(spark)
+        assert t.latest_version() == version
+        assert _rows(sink.read_live(spark), cols) == want
+    monkeypatch.undo()
+    orphans = set(os.listdir(t.file_dir)) - on_disk
+    assert orphans, "the crashed compactions staged nothing"
 
-    def crashing_rmtree(p, *a, **kw):
-        calls["n"] += 1
-        real_rmtree(p, ignore_errors=True)
-        raise RuntimeError("simulated crash after first destructive op")
-
-    assert state_mod is not None  # _swap_base imports shutil locally -> global patch reaches it
-    monkeypatch.setattr(shutil, "rmtree", crashing_rmtree)
-    try:
-        sink.compact(spark)
-    except RuntimeError:
-        pass
-    monkeypatch.setattr(shutil, "rmtree", real_rmtree)
-    assert calls["n"] == 1  # compact reached a destructive op, then "crashed"
-
-    # the full answer must still be readable: with the r9 ordering the
-    # retired dir (only compacted copy) was already gone and base was
-    # not yet published -> rows lost. Fixed ordering: base exists.
-    assert os.path.isdir(os.path.join(state, "base"))
-    assert _rows(sink.read_live(spark), cols) == want
-
-    # and a clean compact from here converges
     sink.compact(spark)
+    assert t.latest_version() == version + 1
     assert _rows(sink.read_live(spark), cols) == want
-    assert not os.path.isdir(os.path.join(state, "_base_retired"))
-    shutil.rmtree(state, ignore_errors=True)
+    assert not orphans & set(os.listdir(t.file_dir))
 
 
 def test_delta_upsert_sink_compaction_crash_window(spark, sf_dir, tmp_path):
-    """An orphan delta surviving a compaction crash (re-added after the
-    fold) must not change the derived state: its rows are older-or-
-    equal events and lose the latest-per-key window."""
-    import shutil
-
-    chunk_dir = str(tmp_path / "chunks")
-    write_event_chunks(spark, sf_dir, chunk_dir, n_chunks=3)
+    """A crash after the sink committed a batch but before the stream
+    recorded it re-runs the batch, possibly after a compaction folded
+    its first copy. The re-appended rows are older-or-equal events and
+    lose the latest-per-key window, so the state does not change."""
+    ce = cdc.cdc_events(spark, sf_dir)
+    hi = ce.agg(F.max("ord2")).first()[0] + 1
+    batches = [
+        ce.where((F.col("ord2") >= i * hi // 3) & (F.col("ord2") < (i + 1) * hi // 3))
+        for i in range(3)
+    ]
     sink = DeltaUpsertSink(str(tmp_path / "mor"), keys=["pk"], order=["ts_us", "ord2"])
-    q = run_upsert_stream(
-        cdc.to_cdc(read_event_stream(spark, chunk_dir)), sink, str(tmp_path / "cp")
-    )
-    assert q.awaitTermination(120)
+    for i, b in enumerate(batches):
+        sink(b, i)
     cols = ["pk", "ts_us", "val"]
-    want = _rows(sink.read_live(spark), cols)
+    want = _rows(cdc.latest_state(ce), cols)
+    assert _rows(sink.read_live(spark), cols) == want
 
-    deltas = sink._delta_glob()
-    assert deltas
-    stash = str(tmp_path / "stash")
-    shutil.copytree(deltas[0], stash)
     sink.compact(spark)
-    assert not sink._delta_glob()
-    shutil.copytree(stash, deltas[0])
+    sink(batches[0], 0)  # re-run of a batch the compaction folded
     assert _rows(sink.read_live(spark), cols) == want
     sink.compact(spark)
     assert _rows(sink.read_live(spark), cols) == want
@@ -1110,9 +1068,9 @@ def test_txtable_acid_time_travel_and_conflicts(spark, sf_dir, tmp_path):
     """The native transaction-log table format (Delta/Iceberg seam
     realized): atomic versioned commits over immutable parquet,
     snapshot isolation (an open snapshot survives a later overwrite),
-    time travel, optimistic-concurrency conflicts, transactional CDC
-    upsert parity with the batch kernel, and vacuum of crash orphans
-    plus dropped-version files."""
+    time travel, optimistic-concurrency conflicts, a CDC fold committed
+    chunk by chunk with overwrite(read_version=...) matching the batch
+    kernel, and vacuum of crash orphans plus dropped-version files."""
     import os
 
     from cdc_debezium_spark.streaming.txlog import CommitConflict, TxTable
@@ -1158,7 +1116,7 @@ def test_txtable_acid_time_travel_and_conflicts(spark, sf_dir, tmp_path):
     with _pt.raises(Exception):  # vacuumed versions are gone
         t.snapshot(0).collect()
 
-    # transactional CDC upsert == the batch latest-state kernel
+    # chunk-by-chunk latest-state commits == the batch kernel
     t2 = TxTable(spark, str(tmp_path / "tx2"))
     ce = cdc.cdc_events(spark, sf_dir).select("pk", "ord2", "ts_us", "op", "val")
     # chunks must respect log order (the per-key ordering contract a
@@ -1171,37 +1129,36 @@ def test_txtable_acid_time_travel_and_conflicts(spark, sf_dir, tmp_path):
         for i in range(3)
     ]
     for ch in chunks:
-        t2.upsert(ch, keys=["pk"], order=["ts_us", "ord2"])
+        v = t2.latest_version()
+        src = ch if v < 0 else t2.snapshot(v).unionByName(ch)
+        t2.overwrite(cdc.latest_state(src), read_version=v)
     got = _rows(t2.snapshot(), ["pk", "ts_us", "val"])
     want = _rows(cdc.latest_state(ce), ["pk", "ts_us", "val"])
     assert got == want
     assert len(t2.history()) == 3  # one ACID commit per chunk
 
 
-def test_tx_upsert_sink_stream_parity_and_versions(spark, sf_dir, tmp_path):
-    """E7 over the ACID table: chunked replay through TxUpsertSink
-    lands exactly the batch latest-state, one atomic commit per
-    non-empty micro-batch, and a full redelivery of the stream leaves
-    the state unchanged (idempotent fold = E10).
-
-    r6 order-flake root cause (judge ask #1b): Spark's file source
-    orders pending files by mtime, ties broken arbitrarily; under
-    full-suite load the chunk files landed in one mtime tick and were
-    delivered out of log order, and the then drop-at-commit tombstone
-    handling resurrected deleted pk=3 (+1 stale row). Fixed on both
-    sides: write_event_chunks stamps strictly increasing mtimes, and
-    TxUpsertSink now retains tombstones in committed state (compacted-
-    topic contract) so the fold is independent of batch order — see
-    test_tx_upsert_sink_order_robust_under_mtime_ties."""
-    from cdc_debezium_spark.streaming.txlog import TxTable, TxUpsertSink
+def test_delta_upsert_sink_stream_parity_and_versions(spark, sf_dir, tmp_path):
+    """E7 over the transaction log: chunked replay through
+    DeltaUpsertSink lands exactly the batch latest-state with one
+    append commit per micro-batch plus its compaction commits, and a
+    full redelivery of the stream leaves the state unchanged
+    (idempotent fold = E10)."""
+    from cdc_debezium_spark.streaming.txlog import TxTable
 
     chunk_dir = str(tmp_path / "chunks_tx")
     write_event_chunks(spark, sf_dir, chunk_dir, n_chunks=4)
 
     stream = cdc.to_cdc(read_event_stream(spark, chunk_dir))
-    sink = TxUpsertSink(str(tmp_path / "txstate"))
+    sink = DeltaUpsertSink(str(tmp_path / "txstate"), compact_every=2)
+    calls = []
+
+    def counted(batch, batch_id):
+        calls.append(batch_id)
+        sink(batch, batch_id)
+
     q = (
-        stream.writeStream.foreachBatch(sink)
+        stream.writeStream.foreachBatch(counted)
         .option("checkpointLocation", str(tmp_path / "cp_tx"))
         .trigger(availableNow=True)
         .start()
@@ -1210,8 +1167,10 @@ def test_tx_upsert_sink_stream_parity_and_versions(spark, sf_dir, tmp_path):
 
     want = _rows(cdc.latest_state(cdc.cdc_events(spark, sf_dir)), ["pk", "ts_us", "val"])
     assert _rows(sink.read_live(spark), ["pk", "ts_us", "val"]) == want
-    t = TxTable(spark, str(tmp_path / "txstate"))
-    assert len(t.history()) >= 1  # one commit per processed batch
+    log = TxTable(spark, str(tmp_path / "txstate")).history()
+    appends = [e for e in log if not e["remove"]]
+    assert len(appends) == len(calls) >= 2
+    assert len(log) - len(appends) == len(calls) // 2
 
     # redeliver the whole stream on a FRESH checkpoint: every batch
     # re-applies, state must not change
@@ -1225,20 +1184,17 @@ def test_tx_upsert_sink_stream_parity_and_versions(spark, sf_dir, tmp_path):
     assert _rows(sink.read_live(spark), ["pk", "ts_us", "val"]) == want
 
 
-def test_tx_upsert_sink_order_robust_under_mtime_ties(spark, sf_dir, tmp_path):
-    """Regression pin for the r6 order-flake: force ALL chunk files to
-    one identical mtime — the worst case the file source's tie-broken
-    ordering can produce, previously hit only under full-suite load —
-    and the TxUpsertSink state must still equal batch latest-state.
-    With tombstones retained at commit (compacted-topic contract) the
-    per-key order columns decide every fold, so batch arrival order
-    cannot change the result; before the fix this resurrected deleted
-    keys (pk=3 et al.) whenever a tombstone batch applied early."""
+def test_delta_upsert_sink_order_robust_under_mtime_ties(spark, sf_dir, tmp_path):
+    """Force ALL chunk files to one identical mtime — the worst case
+    the file source's tie-broken ordering can produce — and the
+    DeltaUpsertSink state must still equal batch latest-state.
+    Tombstones stay rows in committed state (compacted-topic
+    contract), so the per-key order columns decide every fold and
+    batch arrival order cannot resurrect a deleted key, across
+    compactions too."""
     import glob
     import os
     import time as _time
-
-    from cdc_debezium_spark.streaming.txlog import TxUpsertSink
 
     chunk_dir = str(tmp_path / "chunks_tie")
     write_event_chunks(spark, sf_dir, chunk_dir, n_chunks=4)
@@ -1247,7 +1203,7 @@ def test_tx_upsert_sink_order_robust_under_mtime_ties(spark, sf_dir, tmp_path):
         os.utime(f, (t, t))
 
     stream = cdc.to_cdc(read_event_stream(spark, chunk_dir))
-    sink = TxUpsertSink(str(tmp_path / "txstate_tie"))
+    sink = DeltaUpsertSink(str(tmp_path / "txstate_tie"), compact_every=2)
     q = (
         stream.writeStream.foreachBatch(sink)
         .option("checkpointLocation", str(tmp_path / "cp_tie"))
