@@ -2164,16 +2164,20 @@ def cdc_stream_latest_state_roundtrip(spark, sf_dir):
     — never collected to the driver: at a 100 TB key space a
     state-sized collect is a driver OOM.
     """
-    import shutil
     import tempfile
 
-    from .streaming.replay import read_event_stream, write_event_chunks
-    from .streaming.state import DeltaUpsertSink, run_upsert_stream
+    from .streaming.replay import (
+        drain,
+        lane_dir,
+        read_event_stream,
+        write_event_chunks,
+    )
+    from .streaming.state import DeltaUpsertSink
 
-    state = _format_lane_dir("latest_state_stream", sf_dir)
-    shutil.rmtree(state, ignore_errors=True)
-    base = tempfile.mkdtemp(prefix="cdc_stream_gate_")
-    try:
+    state = lane_dir("latest_state_stream", sf_dir)
+    with tempfile.TemporaryDirectory(
+        prefix="cdc_stream_gate_", ignore_cleanup_errors=True
+    ) as base:
         chunks = f"{base}/chunks"
         write_event_chunks(spark, sf_dir, chunks, n_chunks=4, repeat=2)
         stream = cdc.to_cdc(read_event_stream(spark, chunks))
@@ -2183,28 +2187,12 @@ def cdc_stream_latest_state_roundtrip(spark, sf_dir):
         sink = DeltaUpsertSink(
             state, keys=["pk"], order=["ts_us", "ord2"], compact_every=3
         )
-        q = run_upsert_stream(stream, sink, f"{base}/cp")
-        if not q.awaitTermination(300):
-            q.stop()
-            raise TimeoutError(
-                "cdc_stream_latest_state_roundtrip: stream did not drain in 300s"
-            )
+        drain(
+            stream.writeStream.foreachBatch(sink),
+            f"{base}/cp",
+            "cdc_stream_latest_state_roundtrip",
+        )
         return sink.read_live(spark).select("pk", "ts_us", "val")
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
-
-
-def _format_lane_dir(lane: str, sf_dir: str) -> str:
-    """Deterministic per-(lane, fixture) scratch dir, reused and
-    overwritten across invocations so repeated gate runs never grow
-    unbounded state."""
-    import hashlib
-    import os
-
-    h = hashlib.md5(sf_dir.encode()).hexdigest()[:12]
-    d = os.path.join("/tmp", "cdc_debezium_gate", lane, h)
-    os.makedirs(d, exist_ok=True)
-    return d
 
 
 @query(
@@ -2229,7 +2217,9 @@ def scan_csv_roundtrip(spark, sf_dir):
     Shape: narrow write + narrow scan, no shuffle; scratch dir is
     per-fixture deterministic and overwritten per run.
     """
-    out = _format_lane_dir("csv", sf_dir)
+    from .streaming.replay import lane_dir
+
+    out = lane_dir("csv", sf_dir)
     ev = load_table(spark, sf_dir, "events").select(
         "event_id", "user_id", "event_type", "value", "props"
     )
@@ -2277,7 +2267,9 @@ def scan_orc_roundtrip(spark, sf_dir):
     predicate pushdown available on read (ORC carries min/max stats
     like parquet); no shuffle.
     """
-    out = _format_lane_dir("orc", sf_dir)
+    from .streaming.replay import lane_dir
+
+    out = lane_dir("orc", sf_dir)
     ev = load_table(spark, sf_dir, "events").select(
         "event_id", "ts_us", "user_id", "event_type", "value", "props"
     )
@@ -2428,48 +2420,46 @@ def cdc_checkpoint_resume_roundtrip(spark, sf_dir):
     generator, same scratch-dir + lazy-reader materialization); the
     deliberate stop adds one stream startup cost, nothing else.
     """
-    import shutil
     import tempfile
     import time
 
-    from .streaming.replay import read_event_stream, write_event_chunks
-    from .streaming.state import DeltaUpsertSink, run_upsert_stream
+    from .streaming.replay import (
+        drain,
+        lane_dir,
+        read_event_stream,
+        start,
+        write_event_chunks,
+    )
+    from .streaming.state import DeltaUpsertSink
 
-    state = _format_lane_dir("resume_stream", sf_dir)
-    shutil.rmtree(state, ignore_errors=True)
-    base = tempfile.mkdtemp(prefix="cdc_resume_gate_")
-    cp = f"{base}/cp"
-    try:
-        chunks = f"{base}/chunks"
+    state = lane_dir("resume_stream", sf_dir)
+    with tempfile.TemporaryDirectory(
+        prefix="cdc_resume_gate_", ignore_cleanup_errors=True
+    ) as base:
+        chunks, cp = f"{base}/chunks", f"{base}/cp"
         write_event_chunks(spark, sf_dir, chunks, n_chunks=4)
-        sink = DeltaUpsertSink(state, keys=["pk"], order=["ts_us", "ord2"])
+
+        def upsert(sink):
+            stream = cdc.to_cdc(read_event_stream(spark, chunks))
+            return stream.writeStream.foreachBatch(sink)
 
         # incarnation 1: process at least one micro-batch, then "crash"
-        q1 = run_upsert_stream(cdc.to_cdc(read_event_stream(spark, chunks)), sink, cp)
+        # (stop() returns once the query thread has exited)
+        sink = DeltaUpsertSink(state, keys=["pk"], order=["ts_us", "ord2"])
+        q1 = start(upsert(sink), cp)
         deadline = time.time() + 120
         while time.time() < deadline:
             if any(p["numInputRows"] > 0 for p in q1.recentProgress):
                 break
             time.sleep(0.2)
         q1.stop()
-        q1.awaitTermination(60)
 
         # incarnation 2: fresh reader + fresh sink object over the
         # same state dir, SAME checkpoint — resumes from the committed
         # offset
         sink2 = DeltaUpsertSink(state, keys=["pk"], order=["ts_us", "ord2"])
-        q2 = run_upsert_stream(
-            cdc.to_cdc(read_event_stream(spark, chunks)), sink2, cp
-        )
-        if not q2.awaitTermination(300):
-            q2.stop()
-            raise TimeoutError(
-                "cdc_checkpoint_resume_roundtrip: resumed stream did not "
-                "drain in 300s"
-            )
+        drain(upsert(sink2), cp, "cdc_checkpoint_resume_roundtrip")
         return sink2.read_live(spark).select("pk", "ts_us", "val")
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
 
 
 @query(
@@ -2506,19 +2496,23 @@ def cdc_scd2_stream_roundtrip(spark, sf_dir):
     merge-on-read 13.0 s, flat per-batch — the property that survives
     100 TB.
     """
-    import shutil
     import tempfile
 
-    from .streaming.replay import read_event_stream, write_event_chunks
-    from .streaming.state import Scd2DeltaHistorySink, run_upsert_stream
+    from .streaming.replay import (
+        drain,
+        lane_dir,
+        read_event_stream,
+        write_event_chunks,
+    )
+    from .streaming.state import Scd2DeltaHistorySink
 
     # history is LOG-sized (every event keeps a row) — never collect
     # it to the driver; the state lives in a per-fixture scratch dir
     # (recreated each run) and is returned as a lazy reader
-    state = _format_lane_dir("scd2_stream", sf_dir)
-    shutil.rmtree(state, ignore_errors=True)
-    base = tempfile.mkdtemp(prefix="cdc_scd2_gate_")
-    try:
+    state = lane_dir("scd2_stream", sf_dir)
+    with tempfile.TemporaryDirectory(
+        prefix="cdc_scd2_gate_", ignore_cleanup_errors=True
+    ) as base:
         chunks = f"{base}/chunks"
         write_event_chunks(spark, sf_dir, chunks, n_chunks=4, repeat=2)
         stream = cdc.to_cdc(read_event_stream(spark, chunks))
@@ -2526,17 +2520,14 @@ def cdc_scd2_stream_roundtrip(spark, sf_dir):
         # with ingested volume, so the geometric amortization holds —
         # unlike the key-bounded latest-state twin, which uses cadence.
         sink = Scd2DeltaHistorySink(state, keys=["pk"], compact_ratio=1.0)
-        q = run_upsert_stream(stream, sink, f"{base}/cp")
-        if not q.awaitTermination(300):
-            q.stop()
-            raise TimeoutError(
-                "cdc_scd2_stream_roundtrip: stream did not drain in 300s"
-            )
+        drain(
+            stream.writeStream.foreachBatch(sink),
+            f"{base}/cp",
+            "cdc_scd2_stream_roundtrip",
+        )
         return sink.read_history(spark).select(
             "pk", "ord2", "op", "val", "valid_from_us", "valid_to_us"
         )
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
 
 
 @query(
@@ -2562,12 +2553,10 @@ def scan_jsonl_roundtrip(spark, sf_dir):
     Completes the format coverage: parquet (native), CSV, ORC, XML,
     Avro wire, JSON wire, and now sharded JSONL-gz files.
     """
-    import shutil
-
     from .sources.jsonl import read_jsonl, write_jsonl
+    from .streaming.replay import lane_dir
 
-    out = _format_lane_dir("jsonl", sf_dir)
-    shutil.rmtree(out, ignore_errors=True)
+    out = lane_dir("jsonl", sf_dir)
     docs = load_table(spark, sf_dir, "documents")
     write_jsonl(docs.select("doc_id", "text", "lang", "source", "n_chars"), out, 100)
     good, _corrupt = read_jsonl(

@@ -426,57 +426,27 @@ def ext_stream_dedup_minhash_roundtrip(spark, sf_dir):
     table keyed (band, k0, k1) so each ingest batch is one
     shuffle-free probe; redelivered batches re-append their index rows
     and the pair-level distinct absorbs the duplicates."""
-    import os
-    import shutil
     import tempfile
-    import time as _time
 
     from .ext import dedup
-    from .queries_cdc import _format_lane_dir
+    from .streaming.replay import drain, lane_dir, write_redelivered_chunks
 
-    idx_dir = _format_lane_dir("stream_minhash_index", sf_dir)
-    out_dir = _format_lane_dir("stream_minhash_pairs", sf_dir)
-    shutil.rmtree(idx_dir, ignore_errors=True)
-    shutil.rmtree(out_dir, ignore_errors=True)
-    base = tempfile.mkdtemp(prefix="ext_stream_dedup_")
-    chunks_dir = os.path.join(base, "chunks")
-    os.makedirs(chunks_dir, exist_ok=True)
-    try:
+    idx_dir = lane_dir("stream_minhash_index", sf_dir)
+    out_dir = lane_dir("stream_minhash_pairs", sf_dir)
+    with tempfile.TemporaryDirectory(
+        prefix="ext_stream_dedup_", ignore_cleanup_errors=True
+    ) as base:
         # 3 ingest batches by doc_id % 3 (the incremental lane's
-        # chunking), each written twice with strictly increasing
-        # mtimes (replay.write_event_chunks' ordering guarantee).
-        # Chunks are written THROUGH SPARK (the embedding twin's
-        # recipe) — never a driver-side toPandas of the corpus; this
-        # fixture generator is test-only plumbing but still must not
-        # materialize a corpus on the driver at sf10 (r11 verdict
-        # item 5).
+        # chunking), each delivered twice in mtime order
+        chunks_dir = f"{base}/chunks"
         docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-        t0 = _time.time() - 10
-        seq = 0
-        for i in range(3):
-            chunk = docs.where(F.col("doc_id") % 3 == i).coalesce(1)
-            # r15 (guide §1/§6): the redelivered copy is BYTE-IDENTICAL
-            # fixture plumbing — write each chunk through Spark once and
-            # OS-copy it for the second delivery instead of re-running
-            # the write job (halves the fixture-write jobs at every SF;
-            # the stream sees the same six files with the same mtime
-            # ordering, so batch content and semantics are unchanged)
-            for r in range(2):  # every chunk delivered twice
-                path = f"{chunks_dir}/chunk_{i:04d}_{r}"
-                if r == 0:
-                    chunk.write.mode("overwrite").parquet(path)
-                else:
-                    shutil.copytree(f"{chunks_dir}/chunk_{i:04d}_0", path)
-                for f_ in os.listdir(path):
-                    os.utime(os.path.join(path, f_), (t0 + seq, t0 + seq))
-                seq += 1
+        write_redelivered_chunks(docs, "doc_id", chunks_dir)
 
         # Initialize both stores with typed empty frames so the
         # foreachBatch probe and the final read never hit a
-        # schema-less dir. NO coalesce/repartition here: an empty
-        # LocalRelation write is already a single cheap job, and
-        # .coalesce(1) on it DEFEATS the empty-relation fast path
-        # (measured r15: 0.55 s plain vs 4.4 s with coalesce(1)).
+        # schema-less dir. NO coalesce/repartition here: .coalesce(1)
+        # on an empty LocalRelation write defeats its fast path
+        # (0.55 s plain vs 4.4 s with coalesce(1)).
         spark.createDataFrame([], "doc_id long, band int, k0 long, k1 long").write.mode(
             "overwrite"
         ).parquet(idx_dir)
@@ -487,7 +457,7 @@ def ext_stream_dedup_minhash_roundtrip(spark, sf_dir):
         def ingest(batch, _bid):
             s = batch.sparkSession
             # explicit schema: skips per-micro-batch footer/schema
-            # inference over the growing index dir (r15, guide §6)
+            # inference over the growing index dir
             index = s.read.schema(
                 "doc_id long, band int, k0 long, k1 long"
             ).parquet(idx_dir)
@@ -501,36 +471,21 @@ def ext_stream_dedup_minhash_roundtrip(spark, sf_dir):
             new_rows.write.mode("append").parquet(idx_dir)
             new_rows.unpersist()
 
-        q = (
+        drain(
             spark.readStream.schema("doc_id long, text string")
             .option("maxFilesPerTrigger", 1)
             .option("recursiveFileLookup", "true")
             .parquet(chunks_dir)
-            .writeStream.foreachBatch(ingest)
-            .option("checkpointLocation", os.path.join(base, "cp"))
-            .trigger(availableNow=True)
-            .start()
+            .writeStream.foreachBatch(ingest),
+            f"{base}/cp",
+            "ext_stream_dedup_minhash_roundtrip",
         )
-        # cap binds only at decade-fixture scale; CDC_STREAM_DRAIN_CAP_S
-        # lets the scale rehearsals raise it without touching gate runs
-        # max(default, env): the knob exists to RAISE caps for scale
-        # rehearsals; a value sized for this lane must not LOWER the
-        # other stream lane's larger default (r14 ADVICE)
-        drain_s = max(300, int(os.environ.get("CDC_STREAM_DRAIN_CAP_S", "0")))
-        if not q.awaitTermination(drain_s):
-            q.stop()
-            raise TimeoutError(
-                "ext_stream_dedup_minhash_roundtrip: "
-                f"stream did not drain in {drain_s}s"
-            )
         return (
             spark.read.schema("doc_a long, doc_b long")
             .parquet(out_dir)
             .select("doc_a", "doc_b")
             .distinct()
         )
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
 
 
 @query(
@@ -1770,57 +1725,35 @@ def ext_stream_dedup_embedding_roundtrip(spark, sf_dir):
     100 TB the index is a cell-partitioned table so each ingest batch
     partition-prunes to its own cells; the indexed corpus is never
     rescanned."""
-    import os
-    import shutil
     import tempfile
-    import time as _time
 
     from .ext import dedup
     from .ext.similarity import _strided_cents, _with_unit
-    from .queries_cdc import _format_lane_dir
+    from .streaming.replay import drain, lane_dir, write_redelivered_chunks
 
-    idx_dir = _format_lane_dir("stream_ann_index", sf_dir)
-    out_dir = _format_lane_dir("stream_ann_pairs", sf_dir)
-    shutil.rmtree(idx_dir, ignore_errors=True)
-    shutil.rmtree(out_dir, ignore_errors=True)
-    base = tempfile.mkdtemp(prefix="ext_stream_ann_")
-    chunks_dir = os.path.join(base, "chunks")
-    os.makedirs(chunks_dir, exist_ok=True)
-    try:
+    idx_dir = lane_dir("stream_ann_index", sf_dir)
+    out_dir = lane_dir("stream_ann_pairs", sf_dir)
+    with tempfile.TemporaryDirectory(
+        prefix="ext_stream_ann_", ignore_cleanup_errors=True
+    ) as base:
         emb = load_table(spark, sf_dir, "embeddings")
         # Fixed centroids from the FULL corpus (deterministic strided
         # placeholder — the oracle's `vec_id % 100 = 0` set), shared
         # by every ingest batch.
         cents = _strided_cents(_with_unit(emb), 100)
 
-        t0 = _time.time() - 10
-        seq = 0
-        for i in range(3):
-            chunk = emb.where(F.col("vec_id") % 3 == i).coalesce(1)
-            for r in range(2):  # every chunk delivered twice
-                path = f"{chunks_dir}/chunk_{i:04d}_{r}"
-                # small row groups: parquet splits only at row-group
-                # boundaries, and the one-file-per-chunk delivery
-                # contract (maxFilesPerTrigger=1) would otherwise put
-                # a decade-tier chunk's whole scan — and with it the
-                # per-batch assignment kernel — on 1-3 tasks (the r12
-                # single-row-group fixture bug, reintroduced by this
-                # rewrite; measured blowing the sf10 d=768 drain cap).
-                # Redelivery (r=1) is a byte-identical OS copy of the
-                # r=0 write — same six files, same mtime order, half
-                # the fixture-write jobs (r15, guide §1/§6).
-                if r == 0:
-                    chunk.write.mode("overwrite").option(
-                        "parquet.block.size", 4 << 20
-                    ).parquet(path)
-                else:
-                    shutil.copytree(f"{chunks_dir}/chunk_{i:04d}_0", path)
-                for f_ in os.listdir(path):
-                    os.utime(os.path.join(path, f_), (t0 + seq, t0 + seq))
-                seq += 1
+        # small row groups: parquet splits only at row-group
+        # boundaries, and the one-file-per-chunk delivery contract
+        # (maxFilesPerTrigger=1) would otherwise put a large chunk's
+        # whole scan — and with it the per-batch assignment kernel —
+        # on 1-3 tasks
+        chunks_dir = f"{base}/chunks"
+        write_redelivered_chunks(
+            emb, "vec_id", chunks_dir, options={"parquet.block.size": 4 << 20}
+        )
 
         # NO coalesce on the empty init frames — it defeats the
-        # empty-LocalRelation write fast path (r15: 0.55 s -> 4.4 s)
+        # empty-LocalRelation write fast path (0.55 s -> 4.4 s)
         spark.createDataFrame(
             [], "vec_id long, v array<double>, norm double, cell long"
         ).write.mode("overwrite").parquet(idx_dir)
@@ -1831,7 +1764,7 @@ def ext_stream_dedup_embedding_roundtrip(spark, sf_dir):
         def ingest(batch, _bid):
             s = batch.sparkSession
             # explicit schema: skips per-micro-batch footer/schema
-            # inference over the growing index dir (r15, guide §6)
+            # inference over the growing index dir
             index = s.read.schema(
                 "vec_id long, v array<double>, norm double, cell long"
             ).parquet(idx_dir)
@@ -1849,38 +1782,27 @@ def ext_stream_dedup_embedding_roundtrip(spark, sf_dir):
             new_asg.write.mode("append").parquet(idx_dir)
             new_asg.unpersist()
 
-        q = (
-            spark.readStream.schema(emb.schema)
-            .option("maxFilesPerTrigger", 1)
-            .option("recursiveFileLookup", "true")
-            .parquet(chunks_dir)
-            .writeStream.foreachBatch(ingest)
-            .option("checkpointLocation", os.path.join(base, "cp"))
-            .trigger(availableNow=True)
-            .start()
-        )
         # 1800 s: only binds at decade-fixture scale — the d=768 sf10
         # tier drains in ~700-1200 s (six micro-batches, each paying
         # the bit-exact per-dimension verify kernel at 768 dims, ~40x
         # a BLAS matmul by design — oracle parity over speed on this
         # one shared path); the sf0.01 driver gate takes seconds.
-        # CDC_STREAM_DRAIN_CAP_S raises it for the sf100 rehearsals.
-        # max(default, env) — see the minhash lane's cap note (r14 ADVICE)
-        drain_s = max(1800, int(os.environ.get("CDC_STREAM_DRAIN_CAP_S", "0")))
-        if not q.awaitTermination(drain_s):
-            q.stop()
-            raise TimeoutError(
-                "ext_stream_dedup_embedding_roundtrip: "
-                f"stream did not drain in {drain_s}s"
-            )
+        drain(
+            spark.readStream.schema(emb.schema)
+            .option("maxFilesPerTrigger", 1)
+            .option("recursiveFileLookup", "true")
+            .parquet(chunks_dir)
+            .writeStream.foreachBatch(ingest),
+            f"{base}/cp",
+            "ext_stream_dedup_embedding_roundtrip",
+            timeout_s=1800,
+        )
         return (
             spark.read.schema("vec_a long, vec_b long, cosine double")
             .parquet(out_dir)
             .select("vec_a", "vec_b", "cosine")
             .distinct()
         )
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
 
 
 @query(

@@ -169,22 +169,21 @@ def agg_tumbling_window_stream_roundtrip(spark, sf_dir):
     sum-of-doubles) so incremental state merging is bit-exact against
     the single-pass oracle. Complete-mode output lands via
     foreachBatch overwrite into per-fixture parquet scratch and is
-    returned as a LAZY reader — nothing is collected to the driver
-    (r11 verdict item: the memory-sink collect class, converged on
-    the session lane's _format_lane_dir pattern).
+    returned as a LAZY reader — nothing is collected to the driver.
     """
-    import shutil
     import tempfile
 
-    from .queries_cdc import _format_lane_dir
     from .streaming.replay import (
+        drain,
+        lane_dir,
         read_event_stream,
         scaled_state_partitions,
         write_event_chunks,
     )
 
-    base = tempfile.mkdtemp(prefix="stream_wagg_gate_")
-    try:
+    with tempfile.TemporaryDirectory(
+        prefix="stream_wagg_gate_", ignore_cleanup_errors=True
+    ) as base:
         chunks = f"{base}/chunks"
         write_event_chunks(spark, sf_dir, chunks, n_chunks=4, repeat=2)
         stream = read_event_stream(spark, chunks)
@@ -209,31 +208,18 @@ def agg_tumbling_window_stream_roundtrip(spark, sf_dir):
                 "max_val",
             )
         )
-        out_dir = _format_lane_dir("tumbling_stream", sf_dir)
-        shutil.rmtree(out_dir, ignore_errors=True)
-        # scale-adaptive state partitions (r15): two stateful operators
-        # (dropDuplicates + windowed agg) each commit one state store
-        # per shuffle partition per micro-batch — see
-        # replay.scaled_state_partitions
+        out_dir = lane_dir("tumbling_stream", sf_dir)
+        # two stateful operators (dropDuplicates + windowed agg), each
+        # one state store per shuffle partition
         with scaled_state_partitions(spark, chunks):
-            q = (
+            drain(
                 agg.writeStream.foreachBatch(
                     lambda b, _i: b.write.mode("overwrite").parquet(out_dir)
-                )
-                .outputMode("complete")
-                .option("checkpointLocation", f"{base}/cp")
-                .trigger(availableNow=True)
-                .start()
+                ).outputMode("complete"),
+                f"{base}/cp",
+                "agg_tumbling_window_stream_roundtrip",
             )
-            if not q.awaitTermination(300):
-                q.stop()
-                raise TimeoutError(
-                    "agg_tumbling_window_stream_roundtrip: stream did not "
-                    "drain in 300s"
-                )
         return spark.read.schema(agg.schema).parquet(out_dir)
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
 
 
 @query(
@@ -270,20 +256,24 @@ def join_stream_static_enrich_roundtrip(spark, sf_dir):
     boundaries, and the append sink with checkpoint writes each batch
     exactly once, so the landed multiset equals the batch join no
     matter how chunks are scheduled. The landed rows live in
-    per-fixture parquet scratch (_format_lane_dir) and the final
+    per-fixture parquet scratch (replay.lane_dir) and the final
     aggregate is returned as a LAZY reader over them — nothing is
-    collected to the driver (r11 verdict item).
+    collected to the driver.
     """
-    import shutil
     import tempfile
 
     from pyspark.sql import Window
 
-    from .queries_cdc import _format_lane_dir
-    from .streaming.replay import read_event_stream, write_event_chunks
+    from .streaming.replay import (
+        drain,
+        lane_dir,
+        read_event_stream,
+        write_event_chunks,
+    )
 
-    base = tempfile.mkdtemp(prefix="stream_enrich_gate_")
-    try:
+    with tempfile.TemporaryDirectory(
+        prefix="stream_enrich_gate_", ignore_cleanup_errors=True
+    ) as base:
         chunks = f"{base}/chunks"
         write_event_chunks(spark, sf_dir, chunks, n_chunks=4)
         ev = load_table(spark, sf_dir, "events")
@@ -302,29 +292,18 @@ def join_stream_static_enrich_roundtrip(spark, sf_dir):
             .otherwise("low")
             .alias("tier"),
         )
-        out_dir = _format_lane_dir("enrich_stream", sf_dir)
-        shutil.rmtree(out_dir, ignore_errors=True)
-        q = (
-            enriched.writeStream.format("parquet")
-            .option("path", out_dir)
-            .option("checkpointLocation", f"{base}/cp")
-            .trigger(availableNow=True)
-            .start()
+        out_dir = lane_dir("enrich_stream", sf_dir)
+        drain(
+            enriched.writeStream.format("parquet").option("path", out_dir),
+            f"{base}/cp",
+            "join_stream_static_enrich_roundtrip",
         )
-        if not q.awaitTermination(300):
-            q.stop()
-            raise TimeoutError(
-                "join_stream_static_enrich_roundtrip: stream did not "
-                "drain in 300s"
-            )
         return (
             spark.read.schema("event_type string, tier string")
             .parquet(out_dir)
             .groupBy("event_type", "tier")
             .agg(F.count("*").alias("n"))
         )
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
 
 
 @query(
@@ -366,20 +345,21 @@ def join_stream_stream_roundtrip(spark, sf_dir):
     E2; the gate fixture is finite so completeness matters more than
     eviction here.) Landed pairs live in per-fixture parquet scratch;
     the user-keyed aggregate is returned as a LAZY reader over them —
-    nothing is collected to the driver (r11 verdict item).
+    nothing is collected to the driver.
     """
-    import shutil
     import tempfile
 
-    from .queries_cdc import _format_lane_dir
     from .streaming.replay import (
+        drain,
+        lane_dir,
         read_event_stream,
         scaled_state_partitions,
         write_event_chunks,
     )
 
-    base = tempfile.mkdtemp(prefix="stream_ssjoin_gate_")
-    try:
+    with tempfile.TemporaryDirectory(
+        prefix="stream_ssjoin_gate_", ignore_cleanup_errors=True
+    ) as base:
         chunks = f"{base}/chunks"
         write_event_chunks(spark, sf_dir, chunks, n_chunks=4)
         clicks = (
@@ -398,32 +378,21 @@ def join_stream_stream_roundtrip(spark, sf_dir):
             & (F.col("p_ts") >= F.col("c_ts"))
             & (F.col("p_ts") - F.col("c_ts") <= US_PER_DAY),
         ).select(F.col("c_user").alias("user_id"))
-        out_dir = _format_lane_dir("ssjoin_stream", sf_dir)
-        shutil.rmtree(out_dir, ignore_errors=True)
-        # scale-adaptive state partitions (r15): the two-sided join
-        # keeps a state store per shuffle partition per side; see
-        # replay.scaled_state_partitions (20 s -> 4.6 s at sf0.01)
+        out_dir = lane_dir("ssjoin_stream", sf_dir)
+        # the two-sided join keeps a state store per shuffle partition
+        # per side
         with scaled_state_partitions(spark, chunks):
-            q = (
-                joined.writeStream.format("parquet")
-                .option("path", out_dir)
-                .option("checkpointLocation", f"{base}/cp")
-                .trigger(availableNow=True)
-                .start()
+            drain(
+                joined.writeStream.format("parquet").option("path", out_dir),
+                f"{base}/cp",
+                "join_stream_stream_roundtrip",
             )
-            if not q.awaitTermination(300):
-                q.stop()
-                raise TimeoutError(
-                    "join_stream_stream_roundtrip: stream did not drain in 300s"
-                )
         return (
             spark.read.schema("user_id long")
             .parquet(out_dir)
             .groupBy("user_id")
             .agg(F.count("*").alias("n_pairs"))
         )
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
 
 
 @query(
@@ -464,18 +433,19 @@ def agg_session_window_stream_roundtrip(spark, sf_dir):
     (stream-stream), and now session merge. Memory-sink collect is
     session-count bounded — driver-gate only.
     """
-    import shutil
     import tempfile
-    import uuid
 
     from .streaming.replay import (
+        drain,
+        lane_dir,
         read_event_stream,
         scaled_state_partitions,
         write_event_chunks,
     )
 
-    base = tempfile.mkdtemp(prefix="stream_sess_gate_")
-    try:
+    with tempfile.TemporaryDirectory(
+        prefix="stream_sess_gate_", ignore_cleanup_errors=True
+    ) as base:
         chunks = f"{base}/chunks"
         write_event_chunks(spark, sf_dir, chunks, n_chunks=4)
         stream = read_event_stream(spark, chunks).withColumn(
@@ -498,33 +468,16 @@ def agg_session_window_stream_roundtrip(spark, sf_dir):
         # a log-sized result on the driver. foreachBatch in complete
         # mode receives the FULL result each batch; overwrite parquet
         # in per-fixture scratch, return a lazy reader.
-        import shutil as _shutil
-
-        from .queries_cdc import _format_lane_dir
-
-        out_dir = _format_lane_dir("session_stream", sf_dir)
-        _shutil.rmtree(out_dir, ignore_errors=True)
-        # scale-adaptive state partitions (r15) — see
-        # replay.scaled_state_partitions
+        out_dir = lane_dir("session_stream", sf_dir)
         with scaled_state_partitions(spark, chunks):
-            q = (
+            drain(
                 agg.writeStream.foreachBatch(
                     lambda b, _i: b.write.mode("overwrite").parquet(out_dir)
-                )
-                .outputMode("complete")
-                .option("checkpointLocation", f"{base}/cp")
-                .trigger(availableNow=True)
-                .start()
+                ).outputMode("complete"),
+                f"{base}/cp",
+                "agg_session_window_stream_roundtrip",
             )
-            if not q.awaitTermination(300):
-                q.stop()
-                raise TimeoutError(
-                    "agg_session_window_stream_roundtrip: stream did not "
-                    "drain in 300s"
-                )
         return spark.read.schema(agg.schema).parquet(out_dir)
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
 
 
 _LATE_DELAY_US = 3_600_000_000  # 1 h watermark delay
@@ -631,14 +584,18 @@ def events_late_data_drop_roundtrip(spark, sf_dir):
     exactly this out-of-order delivery, and prometheus-rules' lag
     alert window is the operational twin of the delay chosen here.
     """
-    import shutil
     import tempfile
 
-    from .queries_cdc import _format_lane_dir
-    from .streaming.replay import EVENT_STREAM_SCHEMA, scaled_state_partitions
+    from .streaming.replay import (
+        EVENT_STREAM_SCHEMA,
+        drain,
+        lane_dir,
+        scaled_state_partitions,
+    )
 
-    base = tempfile.mkdtemp(prefix="stream_late_gate_")
-    try:
+    with tempfile.TemporaryDirectory(
+        prefix="stream_late_gate_", ignore_cleanup_errors=True
+    ) as base:
         _write_permuted_chunks(spark, sf_dir, f"{base}/chunks")
         stream = (
             spark.readStream.schema(EVENT_STREAM_SCHEMA)
@@ -656,32 +613,20 @@ def events_late_data_drop_roundtrip(spark, sf_dir):
         # file sink supports directly — landed windows live in
         # per-fixture parquet scratch, returned as a LAZY reader with an
         # explicit schema (the dir may hold zero finalized windows at
-        # tiny fixtures); nothing is collected to the driver (r11
-        # verdict item).
-        out_dir = _format_lane_dir("late_drop_stream", sf_dir)
-        shutil.rmtree(out_dir, ignore_errors=True)
-        # scale-adaptive state partitions (r15): the watermark is
-        # computed globally per micro-batch (max event time - delay),
-        # never per partition, so the drop/emission protocol — and the
-        # oracle equality — is partition-count invariant; see
-        # replay.scaled_state_partitions
+        # tiny fixtures); nothing is collected to the driver.
+        out_dir = lane_dir("late_drop_stream", sf_dir)
+        # the watermark is global per micro-batch (max event time -
+        # delay), never per partition, so the drop/emission protocol is
+        # partition-count invariant
         with scaled_state_partitions(spark, f"{base}/chunks"):
-            q = (
+            drain(
                 agg.writeStream.outputMode("append")
                 .format("parquet")
-                .option("path", out_dir)
-                .option("checkpointLocation", f"{base}/cp")
-                .trigger(availableNow=True)
-                .start()
+                .option("path", out_dir),
+                f"{base}/cp",
+                "events_late_data_drop_roundtrip",
             )
-            if not q.awaitTermination(300):
-                q.stop()
-                raise TimeoutError(
-                    "events_late_data_drop_roundtrip: stream did not drain in 300s"
-                )
         return spark.read.schema("start_us long, n long").parquet(out_dir)
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
 
 
 @query(
@@ -709,21 +654,21 @@ def agg_sliding_window_stream_roundtrip(spark, sf_dir):
     so the native form is the right streaming shape even though the
     bucketed form is the right batch shape. Complete-mode output lands
     via foreachBatch overwrite into per-fixture parquet scratch and is
-    returned as a LAZY reader — nothing is collected to the driver
-    (r11 verdict item).
+    returned as a LAZY reader — nothing is collected to the driver.
     """
-    import shutil
     import tempfile
 
-    from .queries_cdc import _format_lane_dir
     from .streaming.replay import (
+        drain,
+        lane_dir,
         read_event_stream,
         scaled_state_partitions,
         write_event_chunks,
     )
 
-    base = tempfile.mkdtemp(prefix="stream_slide_gate_")
-    try:
+    with tempfile.TemporaryDirectory(
+        prefix="stream_slide_gate_", ignore_cleanup_errors=True
+    ) as base:
         chunks = f"{base}/chunks"
         write_event_chunks(spark, sf_dir, chunks, n_chunks=4)
         stream = read_event_stream(spark, chunks).withColumn(
@@ -742,29 +687,16 @@ def agg_sliding_window_stream_roundtrip(spark, sf_dir):
             )
             .select(window_start_us().alias("start_us"), "n", "min_val", "max_val")
         )
-        out_dir = _format_lane_dir("sliding_stream", sf_dir)
-        shutil.rmtree(out_dir, ignore_errors=True)
-        # scale-adaptive state partitions (r15) — see
-        # replay.scaled_state_partitions
+        out_dir = lane_dir("sliding_stream", sf_dir)
         with scaled_state_partitions(spark, chunks):
-            q = (
+            drain(
                 agg.writeStream.foreachBatch(
                     lambda b, _i: b.write.mode("overwrite").parquet(out_dir)
-                )
-                .outputMode("complete")
-                .option("checkpointLocation", f"{base}/cp")
-                .trigger(availableNow=True)
-                .start()
+                ).outputMode("complete"),
+                f"{base}/cp",
+                "agg_sliding_window_stream_roundtrip",
             )
-            if not q.awaitTermination(300):
-                q.stop()
-                raise TimeoutError(
-                    "agg_sliding_window_stream_roundtrip: stream did not "
-                    "drain in 300s"
-                )
         return spark.read.schema(agg.schema).parquet(out_dir)
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
 
 
 @query(
@@ -792,7 +724,7 @@ def events_stream_progress_audit(spark, sf_dir):
     returns what the listener reported — numInputRows per micro-batch
     in delivery order — and the oracle states what the metrics must
     say: exactly the four chunk sizes the fixture generator produced.
-    The HTTP scrape is LOAD-BEARING (r13 verdict item 6): after the
+    The HTTP scrape is LOAD-BEARING: after the
     drain the lane scrapes the endpoint and requires the exported
     cdc_stream_input_rows_total counter to equal the per-batch sum it
     is about to return — a broken exposition (bad escaping, wrong
@@ -802,43 +734,35 @@ def events_stream_progress_audit(spark, sf_dir):
     prevents), under-reports, or mis-orders batches, the hash breaks.
     """
     import re
-    import shutil
     import tempfile
     import time
     import urllib.request
     import uuid
 
     from .streaming.metrics import MetricsEndpoint, ProgressCapture
-    from .streaming.replay import read_event_stream, write_event_chunks
+    from .streaming.replay import drain, read_event_stream, write_event_chunks
 
-    base = tempfile.mkdtemp(prefix="stream_prog_gate_")
     cap = ProgressCapture()
     spark.streams.addListener(cap)
     try:
-        with MetricsEndpoint(cap) as ep:
+        with MetricsEndpoint(cap) as ep, tempfile.TemporaryDirectory(
+            prefix="stream_prog_gate_", ignore_cleanup_errors=True
+        ) as base:
             chunks = f"{base}/chunks"
             write_event_chunks(spark, sf_dir, chunks, n_chunks=4)
             stream = read_event_stream(spark, chunks)
             name = f"prog_{uuid.uuid4().hex[:12]}"
-            q = (
+            q = drain(
                 stream.writeStream.queryName(name)
                 .outputMode("append")
-                .format("noop")
-                .option("checkpointLocation", f"{base}/cp")
-                .trigger(availableNow=True)
-                .start()
+                .format("noop"),
+                f"{base}/cp",
+                "events_stream_progress_audit",
             )
-            if not q.awaitTermination(300):
-                q.stop()
-                raise TimeoutError(
-                    "events_stream_progress_audit: stream did not drain "
-                    "in 300s"
-                )
             qid = str(q.id)
             # max-per-batchId, the SAME aggregation render_exposition
-            # applies to the scraped counter (r14 ADVICE: a plain sum
-            # double-counts a re-emitted batchId and fails the scrape
-            # equality spuriously)
+            # applies to the scraped counter: a plain sum double-counts
+            # a re-emitted batchId and fails the scrape equality
             exp_per_batch: dict[int, int] = {}
             for p in q.recentProgress:
                 if p["numInputRows"] > 0:
@@ -889,7 +813,6 @@ def events_stream_progress_audit(spark, sf_dir):
         return spark.createDataFrame(rows, "batch_pos long, n_rows long")
     finally:
         spark.streams.removeListener(cap)
-        shutil.rmtree(base, ignore_errors=True)
 
 
 @query(
@@ -917,24 +840,24 @@ def udf_stateful_processor_roundtrip(spark, sf_dir):
     in arbitrary chunk order, so the state itself carries the last
     event's (ts_us, event_id) watermark and last_val only advances
     past it — the same per-key total-order discipline every CDC
-    kernel uses, made chunk-order-proof (r7 ADVICE medium).
+    kernel uses, made chunk-order-proof.
 
     Completes the gated streaming surface set: built-in stateful ops
     (windows, dedup, joins), sink-side state (upsert/SCD2), and now
     USER state via the Arrow-batched API. Emissions land in
     per-fixture parquet scratch; the final-per-key selection is
     returned as a LAZY reader over them — nothing is collected to the
-    driver (r11 verdict item).
+    driver.
     """
-    import shutil
     import tempfile
 
     import pandas as pd
 
     from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-    from .queries_cdc import _format_lane_dir
     from .streaming.replay import (
+        drain,
+        lane_dir,
         read_event_stream,
         scaled_state_partitions,
         write_event_chunks,
@@ -946,11 +869,9 @@ def udf_stateful_processor_roundtrip(spark, sf_dir):
         # row" is not the last event. The state carries the current
         # last event's (ts_us, event_id) and last_val only advances
         # when a chunk's max-order row exceeds that watermark — chunk
-        # arrival order can no longer leak into the answer. NOTE (r8):
-        # this widened stateStructType from (n, mx, last) to
-        # (n, mx, last, lts, leid) — a checkpoint written under the
-        # old 3-field state schema cannot be resumed; start from a
-        # fresh checkpoint dir (this lane always does: tempfile base).
+        # arrival order can no longer leak into the answer. A
+        # checkpoint written under another stateStructType cannot be
+        # resumed; this lane always starts from a fresh one.
         (uid,) = key
         if state.exists:
             n, mx, last, lts, leid = state.get
@@ -972,8 +893,9 @@ def udf_stateful_processor_roundtrip(spark, sf_dir):
             {"user_id": [uid], "n_events": [n], "max_val": [mx], "last_val": [last]}
         )
 
-    base = tempfile.mkdtemp(prefix="stream_state_udf_gate_")
-    try:
+    with tempfile.TemporaryDirectory(
+        prefix="stream_state_udf_gate_", ignore_cleanup_errors=True
+    ) as base:
         chunks = f"{base}/chunks"
         write_event_chunks(spark, sf_dir, chunks, n_chunks=4)
         stream = read_event_stream(spark, chunks)
@@ -986,34 +908,19 @@ def udf_stateful_processor_roundtrip(spark, sf_dir):
             outputMode="append",
             timeoutConf=GroupStateTimeout.NoTimeout,
         )
-        out_dir = _format_lane_dir("stateful_udf_stream", sf_dir)
-        shutil.rmtree(out_dir, ignore_errors=True)
-        # scale-adaptive state partitions (r15): which micro-batch a
-        # key appears in is chunk-determined, never partition-
-        # determined, so emissions — and the max-n_events final
-        # selection — are partition-count invariant; mb_per_partition=0.25
-        # because the per-key USER PYTHON dominates (see
-        # replay.scaled_state_partitions — the sf1 sweep caught the
-        # 32 MB JVM-density rule starving this lane 24 -> 59.5 s, and
-        # the r16 same-box rule-vs-default A/B showed 0.5 STILL lost
-        # ~30 % at sf1: 18.3/20.1 s at 18 parts vs 14.6/15.5 s at the
-        # default 32 — so the density now reaches the session-default
-        # ceiling by ~8 MB of chunks while the tiny-gate floor keeps
-        # the measured 17.3 -> 4.0 s win)
+        out_dir = lane_dir("stateful_udf_stream", sf_dir)
+        # which micro-batch a key appears in is chunk-determined, never
+        # partition-determined, so emissions — and the max-n_events
+        # final selection — are partition-count invariant; the per-key
+        # user Python sets the 0.25 MB density
         with scaled_state_partitions(spark, chunks, mb_per_partition=0.25):
-            q = (
+            drain(
                 emitted.writeStream.outputMode("append")
                 .format("parquet")
-                .option("path", out_dir)
-                .option("checkpointLocation", f"{base}/cp")
-                .trigger(availableNow=True)
-                .start()
+                .option("path", out_dir),
+                f"{base}/cp",
+                "udf_stateful_processor_roundtrip",
             )
-            if not q.awaitTermination(300):
-                q.stop()
-                raise TimeoutError(
-                    "udf_stateful_processor_roundtrip: stream did not drain in 300s"
-                )
         out = spark.read.schema(
             "user_id long, n_events long, max_val double, last_val double"
         ).parquet(out_dir)
@@ -1035,8 +942,6 @@ def udf_stateful_processor_roundtrip(spark, sf_dir):
                 ),
             )
         )
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
 
 
 def _tws_available() -> bool:
@@ -1085,7 +990,6 @@ def udf_stateful_tws_roundtrip(spark, sf_dir):
     the shape that spills to disk instead of executor heap at 100 TB
     key cardinalities, which is the API's reason to exist.
     """
-    import shutil
     import tempfile
 
     import pandas as pd
@@ -1095,8 +999,13 @@ def udf_stateful_tws_roundtrip(spark, sf_dir):
         StatefulProcessorHandle,
     )
 
-    from .queries_cdc import _format_lane_dir
-    from .streaming.replay import read_event_stream, write_event_chunks
+    from .streaming.replay import (
+        drain,
+        lane_dir,
+        read_event_stream,
+        scaled_state_partitions,
+        write_event_chunks,
+    )
 
     class Track(StatefulProcessor):
         def init(self, handle: StatefulProcessorHandle) -> None:
@@ -1131,7 +1040,6 @@ def udf_stateful_tws_roundtrip(spark, sf_dir):
         def close(self) -> None:
             pass
 
-    base = tempfile.mkdtemp(prefix="stream_tws_gate_")
     provider_key = "spark.sql.streaming.stateStore.providerClass"
     rocks = (
         "org.apache.spark.sql.execution.streaming.state."
@@ -1139,66 +1047,57 @@ def udf_stateful_tws_roundtrip(spark, sf_dir):
     )
     old_provider = spark.conf.get(provider_key, None)
     try:
-        chunks = f"{base}/chunks"
-        write_event_chunks(spark, sf_dir, chunks, n_chunks=4)
-        stream = read_event_stream(spark, chunks)
-        spark.conf.set(provider_key, rocks)
-        emitted = stream.groupBy("user_id").transformWithStateInPandas(
-            statefulProcessor=Track(),
-            outputStructType="user_id long, n_events long, max_val double, "
-            "last_val double",
-            outputMode="Append",
-            timeMode="None",
-        )
-        out_dir = _format_lane_dir("tws_stream", sf_dir)
-        shutil.rmtree(out_dir, ignore_errors=True)
-        # scale-adaptive state partitions (r15) — see
-        # replay.scaled_state_partitions; emissions are partition-count
-        # invariant (same argument as the classic stateful lane);
-        # mb_per_partition=0.25: per-key USER PYTHON dominates (r16
-        # rule-vs-default A/B — see udf_stateful_processor_roundtrip)
-        from .streaming.replay import scaled_state_partitions
-
-        with scaled_state_partitions(spark, chunks, mb_per_partition=0.25):
-            q = (
-                emitted.writeStream.outputMode("append")
-                .format("parquet")
-                .option("path", out_dir)
-                .option("checkpointLocation", f"{base}/cp")
-                .trigger(availableNow=True)
-                .start()
+        with tempfile.TemporaryDirectory(
+            prefix="stream_tws_gate_", ignore_cleanup_errors=True
+        ) as base:
+            chunks = f"{base}/chunks"
+            write_event_chunks(spark, sf_dir, chunks, n_chunks=4)
+            stream = read_event_stream(spark, chunks)
+            spark.conf.set(provider_key, rocks)
+            emitted = stream.groupBy("user_id").transformWithStateInPandas(
+                statefulProcessor=Track(),
+                outputStructType="user_id long, n_events long, max_val double, "
+                "last_val double",
+                outputMode="Append",
+                timeMode="None",
             )
-            if not q.awaitTermination(300):
-                q.stop()
-                raise TimeoutError(
-                    "udf_stateful_tws_roundtrip: stream did not drain in 300s"
+            out_dir = lane_dir("tws_stream", sf_dir)
+            # emissions are partition-count invariant (same argument as
+            # the classic stateful lane); per-key user Python sets the
+            # 0.25 MB density
+            with scaled_state_partitions(spark, chunks, mb_per_partition=0.25):
+                drain(
+                    emitted.writeStream.outputMode("append")
+                    .format("parquet")
+                    .option("path", out_dir),
+                    f"{base}/cp",
+                    "udf_stateful_tws_roundtrip",
                 )
-        out = spark.read.schema(
-            "user_id long, n_events long, max_val double, last_val double"
-        ).parquet(out_dir)
-        from pyspark.sql import Window
+            out = spark.read.schema(
+                "user_id long, n_events long, max_val double, last_val double"
+            ).parquet(out_dir)
+            from pyspark.sql import Window
 
-        w = Window.partitionBy("user_id").orderBy(F.desc("n_events"))
-        return (
-            out.withColumn("rn", F.row_number().over(w))
-            .where(F.col("rn") == 1)
-            .select(
-                "user_id",
-                "n_events",
-                (F.floor(F.col("max_val") * 10000.0 + F.lit(0.5)) / 10000.0).alias(
-                    "max_val"
-                ),
-                (F.floor(F.col("last_val") * 10000.0 + F.lit(0.5)) / 10000.0).alias(
-                    "last_val"
-                ),
+            w = Window.partitionBy("user_id").orderBy(F.desc("n_events"))
+            return (
+                out.withColumn("rn", F.row_number().over(w))
+                .where(F.col("rn") == 1)
+                .select(
+                    "user_id",
+                    "n_events",
+                    (
+                        F.floor(F.col("max_val") * 10000.0 + F.lit(0.5)) / 10000.0
+                    ).alias("max_val"),
+                    (
+                        F.floor(F.col("last_val") * 10000.0 + F.lit(0.5)) / 10000.0
+                    ).alias("last_val"),
+                )
             )
-        )
     finally:
         if old_provider is None:
             spark.conf.unset(provider_key)
         else:
             spark.conf.set(provider_key, old_provider)
-        shutil.rmtree(base, ignore_errors=True)
 
 
 if _tws_available():  # pragma: no cover - environment-gated
@@ -1215,7 +1114,7 @@ if _tws_available():  # pragma: no cover - environment-gated
     # (last event + gap) timeout — exactly the EventTimeTimeout
     # firing rule under ts-ordered chunk delivery with a trailing
     # no-data micro-batch. Both sides of that comparison are at MS
-    # granularity, mirroring the stream exactly (r10 review): the
+    # granularity, mirroring the stream exactly: the
     # lane sets timeout = (last_us+gap)//1000 + 1 ms and Spark's
     # watermark is floor(max_us/1000) - delay_ms, fired on strict <.
     # A µs-strict oracle would emit a final session whose last+gap
@@ -1257,8 +1156,8 @@ def udf_session_timeout_roundtrip(spark, sf_dir):
     stateful API offers — a new event past the 30 min gap splits
     in-processor, and a user who never returns has their open session
     flushed by the EVENT-TIME TIMEOUT when the watermark (driven by
-    OTHER users' events) passes last_event + gap. Until r10 every
-    stateful lane used GroupStateTimeout.NoTimeout; this lane gates
+    OTHER users' events) passes last_event + gap. Every other
+    stateful lane uses GroupStateTimeout.NoTimeout; this lane gates
     the timeout machinery itself — registration, hasTimedOut
     delivery, and the trailing no-data micro-batch that fires
     timeouts after the last file (noDataMicroBatches).
@@ -1274,15 +1173,19 @@ def udf_session_timeout_roundtrip(spark, sf_dir):
     contract is gated by the sink lanes; timeout semantics compose
     with dedup, not with raw replay.
     """
-    import shutil
     import tempfile
 
     import pandas as pd
 
     from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-    from .queries_cdc import _format_lane_dir
-    from .streaming.replay import read_event_stream, write_event_chunks
+    from .streaming.replay import (
+        drain,
+        lane_dir,
+        read_event_stream,
+        scaled_state_partitions,
+        write_event_chunks,
+    )
 
     gap_us = GAP_US
     delay = "1 minute"
@@ -1325,8 +1228,9 @@ def udf_session_timeout_roundtrip(spark, sf_dir):
                 }
             )
 
-    base = tempfile.mkdtemp(prefix="stream_session_timeout_gate_")
-    try:
+    with tempfile.TemporaryDirectory(
+        prefix="stream_session_timeout_gate_", ignore_cleanup_errors=True
+    ) as base:
         chunks = f"{base}/chunks"
         write_event_chunks(spark, sf_dir, chunks, n_chunks=4)
         stream = (
@@ -1343,33 +1247,20 @@ def udf_session_timeout_roundtrip(spark, sf_dir):
         )
         # emitted sessions land in per-fixture parquet scratch and are
         # returned as a LAZY reader — nothing is collected to the
-        # driver (r11 verdict item).
-        out_dir = _format_lane_dir("session_timeout_stream", sf_dir)
-        shutil.rmtree(out_dir, ignore_errors=True)
-        # scale-adaptive state partitions (r15): the watermark driving
-        # EventTimeTimeout is global per micro-batch, so timeout firing
-        # — and the emitted session set — is partition-count invariant;
-        # mb_per_partition=0.25: per-key USER PYTHON dominates (r16
-        # rule-vs-default A/B: 29.5/30.5 s at 18 parts vs 21.6/21.5 s
-        # at the default 32 at sf1; see replay.scaled_state_partitions)
-        from .streaming.replay import scaled_state_partitions
-
+        # driver.
+        out_dir = lane_dir("session_timeout_stream", sf_dir)
+        # the watermark driving EventTimeTimeout is global per
+        # micro-batch, so timeout firing — and the emitted session set —
+        # is partition-count invariant; per-key user Python sets the
+        # 0.25 MB density
         with scaled_state_partitions(spark, chunks, mb_per_partition=0.25):
-            q = (
+            drain(
                 emitted.writeStream.outputMode("append")
                 .format("parquet")
-                .option("path", out_dir)
-                .option("checkpointLocation", f"{base}/cp")
-                .trigger(availableNow=True)
-                .start()
+                .option("path", out_dir),
+                f"{base}/cp",
+                "udf_session_timeout_roundtrip",
             )
-            if not q.awaitTermination(300):
-                q.stop()
-                raise TimeoutError(
-                    "udf_session_timeout_roundtrip: stream did not drain in 300s"
-                )
         return spark.read.schema(
             "user_id long, n long, start_us long, last_us long"
         ).parquet(out_dir)
-    finally:
-        shutil.rmtree(base, ignore_errors=True)

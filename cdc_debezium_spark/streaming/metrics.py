@@ -2,17 +2,14 @@
 
 Spark-native analog of the reference's Prometheus alerting over
 consumer lag and connector health (prometheus-rules.yaml:12-37):
-`StreamingQueryListener` is the scrape, `df.observe` the inline
-counters, and `backlog_exceeded` the `kafka_consumer_lag_sum > 1000`
-rule.
+`StreamingQueryListener` is the scrape and `backlog_exceeded` the
+`kafka_consumer_lag_sum > 1000` rule.
 """
 
 from __future__ import annotations
 
 from typing import Any
 
-import pyspark.sql.functions as F
-from pyspark.sql import DataFrame
 from pyspark.sql.streaming import StreamingQueryListener
 
 
@@ -59,15 +56,6 @@ class ProgressCapture(StreamingQueryListener):
                 key = (str(p["id"]), p["batchId"])
                 latest[key] = max(latest.get(key, 0), p["numInputRows"])
         return sum(latest.values())
-
-
-def with_observed_counts(df: DataFrame, name: str = "metrics") -> DataFrame:
-    """Inline counters on any (batch or streaming) DataFrame."""
-    return df.observe(
-        name,
-        F.count(F.lit(1)).alias("rows"),
-        F.sum(F.when(F.col("op") == "d", 1).otherwise(0)).alias("deletes"),
-    )
 
 
 def backlog_exceeded(progress: list[dict], threshold: int = 1000) -> bool:

@@ -6,14 +6,21 @@ source-agnostic). Events are split into ts-ordered chunk files and
 streamed with ``maxFilesPerTrigger=1`` so each chunk becomes one
 micro-batch — the replay analog of consuming a topic from offset 0
 (reference backup/DR replay, setup-infrastructure.sh:386-441).
+``start`` and ``drain`` run every replay as an availableNow query over
+a checkpoint.
 """
 
 from __future__ import annotations
 
+import hashlib
 import os
+import shutil
+import time
 from contextlib import contextmanager as _contextmanager
 
+import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.streaming import DataStreamWriter, StreamingQuery
 from pyspark.sql.types import (
     DoubleType,
     LongType,
@@ -40,62 +47,37 @@ EVENT_STREAM_SCHEMA = StructType(
 def scaled_state_partitions(
     spark: SparkSession, src_dir: str, mb_per_partition: float = 32
 ):
-    """Scale-adaptive shuffle-partition count for STATEFUL streaming
-    queries (r15, guide §2.2 "make partitioning scale-adaptive").
+    """Size ``spark.sql.shuffle.partitions`` for a stateful streaming
+    query from its source bytes, for the duration of the ``with`` block.
 
-    AQE never touches stateful-streaming shuffles — the state-store
-    partition count is pinned from ``spark.sql.shuffle.partitions`` at
-    the first micro-batch and written into the checkpoint — so the
-    batch side's coalescing has no streaming analog and every stateful
-    gate lane paid the session default (one state-store instance +
-    commit per partition PER MICRO-BATCH per stateful operator)
-    regardless of input size. Measured at sf0.01: the stream-stream
-    join is 20 s at 32 partitions vs 4.6 s at 4 — pure state/task
-    overhead, zero result change (partition count never affects WHAT a
-    keyed stateful operator computes, only where keys live).
+    AQE does not coalesce stateful-streaming shuffles: the state store
+    keeps one instance per shuffle partition, and every instance is
+    loaded and committed once per micro-batch, so a small input pays
+    the session default in overhead alone. The partition count never
+    changes what a keyed stateful operator computes, only where keys
+    live.
 
-    The rule mirrors AQE's sizing: one partition per
-    ``mb_per_partition`` MB of source chunk bytes (default 32 — the
-    JVM-state density), floor 4, ceiling the session default (a
-    cluster's operator-sized setting still applies at scale — this
-    helper only ever SHRINKS below it, exactly like coalescing). The
-    conf is set for the duration of the ``with`` block (stream start
-    pins it) and restored after; CDC_STREAM_STATE_PARTS overrides for
-    rehearsals. Use ONLY around streams with a fresh checkpoint —
-    resuming an old checkpoint keeps its recorded count anyway.
-
-    ``mb_per_partition``: partition DENSITY must match the operator's
-    per-row cost. Built-in JVM stateful operators (windows, dedup,
-    joins) are commit-overhead-bound — 32 MB/partition won at BOTH
-    sf0.01 and sf1 in same-window A/Bs. applyInPandasWithState /
-    transformWithState run USER PYTHON per key: per-row cost is
-    1-2 orders denser (and snappy parquet bytes UNDER-represent row
-    count ~8 B/row on the event fixture), so the r15 sf1 sweep caught
-    the 32 MB rule starving them (udf_stateful 24 -> 59.5 s, the
-    timeout lane's 90 s cap blown; 2 MB still starved: 6 partitions =
-    52 s vs 24 s at the default). Those lanes pass
-    mb_per_partition=0.5 — the floor fires only on truly tiny gate
-    fixtures (<= ~2 MB of chunks, where 4 partitions measured
-    17.3 -> 4.0 s) and ~sf1 scale is back at the session default.
+    Rule: one partition per ``mb_per_partition`` MB of files under
+    ``src_dir``, at least 4, and never more than the session default:
+    the helper only ever shrinks the count. The default 32 MB suits the
+    JVM operators (windows, dedup, joins); the Python-state lanes
+    (applyInPandasWithState, transformWithStateInPandas) run user code
+    per key and pass 0.25. The count is read when the first micro-batch
+    plans, after ``start()`` returns, so the block must enclose the
+    whole drain. Use only with a fresh checkpoint: a resumed one keeps
+    the count it recorded.
     """
     default = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    env = os.environ.get("CDC_STREAM_STATE_PARTS")
-    if env:
-        parts = int(env)
-    else:
-        n_bytes = 0
-        for root, _dirs, files in os.walk(src_dir):
-            for f in files:
-                try:
-                    n_bytes += os.path.getsize(os.path.join(root, f))
-                except OSError:
-                    pass
-        per = max(1, int(mb_per_partition * (1 << 20)))
-        # min AFTER max: with a session default below the floor of 4
-        # the old max(4, min(default, ...)) would RAISE the partition
-        # count above the default, violating the only-ever-shrinks
-        # contract (r15 ADVICE).
-        parts = min(default, max(4, -(-n_bytes // per)))
+    n_bytes = 0
+    for root, _dirs, files in os.walk(src_dir):
+        for f in files:
+            try:
+                n_bytes += os.path.getsize(os.path.join(root, f))
+            except OSError:
+                pass
+    per = max(1, int(mb_per_partition * (1 << 20)))
+    # min last, so a session default below the floor is never raised
+    parts = min(default, max(4, -(-n_bytes // per)))
     if parts == default:
         yield
         return
@@ -104,6 +86,41 @@ def scaled_state_partitions(
         yield
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", str(default))
+
+
+def start(writer: DataStreamWriter, checkpoint: str) -> StreamingQuery:
+    """Start ``writer`` as an availableNow query: it processes what the
+    source holds at start, then stops. ``checkpoint`` gives
+    restart-at-offset recovery (the offset-flush analog,
+    prod-resources.yaml:20)."""
+    return (
+        writer.option("checkpointLocation", checkpoint)
+        .trigger(availableNow=True)
+        .start()
+    )
+
+
+def drain(
+    writer: DataStreamWriter, checkpoint: str, name: str, timeout_s: int = 300
+) -> StreamingQuery:
+    """``start`` the query and wait until it has drained. A failed query
+    raises its ``StreamingQueryException``; one still running after
+    ``timeout_s`` is stopped and raises ``TimeoutError`` naming it."""
+    q = start(writer, checkpoint)
+    if not q.awaitTermination(timeout_s):
+        q.stop()
+        raise TimeoutError(f"{name}: stream did not drain in {timeout_s}s")
+    return q
+
+
+def lane_dir(lane: str, sf_dir: str) -> str:
+    """Empty per-(lane, fixture) scratch dir. The path is deterministic,
+    so repeated runs reuse one dir instead of growing state."""
+    h = hashlib.md5(sf_dir.encode()).hexdigest()[:12]
+    d = os.path.join("/tmp", "cdc_debezium_gate", lane, h)
+    shutil.rmtree(d, ignore_errors=True)
+    os.makedirs(d, exist_ok=True)
+    return d
 
 
 def write_event_chunks(
@@ -129,8 +146,6 @@ def write_event_chunks(
     per-partition offset ordering a keyed Kafka topic gives every
     consumer.
     """
-    import time
-
     import pyarrow as pa
     import pyarrow.parquet as pq
 
@@ -153,8 +168,6 @@ def write_event_chunks(
         # whose oracles pin exact ceil(n/chunks) splits stay on the
         # exact driver path below the cutoff (driver fixtures are
         # <= sf0.1, orders of magnitude under it).
-        import shutil as _shutil
-
         staging = os.path.join(out_dir, "_staging")
         (
             src.repartitionByRange(n_chunks, "ts_us", "event_id")
@@ -176,11 +189,11 @@ def write_event_chunks(
                 continue
             for r in range(repeat):
                 path = f"{out_dir}/chunk_{i:04d}_{r}.parquet"
-                _shutil.copyfile(src_path, path)
+                shutil.copyfile(src_path, path)
                 os.utime(path, (t0 + seq, t0 + seq))
                 seq += 1
                 total += rows
-        _shutil.rmtree(staging, ignore_errors=True)
+        shutil.rmtree(staging, ignore_errors=True)
         return total
 
     ev = src.orderBy("ts_us", "event_id").toPandas()
@@ -199,6 +212,38 @@ def write_event_chunks(
             seq += 1
             total += len(chunk)
     return total
+
+
+def write_redelivered_chunks(
+    df: DataFrame,
+    key: str,
+    out_dir: str,
+    n_chunks: int = 3,
+    options: dict[str, object] | None = None,
+) -> None:
+    """Stage ``df`` as ``n_chunks`` chunk dirs, rows split on
+    ``key % n_chunks``, each delivered twice: written once through
+    Spark as one file (never collected to the driver), then copied
+    byte for byte for the redelivery. Files get strictly increasing
+    mtimes in delivery order, the ``write_event_chunks`` guarantee.
+    ``options`` go to the parquet writer."""
+    t0 = time.time() - 10
+    for i in range(n_chunks):
+        first = f"{out_dir}/chunk_{i:04d}_0"
+        (
+            df.where(F.col(key) % n_chunks == i)
+            .coalesce(1)
+            .write.mode("overwrite")
+            .options(**(options or {}))
+            .parquet(first)
+        )
+        for r in range(2):
+            path = f"{out_dir}/chunk_{i:04d}_{r}"
+            if r:
+                shutil.copytree(first, path)
+            stamp = t0 + 2 * i + r
+            for f in os.listdir(path):
+                os.utime(os.path.join(path, f), (stamp, stamp))
 
 
 def read_event_stream(spark: SparkSession, chunk_dir: str) -> DataFrame:

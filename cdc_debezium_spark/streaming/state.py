@@ -35,25 +35,6 @@ from ..operators.cdc import latest_state
 from .txlog import TxTable
 
 
-def run_upsert_stream(
-    stream_df: DataFrame,
-    sink: DeltaUpsertSink | Scd2DeltaHistorySink,
-    checkpoint_dir: str,
-):
-    """Start an availableNow upsert stream; caller awaits termination.
-
-    The checkpoint gives restart-at-offset recovery (the offset-flush
-    analog, prod-resources.yaml:20); the sink's idempotence upgrades
-    at-least-once re-delivery to effectively-once results.
-    """
-    return (
-        stream_df.writeStream.foreachBatch(sink)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-
-
 def dedup_within_watermark(
     df: DataFrame,
     keys: Sequence[str],

@@ -29,3 +29,22 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir():
     return SF_DIR
+
+
+@pytest.fixture(autouse=True)
+def no_stream_outlives_its_test():
+    """Fail a test that leaves a streaming query running, after stopping
+    it so it cannot leak into later tests. Looks only at a session that
+    already exists, so Spark-free tests start no JVM."""
+    yield
+    from pyspark.sql import SparkSession
+
+    session = SparkSession.getActiveSession()
+    if session is None:
+        return
+    left = session.streams.active
+    for q in left:
+        q.stop()
+    if left:
+        names = [q.name or str(q.id) for q in left]
+        pytest.fail(f"test left {len(left)} streaming queries running: {names}")

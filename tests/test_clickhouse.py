@@ -17,7 +17,11 @@ from cdc_debezium_spark.sinks_clickhouse import (
     ch_execute,
     ch_select_final,
 )
-from cdc_debezium_spark.streaming.replay import read_event_stream, write_event_chunks
+from cdc_debezium_spark.streaming.replay import (
+    drain,
+    read_event_stream,
+    write_event_chunks,
+)
 
 DDL = (
     "CREATE TABLE t (pk Int64, ver Int64, v String, is_deleted UInt8) "
@@ -116,13 +120,7 @@ def test_ch_sink_stream_parity_any_order(spark, sf_dir, tmp_path):
             "val",
         )
         sink = ClickHouseInsertSink(srv.url, "cdc_state", version_col="ver")
-        q = (
-            stream.writeStream.foreachBatch(sink)
-            .option("checkpointLocation", str(tmp_path / "cp_ch"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(120)
+        drain(stream.writeStream.foreachBatch(sink), str(tmp_path / "cp_ch"), "clickhouse")
 
         got = sorted(
             (r["pk"], r["ts_us"], r["val"])

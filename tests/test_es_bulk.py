@@ -15,7 +15,11 @@ import pytest
 
 from cdc_debezium_spark.operators import cdc
 from cdc_debezium_spark.sinks_es import EsBulkServer, EsBulkSink, post_bulk, search_all
-from cdc_debezium_spark.streaming.replay import read_event_stream, write_event_chunks
+from cdc_debezium_spark.streaming.replay import (
+    drain,
+    read_event_stream,
+    write_event_chunks,
+)
 
 
 def _state(url, index):
@@ -115,13 +119,7 @@ def test_es_sink_stream_parity_any_order(spark, sf_dir, tmp_path):
             "val",
         )
         sink = EsBulkSink(srv.url, "cdc_state", key_col="pk", version_col="ver")
-        q = (
-            stream.writeStream.foreachBatch(sink)
-            .option("checkpointLocation", str(tmp_path / "cp_es"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(120)
+        drain(stream.writeStream.foreachBatch(sink), str(tmp_path / "cp_es"), "es bulk")
 
         got = sorted(
             (int(h["_id"]), h["_source"]["ts_us"], h["_source"]["val"])

@@ -31,7 +31,11 @@ from cdc_debezium_spark.sinks_redis import (
     RedisRespServer,
     RespClient,
 )
-from cdc_debezium_spark.streaming.replay import read_event_stream, write_event_chunks
+from cdc_debezium_spark.streaming.replay import (
+    drain,
+    read_event_stream,
+    write_event_chunks,
+)
 from cdc_debezium_spark.streaming.state import DeltaUpsertSink
 
 
@@ -68,13 +72,7 @@ def test_one_stream_feeds_all_four_sinks(spark, sf_dir, tmp_path):
             tx_sink(batch, batch_id)
 
         stream = cdc.to_cdc(read_event_stream(spark, chunk_dir))
-        q = (
-            stream.writeStream.foreachBatch(fanout)
-            .option("checkpointLocation", str(tmp_path / "cp_fan"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(180)
+        drain(stream.writeStream.foreachBatch(fanout), str(tmp_path / "cp_fan"), "fanout")
 
         want = sorted(
             (r["pk"], r["ts_us"], r["val"])

@@ -12,14 +12,11 @@ import pytest
 from cdc_debezium_spark.operators import cdc
 from cdc_debezium_spark.streaming.metrics import ProgressCapture, backlog_exceeded
 from cdc_debezium_spark.streaming.replay import (
+    drain,
     read_event_stream,
     write_event_chunks,
 )
-from cdc_debezium_spark.streaming.state import (
-    DeltaUpsertSink,
-    dedup_within_watermark,
-    run_upsert_stream,
-)
+from cdc_debezium_spark.streaming.state import DeltaUpsertSink, dedup_within_watermark
 
 
 def _rows(df, cols):
@@ -34,8 +31,7 @@ def test_streamed_state_equals_batch_state(spark, sf_dir, tmp_path):
 
     stream = cdc.to_cdc(read_event_stream(spark, chunk_dir))
     sink = DeltaUpsertSink(str(tmp_path / "state"), keys=["pk"], order=["ts_us", "ord2"])
-    q = run_upsert_stream(stream, sink, str(tmp_path / "cp"))
-    q.awaitTermination(120)
+    drain(stream.writeStream.foreachBatch(sink), str(tmp_path / "cp"), "parity")
 
     got = _rows(sink.read_live(spark), ["pk", "ts_us", "val"])
     want = _rows(cdc.latest_state(cdc.cdc_events(spark, sf_dir)), ["pk", "ts_us", "val"])
@@ -50,8 +46,7 @@ def test_streamed_state_idempotent_on_redelivery(spark, sf_dir, tmp_path):
 
     stream = cdc.to_cdc(read_event_stream(spark, chunk_dir))
     sink = DeltaUpsertSink(str(tmp_path / "state2"))
-    q = run_upsert_stream(stream, sink, str(tmp_path / "cp2"))
-    q.awaitTermination(120)
+    drain(stream.writeStream.foreachBatch(sink), str(tmp_path / "cp2"), "redelivery")
 
     got = _rows(sink.read_live(spark), ["pk", "ts_us", "val"])
     want = _rows(cdc.latest_state(cdc.cdc_events(spark, sf_dir)), ["pk", "ts_us", "val"])
@@ -78,16 +73,19 @@ def test_restart_from_checkpoint_resumes_without_dupes(spark, sf_dir, tmp_path):
     cp = str(tmp_path / "cp3")
 
     # phase 1: first half of the log, drain fully, query stops
+    def upsert(sink):
+        return cdc.to_cdc(read_event_stream(spark, chunk_dir)).writeStream.foreachBatch(
+            sink
+        )
+
     publish(files[:3])
     sink = DeltaUpsertSink(state_path)
-    q = run_upsert_stream(cdc.to_cdc(read_event_stream(spark, chunk_dir)), sink, cp)
-    q.awaitTermination(120)
+    drain(upsert(sink), cp, "resume phase 1")
 
     # phase 2: rest of the log arrives; restart on the SAME checkpoint
     publish(files[3:])
     sink2 = DeltaUpsertSink(state_path)  # state dir survives the restart
-    q2 = run_upsert_stream(cdc.to_cdc(read_event_stream(spark, chunk_dir)), sink2, cp)
-    q2.awaitTermination(120)
+    drain(upsert(sink2), cp, "resume phase 2")
 
     got = _rows(sink2.read_live(spark), ["pk", "ts_us", "val"])
     want = _rows(cdc.latest_state(cdc.cdc_events(spark, sf_dir)), ["pk", "ts_us", "val"])
@@ -103,14 +101,13 @@ def test_stream_dedup_within_watermark(spark, sf_dir, tmp_path):
         "ts", F.timestamp_micros(F.col("ts_us"))
     )
     deduped = dedup_within_watermark(raw, ["event_id"], "ts", "60 days")
-    q = (
+    drain(
         deduped.writeStream.format("memory")
         .queryName("dedup_sink")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
+        .outputMode("append"),
+        str(tmp_path / "cp"),
+        "dedup_sink",
     )
-    q.awaitTermination(120)
     got = spark.sql("SELECT count(*) AS n FROM dedup_sink").collect()[0]["n"]
     distinct_events = spark.read.parquet(f"{sf_dir}/events.parquet").count()
     assert n_written == 2 * distinct_events
@@ -130,14 +127,13 @@ def test_streaming_tumbling_window_matches_batch(spark, sf_dir, tmp_path):
         .groupBy(F.window("ts", "1 day"), F.col("event_type"))
         .agg(F.count("*").alias("n"))
     )
-    q = (
+    drain(
         agg.writeStream.format("memory")
         .queryName("tumbling_sink")
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
+        .outputMode("complete"),
+        str(tmp_path / "cp"),
+        "tumbling_sink",
     )
-    q.awaitTermination(120)
     got = sorted(
         (r["window"].start.isoformat(), r["event_type"], r["n"])
         for r in spark.sql("SELECT * FROM tumbling_sink").collect()
@@ -167,9 +163,10 @@ def test_progress_listener_sees_all_rows(spark, sf_dir, tmp_path):
     try:
         stream = cdc.to_cdc(read_event_stream(spark, chunk_dir))
         sink = DeltaUpsertSink(str(tmp_path / "state6"))
-        q = run_upsert_stream(stream, sink, str(tmp_path / "cp6"))
+        q = drain(
+            stream.writeStream.foreachBatch(sink), str(tmp_path / "cp6"), "listener"
+        )
         qid = str(q.id)
-        q.awaitTermination(120)
         import time
 
         def mine():
@@ -216,9 +213,10 @@ def test_metrics_endpoint_scrapes_real_stream(spark, sf_dir, tmp_path):
 
             stream = cdc.to_cdc(read_event_stream(spark, chunk_dir))
             sink = DeltaUpsertSink(str(tmp_path / "state_m"))
-            q = run_upsert_stream(stream, sink, str(tmp_path / "cp_m"))
+            q = drain(
+                stream.writeStream.foreachBatch(sink), str(tmp_path / "cp_m"), "scrape"
+            )
             qid = str(q.id)
-            q.awaitTermination(120)
             deadline = time.time() + 30
             while cap.total_input_rows(qid) < total and time.time() < deadline:
                 time.sleep(0.5)
@@ -339,8 +337,11 @@ def test_parity_invariant_to_chunking(spark, sf_dir, tmp_path, n_chunks):
     write_event_chunks(spark, sf_dir, chunk_dir, n_chunks=n_chunks)
     stream = cdc.to_cdc(read_event_stream(spark, chunk_dir))
     sink = DeltaUpsertSink(str(tmp_path / f"state_p{n_chunks}"))
-    q = run_upsert_stream(stream, sink, str(tmp_path / f"cp_p{n_chunks}"))
-    q.awaitTermination(120)
+    drain(
+        stream.writeStream.foreachBatch(sink),
+        str(tmp_path / f"cp_p{n_chunks}"),
+        f"chunking {n_chunks}",
+    )
     got = _rows(sink.read_live(spark), ["pk", "ts_us", "val"])
     want = _rows(cdc.latest_state(cdc.cdc_events(spark, sf_dir)), ["pk", "ts_us", "val"])
     assert got == want
@@ -363,14 +364,11 @@ def test_stateful_processor_running_totals(spark, sf_dir, tmp_path):
             (batch_id, r.user_id, r.n_events, r.sum_val) for r in batch.collect()
         )
 
-    q = (
-        out.writeStream.outputMode("update")
-        .foreachBatch(sink)
-        .option("checkpointLocation", str(tmp_path / "cp"))
-        .trigger(availableNow=True)
-        .start()
+    drain(
+        out.writeStream.outputMode("update").foreachBatch(sink),
+        str(tmp_path / "cp"),
+        "running totals",
     )
-    q.awaitTermination(180)
 
     # last emission per key == final running state
     final = {}
@@ -419,14 +417,13 @@ def test_stream_stream_join_smoke(spark, sf_dir, tmp_path):
     )
 
     counts = []
-    q = (
-        joined.writeStream.outputMode("append")
-        .foreachBatch(lambda b, _: counts.append(b.count()))
-        .option("checkpointLocation", str(tmp_path / "cp2"))
-        .trigger(availableNow=True)
-        .start()
+    drain(
+        joined.writeStream.outputMode("append").foreachBatch(
+            lambda b, _: counts.append(b.count())
+        ),
+        str(tmp_path / "cp2"),
+        "stream-stream join",
     )
-    q.awaitTermination(180)
     assert sum(counts) == n_rows
 
 
@@ -454,15 +451,13 @@ def test_streaming_session_window_matches_batch(spark, sf_dir, tmp_path):
         "ts", "10 minutes"
     )
     got = []
-    q = (
+    drain(
         sessions(stream)
         .writeStream.outputMode("append")
-        .foreachBatch(lambda b, _: got.extend(map(tuple, b.collect())))
-        .option("checkpointLocation", str(tmp_path / "cp"))
-        .trigger(availableNow=True)
-        .start()
+        .foreachBatch(lambda b, _: got.extend(map(tuple, b.collect()))),
+        str(tmp_path / "cp"),
+        "session windows",
     )
-    q.awaitTermination(180)
 
     from cdc_debezium_spark.sources.catalog import load_table
 
@@ -573,14 +568,11 @@ def test_stream_static_join_smoke(spark, sf_dir, tmp_path):
         counts.append(b.count())
         matched.append(b.where(F.col("c_mktsegment").isNotNull()).count())
 
-    q = (
-        joined.writeStream.outputMode("append")
-        .foreachBatch(sink)
-        .option("checkpointLocation", str(tmp_path / "cp"))
-        .trigger(availableNow=True)
-        .start()
+    drain(
+        joined.writeStream.outputMode("append").foreachBatch(sink),
+        str(tmp_path / "cp"),
+        "stream-static join",
     )
-    q.awaitTermination(180)
     assert sum(counts) == n_rows       # no loss through the join
     assert sum(matched) > 0            # enrichment actually hit
 
@@ -597,10 +589,11 @@ def test_scd2_delta_sink_matches_copy_on_write(spark, sf_dir, tmp_path):
     cols = ["pk", "ord2", "op", "val", "valid_from_us", "valid_to_us"]
 
     mor = Scd2DeltaHistorySink(str(tmp_path / "mor"), keys=["pk"], compact_ratio=1.0)
-    q = run_upsert_stream(
-        cdc.to_cdc(read_event_stream(spark, chunk_dir)), mor, str(tmp_path / "cp")
+    drain(
+        cdc.to_cdc(read_event_stream(spark, chunk_dir)).writeStream.foreachBatch(mor),
+        str(tmp_path / "cp"),
+        "mor drain",
     )
-    assert q.awaitTermination(120)
     log = TxTable(spark, mor.path).history()
     assert any(e["remove"] for e in log), "no compaction during the drain"
 
@@ -677,10 +670,11 @@ def test_delta_upsert_sink_matches_copy_on_write(spark, sf_dir, tmp_path):
     mor = DeltaUpsertSink(
         str(tmp_path / "mor"), keys=["pk"], order=["ts_us", "ord2"], compact_every=3
     )
-    q = run_upsert_stream(
-        cdc.to_cdc(read_event_stream(spark, chunk_dir)), mor, str(tmp_path / "cp")
+    drain(
+        cdc.to_cdc(read_event_stream(spark, chunk_dir)).writeStream.foreachBatch(mor),
+        str(tmp_path / "cp"),
+        "mor drain",
     )
-    assert q.awaitTermination(120)
 
     cols = ["pk", "ts_us", "val"]
     want = _rows(cdc.latest_state(cdc.cdc_events(spark, sf_dir)), cols)
@@ -713,10 +707,11 @@ def test_scd2_sink_size_threshold_policy(spark, sf_dir, tmp_path):
     scd2 = Scd2DeltaHistorySink(str(tmp_path / "smor"), keys=["pk"], compact_ratio=1.0)
     orig_compact = scd2.compact
     scd2.compact = lambda sp: compactions.append(orig_compact(sp))
-    q = run_upsert_stream(
-        cdc.to_cdc(read_event_stream(spark, chunk_dir)), scd2, str(tmp_path / "cp4")
+    drain(
+        cdc.to_cdc(read_event_stream(spark, chunk_dir)).writeStream.foreachBatch(scd2),
+        str(tmp_path / "cp4"),
+        "scd2 drain",
     )
-    assert q.awaitTermination(120)
     assert compactions, "ratio policy never fired during the drain"
     assert all(v is not None for v in compactions)
     hcols = ["pk", "ord2", "op", "val", "valid_from_us", "valid_to_us"]
@@ -786,10 +781,11 @@ def test_delta_sink_base_swap_crash_leaves_readable_state(
     write_event_chunks(spark, sf_dir, chunk_dir, n_chunks=4)
     state = str(tmp_path / "mor")
     sink = DeltaUpsertSink(state, keys=["pk"], order=["ts_us", "ord2"])
-    q = run_upsert_stream(
-        cdc.to_cdc(read_event_stream(spark, chunk_dir)), sink, str(tmp_path / "cp")
+    drain(
+        cdc.to_cdc(read_event_stream(spark, chunk_dir)).writeStream.foreachBatch(sink),
+        str(tmp_path / "cp"),
+        "sink drain",
     )
-    assert q.awaitTermination(120)
     cols = ["pk", "ts_us", "val"]
     # compact once so the crash below also replaces compacted rows
     sink.compact(spark)
@@ -832,10 +828,11 @@ def test_delta_sink_crash_during_recovery_compact(spark, sf_dir, tmp_path, monke
     write_event_chunks(spark, sf_dir, chunk_dir, n_chunks=4)
     state = str(tmp_path / "mor")
     sink = DeltaUpsertSink(state, keys=["pk"], order=["ts_us", "ord2"])
-    q = run_upsert_stream(
-        cdc.to_cdc(read_event_stream(spark, chunk_dir)), sink, str(tmp_path / "cp")
+    drain(
+        cdc.to_cdc(read_event_stream(spark, chunk_dir)).writeStream.foreachBatch(sink),
+        str(tmp_path / "cp"),
+        "sink drain",
     )
-    assert q.awaitTermination(120)
     cols = ["pk", "ts_us", "val"]
     sink.compact(spark)
     sink(cdc.cdc_events(spark, sf_dir).limit(100), 99)
@@ -924,13 +921,7 @@ def test_streaming_incremental_lsh_matches_batch(spark, sf_dir, tmp_path):
         .option("maxFilesPerTrigger", 1)
         .parquet(chunk_dir)
     )
-    q = (
-        stream.writeStream.foreachBatch(sink)
-        .option("checkpointLocation", str(tmp_path / "cp"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(180)
+    drain(stream.writeStream.foreachBatch(sink), str(tmp_path / "cp"), "lsh ingest")
 
     got = [
         (r.doc_a, r.doc_b) for r in spark.read.parquet(pairs_dir).collect()
@@ -1042,13 +1033,7 @@ def test_streaming_embedding_ann_matches_batch(spark, sf_dir, tmp_path):
         .option("maxFilesPerTrigger", 1)
         .parquet(chunk_dir)
     )
-    q = (
-        stream.writeStream.foreachBatch(sink)
-        .option("checkpointLocation", str(tmp_path / "cp_ann"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(180)
+    drain(stream.writeStream.foreachBatch(sink), str(tmp_path / "cp_ann"), "ann ingest")
 
     got = [
         (r.vec_a, r.vec_b) for r in spark.read.parquet(pairs_dir).collect()
@@ -1157,13 +1142,7 @@ def test_delta_upsert_sink_stream_parity_and_versions(spark, sf_dir, tmp_path):
         calls.append(batch_id)
         sink(batch, batch_id)
 
-    q = (
-        stream.writeStream.foreachBatch(counted)
-        .option("checkpointLocation", str(tmp_path / "cp_tx"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
+    drain(stream.writeStream.foreachBatch(counted), str(tmp_path / "cp_tx"), "counted")
 
     want = _rows(cdc.latest_state(cdc.cdc_events(spark, sf_dir)), ["pk", "ts_us", "val"])
     assert _rows(sink.read_live(spark), ["pk", "ts_us", "val"]) == want
@@ -1174,13 +1153,7 @@ def test_delta_upsert_sink_stream_parity_and_versions(spark, sf_dir, tmp_path):
 
     # redeliver the whole stream on a FRESH checkpoint: every batch
     # re-applies, state must not change
-    q2 = (
-        stream.writeStream.foreachBatch(sink)
-        .option("checkpointLocation", str(tmp_path / "cp_tx2"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q2.awaitTermination(120)
+    drain(stream.writeStream.foreachBatch(sink), str(tmp_path / "cp_tx2"), "redelivery")
     assert _rows(sink.read_live(spark), ["pk", "ts_us", "val"]) == want
 
 
@@ -1204,13 +1177,7 @@ def test_delta_upsert_sink_order_robust_under_mtime_ties(spark, sf_dir, tmp_path
 
     stream = cdc.to_cdc(read_event_stream(spark, chunk_dir))
     sink = DeltaUpsertSink(str(tmp_path / "txstate_tie"), compact_every=2)
-    q = (
-        stream.writeStream.foreachBatch(sink)
-        .option("checkpointLocation", str(tmp_path / "cp_tie"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
+    drain(stream.writeStream.foreachBatch(sink), str(tmp_path / "cp_tie"), "mtime ties")
 
     want = _rows(cdc.latest_state(cdc.cdc_events(spark, sf_dir)), ["pk", "ts_us", "val"])
     assert _rows(sink.read_live(spark), ["pk", "ts_us", "val"]) == want
@@ -1271,9 +1238,10 @@ def test_backlog_drain_slo_at_decade_scale(spark, tmp_path):
         stream = cdc.to_cdc(read_event_stream(spark, chunk_dir))
         sink = DeltaUpsertSink(str(tmp_path / "state_sf1"))
         t0 = time.time()
-        q = run_upsert_stream(stream, sink, str(tmp_path / "cp_sf1"))
+        q = drain(
+            stream.writeStream.foreachBatch(sink), str(tmp_path / "cp_sf1"), "sf1"
+        )
         qid = str(q.id)
-        q.awaitTermination(300)
         wall = time.time() - t0
 
         deadline = time.time() + 30
@@ -1358,13 +1326,11 @@ def test_scd2_history_sink_order_robust_under_mtime_ties(spark, sf_dir, tmp_path
 
     stream = cdc.to_cdc(read_event_stream(spark, chunk_dir))
     sink = Scd2DeltaHistorySink(str(tmp_path / "scd2_tie"), keys=["pk"])
-    q = (
-        stream.writeStream.foreachBatch(sink)
-        .option("checkpointLocation", str(tmp_path / "scd2_cp_tie"))
-        .trigger(availableNow=True)
-        .start()
+    drain(
+        stream.writeStream.foreachBatch(sink),
+        str(tmp_path / "scd2_cp_tie"),
+        "mtime ties",
     )
-    q.awaitTermination(120)
 
     cols = ["pk", "ord2", "op", "val", "valid_from_us", "valid_to_us"]
     want = _rows(cdc.scd2(cdc.cdc_events(spark, sf_dir)), cols)
@@ -1422,15 +1388,11 @@ def test_tws_processor_parity(spark, sf_dir, tmp_path):
         outputMode="Append",
         timeMode="None",
     )
-    q = (
-        out.writeStream.queryName("tws_parity")
-        .outputMode("append")
-        .format("memory")
-        .option("checkpointLocation", str(tmp_path / "tws_cp"))
-        .trigger(availableNow=True)
-        .start()
+    drain(
+        out.writeStream.queryName("tws_parity").outputMode("append").format("memory"),
+        str(tmp_path / "tws_cp"),
+        "tws_parity",
     )
-    assert q.awaitTermination(180)
     import pyspark.sql.functions as F
 
     got = _rows(
@@ -1473,13 +1435,11 @@ def test_transform_with_state_lane(spark, sf_dir):
 
 
 def test_scaled_state_partitions_rule_and_restore(spark, tmp_path):
-    """r15: stateful gate lanes derive their state-store partition
-    count from source bytes (AQE cannot coalesce stateful-streaming
+    """Stateful gate lanes derive their state-store partition count
+    from source bytes (AQE cannot coalesce stateful-streaming
     shuffles). Pin the sizing rule — floor 4, ceiling the session
-    default, ~32 MB per partition — the env override, and that the
-    session conf is restored either way."""
-    import os
-
+    default, ~32 MB per partition — and that the session conf is
+    restored either way."""
     from cdc_debezium_spark.streaming.replay import scaled_state_partitions
 
     key = "spark.sql.shuffle.partitions"
@@ -1502,14 +1462,6 @@ def test_scaled_state_partitions_rule_and_restore(spark, tmp_path):
         assert spark.conf.get(key) == default
     assert spark.conf.get(key) == default
 
-    os.environ["CDC_STREAM_STATE_PARTS"] = "6"
-    try:
-        with scaled_state_partitions(spark, str(small)):
-            assert spark.conf.get(key) == "6"
-    finally:
-        del os.environ["CDC_STREAM_STATE_PARTS"]
-    assert spark.conf.get(key) == default
-
     # restore happens on exception too
     try:
         with scaled_state_partitions(spark, str(small)):
@@ -1520,8 +1472,7 @@ def test_scaled_state_partitions_rule_and_restore(spark, tmp_path):
 
 
 def test_scaled_state_partitions_never_raises_above_default(spark, tmp_path):
-    """r15 ADVICE: with a session default BELOW the floor of 4 the rule
-    must keep the default (only-ever-shrinks contract), not raise the
+    """With a session default BELOW the floor of 4 the rule must keep the default (only-ever-shrinks contract), not raise the
     state-partition count to 4."""
     from cdc_debezium_spark.streaming.replay import scaled_state_partitions
 
@@ -1539,7 +1490,15 @@ def test_scaled_state_partitions_never_raises_above_default(spark, tmp_path):
         spark.conf.set(key, default)
 
 
-def test_roundtrip_lane_leaves_no_temp_dir(spark, sf_dir, tmp_path, monkeypatch):
+@pytest.mark.parametrize(
+    "key",
+    [
+        "agg_tumbling_window_stream_roundtrip",  # write_event_chunks
+        "cdc_stream_latest_state_roundtrip",  # upsert sink over a lane dir
+        "ext_stream_dedup_minhash_roundtrip",  # write_redelivered_chunks
+    ],
+)
+def test_roundtrip_lane_leaves_no_temp_dir(spark, sf_dir, tmp_path, monkeypatch, key):
     """A roundtrip lane stages its chunk files under its own temp dir
     and removes that dir when it returns: nothing outlives the query."""
     import tempfile
@@ -1547,5 +1506,26 @@ def test_roundtrip_lane_leaves_no_temp_dir(spark, sf_dir, tmp_path, monkeypatch)
     from cdc_debezium_spark.testing import compare_query
 
     monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
-    compare_query(spark, "agg_tumbling_window_stream_roundtrip", sf_dir)
+    compare_query(spark, key, sf_dir)
     assert list(tmp_path.iterdir()) == []
+
+
+def test_drain_stops_a_stream_that_outlives_its_timeout(spark, sf_dir, tmp_path):
+    """A query still running at ``timeout_s`` is stopped, and the
+    TimeoutError names the lane: no query outlives its drain."""
+    import time
+
+    chunk_dir = str(tmp_path / "chunks")
+    write_event_chunks(spark, sf_dir, chunk_dir, n_chunks=2)
+
+    def slow(_batch, _bid):
+        time.sleep(3)
+
+    with pytest.raises(TimeoutError, match=r"^slow_lane: stream did not drain in 1s$"):
+        drain(
+            read_event_stream(spark, chunk_dir).writeStream.foreachBatch(slow),
+            str(tmp_path / "cp"),
+            "slow_lane",
+            timeout_s=1,
+        )
+    assert spark.streams.active == []

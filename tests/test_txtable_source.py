@@ -8,6 +8,7 @@ import pyspark.sql.functions as F
 import pytest
 
 from cdc_debezium_spark.sources.txtable_source import TxTableDataSource
+from cdc_debezium_spark.streaming.replay import drain
 from cdc_debezium_spark.streaming.txlog import TxTable
 
 
@@ -61,17 +62,15 @@ def test_stream_tails_appends_with_version_offsets(registered, tmp_path):
     cp = str(tmp_path / "cp")
 
     def run_once():
-        q = (
+        drain(
             spark.readStream.format("txtable")
             .option("path", path)
             .load()
             .writeStream.format("parquet")
-            .option("path", out)
-            .option("checkpointLocation", cp)
-            .trigger(availableNow=True)
-            .start()
+            .option("path", out),
+            cp,
+            "txtable tail",
         )
-        q.awaitTermination(120)
 
     run_once()
     got = spark.read.parquet(out)
@@ -95,25 +94,21 @@ def test_stream_rejects_rewriting_commits(registered, tmp_path):
     t = _mk_table(spark, path, n_commits=1)
     t.overwrite(spark.createDataFrame([(1, "x")], "pk long, v string"))
 
-    q = (
+    writer = (
         spark.readStream.format("txtable")
         .option("path", path)
         .load()
         .writeStream.format("memory")
         .queryName("txo_tail")
-        .trigger(availableNow=True)
-        .start()
     )
     # Assert OUTSIDE pytest.raises: a fallback message that itself
-    # matched the raises pattern made the old form vacuous (judge r5
-    # advice) — awaitTermination returning cleanly must FAIL here.
+    # matched the raises pattern would make the check vacuous — a
+    # stream that drains cleanly must FAIL here.
     exc: Exception | None = None
     try:
-        q.awaitTermination(120)
+        exc = drain(writer, str(tmp_path / "cp"), "txo_tail").exception()
     except Exception as e:  # noqa: BLE001 - StreamingQueryException
         exc = e
-    if exc is None:
-        exc = q.exception()
     assert exc is not None, (
         "stream consumed a rewriting commit without raising; "
         "append-only enforcement is broken"

@@ -21,6 +21,7 @@ from pyspark.sql.types import (
 
 from cdc_debezium_spark.operators import cdc
 from cdc_debezium_spark.sources.debezium import parse_envelope, unwrap
+from cdc_debezium_spark.streaming.replay import drain
 
 ROW_SCHEMA = StructType(
     [
@@ -374,15 +375,13 @@ def test_avro_wire_streaming_decode_parity(spark, tmp_path):
 
     stream = spark.readStream.schema("value binary").parquet(wire_dir)
     sink_dir = str(tmp_path / "avro_out")
-    q = (
+    drain(
         aw.from_avro_wire(stream, reg, out_ddl)
         .writeStream.format("parquet")
-        .option("path", sink_dir)
-        .option("checkpointLocation", str(tmp_path / "avro_cp"))
-        .trigger(availableNow=True)
-        .start()
+        .option("path", sink_dir),
+        str(tmp_path / "avro_cp"),
+        "avro wire",
     )
-    q.awaitTermination(120)
     streamed = {
         (r["event_id"], r["event_type"], r["schema_id"])
         for r in spark.read.parquet(sink_dir).collect()
@@ -484,14 +483,11 @@ def test_outbox_routed_stream_hits_per_aggregate_topics(spark, sf_dir, tmp_path)
             (r["topic"], bytes(r["key"]).decode()) for r in wire.collect()
         )
 
-    q = (
-        read_event_stream(spark, chunk_dir)
-        .writeStream.foreachBatch(sink)
-        .option("checkpointLocation", str(tmp_path / "outbox_cp"))
-        .trigger(availableNow=True)
-        .start()
+    drain(
+        read_event_stream(spark, chunk_dir).writeStream.foreachBatch(sink),
+        str(tmp_path / "outbox_cp"),
+        "outbox",
     )
-    q.awaitTermination(120)
 
     from collections import Counter
 
@@ -930,14 +926,11 @@ def test_kafka_cdc_stream_against_real_broker(spark, tmp_path):
     parsed = kafka_cdc_stream(
         spark, bootstrap, ["prod.public.orders"], ROW_SCHEMA
     )
-    q = (
-        parsed.writeStream.format("parquet")
-        .option("path", str(tmp_path / "out"))
-        .option("checkpointLocation", str(tmp_path / "cp"))
-        .trigger(availableNow=True)
-        .start()
+    drain(
+        parsed.writeStream.format("parquet").option("path", str(tmp_path / "out")),
+        str(tmp_path / "cp"),
+        "kafka",
     )
-    q.awaitTermination(120)
     got = spark.read.parquet(str(tmp_path / "out"))
     assert got.count() >= 100
     assert got.where(F.col("_corrupt_record").isNotNull()).count() == 0
