@@ -430,8 +430,7 @@ def agg_session_window_stream_roundtrip(spark, sf_dir):
     and bounds.
 
     Third state-store surface gated: aggregation (tumbling), join
-    (stream-stream), and now session merge. Memory-sink collect is
-    session-count bounded — driver-gate only.
+    (stream-stream), and now session merge.
     """
     import tempfile
 

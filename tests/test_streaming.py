@@ -72,12 +72,11 @@ def test_restart_from_checkpoint_resumes_without_dupes(spark, sf_dir, tmp_path):
     state_path = str(tmp_path / "state3")
     cp = str(tmp_path / "cp3")
 
-    # phase 1: first half of the log, drain fully, query stops
     def upsert(sink):
-        return cdc.to_cdc(read_event_stream(spark, chunk_dir)).writeStream.foreachBatch(
-            sink
-        )
+        stream = cdc.to_cdc(read_event_stream(spark, chunk_dir))
+        return stream.writeStream.foreachBatch(sink)
 
+    # phase 1: first half of the log, drain fully, query stops
     publish(files[:3])
     sink = DeltaUpsertSink(state_path)
     drain(upsert(sink), cp, "resume phase 1")
