@@ -218,20 +218,19 @@ def write_redelivered_chunks(
     df: DataFrame,
     key: str,
     out_dir: str,
-    n_chunks: int = 3,
     options: dict[str, object] | None = None,
 ) -> None:
-    """Stage ``df`` as ``n_chunks`` chunk dirs, rows split on
-    ``key % n_chunks``, each delivered twice: written once through
-    Spark as one file (never collected to the driver), then copied
-    byte for byte for the redelivery. Files get strictly increasing
+    """Stage ``df`` as 3 chunk dirs, rows split on ``key % 3``, each
+    delivered twice: written once through Spark as one file (never
+    collected to the driver), then copied byte for byte for the
+    redelivery. Files get strictly increasing
     mtimes in delivery order, the ``write_event_chunks`` guarantee.
     ``options`` go to the parquet writer."""
     t0 = time.time() - 10
-    for i in range(n_chunks):
+    for i in range(3):
         first = f"{out_dir}/chunk_{i:04d}_0"
         (
-            df.where(F.col(key) % n_chunks == i)
+            df.where(F.col(key) % 3 == i)
             .coalesce(1)
             .write.mode("overwrite")
             .options(**(options or {}))

@@ -592,6 +592,7 @@ def test_scd2_delta_sink_matches_copy_on_write(spark, sf_dir, tmp_path):
         cdc.to_cdc(read_event_stream(spark, chunk_dir)).writeStream.foreachBatch(mor),
         str(tmp_path / "cp"),
         "mor drain",
+        timeout_s=120,
     )
     log = TxTable(spark, mor.path).history()
     assert any(e["remove"] for e in log), "no compaction during the drain"
@@ -673,6 +674,7 @@ def test_delta_upsert_sink_matches_copy_on_write(spark, sf_dir, tmp_path):
         cdc.to_cdc(read_event_stream(spark, chunk_dir)).writeStream.foreachBatch(mor),
         str(tmp_path / "cp"),
         "mor drain",
+        timeout_s=120,
     )
 
     cols = ["pk", "ts_us", "val"]
@@ -710,6 +712,7 @@ def test_scd2_sink_size_threshold_policy(spark, sf_dir, tmp_path):
         cdc.to_cdc(read_event_stream(spark, chunk_dir)).writeStream.foreachBatch(scd2),
         str(tmp_path / "cp4"),
         "scd2 drain",
+        timeout_s=120,
     )
     assert compactions, "ratio policy never fired during the drain"
     assert all(v is not None for v in compactions)
@@ -784,6 +787,7 @@ def test_delta_sink_base_swap_crash_leaves_readable_state(
         cdc.to_cdc(read_event_stream(spark, chunk_dir)).writeStream.foreachBatch(sink),
         str(tmp_path / "cp"),
         "sink drain",
+        timeout_s=120,
     )
     cols = ["pk", "ts_us", "val"]
     # compact once so the crash below also replaces compacted rows
@@ -831,6 +835,7 @@ def test_delta_sink_crash_during_recovery_compact(spark, sf_dir, tmp_path, monke
         cdc.to_cdc(read_event_stream(spark, chunk_dir)).writeStream.foreachBatch(sink),
         str(tmp_path / "cp"),
         "sink drain",
+        timeout_s=120,
     )
     cols = ["pk", "ts_us", "val"]
     sink.compact(spark)
@@ -1391,6 +1396,7 @@ def test_tws_processor_parity(spark, sf_dir, tmp_path):
         out.writeStream.queryName("tws_parity").outputMode("append").format("memory"),
         str(tmp_path / "tws_cp"),
         "tws_parity",
+        timeout_s=180,
     )
     import pyspark.sql.functions as F
 
@@ -1471,8 +1477,9 @@ def test_scaled_state_partitions_rule_and_restore(spark, tmp_path):
 
 
 def test_scaled_state_partitions_never_raises_above_default(spark, tmp_path):
-    """With a session default BELOW the floor of 4 the rule must keep the default (only-ever-shrinks contract), not raise the
-    state-partition count to 4."""
+    """With a session default BELOW the floor of 4 the rule must keep the
+    default (only-ever-shrinks contract), not raise the state-partition
+    count to 4."""
     from cdc_debezium_spark.streaming.replay import scaled_state_partitions
 
     key = "spark.sql.shuffle.partitions"
