@@ -15,7 +15,13 @@ their only storage:
   commit while it runs;
 - readers fold a snapshot: latest-per-key for ``DeltaUpsertSink``,
   (keys, ord) dedup plus one ``lead()`` window for
-  ``Scd2DeltaHistorySink``.
+  ``Scd2DeltaHistorySink``;
+- reads and compactions follow the table's one-task rule: state
+  smaller than one advisory partition
+  (``spark.sql.adaptive.advisoryPartitionSizeInBytes``) is read as one
+  partition, so a fold plans no exchange and a point read or a
+  compaction is one Spark job. Above that gate each fold pays exactly
+  one hash exchange on the keys.
 
 Both folds are functions of the row SET with duplicate absorption, so
 redelivery, a crashed batch re-run, or a compaction cut short all land
@@ -25,7 +31,6 @@ offset commits + keyed topics (prod-resources.yaml:14-20, 84-95).
 
 from __future__ import annotations
 
-import os
 from collections.abc import Callable, Sequence
 
 import pyspark.sql.functions as F
@@ -87,19 +92,24 @@ def stateful_running_totals(stream: DataFrame) -> DataFrame:
 # --- merge-on-read state on a TxTable (see the module docstring) --------
 
 
-def _snapshot(spark: SparkSession, path: str) -> DataFrame | None:
+def _snapshot(
+    spark: SparkSession, path: str, cluster_by: Sequence[str] = ()
+) -> DataFrame | None:
     t = TxTable(spark, path)
-    return t.snapshot() if t.latest_version() >= 0 else None
+    return t.snapshot(cluster_by=cluster_by) if t.latest_version() >= 0 else None
 
 
 def _compact(
-    spark: SparkSession, path: str, fold: Callable[[DataFrame], DataFrame]
+    spark: SparkSession,
+    path: str,
+    fold: Callable[[DataFrame], DataFrame],
+    cluster_by: Sequence[str] = (),
 ) -> int | None:
     """Commit ``fold(snapshot)`` in place of the files it read, then
     delete every file no version since the previous compaction can
     reach: the files that compaction removed, and crash orphans."""
     t = TxTable(spark, path)
-    v = t.compact(fold)
+    v = t.compact(fold, cluster_by)
     if v is not None:
         prev = max(
             (e["version"] for e in t.history()[:v] if e["remove"]), default=0
@@ -134,11 +144,7 @@ def _deltas_exceed_ratio(table: TxTable, ratio: float) -> bool:
             deltas += e["add"]
     if not deltas:
         return False
-
-    def size(names: list[str]) -> int:
-        return sum(os.path.getsize(os.path.join(table.file_dir, n)) for n in names)
-
-    base_b, delta_b = size(base), size(deltas)
+    base_b, delta_b = table.size(base), table.size(deltas)
     if base_b == 0:
         return delta_b > 0
     return delta_b >= ratio * base_b
@@ -254,14 +260,14 @@ class Scd2DeltaHistorySink:
         self.compact_ratio = compact_ratio
 
     def _fold(self, rows: DataFrame) -> DataFrame:
-        # ONE exchange for the whole read path: a hash(keys)
-        # repartition satisfies the clustered-distribution requirement
-        # of BOTH the (keys, ord) dedup (subset rule) and the interval
-        # window (partitionBy keys); a dedup that picks its own
-        # (keys, ord) exchange forces a second shuffle before the window.
-        return rows.repartition(*self.keys).dropDuplicates(
-            [*self.keys, self.ord_col]
-        )
+        # `rows` is a snapshot read with cluster_by=keys. Below the
+        # one-task gate it is one partition, which satisfies both the
+        # (keys, ord) dedup and the interval window: no exchange. Above
+        # it the read is hash(keys)-partitioned, which satisfies both
+        # (subset rule): ONE exchange for the whole read path, where a
+        # dedup left to pick its own (keys, ord) exchange would force a
+        # second shuffle before the window.
+        return rows.dropDuplicates([*self.keys, self.ord_col])
 
     def __call__(self, batch: DataFrame, batch_id: int) -> None:
         spark = batch.sparkSession
@@ -273,12 +279,12 @@ class Scd2DeltaHistorySink:
     def compact(self, spark: SparkSession) -> int | None:
         """Fold the snapshot to its deduped event set, committed in
         place of the files it read; returns the commit version."""
-        return _compact(spark, self.path, self._fold)
+        return _compact(spark, self.path, self._fold, self.keys)
 
     def read_history(self, spark: SparkSession) -> DataFrame:
         from pyspark.sql import Window
 
-        rows = _snapshot(spark, self.path)
+        rows = _snapshot(spark, self.path, self.keys)
         if rows is None:
             raise FileNotFoundError(f"no state under {self.path}")
         w = Window.partitionBy(*self.keys).orderBy(

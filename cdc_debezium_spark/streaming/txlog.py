@@ -20,6 +20,18 @@ upsert sinks in ``streaming.state``:
   latest) version, hand Spark the immutable file list. A concurrent
   commit cannot disturb an in-flight read; old versions remain
   readable (time travel) until vacuumed
+- ONE-TASK RULE: a snapshot whose live files total less than one
+  advisory partition (``spark.sql.adaptive.advisoryPartitionSizeInBytes``,
+  against the byte sizes of the files the log names) is read as one
+  partition. One partition satisfies every per-key clustering, so a
+  keyed fold over it (latest-per-key window, dedup, interval window,
+  the ``snapshot_changes`` join) plans no exchange and runs as one
+  stage in one task. Above the gate a read keeps its parallelism, and
+  a keyed fold pays one hash exchange; a reader whose fold needs one
+  clustering for two operators passes it as ``cluster_by``. ``snapshot``,
+  ``compact`` and ``table_changes`` all read through this gate
+- the table's directories are created by its first commit, so a read
+  of a missing table leaves nothing behind
 - writers use OPTIMISTIC concurrency: stage files, then try to claim
   the next version. ``append`` rebases on collision (blind adds never
   conflict). ``compact`` rebases over every commit that left the files
@@ -68,7 +80,9 @@ def snapshot_changes(
     inline explode of a 2-array — changed keys only, no second join,
     no extra shuffle. At 100 TB this is the standard snapshot-
     reconciliation shape: both sides shuffle once on the key, and the
-    downstream explode touches only the (small) changed subset.
+    downstream explode touches only the (small) changed subset. Two
+    one-partition sides (TxTable snapshots under the one-task gate)
+    join in one task with no shuffle.
     """
     val_cols = [c for c in new.columns if c not in keys]
     kcols = list(keys)
@@ -103,8 +117,6 @@ class TxTable:
         self.path = path
         self.log_dir = os.path.join(path, "_txlog")
         self.file_dir = os.path.join(path, "files")
-        os.makedirs(self.log_dir, exist_ok=True)
-        os.makedirs(self.file_dir, exist_ok=True)
 
     # -- log plumbing -------------------------------------------------------
 
@@ -116,12 +128,12 @@ class TxTable:
             return json.load(f)
 
     def latest_version(self) -> int:
-        """Highest committed version, -1 for an empty table."""
-        vs = [
-            int(n.split(".")[0])
-            for n in os.listdir(self.log_dir)
-            if n.endswith(".json")
-        ]
+        """Highest committed version, -1 for an empty or missing table."""
+        try:
+            names = os.listdir(self.log_dir)
+        except FileNotFoundError:
+            return -1
+        vs = [int(n.split(".")[0]) for n in names if n.endswith(".json")]
         return max(vs) if vs else -1
 
     def _versions(self, version: int):
@@ -144,11 +156,16 @@ class TxTable:
     def _files_at(self, version: int) -> list[str]:
         return self._replay(version)[0]
 
+    def size(self, names: list[str]) -> int:
+        """Bytes of the named data files: one stat each, no data read."""
+        return sum(os.path.getsize(os.path.join(self.file_dir, n)) for n in names)
+
     def _stage(self, df: DataFrame) -> list[str]:
         """Write df as immutable parquet files; return their names."""
         stage_id = uuid.uuid4().hex
         tmp = os.path.join(self.path, f".stage-{stage_id}")
         df.write.mode("overwrite").parquet(tmp)
+        os.makedirs(self.file_dir, exist_ok=True)
         names = []
         for n in sorted(os.listdir(tmp)):
             if n.endswith(".parquet"):
@@ -167,6 +184,8 @@ class TxTable:
         entry = {"version": version, "add": list(add), "remove": list(remove)}
         if schema is not None:
             entry["schema"] = schema.jsonValue()
+        if version == 0:
+            os.makedirs(self.log_dir, exist_ok=True)
         tmp = self._entry_path(version) + f".{uuid.uuid4().hex}.tmp"
         with open(tmp, "w") as f:
             json.dump(entry, f)
@@ -182,18 +201,34 @@ class TxTable:
 
     # -- reads --------------------------------------------------------------
 
-    def _read(self, files: list[str], schema: StructType) -> DataFrame:
+    def _read(
+        self, files: list[str], schema: StructType, cluster_by: Sequence[str]
+    ) -> DataFrame:
+        """Read `files` under the one-task rule (module docstring):
+        one partition below the gate; above it, hash-partitioned on
+        `cluster_by` when given, so two keyed operators share one
+        exchange. A repartition below the gate would bring the
+        exchange back."""
         paths = [os.path.join(self.file_dir, n) for n in files]
-        return self.spark.read.schema(schema).parquet(*paths)
+        df = self.spark.read.schema(schema).parquet(*paths)
+        advisory = self.spark.conf.get(
+            "spark.sql.adaptive.advisoryPartitionSizeInBytes"
+        )
+        jutils = self.spark._jvm.org.apache.spark.network.util.JavaUtils
+        if self.size(files) < jutils.byteStringAsBytes(advisory):
+            return df.coalesce(1)
+        return df.repartition(*cluster_by) if cluster_by else df
 
-    def snapshot(self, version: int | None = None) -> DataFrame:
+    def snapshot(
+        self, version: int | None = None, cluster_by: Sequence[str] = ()
+    ) -> DataFrame:
         """The table at `version` (default: latest). The returned
         DataFrame reads an immutable file list — concurrent commits
         and later overwrites cannot disturb it (until vacuum)."""
         v = self.latest_version() if version is None else version
         if v < 0:
             raise ValueError("empty table has no snapshot")
-        return self._read(*self._replay(v))
+        return self._read(*self._replay(v), cluster_by)
 
     # -- writes -------------------------------------------------------------
 
@@ -222,10 +257,15 @@ class TxTable:
             raise CommitConflict(f"version {base + 1} was claimed concurrently")
         return base + 1
 
-    def compact(self, fold: Callable[[DataFrame], DataFrame]) -> int | None:
-        """Rewrite the table as ``fold(snapshot)`` in one commit that
-        adds the folded files and removes exactly the files it read.
-        Returns the committed version, or None for an empty table.
+    def compact(
+        self,
+        fold: Callable[[DataFrame], DataFrame],
+        cluster_by: Sequence[str] = (),
+    ) -> int | None:
+        """Rewrite the table as ``fold(snapshot(cluster_by=cluster_by))``
+        in one commit that adds the folded files and removes exactly the
+        files it read. Returns the committed version, or None for an
+        empty table.
 
         `fold` must keep the table's columns, and a reader must get the
         same answer from ``fold(S) + A`` as from ``S + A``: on a version
@@ -237,7 +277,7 @@ class TxTable:
         if v < 0:
             return None
         read, schema = self._replay(v)
-        add = self._stage(fold(self._read(read, schema)))
+        add = self._stage(fold(self._read(read, schema, cluster_by)))
         folded = set(read)
         while not self._try_commit(v + 1, add, read):
             latest = self.latest_version()
@@ -281,7 +321,8 @@ class TxTable:
         """Row-level changes between two committed versions (the Delta
         `table_changes` analog), derived by diffing the two immutable
         snapshots — works for any pair of retained versions with no
-        write-path logging. See snapshot_changes for the join shape."""
+        write-path logging. Each snapshot reads under the one-task
+        gate; see snapshot_changes for the join shape."""
         return snapshot_changes(
             self.snapshot(v_from), self.snapshot(v_to), keys=keys
         )

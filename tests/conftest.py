@@ -2,6 +2,7 @@ from __future__ import annotations
 
 import os
 import sys
+from contextlib import contextmanager
 
 import pytest
 
@@ -29,6 +30,28 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir():
     return SF_DIR
+
+
+@pytest.fixture
+def above_one_task_gate(spark):
+    """A context manager that sets the advisory partition size, the
+    gate of TxTable's one-task rule, below any table's bytes, so
+    snapshots read with their hash-exchange plans. Restored on exit."""
+    key = "spark.sql.adaptive.advisoryPartitionSizeInBytes"
+
+    @contextmanager
+    def above():
+        old = spark.conf.get(key, None)
+        spark.conf.set(key, "1b")
+        try:
+            yield
+        finally:
+            if old is None:
+                spark.conf.unset(key)
+            else:
+                spark.conf.set(key, old)
+
+    return above
 
 
 @pytest.fixture(autouse=True)

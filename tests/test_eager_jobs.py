@@ -13,6 +13,7 @@ from contextlib import contextmanager
 
 import pyarrow as pa
 import pyarrow.parquet as pq
+import pyspark.sql.functions as F
 
 from cdc_debezium_spark import registry
 from cdc_debezium_spark.operators import cdc
@@ -104,6 +105,27 @@ def test_merge_on_read_sinks_read_with_pinned_schema(spark, sf_dir, tmp_path):
     assert _sorted_rows(fresh_live) == _sorted_rows(live_df)
     assert _sorted_rows(fresh_hist) == _sorted_rows(hist_df)
     ev.unpersist()
+
+
+def test_small_sink_point_read_and_compact_launch_one_job(spark, tmp_path):
+    """A sink under the one-task gate plans no exchange, so AQE has no
+    shuffle stage to run as a job of its own: a point read and a
+    compaction launch one Spark job each."""
+    df = spark.range(500).select(
+        F.col("id").alias("pk"),
+        (F.col("id") * 7).alias("ts_us"),
+        F.col("id").alias("ord2"),
+        F.lit("u").alias("op"),
+    )
+    sink = DeltaUpsertSink(str(tmp_path / "live"), keys=["pk"])
+    for i in range(3):
+        sink(df, i)
+    with jobs_launched(spark) as read_jobs:
+        rows = sink.read_live(spark).where(F.col("pk") == 42).collect()
+    with jobs_launched(spark) as compact_jobs:
+        sink.compact(spark)
+    assert (len(read_jobs), len(compact_jobs)) == (1, 1)
+    assert [tuple(r) for r in rows] == [(42, 294, 42, "u")]
 
 
 # Lanes whose construction runs genuine actions, each capped at the

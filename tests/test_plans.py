@@ -776,19 +776,15 @@ def test_tpch_join_heavy_exchange_budgets(spark, sf_dir):
         assert "CartesianProduct" not in _physical(df), key
 
 
-def test_delta_sink_read_paths_single_shuffle(spark, tmp_path):
-    """r10 plan pin for the PRODUCTION streaming sinks (the canonical
-    cdc_stream_latest_state / cdc_scd2_stream lanes since the r10
-    promotion): both merge-on-read read paths must plan exactly ONE
-    exchange. read_live is a latest-per-key window over base+deltas;
-    read_history repartitions by the key columns so hash(keys)
-    satisfies BOTH the (keys, ord) dedup and the interval window —
-    letting the dedup pick a (keys, ord) exchange doubles the
-    read-path shuffle at any scale."""
+def _sink_read_plans(spark, path):
+    """Both merge-on-read sinks after one batch and its redelivery:
+    their read paths, the folds their compactions write, and a
+    table_changes between the upsert table's two versions."""
     from cdc_debezium_spark.streaming.state import (
         DeltaUpsertSink,
         Scd2DeltaHistorySink,
     )
+    from cdc_debezium_spark.streaming.txlog import TxTable
 
     df = spark.range(500).select(
         F.col("id").alias("pk"),
@@ -797,19 +793,49 @@ def test_delta_sink_read_paths_single_shuffle(spark, tmp_path):
         F.lit("u").alias("op"),
         (F.col("id") % 13).cast("double").alias("val"),
     )
-    h = Scd2DeltaHistorySink(str(tmp_path / "h"), keys=["pk"])
-    h(df, 0)
-    h(df, 1)  # redelivery: dedup absorbed inside the single exchange
-    hist = h.read_history(spark)
-    assert count_shuffles(hist) == 1, _physical(hist)
-    assert hist.count() == 500
+    h = Scd2DeltaHistorySink(str(path / "h"), keys=["pk"])
+    u = DeltaUpsertSink(str(path / "u"), keys=["pk"], order=["ts_us", "ord2"])
+    for sink in (h, u):
+        sink(df, 0)
+        sink(df, 1)
+    ht, ut = TxTable(spark, h.path), TxTable(spark, u.path)
+    return {
+        "read_history": h.read_history(spark),
+        "read_live": u.read_live(spark),
+        "scd2_compact_fold": h._fold(ht.snapshot(cluster_by=h.keys)),
+        "upsert_compact_fold": u._fold(ut.snapshot()),
+        "table_changes": ut.table_changes(0, 1, keys=["pk"]),
+    }
 
-    u = DeltaUpsertSink(str(tmp_path / "u"), keys=["pk"], order=["ts_us", "ord2"])
-    u(df, 0)
-    u(df, 1)
-    live = u.read_live(spark)
-    assert count_shuffles(live) == 1, _physical(live)
-    assert live.count() == 500
+
+def test_small_sink_reads_plan_no_exchange(spark, tmp_path):
+    """Under the one-task gate a snapshot is one partition, which
+    satisfies every per-key clustering: the sinks' reads, their
+    compaction folds and table_changes plan no hash exchange."""
+    plans = _sink_read_plans(spark, tmp_path)
+    shuffles = {name: count_shuffles(df) for name, df in plans.items()}
+    assert shuffles == dict.fromkeys(plans, 0), shuffles
+    assert plans["read_history"].count() == 500
+    assert plans["read_live"].count() == 500
+
+
+def test_large_sink_reads_plan_one_exchange(spark, tmp_path, above_one_task_gate):
+    """Above the gate each sink read path plans exactly ONE exchange.
+    read_history reads hash(keys)-partitioned, which satisfies both
+    the (keys, ord) dedup and the interval window; a dedup that picks
+    its own (keys, ord) exchange doubles the read-path shuffle."""
+    with above_one_task_gate():
+        plans = _sink_read_plans(spark, tmp_path)
+        shuffles = {name: count_shuffles(df) for name, df in plans.items()}
+        assert shuffles == {
+            "read_history": 1,
+            "read_live": 1,
+            "scd2_compact_fold": 1,
+            "upsert_compact_fold": 1,
+            "table_changes": 2,  # each side once on the key
+        }, shuffles
+        assert plans["read_history"].count() == 500
+        assert plans["read_live"].count() == 500
 
 
 def test_triangle_count_legs_never_broadcast(spark):
