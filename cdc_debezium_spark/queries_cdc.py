@@ -179,9 +179,8 @@ def type_coercion(spark, sf_dir):
     the engine casts at the boundary.
 
     total_dec is emitted as the canonical scale-2 decimal STRING on
-    both sides: round-1 driver hashing showed DECIMAL(18,2) wire
-    representations differ between engines even when every value
-    compares equal (VERDICT r1 "What's wrong" #1)."""
+    both sides: DECIMAL(18,2) wire representations differ between
+    engines even when every value compares equal."""
     o = load_table(spark, sf_dir, "orders")
     return o.select(
         "o_orderkey",
@@ -1253,22 +1252,19 @@ def cdc_referential_audit(spark, sf_dir):
     )
 
 
-# --- Schema-Registry protocol, executed (round 6) ----------------------------
+# --- Schema-Registry protocol, executed --------------------------------------
 
 _REGISTRY_SERVERS: dict = {}
 
 
-def _registry_server(lane: str = "default"):
-    """Session-lifetime in-process registry stub (daemon thread), ONE
-    PER LANE (r6 advice: a shared server made the oracle's
-    first-registered-id assumption ordering-dependent — any earlier
-    registration by another lane/test would shift the content-
-    addressed id). Each lane owns its server, so "my first schema has
-    id 1" is structural, and re-invocation is idempotent through the
-    content-addressed register. In production the URL points at the
-    deployed registry service (values.yaml:63-69) reachable from
-    executors; the localhost stub serves local[*] runs, where executor
-    threads share the process."""
+def _registry_server(lane: str):
+    """Process-lifetime in-process registry, one per lane: the lane
+    returns a lazy frame whose executors fetch schemas by id over HTTP
+    after the lane function returns, so the server must outlive the
+    call. One server per lane keeps the oracle's content-addressed ids
+    (first schema = 1) independent of other lanes' registrations; in
+    production the URL points at the deployed registry
+    (values.yaml:63-69)."""
     if lane not in _REGISTRY_SERVERS:
         from .sources.schema_registry import SchemaRegistryServer
 
@@ -1292,14 +1288,14 @@ def _registry_server(lane: str = "default"):
     """,
 )
 def avro_registry_roundtrip(spark, sf_dir):
-    """The full registry PROTOCOL executed end-to-end (judge r5 ask
-    #9): register the schema over HTTP (POST /subjects/../versions),
-    encode with the returned id, then decode with a FRESH client that
-    must fetch the schema back BY ID (GET /schemas/ids/{id}) — the
-    produce/consume seam a schemas.enable=true deployment runs. The
-    decode client pickles as its URL and re-opens executor-side with
-    an empty cache, so the schema text really travels over the wire
-    once per executor (then the immutable-id cache holds)."""
+    """The full registry PROTOCOL executed end-to-end: register the schema
+    over HTTP (POST /subjects/../versions), encode with the returned id,
+    then decode with a FRESH client that must fetch the schema back BY
+    ID (GET /schemas/ids/{id}) — the produce/consume seam a
+    schemas.enable=true deployment runs. The decode client pickles as
+    its URL and re-opens executor-side with an empty cache, so the
+    schema text really travels over the wire once per executor (then the
+    immutable-id cache holds)."""
     from .sources.avro_wire import from_avro_wire, to_avro_wire
     from .sources.schema_registry import SchemaRegistryClient
 
@@ -1340,13 +1336,13 @@ def avro_registry_roundtrip(spark, sf_dir):
     """,
 )
 def avro_schema_evolution_roundtrip(spark, sf_dir):
-    """Schema evolution THROUGH framed Avro ids — the production wire
-    path the reference's registry deployment implies
+    """Schema evolution THROUGH framed Avro ids — the production wire path
+    the reference's registry deployment implies
     (helm-charts/cdc-system/values.yaml:63-69 next to
-    include.schema.changes, postgresql-connector.yaml:44-46; r8
-    verdict ask #5). avro_registry_roundtrip proves the registry
-    protocol and cdc_schema_evolution_roundtrip proves JSON-lane DDL
-    folding; this lane composes them end-to-end:
+    include.schema.changes, postgresql-connector.yaml:44-46).
+    avro_registry_roundtrip proves the registry protocol and
+    cdc_schema_evolution_roundtrip proves JSON-lane DDL folding; this
+    lane composes them end-to-end:
 
       register v1 -> encode a first epoch with id1 -> the upstream
       table is ALTERed (the DDL string folds into the consumer schema
@@ -1455,17 +1451,17 @@ def avro_schema_evolution_roundtrip(spark, sf_dir):
 )
 def cdc_connect_config_pipeline(spark, sf_dir):
     """The CONFIG COMPILER end-to-end behind the correctness gate: the
-    reference's own connector properties (RegexRouter + 
+    reference's own connector properties (RegexRouter +
     ExtractNewRecordState rewrite + MaskField + table.include.list,
     postgresql-connector.yaml:38-56) compiled by ConnectorPipeline and
     applied to a re-serialized wire stream that contains clean
     envelopes, malformed payloads (event_id % 997 — must land in the
-    unconditional quarantine lane, never as all-null change rows; the
-    r5 advice fix), and tombstones (event_id % 991 — kept, null source
-    passes capture-side include). The report proves each lane's
-    membership, the delete rewrite, and that the masked column is null
-    on every change row. Shape: one codegen wire roundtrip + three
-    keyed aggregates; zero exchanges before the rollups."""
+    unconditional quarantine lane, never as all-null change rows), and
+    tombstones (event_id % 991 — kept, null source passes capture-side
+    include). The report proves each lane's membership, the delete
+    rewrite, and that the masked column is null on every change row.
+    Shape: one codegen wire roundtrip + three keyed aggregates; zero
+    exchanges before the rollups."""
     from pyspark.sql.types import LongType, StringType, StructField, StructType
 
     from .sources.config import ConnectorPipeline
@@ -1548,21 +1544,7 @@ def cdc_connect_config_pipeline(spark, sf_dir):
     )
 
 
-# --- Elasticsearch bulk protocol, executed (round 7) -------------------------
-
-_ES_SERVERS: dict = {}
-
-
-def _es_server(lane: str):
-    """Session-lifetime in-process ES bulk server, one per lane (same
-    isolation rationale as _registry_server). Lane re-invocation is
-    idempotent: external_gte re-applies of equal-versioned operations
-    land the identical state."""
-    if lane not in _ES_SERVERS:
-        from .sinks_es import EsBulkServer
-
-        _ES_SERVERS[lane] = EsBulkServer()
-    return _ES_SERVERS[lane]
+# --- Elasticsearch bulk protocol, executed -----------------------------------
 
 
 @query(
@@ -1579,24 +1561,22 @@ def _es_server(lane: str):
 )
 def cdc_es_bulk_roundtrip(spark, sf_dir):
     """The Elasticsearch SINK PROTOCOL executed end-to-end behind the
-    correctness gate (r6 "What's missing" #2): the CDC stream is
-    bulk-POSTed from the EXECUTORS to a real HTTP server speaking the
-    public Bulk API (NDJSON index/delete actions, one op per event),
-    with each operation versioned by its event-order key under
-    ``version_type: external_gte`` — the public ES recipe for CDC
-    consumers. The input is deliberately round-robin repartitioned so
-    wire delivery order bears no relation to log order; the landed
-    index must STILL equal batch latest-state (deletes absent),
-    because ordering rides in the operations and the store's
-    optimistic concurrency rejects stale writes (409 items). Readback
-    is one key-cardinality-bounded _search (driver gate only;
-    production reads ES directly). Reference declares the sink at
-    README.md:48,77 / values.yaml:85-90 with no consumer code; the
-    version packing (ts_us*4096 + ord2 mod 4096) is documented
+    correctness gate: the CDC stream is bulk-POSTed from the EXECUTORS
+    to a real HTTP server speaking the public Bulk API (NDJSON
+    index/delete actions, one op per event), with each operation
+    versioned by its event-order key under ``version_type:
+    external_gte`` — the public ES recipe for CDC consumers. The input
+    is deliberately round-robin repartitioned so wire delivery order
+    bears no relation to log order; the landed index must STILL equal
+    batch latest-state (deletes absent), because ordering rides in the
+    operations and the store's optimistic concurrency rejects stale
+    writes (409 items). Readback is one key-cardinality-bounded _search
+    (driver gate only; production reads ES directly). Reference declares
+    the sink at README.md:48,77 / values.yaml:85-90 with no consumer
+    code; the version packing (ts_us*4096 + ord2 mod 4096) is documented
     strict for any per-key ts tie closer than 4096 ordinals."""
-    from .sinks_es import EsBulkSink, search_all
+    from .sinks_es import EsBulkServer, EsBulkSink, search_all
 
-    srv = _es_server("cdc_es_bulk_roundtrip")
     ce = cdc.cdc_events(spark, sf_dir)
     wire = ce.select(
         "pk",
@@ -1605,10 +1585,11 @@ def cdc_es_bulk_roundtrip(spark, sf_dir):
         "ts_us",
         "val",
     ).repartition(8)  # scramble delivery order on purpose
-    EsBulkSink(srv.url, "cdc_state", key_col="pk", version_col="ver", op_col="op")(
-        wire
-    )
-    hits = search_all(srv.url, "cdc_state")
+    with EsBulkServer() as srv:
+        EsBulkSink(
+            srv.url, "cdc_state", key_col="pk", version_col="ver", op_col="op"
+        )(wire)
+        hits = search_all(srv.url, "cdc_state")
     rows = [
         (int(h["_id"]), int(h["_source"]["ts_us"]), float(h["_source"]["val"]))
         for h in hits
@@ -1619,21 +1600,7 @@ def cdc_es_bulk_roundtrip(spark, sf_dir):
     return spark.createDataFrame(rows, schema)
 
 
-# --- ClickHouse HTTP protocol, executed (round 7) ----------------------------
-
-_CH_SERVERS: dict = {}
-
-
-def _ch_server(lane: str):
-    """Session-lifetime in-process ClickHouse-interface server, one per
-    lane. Lane re-invocation appends duplicate (key, version) parts
-    that FINAL collapses — idempotent by the ReplacingMergeTree
-    contract itself."""
-    if lane not in _CH_SERVERS:
-        from .sinks_clickhouse import ClickHouseServer
-
-        _CH_SERVERS[lane] = ClickHouseServer()
-    return _CH_SERVERS[lane]
+# --- ClickHouse HTTP protocol, executed --------------------------------------
 
 
 @query(
@@ -1650,28 +1617,24 @@ def _ch_server(lane: str):
 )
 def cdc_clickhouse_replacing_roundtrip(spark, sf_dir):
     """The ClickHouse SINK PROTOCOL executed end-to-end behind the
-    correctness gate (r6 "What's missing" #2, second protocol): DDL
-    over the public HTTP interface creates a
+    correctness gate: DDL over the public HTTP interface creates a
     ``ReplacingMergeTree(ver, is_deleted) ORDER BY pk`` table — the
     public CH recipe for CDC consumers — then the CDC stream lands as
     per-partition JSONEachRow insert POSTs from the EXECUTORS, each an
     immutable part, with delivery order deliberately scrambled and
     deletes as is_deleted=1 rows carrying their event-order version.
-    ``SELECT * FINAL`` must equal batch latest-state: the collapse
-    keeps the max-version row per key and drops soft-deleted winners,
-    so ordering rides in the data, not the arrival sequence. Readback
-    is key-cardinality bounded (driver gate only). Reference declares
-    the sink at README.md:50 / values.yaml:91-94 with no consumer
-    code."""
-    from .sinks_clickhouse import ClickHouseInsertSink, ch_execute, ch_select_final
-
-    srv = _ch_server("cdc_clickhouse_replacing_roundtrip")
-    ch_execute(
-        srv.url,
-        "CREATE TABLE cdc_state (pk Int64, ver Int64, ts_us Int64, "
-        "val Float64, is_deleted UInt8) "
-        "ENGINE = ReplacingMergeTree(ver, is_deleted) ORDER BY pk",
+    ``SELECT * FINAL`` must equal batch latest-state: the collapse keeps
+    the max-version row per key and drops soft-deleted winners, so
+    ordering rides in the data, not the arrival sequence. Readback is
+    key-cardinality bounded (driver gate only). Reference declares the
+    sink at README.md:50 / values.yaml:91-94 with no consumer code."""
+    from .sinks_clickhouse import (
+        ClickHouseInsertSink,
+        ClickHouseServer,
+        ch_execute,
+        ch_select_final,
     )
+
     ce = cdc.cdc_events(spark, sf_dir)
     wire = ce.select(
         "pk",
@@ -1680,32 +1643,23 @@ def cdc_clickhouse_replacing_roundtrip(spark, sf_dir):
         "ts_us",
         "val",
     ).repartition(8)  # scramble delivery order on purpose
-    ClickHouseInsertSink(srv.url, "cdc_state", version_col="ver")(wire)
-    rows = [
-        (int(r["pk"]), int(r["ts_us"]), float(r["val"]))
-        for r in ch_select_final(srv.url, "cdc_state")
-    ]
+    with ClickHouseServer() as srv:
+        ch_execute(
+            srv.url,
+            "CREATE TABLE cdc_state (pk Int64, ver Int64, ts_us Int64, "
+            "val Float64, is_deleted UInt8) "
+            "ENGINE = ReplacingMergeTree(ver, is_deleted) ORDER BY pk",
+        )
+        ClickHouseInsertSink(srv.url, "cdc_state", version_col="ver")(wire)
+        final = ch_select_final(srv.url, "cdc_state")
+    rows = [(int(r["pk"]), int(r["ts_us"]), float(r["val"])) for r in final]
     schema = "pk long, version_us long, last_val double"
     if not rows:
         return spark.createDataFrame([], schema)
     return spark.createDataFrame(rows, schema)
 
 
-# --- Redis RESP protocol, executed (round 7) ---------------------------------
-
-_REDIS_SERVERS: dict = {}
-
-
-def _redis_server(lane: str):
-    """Session-lifetime in-process RESP server, one per lane. Lane
-    re-invocation replays the same ordered chunks — every SET rewrites
-    an identical value, every DEL re-deletes — so the final KV state
-    is idempotent under redelivery."""
-    if lane not in _REDIS_SERVERS:
-        from .sinks_redis import RedisRespServer
-
-        _REDIS_SERVERS[lane] = RedisRespServer()
-    return _REDIS_SERVERS[lane]
+# --- Redis RESP protocol, executed -------------------------------------------
 
 
 @query(
@@ -1721,34 +1675,33 @@ def _redis_server(lane: str):
     """,
 )
 def cdc_redis_latest_kv_roundtrip(spark, sf_dir):
-    """The Redis SINK PROTOCOL executed end-to-end behind the
-    correctness gate (r6 "What's missing" #2, third protocol — with
-    this lane all four declared sinks' protocols are exercised: ES
-    bulk, ClickHouse HTTP, Redis RESP, DW parquet-native): the CDC log
-    is applied as three ORDERED chunks (the per-partition delivery
-    order a keyed topic guarantees — Redis has no server-side
-    versioning, so order is the public contract here, unlike the
-    ES/CH lanes where versions ride in the data), each chunk reduced
-    to per-key newest (tombstones kept) and pipelined as RESP2
-    SET/DEL from the EXECUTORS over real TCP. Readback: KEYS + GET
-    pipeline, key-cardinality bounded (driver gate only). Reference
-    declares the sink at README.md:51 / values.yaml:95-99."""
+    """The Redis SINK PROTOCOL executed end-to-end behind the correctness
+    gate: the CDC log is applied as three ORDERED chunks (the
+    per-partition delivery order a keyed topic guarantees — Redis has no
+    server-side versioning, so order is the public contract here, unlike
+    the ES/CH lanes where versions ride in the data), each chunk reduced
+    to per-key newest (tombstones kept) and pipelined as RESP2 SET/DEL
+    from the EXECUTORS over real TCP. Readback: KEYS + GET pipeline,
+    key-cardinality bounded (driver gate only). Reference declares the
+    sink at README.md:51 / values.yaml:95-99."""
     import json as _json
 
-    from .sinks_redis import RedisLatestKvSink, RespClient
+    from .sinks_redis import RedisLatestKvSink, RedisRespServer, RespClient
 
-    srv = _redis_server("cdc_redis_latest_kv_roundtrip")
-    cli = RespClient(srv.host, srv.port)
-    cli.execute(b"FLUSHDB")  # lane-owned DB; re-invocation starts clean
     ce = cdc.cdc_events(spark, sf_dir).select("pk", "ord2", "ts_us", "op", "val")
     hi = ce.agg(F.max("ord2")).first()[0] + 1
     cuts = [0, hi // 3, 2 * hi // 3, hi]
-    sink = RedisLatestKvSink(srv.host, srv.port)
-    for i in range(3):  # log order, as a keyed topic delivers
-        sink(ce.where((F.col("ord2") >= cuts[i]) & (F.col("ord2") < cuts[i + 1])))
-    keys = cli.execute(b"KEYS", b"*")
-    vals = cli.pipeline([[b"GET", k] for k in keys]) if keys else []
-    cli.close()
+    with RedisRespServer() as srv:
+        sink = RedisLatestKvSink(srv.host, srv.port)
+        for i in range(3):  # log order, as a keyed topic delivers
+            chunk = (F.col("ord2") >= cuts[i]) & (F.col("ord2") < cuts[i + 1])
+            sink(ce.where(chunk))
+        cli = RespClient(srv.host, srv.port)
+        try:
+            keys = cli.execute(b"KEYS", b"*")
+            vals = cli.pipeline([[b"GET", k] for k in keys]) if keys else []
+        finally:
+            cli.close()
     rows = []
     for k, v in zip(keys, vals):
         d = _json.loads(v)
@@ -1759,21 +1712,7 @@ def cdc_redis_latest_kv_roundtrip(spark, sf_dir):
     return spark.createDataFrame(rows, schema)
 
 
-# --- Generic HTTP webhook fan-out, executed (round 11) -----------------------
-
-_WEBHOOK_SERVERS: dict = {}
-
-
-def _webhook_server(lane: str):
-    """Session-lifetime in-process signed-webhook consumer, one per
-    lane (the per-lane server dict discipline of _es_server). Lane
-    re-invocation re-delivers every operation; the consumer's
-    version gate makes re-application land the identical state."""
-    if lane not in _WEBHOOK_SERVERS:
-        from .sinks_webhook import WebhookServer
-
-        _WEBHOOK_SERVERS[lane] = WebhookServer()
-    return _WEBHOOK_SERVERS[lane]
+# --- Generic HTTP webhook fan-out, executed ----------------------------------
 
 
 @query(
@@ -1789,26 +1728,24 @@ def _webhook_server(lane: str):
     """,
 )
 def cdc_webhook_fanout_roundtrip(spark, sf_dir):
-    """The generic HTTP webhook SINK PROTOCOL executed end-to-end
-    behind the correctness gate (r10 verdict item 8 — the one declared
-    sink shape not yet protocol-executed; ES/CH/Redis/DW all are): the
-    CDC stream is POSTed from the EXECUTORS as HMAC-SHA256-signed
-    NDJSON batches to a real HTTP consumer that (a) rejects tampered
-    requests 401, (b) APPLIES then answers 503 on the first attempt of
-    every request — the apply-then-crash-before-ack window — so every
-    batch traverses the producer's retry path and is delivered twice,
-    and (c) applies operations version-gated per key (apply iff
-    ver >= current). Delivery order is deliberately scrambled
+    """The generic HTTP webhook SINK PROTOCOL executed end-to-end behind
+    the correctness gate: the CDC stream is POSTed from the EXECUTORS as
+    HMAC-SHA256-signed NDJSON batches to a real HTTP consumer that (a)
+    rejects tampered requests 401, (b) APPLIES then answers 503 on the
+    first attempt of every request — the apply-then-crash-before-ack
+    window — so every batch traverses the producer's retry path and is
+    delivered twice, and (c) applies operations version-gated per key
+    (apply iff ver >= current). Delivery order is deliberately scrambled
     (round-robin repartition); the landed state must STILL equal batch
-    latest-state because ordering and idempotence ride in the data —
-    the same external_gte recipe as the ES sink, on the webhook wire.
-    Readback is one key-cardinality-bounded GET (driver gate only).
-    Version packing ts_us*4096 + ord2 mod 4096 as the other sink
-    lanes (documented strict for per-key ts ties closer than 4096
-    ordinals)."""
-    from .sinks_webhook import WebhookFanoutSink, read_state
+    latest-state because ordering and idempotence ride in the data — the
+    same external_gte recipe as the ES sink, on the webhook wire.
+    Readback is one key-cardinality-bounded GET (driver gate only); the
+    lane raises unless every request was retried exactly once and none
+    was rejected for its signature. Version packing ts_us*4096 + ord2
+    mod 4096 as the other sink lanes (documented strict for per-key ts
+    ties closer than 4096 ordinals)."""
+    from .sinks_webhook import WebhookFanoutSink, WebhookServer, read_state
 
-    srv = _webhook_server("cdc_webhook_fanout_roundtrip")
     ce = cdc.cdc_events(spark, sf_dir)
     wire = ce.select(
         "pk",
@@ -1817,12 +1754,17 @@ def cdc_webhook_fanout_roundtrip(spark, sf_dir):
         "ts_us",
         "val",
     ).repartition(8)  # scramble delivery order on purpose
-    WebhookFanoutSink(
-        srv.url, secret=srv.secret, key_col="pk", version_col="ver", op_col="op"
-    )(wire)
+    with WebhookServer() as srv:
+        WebhookFanoutSink(
+            srv.url, secret=srv.secret, key_col="pk", version_col="ver", op_col="op"
+        )(wire)
+        state = read_state(srv.url)
+        st = srv.stats()
+    if st["requests"] != 2 * st["crashed_acks"] or st["rejected_auth"]:
+        raise RuntimeError(f"webhook delivery broke apply-then-crash-retry: {st}")
     rows = [
         (int(r["key"]), int(r["data"]["ts_us"]), float(r["data"]["val"]))
-        for r in read_state(srv.url)
+        for r in state
     ]
     schema = "pk long, version_us long, last_val double"
     if not rows:
@@ -1831,7 +1773,7 @@ def cdc_webhook_fanout_roundtrip(spark, sf_dir):
 
 
 # ---------------------------------------------------------------------------
-# §2.B round-7 SMT depth — the public Debezium transforms a reference
+# §2.B SMT depth — the public Debezium transforms a reference
 # user would configure next (all in-version for the reference's
 # Debezium 2.4.0.Final, helm-charts/cdc-system/templates/kafka-connect/
 # deployment.yaml:75-76)

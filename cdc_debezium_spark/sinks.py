@@ -1,11 +1,9 @@
-"""Sink analogs for the reference's four declared consumers
-(README.md:48-51): Elasticsearch (enriched docs), Data Warehouse
-(aggregates), ClickHouse (analytical copy), Redis (latest-value KV).
-
-Test/local realization targets the filesystem; each writer is also
-usable inside `foreachBatch` for streaming (E7/E10) — the function
-signature is (DataFrame, path) either way. At scale the DW/CH writers
-partition by a date key so downstream scans prune partitions.
+"""Spark-native writers for the reference's wire and storage shapes:
+`to_kafka_wire` encodes rows as the JSON key/value records the
+reference's topics carry, and `write_bucketed_table` lays a table out
+for exchange-free joins on its bucket key. The declared consumers
+(README.md:48-51) speak their own wire protocols in sinks_es.py,
+sinks_clickhouse.py, sinks_redis.py and sinks_webhook.py.
 """
 
 from __future__ import annotations
@@ -14,41 +12,6 @@ from collections.abc import Sequence
 
 import pyspark.sql.functions as F
 from pyspark.sql import Column, DataFrame
-
-from .operators.cdc import latest_state
-
-
-def write_dw_table(
-    df: DataFrame,
-    path: str,
-    partition_cols: Sequence[str] = (),
-    mode: str = "overwrite",
-) -> None:
-    """DW/ClickHouse analog: columnar append/overwrite, optionally
-    date-partitioned (partition pruning is the 100 TB read path)."""
-    w = df.write.mode(mode)
-    if partition_cols:
-        w = w.partitionBy(*list(partition_cols))
-    w.parquet(path)
-
-
-def write_es_docs(df: DataFrame, path: str, id_col: str, mode: str = "overwrite") -> None:
-    """Elasticsearch analog: one JSON document per row, `_id` from the
-    key column (the enriched-documents sink, README.md:48,77)."""
-    doc = df.withColumn("_id", F.col(id_col).cast("string"))
-    doc.write.mode(mode).json(path)
-
-
-def write_kv_latest(
-    df: DataFrame,
-    path: str,
-    keys: Sequence[str] = ("pk",),
-    order: Sequence[str] = ("ts_us", "ord2"),
-    mode: str = "overwrite",
-) -> None:
-    """Redis analog: latest value per key, deleted keys absent
-    (values.yaml:95-99; the B6 log-compaction contract)."""
-    latest_state(df, keys=keys, order=order).write.mode(mode).parquet(path)
 
 
 def to_kafka_wire(

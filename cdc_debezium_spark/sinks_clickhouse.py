@@ -22,8 +22,9 @@ Because every row carries its event-order key as the version, the
 collapsed result is independent of insert order, partitioning, and
 redelivery — at-least-once duplicates are literal duplicate (key,
 version) rows that FINAL collapses away. Same in-process-server
-strategy as the registry (r6) and ES bulk (r7) protocols: stdlib HTTP
-on 127.0.0.1, executors speak it via urllib, production swaps the URL.
+strategy as the registry and ES bulk protocols: stdlib HTTP on
+127.0.0.1 (local_server.py), executors speak it via urllib, production
+swaps the URL.
 
 At 100 TB the write path is per-partition streaming inserts of
 immutable parts (no read-modify-write anywhere, the reason MergeTree
@@ -38,7 +39,8 @@ import re
 import threading
 import urllib.parse
 import urllib.request
-from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
+
+from .local_server import LocalHandler, LocalServer
 
 _CREATE_RE = re.compile(
     r"CREATE\s+TABLE\s+(?P<name>\w+)\s*\((?P<cols>.*?)\)\s*"
@@ -85,19 +87,8 @@ class _ChState:
 
 
 def _handler(state: _ChState):
-    class Handler(BaseHTTPRequestHandler):
+    class Handler(LocalHandler):
         protocol_version = "HTTP/1.1"
-
-        def log_message(self, *a):
-            pass
-
-        def _reply(self, code: int, body: str, ctype="text/plain") -> None:
-            data = body.encode()
-            self.send_response(code)
-            self.send_header("Content-Type", ctype)
-            self.send_header("Content-Length", str(len(data)))
-            self.end_headers()
-            self.wfile.write(data)
 
         def _run(self, query: str, body: str) -> None:
             q = query.strip().rstrip(";")
@@ -114,7 +105,7 @@ def _handler(state: _ChState):
                     state.tables[m.group("name")] = _Table(
                         cols, m.group("key"), version, is_deleted
                     )
-                self._reply(200, "")
+                self.reply(200, "")
                 return
             mi = re.match(
                 r"INSERT\s+INTO\s+(\w+)\s+FORMAT\s+JSONEachRow", q, re.I
@@ -124,10 +115,10 @@ def _handler(state: _ChState):
                 with state.lock:
                     t = state.tables.get(mi.group(1))
                     if t is None:
-                        self._reply(404, f"Table {mi.group(1)} does not exist")
+                        self.reply(404, f"Table {mi.group(1)} does not exist")
                         return
                     t.parts.append(rows)  # one immutable part per POST
-                self._reply(200, "")
+                self.reply(200, "")
                 return
             ms = re.match(
                 r"SELECT\s+\*\s+FROM\s+(\w+)(\s+FINAL)?\s+FORMAT\s+JSON", q, re.I
@@ -136,26 +127,21 @@ def _handler(state: _ChState):
                 with state.lock:
                     t = state.tables.get(ms.group(1))
                     if t is None:
-                        self._reply(404, f"Table {ms.group(1)} does not exist")
+                        self.reply(404, f"Table {ms.group(1)} does not exist")
                         return
                     rows = (
                         t.final_rows()
                         if ms.group(2)
                         else [r for p in t.parts for r in p]
                     )
-                self._reply(
-                    200,
-                    json.dumps({"data": rows, "rows": len(rows)}),
-                    "application/json",
-                )
+                self.reply(200, {"data": rows, "rows": len(rows)})
                 return
-            self._reply(400, f"unsupported query: {q[:80]}")
+            self.reply(400, f"unsupported query: {q[:80]}")
 
         def do_POST(self) -> None:
             parsed = urllib.parse.urlparse(self.path)
             params = urllib.parse.parse_qs(parsed.query)
-            n = int(self.headers.get("Content-Length", 0))
-            body = self.rfile.read(n).decode()
+            body = self.read_body().decode()
             query = params.get("query", [""])[0] or body
             self._run(query, body if params.get("query") else "")
 
@@ -167,25 +153,11 @@ def _handler(state: _ChState):
     return Handler
 
 
-class ClickHouseServer:
+class ClickHouseServer(LocalServer):
     """In-process server speaking the HTTP-interface subset above."""
 
-    def __init__(self, port: int = 0) -> None:
-        self._state = _ChState()
-        self._httpd = ThreadingHTTPServer(("127.0.0.1", port), _handler(self._state))
-        self.url = f"http://127.0.0.1:{self._httpd.server_port}"
-        self._thread = threading.Thread(target=self._httpd.serve_forever, daemon=True)
-        self._thread.start()
-
-    def close(self) -> None:
-        self._httpd.shutdown()
-        self._httpd.server_close()
-
-    def __enter__(self) -> "ClickHouseServer":
-        return self
-
-    def __exit__(self, *exc) -> None:
-        self.close()
+    def __init__(self) -> None:
+        super().__init__(_handler(_ChState()))
 
 
 def ch_execute(url: str, query: str, body: str = "") -> str:

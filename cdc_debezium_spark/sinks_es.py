@@ -2,10 +2,9 @@
 executor-side bulk client.
 
 The reference declares Elasticsearch as the enriched-documents sink
-(README.md:48,77; values.yaml:85-90) but ships no consumer code. The
-parquet analog in sinks.py (`write_es_docs`) captures the data shape;
-this module executes the actual WIRE PROTOCOL the declared sink would
-speak — the public Elasticsearch Bulk API:
+(README.md:48,77; values.yaml:85-90) but ships no consumer code. This
+module executes the WIRE PROTOCOL the declared sink would speak — the
+public Elasticsearch Bulk API:
 
 - ``POST /{index}/_bulk`` with NDJSON action/metadata + source lines
   (``index`` and ``delete`` actions);
@@ -19,8 +18,8 @@ speak — the public Elasticsearch Bulk API:
   arrival time.
 - ``GET /{index}/_search`` / ``GET /{index}/_count`` for readback.
 
-Same realization strategy as sources/schema_registry.py (judge-credited
-in r6): a real HTTP server on 127.0.0.1 driven from Spark executors via
+Same realization strategy as sources/schema_registry.py: a real HTTP
+server on 127.0.0.1 (local_server.py) driven from Spark executors via
 stdlib urllib — no third-party client, nothing to install, and in
 production the URL simply points at the deployed cluster.
 
@@ -35,7 +34,8 @@ from __future__ import annotations
 import json
 import threading
 import urllib.request
-from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
+
+from .local_server import LocalHandler, LocalServer
 
 TOMBSTONE = object()  # deleted-doc marker retaining its version
 
@@ -83,31 +83,19 @@ class _EsState:
 
 
 def _handler(state: _EsState):
-    class Handler(BaseHTTPRequestHandler):
+    class Handler(LocalHandler):
         protocol_version = "HTTP/1.1"
-
-        def log_message(self, *a):  # quiet test output
-            pass
-
-        def _json(self, code: int, obj) -> None:
-            body = json.dumps(obj).encode()
-            self.send_response(code)
-            self.send_header("Content-Type", "application/json")
-            self.send_header("Content-Length", str(len(body)))
-            self.end_headers()
-            self.wfile.write(body)
 
         def do_POST(self) -> None:
             parts = [p for p in self.path.split("?")[0].split("/") if p]
-            n = int(self.headers.get("Content-Length", 0))
-            body = self.rfile.read(n).decode()
+            body = self.read_body().decode()
             if parts and parts[-1] == "_bulk":
                 default_index = parts[0] if len(parts) == 2 else None
                 self._bulk(default_index, body)
             elif len(parts) == 2 and parts[1] == "_refresh":
-                self._json(200, {"_shards": {"successful": 1}})
+                self.reply(200, {"_shards": {"successful": 1}})
             else:
-                self._json(400, {"error": "unsupported endpoint"})
+                self.reply(400, {"error": "unsupported endpoint"})
 
         def _bulk(self, default_index: str | None, body: str) -> None:
             lines = [ln for ln in body.split("\n") if ln.strip()]
@@ -133,7 +121,7 @@ def _handler(state: _EsState):
                 if err:
                     item["error"] = {"type": err}
                 items.append({action: item})
-            self._json(
+            self.reply(
                 200,
                 {"took": 1, "errors": any("error" in v for d in items for v in d.values()), "items": items},
             )
@@ -142,7 +130,7 @@ def _handler(state: _EsState):
             path, _, query = self.path.partition("?")
             parts = [p for p in path.split("/") if p]
             if len(parts) == 2 and parts[1] == "_count":
-                self._json(200, {"count": len(state.live_docs(parts[0]))})
+                self.reply(200, {"count": len(state.live_docs(parts[0]))})
             elif len(parts) == 2 and parts[1] == "_search":
                 size = 10
                 for kv in query.split("&"):
@@ -153,39 +141,25 @@ def _handler(state: _EsState):
                     {"_index": parts[0], "_id": k, "_version": v, "_source": s}
                     for k, (v, s) in sorted(docs.items())[:size]
                 ]
-                self._json(
+                self.reply(
                     200,
                     {"hits": {"total": {"value": len(docs)}, "hits": hits}},
                 )
             else:
-                self._json(400, {"error": "unsupported endpoint"})
+                self.reply(400, {"error": "unsupported endpoint"})
 
     return Handler
 
 
-class EsBulkServer:
+class EsBulkServer(LocalServer):
     """In-process server speaking the Bulk-API subset above.
 
     >>> with EsBulkServer() as srv:
     ...     EsBulkSink(srv.url, "events")
     """
 
-    def __init__(self, port: int = 0) -> None:
-        self._state = _EsState()
-        self._httpd = ThreadingHTTPServer(("127.0.0.1", port), _handler(self._state))
-        self.url = f"http://127.0.0.1:{self._httpd.server_port}"
-        self._thread = threading.Thread(target=self._httpd.serve_forever, daemon=True)
-        self._thread.start()
-
-    def close(self) -> None:
-        self._httpd.shutdown()
-        self._httpd.server_close()
-
-    def __enter__(self) -> "EsBulkServer":
-        return self
-
-    def __exit__(self, *exc) -> None:
-        self.close()
+    def __init__(self) -> None:
+        super().__init__(_handler(_EsState()))
 
 
 def post_bulk(url: str, index: str, ndjson: str) -> dict:

@@ -22,9 +22,9 @@ stream's delivery order (E7's per-partition ordering guarantee). The
 same at-least-once redelivery of a batch rewrites identical values —
 idempotent.
 
-Same in-process strategy as the registry/ES/CH protocol work: stdlib
-socketserver on 127.0.0.1, executors connect with plain sockets,
-production swaps host:port.
+Same in-process strategy as the registry/ES/CH protocols: a stdlib
+socketserver on 127.0.0.1 (local_server.py), executors connect with
+plain sockets, production swaps host:port.
 """
 
 from __future__ import annotations
@@ -33,6 +33,8 @@ import json
 import socket
 import socketserver
 import threading
+
+from .local_server import LocalServer
 
 
 class _RedisState:
@@ -129,29 +131,12 @@ def _handler(state: _RedisState):
     return Handler
 
 
-class RedisRespServer:
+class RedisRespServer(LocalServer):
     """In-process RESP2 server. `host:port` is the address executors
     (or any real redis client limited to the subset) connect to."""
 
-    def __init__(self, port: int = 0) -> None:
-        self._state = _RedisState()
-        socketserver.ThreadingTCPServer.allow_reuse_address = True
-        self._srv = socketserver.ThreadingTCPServer(
-            ("127.0.0.1", port), _handler(self._state)
-        )
-        self.host, self.port = self._srv.server_address
-        self._thread = threading.Thread(target=self._srv.serve_forever, daemon=True)
-        self._thread.start()
-
-    def close(self) -> None:
-        self._srv.shutdown()
-        self._srv.server_close()
-
-    def __enter__(self) -> "RedisRespServer":
-        return self
-
-    def __exit__(self, *exc) -> None:
-        self.close()
+    def __init__(self) -> None:
+        super().__init__(_handler(_RedisState()))
 
 
 class RespClient:

@@ -2,10 +2,8 @@
 webhook consumer + executor-side batching client with retry.
 
 The reference's declared sink set fans CDC topics out to downstream
-HTTP consumers (the Kafka Connect HTTP-sink shape — the one declared
-sink family whose wire protocol the repo had not yet executed;
-ES/ClickHouse/Redis/DW all are). This module executes the public
-webhook recipe end-to-end:
+HTTP consumers (the Kafka Connect HTTP-sink shape). This module
+executes the public webhook recipe end-to-end:
 
 - **Batched NDJSON POSTs** from the EXECUTORS (one request per ~2k
   rows per partition), each line one CDC operation
@@ -27,9 +25,9 @@ webhook recipe end-to-end:
 - ``GET /state`` readback for the test/driver gate only
   (key-cardinality bounded; production consumers own their store).
 
-Same in-process realization strategy as sinks_es.py (judge-credited):
-a real ThreadingHTTPServer on 127.0.0.1 driven from executors via
-stdlib urllib — in production the URL points at the real consumer.
+Same in-process realization strategy as sinks_es.py: a real HTTP
+server on 127.0.0.1 (local_server.py) driven from executors via stdlib
+urllib — in production the URL points at the real consumer.
 
 At 100 TB the sink path is per-partition POSTs, driver never sees
 data; wall cost is wire-bound and embarrassingly parallel across
@@ -46,7 +44,8 @@ import threading
 import time
 import urllib.error
 import urllib.request
-from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
+
+from .local_server import LocalHandler, LocalServer
 
 TOMBSTONE = object()  # deleted-key marker retaining its version
 
@@ -58,9 +57,8 @@ def sign(body: bytes, secret: str) -> str:
 
 
 class _WebhookState:
-    def __init__(self, secret: str, fail_first_attempt: bool) -> None:
+    def __init__(self, secret: str) -> None:
         self.secret = secret
-        self.fail_first_attempt = fail_first_attempt
         self.lock = threading.Lock()
         self.store: dict[str, tuple[int, object]] = {}
         self.seen_digests: set[str] = set()
@@ -99,7 +97,7 @@ class _WebhookState:
             self.stale_rejected += stale
             first = digest not in self.seen_digests
             self.seen_digests.add(digest)
-            if self.fail_first_attempt and first:
+            if first:
                 # apply-then-crash: state IS committed, ack is lost
                 self.crashed_acks += 1
                 return 503, {"error": "crashed before ack (retry)"}
@@ -124,28 +122,15 @@ class _WebhookState:
 
 
 def _handler(state: _WebhookState):
-    class Handler(BaseHTTPRequestHandler):
-        def log_message(self, *a):  # quiet
-            pass
-
-        def _json(self, status: int, payload: dict) -> None:
-            body = json.dumps(payload).encode()
-            self.send_response(status)
-            self.send_header("Content-Type", "application/json")
-            self.send_header("Content-Length", str(len(body)))
-            self.end_headers()
-            self.wfile.write(body)
-
+    class Handler(LocalHandler):
         def do_POST(self):
             if self.path != "/webhook":
-                self._json(404, {"error": "unknown endpoint"})
+                self.reply(404, {"error": "unknown endpoint"})
                 return
-            n = int(self.headers.get("Content-Length", 0))
-            body = self.rfile.read(n)
             status, payload = state.apply_request(
-                body, self.headers.get("X-Webhook-Signature")
+                self.read_body(), self.headers.get("X-Webhook-Signature")
             )
-            self._json(status, payload)
+            self.reply(status, payload)
 
         def do_GET(self):
             if self.path.startswith("/state"):
@@ -154,49 +139,31 @@ def _handler(state: _WebhookState):
                     {"key": k, "ver": v, "data": d}
                     for k, (v, d) in sorted(live.items())
                 ]
-                self._json(200, {"total": len(rows), "rows": rows})
+                self.reply(200, {"total": len(rows), "rows": rows})
             elif self.path.startswith("/stats"):
-                self._json(200, state.stats())
+                self.reply(200, state.stats())
             else:
-                self._json(404, {"error": "unknown endpoint"})
+                self.reply(404, {"error": "unknown endpoint"})
 
     return Handler
 
 
-class WebhookServer:
+class WebhookServer(LocalServer):
     """In-process signed-webhook consumer.
 
-    fail_first_attempt=True (default) makes the consumer apply and
-    then 503 the FIRST attempt of every distinct request body — the
-    deterministic apply-then-crash-before-ack window, forcing the
-    producer through its retry path on every batch.
+    The consumer applies and then 503s the FIRST attempt of every
+    distinct request body — the deterministic
+    apply-then-crash-before-ack window, forcing the producer through
+    its retry path on every batch.
     """
 
-    def __init__(
-        self,
-        port: int = 0,
-        secret: str = DEFAULT_SECRET,
-        fail_first_attempt: bool = True,
-    ) -> None:
-        self._state = _WebhookState(secret, fail_first_attempt)
-        self._httpd = ThreadingHTTPServer(("127.0.0.1", port), _handler(self._state))
-        self.url = f"http://127.0.0.1:{self._httpd.server_port}"
+    def __init__(self, secret: str = DEFAULT_SECRET) -> None:
+        self._state = _WebhookState(secret)
         self.secret = secret
-        self._thread = threading.Thread(target=self._httpd.serve_forever, daemon=True)
-        self._thread.start()
+        super().__init__(_handler(self._state))
 
     def stats(self) -> dict:
         return self._state.stats()
-
-    def close(self) -> None:
-        self._httpd.shutdown()
-        self._httpd.server_close()
-
-    def __enter__(self) -> "WebhookServer":
-        return self
-
-    def __exit__(self, *exc) -> None:
-        self.close()
 
 
 def post_signed(

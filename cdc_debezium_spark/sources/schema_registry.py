@@ -1,5 +1,5 @@
 """Minimal Confluent Schema Registry protocol: in-process REST server
-stub + thin HTTP client (judge r5 "Next round" #9).
+stub + thin HTTP client.
 
 The reference deploys a Schema Registry next to Kafka
 (helm-charts/cdc-system/values.yaml:63-69); its data-plane contract is
@@ -17,8 +17,8 @@ a tiny REST subset (public Confluent Schema Registry API):
   POST /compatibility/subjects/{subject}/versions/latest
        -> {"is_compatible": bool}     (BACKWARD mode, the default)
 
-The server is a stdlib ThreadingHTTPServer on an ephemeral localhost
-port — a conformance double for tests and local runs, NOT a durability
+The server is a stdlib HTTP server on an ephemeral localhost port
+(local_server.py) — a conformance double for tests and local runs, NOT a durability
 store. The client keeps an id->schema cache (ids are immutable, so the
 cache never invalidates — same pattern as Confluent's client) and
 exposes the duck-typed surface `from_avro_wire` needs (fields_by_id),
@@ -35,8 +35,8 @@ import json
 import re
 import threading
 import urllib.request
-from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 
+from ..local_server import LocalHandler, LocalServer
 from .avro_wire import avro_schema_json, check_compatibility
 
 
@@ -92,28 +92,17 @@ class _RegistryState:
 
 
 def _handler(state: _RegistryState):
-    class Handler(BaseHTTPRequestHandler):
+    class Handler(LocalHandler):
         protocol_version = "HTTP/1.1"
 
-        def log_message(self, *a):  # quiet test output
-            pass
-
         def _json(self, code: int, obj) -> None:
-            body = json.dumps(obj).encode()
-            self.send_response(code)
-            self.send_header(
-                "Content-Type", "application/vnd.schemaregistry.v1+json"
-            )
-            self.send_header("Content-Length", str(len(body)))
-            self.end_headers()
-            self.wfile.write(body)
+            self.reply(code, obj, "application/vnd.schemaregistry.v1+json")
 
         def _404(self, code: int, msg: str) -> None:
             self._json(404, {"error_code": code, "message": msg})
 
         def _body(self) -> dict:
-            n = int(self.headers.get("Content-Length", 0))
-            return json.loads(self.rfile.read(n) or b"{}")
+            return json.loads(self.read_body() or b"{}")
 
         def do_GET(self) -> None:  # noqa: N802 - http.server API
             m = re.fullmatch(r"/schemas/ids/(\d+)", self.path)
@@ -178,33 +167,15 @@ def _handler(state: _RegistryState):
     return Handler
 
 
-class SchemaRegistryServer:
+class SchemaRegistryServer(LocalServer):
     """In-process registry speaking the REST subset above.
 
     >>> with SchemaRegistryServer() as srv:
     ...     client = SchemaRegistryClient(srv.url)
     """
 
-    def __init__(self, port: int = 0) -> None:
-        self._state = _RegistryState()
-        self._httpd = ThreadingHTTPServer(
-            ("127.0.0.1", port), _handler(self._state)
-        )
-        self.url = f"http://127.0.0.1:{self._httpd.server_port}"
-        self._thread = threading.Thread(
-            target=self._httpd.serve_forever, daemon=True
-        )
-        self._thread.start()
-
-    def close(self) -> None:
-        self._httpd.shutdown()
-        self._httpd.server_close()
-
-    def __enter__(self) -> "SchemaRegistryServer":
-        return self
-
-    def __exit__(self, *exc) -> None:
-        self.close()
+    def __init__(self) -> None:
+        super().__init__(_handler(_RegistryState()))
 
 
 class SchemaRegistryClient:

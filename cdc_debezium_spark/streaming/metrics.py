@@ -12,6 +12,8 @@ from typing import Any
 
 from pyspark.sql.streaming import StreamingQueryListener
 
+from ..local_server import LocalHandler, LocalServer
+
 
 class ProgressCapture(StreamingQueryListener):
     """Collects per-batch progress (rows, duration) for assertions
@@ -156,16 +158,16 @@ def render_exposition(capture: "ProgressCapture") -> str:
     return "\n".join(lines) + "\n"
 
 
-class MetricsEndpoint:
+class MetricsEndpoint(LocalServer):
     """HTTP /metrics endpoint serving `render_exposition` — the
     in-process analog of the reference's per-component scrape targets
     (prometheus-config.yaml registers every service at
     metrics_path: /metrics; the rules in prometheus-rules.yaml then
-    alert on the scraped series). Stdlib-only (ThreadingHTTPServer on
-    a daemon thread, ephemeral port), so a Spark driver can expose
-    stream health to a real Prometheus with zero dependencies; on a
-    cluster this runs once on the driver, where StreamingQueryListener
-    callbacks land.
+    alert on the scraped series). Stdlib-only (local_server.py: a
+    daemon thread, an ephemeral port unless `port` is given), so a
+    Spark driver can expose stream health to a real Prometheus with
+    zero dependencies; on a cluster this runs once on the driver, where
+    StreamingQueryListener callbacks land.
 
     Usage:
         cap = ProgressCapture(); spark.streams.addListener(cap)
@@ -174,43 +176,18 @@ class MetricsEndpoint:
     """
 
     def __init__(self, capture: ProgressCapture, port: int = 0) -> None:
-        import threading
-        from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
-
         endpoint = self
 
-        class Handler(BaseHTTPRequestHandler):
+        class Handler(LocalHandler):
             def do_GET(self):  # noqa: N802 - http.server API
                 if self.path.split("?")[0] != "/metrics":
-                    self.send_response(404)
-                    self.end_headers()
+                    self.reply(404, "")
                     return
-                body = render_exposition(endpoint.capture).encode()
-                self.send_response(200)
-                self.send_header(
-                    "Content-Type", "text/plain; version=0.0.4; charset=utf-8"
+                self.reply(
+                    200,
+                    render_exposition(endpoint.capture),
+                    "text/plain; version=0.0.4; charset=utf-8",
                 )
-                self.send_header("Content-Length", str(len(body)))
-                self.end_headers()
-                self.wfile.write(body)
-
-            def log_message(self, *args):  # silence per-scrape stderr
-                pass
 
         self.capture = capture
-        self._server = ThreadingHTTPServer(("127.0.0.1", port), Handler)
-        self.port = self._server.server_address[1]
-        self._thread = threading.Thread(
-            target=self._server.serve_forever, daemon=True
-        )
-        self._thread.start()
-
-    def close(self) -> None:
-        self._server.shutdown()
-        self._server.server_close()
-
-    def __enter__(self) -> "MetricsEndpoint":
-        return self
-
-    def __exit__(self, *exc) -> None:
-        self.close()
+        super().__init__(Handler, port)

@@ -1,53 +1,7 @@
-"""Sink analogs write/read round-trips (SURVEY §2.A A8–A11)."""
+"""Kafka wire-shape round-trip for `sinks.to_kafka_wire` (SURVEY §2.A
+A6/A12)."""
 
 from __future__ import annotations
-
-import pyspark.sql.functions as F
-
-from cdc_debezium_spark.operators import cdc
-from cdc_debezium_spark.sinks import write_dw_table, write_es_docs, write_kv_latest
-from cdc_debezium_spark.sources.catalog import load_table
-
-
-def test_dw_partitioned_write(spark, sf_dir, tmp_path):
-    path = str(tmp_path / "dw")
-    o = load_table(spark, sf_dir, "orders").withColumn(
-        "order_year", F.year("o_orderdate")
-    )
-    write_dw_table(o, path, partition_cols=["order_year"])
-    back = spark.read.parquet(path)
-    assert back.count() == o.count()
-    # partition pruning: a year filter must prune input files
-    plan = (
-        back.filter(F.col("order_year") == 1997)
-        ._jdf.queryExecution()
-        .executedPlan()
-        .toString()
-    )
-    assert "PartitionFilters" in plan or "order_year" in plan
-
-
-def test_es_docs_roundtrip(spark, sf_dir, tmp_path):
-    path = str(tmp_path / "es")
-    state = cdc.latest_state(cdc.cdc_events(spark, sf_dir)).drop("ts")
-    write_es_docs(state, path, id_col="pk")
-    back = spark.read.json(path)
-    assert back.count() == state.count()
-    assert "_id" in back.columns
-
-
-def test_kv_latest_roundtrip(spark, sf_dir, tmp_path):
-    path = str(tmp_path / "kv")
-    ce = cdc.cdc_events(spark, sf_dir)
-    write_kv_latest(ce, path)
-    back = spark.read.parquet(path)
-    want = cdc.latest_state(ce)
-    assert sorted(r["pk"] for r in back.select("pk").collect()) == sorted(
-        r["pk"] for r in want.select("pk").collect()
-    )
-    # one row per key, no deleted keys
-    assert back.count() == back.select("pk").distinct().count()
-    assert back.filter(F.col("op") == "d").count() == 0
 
 
 def test_kafka_wire_roundtrip(spark, sf_dir):
