@@ -12,7 +12,13 @@ from pyspark.sql import DataFrame
 
 
 def physical_plan(df: DataFrame) -> str:
-    return df._jdf.queryExecution().executedPlan().toString()
+    """The physical plan Spark chose for `df`. An adaptive plan is given
+    as planned, before any run: once run, its tree also prints the
+    final plan, which would show every exchange twice."""
+    plan = df._jdf.queryExecution().executedPlan()
+    if plan.nodeName() == "AdaptiveSparkPlan":
+        plan = plan.initialPlan()
+    return plan.toString()
 
 
 def count_shuffles(df: DataFrame) -> int:

